@@ -43,7 +43,6 @@ from geofeaturegeneration_spark.operators import (
     ann_ivf_topk_blocked,
     ann_lsh_topk,
     embedding_neardup_pairs,
-    sessionize_state_change_salted,
     asof_join,
     attach_payload,
     build_vocab,
@@ -263,28 +262,6 @@ def q_sessionize_state(spark, sf_dir):
     )
 
 
-def q_sessionize_salted(spark, sf_dir):
-    # forces the time-range-salted two-pass strategy on every user
-    # (hot_threshold=10); oracle identical to sessionize_state — the salted
-    # physical plan must be value-exact
-    ev = _t(spark, sf_dir, "events")
-    out = sessionize_state_change_salted(
-        ev, ["user_id"], "ts", "event_type", min_duration_s=600.0,
-        keep_cols=["value"], n_salts=4, hot_threshold=10,
-        order_cols=["event_id"],
-    )
-    return out.select(
-        "user_id",
-        "stay_seq",
-        "event_type",
-        "stime",
-        "etime",
-        "duration_s",
-        "n_rows",
-        F.col("value").alias("first_value"),
-    )
-
-
 def q_stay_move(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     _, moves = stay_move(
@@ -377,14 +354,6 @@ def q_asof_salted(spark, sf_dir):
     return asof_join(
         left, right, ["user_id"], "ts", "click_ts", ["click_value"],
         strategy="salted", hot_key_threshold=5, n_salts=4,
-    )
-
-
-def q_asof_merge(spark, sf_dir):
-    left, right = _asof_inputs(spark, sf_dir)
-    return asof_join(
-        left, right, ["user_id"], "ts", "click_ts", ["click_value"],
-        strategy="merge_asof",
     )
 
 
@@ -2082,16 +2051,12 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # same output as stay_move_spliced minus the first/last raw-point
         # splice (the simpler variant; spliced is the full reference rule)
         "stay_move": q_stay_move,
-        # same output as asof_salted via the bucketed merge_asof plan
-        "asof_merge": q_asof_merge,
-        # same output as sessionize_state via the time-range-salted plan
-        "sessionize_salted": q_sessionize_salted,
         # round 4 (this session): folded out of the driver window
         # (driver-green r01-r03) to give pagerank its first CORRECTNESS
         # row; the gap-rule sessionizer stays value-exact here and its
         # machinery stays in-window through sessionize_state
         "sessionize_gap": q_sessionize_gap,
-        # same output as asof_salted/asof_merge via the union-window plan
+        # same output as asof_salted via the union-window plan
         "asof_union": q_asof_union,
         # standalone range-frame rolling (contract 'rolling' folds both)
         "rolling_range": q_rolling_range,
@@ -2776,9 +2741,6 @@ SELECT doc_id, lang, {case} AS pred_lang FROM s
 
 def oracle_sql() -> dict[str, str]:
     d = _oracle_sql()
-    # same logical semantics, different physical strategy — the salted
-    # two-pass plan must reproduce the unsalted answer exactly
-    d["sessionize_salted"] = d["sessionize_state"]
     # blocked-GEMM and fold-join cosine top-k share one oracle: identical
     # output by construction (rank flips would need two distinct candidate
     # cosines within ~1e-13 — verified exact at sf0.01 and sf0.1)
@@ -2824,9 +2786,7 @@ def rotation_hints() -> dict[str, dict]:
         "hist_buckets": "hist_quantiles",
         "bpe_roundtrip_join": "bpe_roundtrip",
         # physical twins — identical output, different plan
-        "sessionize_salted": "sessionize_state",
         "sessionize_gap": "sessionize_state",
-        "asof_merge": "asof_salted",
         "asof_union": "asof_salted",
         "stay_move": "stay_move_spliced",
         "rolling_range": "rolling",
@@ -2864,8 +2824,8 @@ def rotation_hints() -> dict[str, dict]:
         " frame_sample/embed_payload twins stay oracle-exact in extras",
         "contrastive": "green r03+r04; composition of split/window"
         " machinery pinned by tests/test_matrix_split.py",
-        "series_matrix": "green r03+r04; grouped-map Arrow path also"
-        " pytest-pinned (test_matrix_split.py)",
+        "series_matrix": "green r03+r04; the SQL collect/sort/pad plan is"
+        " pytest-pinned (test_matrix_split.py, test_plan_audit.py)",
         "hash_split": "green r01+r03+r04; the md5 draw is the same kernel"
         " as leakage_split's split stage",
     }
@@ -3140,7 +3100,6 @@ FROM sides GROUP BY node
 """,
         "asof_union": _ASOF_SQL,
         "asof_salted": _ASOF_SQL,
-        "asof_merge": _ASOF_SQL,
         "lag_lead": f"""
 SELECT event_id, user_id, ts, value,
        lag(value,1) OVER w AS value_lag1,

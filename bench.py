@@ -53,7 +53,6 @@ HEADLINE = [
     "stay_enrich",
     "asof_union",
     "asof_salted",
-    "asof_merge",
     "lag_lead",
     "rolling",
     "pivot_counts",

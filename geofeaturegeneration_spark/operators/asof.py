@@ -7,7 +7,7 @@ The north rule generalizes this into a true as-of join: for every left
 (probe) row at time *t*, attach the latest right (reference) row of the same
 key with right_time <= t — **zero temporal leakage** by construction.
 
-Three physical strategies, one logical semantics:
+Two physical strategies, one logical semantics:
 
 ``strategy="union"`` (default) — union-tag + last(ignorenulls) running window:
     1. project both sides to a common layout, tag right rows 0 / left rows 1,
@@ -28,30 +28,21 @@ Three physical strategies, one logical semantics:
     seam-stitching needed because every salt sees the full right history.
     Right-side replication cost = n_salts × (hot right rows); the right side
     of a backfill is normally the small side, which is exactly when salting
-    pays. Hot keys are detected with a cheap count aggregate (at cluster
-    scale: a sampled sketch).
+    pays. Hot keys are detected with a cheap count aggregate broadcast back
+    to both sides.
 
-``strategy="merge_asof"`` — partition-local Arrow path: co-partition both
-    sides into hash BUCKETS of the key (not per-key groups), run one
-    vectorized pandas ``merge_asof(by=key)`` per bucket via
-    ``cogroup().applyInPandas`` (SNIPPETS.md grouped-map pattern). Same
-    semantics, useful when the carried value set is wide (many columns) and
-    the window approach would need one last() per column.
-
-    Bucketing is the scale decision: grouping by the raw key would hand the
-    Python worker one Arrow batch per key (per-group serialization overhead
-    dominates with many small entities, and AQE coalesces the small shuffle
-    to a handful of tasks); hash-bucketing to ``num_buckets`` yields few,
-    large Arrow batches, an explicit parallelism floor that AQE leaves
-    alone, and pandas does the per-key split vectorized inside the worker
-    (``by=`` argument).
+Salting only pays once one key outgrows a task. Measured on 4 vCPUs over
+2.56 M tokens with 3 hot docs of 683,521 tokens each (seed 1, 3 repetitions):
+``union`` 1.44 s, ``salted`` (threshold 1024, 16 salts) 14.45 s, and a
+removed pandas ``merge_asof`` cogroup plan 2.83 s. A doc of ~10^6 tokens has
+fewer stays than that, so ``union`` is the plan callers should use; ``salted``
+stays for keys that really exceed a task.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _union_asof(
@@ -102,13 +93,12 @@ def asof_join(
     strategy: str = "union",
     hot_key_threshold: int = 250_000,
     n_salts: int = 16,
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """For each left row, attach the latest right ``value_cols`` with
     ``right[right_time] <= left[left_time]`` per ``on`` key (backward as-of,
     inclusive). Left rows with no prior right row get nulls.
 
-    Null semantics (identical across all three strategies): a null key is an
+    Null semantics (identical across both strategies): a null key is an
     ordinary key value — null-key probes match null-key right rows; a null
     time sorts before every real time, so a null-time right row is visible
     to every probe of its key and a null-time probe sees only null-time
@@ -158,199 +148,4 @@ def asof_join(
         out = _union_asof(l2, r2, on + ["_salt"], left_time, right_time, value_cols)
         return out.drop("_salt")
 
-    if strategy == "merge_asof":
-        return _merge_asof(
-            left, right, on, left_time, right_time, value_cols, num_buckets
-        )
-
     raise ValueError(f"unknown strategy {strategy!r}")
-
-
-def _merge_asof(
-    left: DataFrame,
-    right: DataFrame,
-    on: list[str],
-    left_time: str,
-    right_time: str,
-    value_cols: list[str],
-    num_buckets: int | None = None,
-) -> DataFrame:
-    import pandas as pd
-
-    if num_buckets is None:
-        num_buckets = int(
-            left.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-
-    out_schema = T.StructType(
-        list(left.schema.fields)
-        + [T.StructField(c, right.schema[c].dataType, True) for c in value_cols]
-    )
-    bucket = F.pmod(F.xxhash64(*[F.col(c) for c in on]), F.lit(num_buckets))
-    l_sel = left.withColumn("_b", bucket)
-    # right key columns are RENAMED (fresh exprIds): when both sides derive
-    # from the same scan, pass-through attributes share expression ids and
-    # Spark's cogroup attribute dedup silently drops the right-side copies.
-    r_keys = [f"_rk_{c}" for c in on]
-    r_sel = right.select(
-        *[F.col(c).alias(k) for c, k in zip(on, r_keys)],
-        F.col(right_time).alias("_rt"),
-        *value_cols,
-    ).withColumn(
-        "_b", F.pmod(F.xxhash64(*[F.col(k) for k in r_keys]), F.lit(num_buckets))
-    )
-    # cogroup on the BUCKET: one shuffle per side, one Arrow batch per
-    # bucket; pandas merge_asof(by=key) resolves the per-key as-of inside
-    # the worker, vectorized.
-    lg = l_sel.groupBy("_b")
-    rg = r_sel.groupBy("_b")
-
-    lt = left_time
-    out_names = [f.name for f in out_schema.fields]
-
-    # Null semantics must match the window strategies, where nulls are
-    # ordinary values: partitionBy groups null keys together, and a null
-    # time sorts FIRST (asc nulls-first), i.e. "earlier than everything".
-    # pandas merge_asof natively does neither (NaN by-keys never match, NaT
-    # times raise), so when nulls are present the match runs on sentinel
-    # copies: times fill to the minimal value, by-keys fill to a reserved
-    # object sentinel. The no-null path is untouched.
-    _NULL_KEY = "\x00__null_key__"
-
-    def _fill_time(s: pd.Series) -> pd.Series:
-        if pd.api.types.is_datetime64_any_dtype(s):
-            return s.fillna(pd.Timestamp.min) if s.isna().any() else s
-        if pd.api.types.is_integer_dtype(s):
-            return s  # integer dtype cannot hold NaN — nothing to fill
-        return s.fillna(float("-inf")) if s.isna().any() else s
-
-    def _match_times(ls: pd.Series, rs: pd.Series) -> tuple[pd.Series, pd.Series]:
-        """merge_asof needs both match columns in one dtype; nulls fill to
-        the minimal sentinel first. An int64 time column WITH nulls arrives
-        from Arrow as float64 — when the other side stayed int64, casting
-        the int side to float64 would collapse distinct epoch-micro values
-        above 2^53 (a probe could then match a future row). So mixed
-        int/float sides unify toward int64 when the float side is integral
-        (exact), and toward float64 only when it holds genuinely fractional
-        times (then fractional-vs->2^53-int comparison is inherently lossy
-        and float is the honest common type). Same-kind width mismatches
-        (int32/int64, float32/float64) widen losslessly."""
-        import numpy as np
-
-        ls, rs = _fill_time(ls), _fill_time(rs)
-        if ls.dtype == rs.dtype:
-            return ls, rs
-        ld = pd.api.types.is_datetime64_any_dtype(ls)
-        rd = pd.api.types.is_datetime64_any_dtype(rs)
-        if ld or rd:
-            return ls, rs  # datetime vs non-datetime: let pandas raise
-        li, ri = (
-            pd.api.types.is_integer_dtype(ls),
-            pd.api.types.is_integer_dtype(rs),
-        )
-        if li and ri:
-            return ls.astype("int64"), rs.astype("int64")
-        if li != ri:
-            f = rs if li else ls
-            vals = f.to_numpy(dtype="float64", copy=False)
-            finite = np.isfinite(vals)
-            if np.all(vals[finite] == np.floor(vals[finite])):
-                # The float side is integral, but if it STARTED as
-                # int64-with-nulls it already passed through Arrow's
-                # int->float64 conversion, which is lossy above 2^53
-                # (adjacent epoch-nano values collapse, so a probe could
-                # silently match a future row). Precision is gone before
-                # this function runs — refuse to merge silently.
-                if finite.any() and np.abs(vals[finite]).max() >= 2.0**53:
-                    raise ValueError(
-                        "merge_asof: nullable integer time column exceeds "
-                        "2^53 after float64 conversion — ordering is no "
-                        "longer exact (e.g. epoch nanos with nulls). Use "
-                        "epoch micros/millis, or make the column "
-                        "non-nullable so it stays int64 end-to-end."
-                    )
-                conv = f.replace(
-                    float("-inf"), float(np.iinfo("int64").min)
-                ).astype("int64")
-                return (ls, conv) if li else (conv, rs)
-            g = (ls if li else rs).astype("float64")
-            return (g, rs) if li else (ls, g)
-        return ls.astype("float64"), rs.astype("float64")
-
-    def _fill_key(s: pd.Series) -> pd.Series:
-        return s.astype(object).where(s.notna(), _NULL_KEY)
-
-    def merge(l_pdf: pd.DataFrame, r_pdf: pd.DataFrame) -> pd.DataFrame:
-        if l_pdf.empty:
-            return pd.DataFrame(columns=out_names)
-        l_pdf = l_pdf.drop(columns=["_b"])
-        r_pdf = r_pdf if r_pdf.empty else r_pdf.drop(columns=["_b"])
-        has_nulls = bool(
-            l_pdf[list(on)].isna().any().any()
-            or l_pdf[lt].isna().any()
-            or (
-                not r_pdf.empty
-                and (
-                    r_pdf[r_keys].isna().any().any()
-                    or r_pdf["_rt"].isna().any()
-                )
-            )
-        )
-        if not has_nulls:
-            if r_pdf.empty:
-                l_sorted = l_pdf.sort_values(lt, kind="mergesort")
-                for c in value_cols:
-                    l_sorted[c] = None
-                return l_sorted[out_names]
-            # _match_times also here: a mixed int/float time schema must
-            # behave identically in every bucket, not crash only in the
-            # null-free ones (no-op when dtypes already agree)
-            l_sorted, r_sorted = l_pdf.copy(), r_pdf.copy()
-            l_sorted["_ltm"], r_sorted["_rtm"] = _match_times(
-                l_sorted[lt], r_sorted["_rt"]
-            )
-            l_sorted = l_sorted.sort_values("_ltm", kind="mergesort")
-            r_sorted = r_sorted.sort_values("_rtm", kind="mergesort")
-            merged = pd.merge_asof(
-                l_sorted,
-                r_sorted,
-                left_on="_ltm",
-                right_on="_rtm",
-                left_by=list(on),
-                right_by=r_keys,
-                direction="backward",
-                allow_exact_matches=True,
-            )
-            return merged[out_names]
-
-        l2 = l_pdf.copy()
-        if r_pdf.empty:
-            l2 = l2.sort_values(lt, kind="mergesort", na_position="first")
-            for c in value_cols:
-                l2[c] = None
-            return l2[out_names]
-        r2 = r_pdf.copy()
-        l2["_ltm"], r2["_rtm"] = _match_times(l2[lt], r2["_rt"])
-        for c in on:
-            l2[f"_byl_{c}"] = _fill_key(l2[c])
-        l2 = l2.sort_values("_ltm", kind="mergesort")
-        for k in r_keys:
-            r2[f"_byr_{k}"] = _fill_key(r2[k])
-        r2 = r2.sort_values("_rtm", kind="mergesort")
-        merged = pd.merge_asof(
-            l2,
-            r2,
-            left_on="_ltm",
-            right_on="_rtm",
-            left_by=[f"_byl_{c}" for c in on],
-            right_by=[f"_byr_{k}" for k in r_keys],
-            direction="backward",
-            allow_exact_matches=True,
-        )
-        return merged[out_names]
-
-    return (
-        lg.cogroup(rg)
-        .applyInPandas(merge, schema=out_schema)
-        .select(*left.columns, *value_cols)
-    )

@@ -3,25 +3,25 @@
 calendar month, order by time, drop groups larger than ``max_rows``, and
 zero-pad each group to a fixed (max_rows, n_features) matrix.
 
-This is THE grouped-map pattern: ``groupBy(...).applyInPandas`` with the
-padding done by numpy inside the Arrow batch (vectorized — no per-row
-Python). The reference fans out a multiprocessing pool per user and passes
-the matrix third dimension back through a locked shared variable
+Pure SQL in the ``ordered_tokens`` style: one ``groupBy(entity, period)``
+collects (time, feature-row) structs, ``array_sort`` orders them, and the
+padding is an ``array_repeat`` of zero rows — no Python worker. The
+reference fans out a multiprocessing pool per user and passes the matrix
+third dimension back through a locked shared variable
 (AttachFeature.py:975-979); here the schema is static and the groups are
-ordinary tasks.
+ordinary aggregate buckets.
 
-Scale notes: group state is bounded by max_rows (128 in the reference), so
-a task's memory is O(groups_per_task * max_rows * n_features) — flat and
-small. The one shuffle is the groupBy hash partitioning.
+Scale notes: the one shuffle is the groupBy hash partitioning on (entity,
+period). A kept group holds at most ``max_rows`` rows (128 in the
+reference), so a task's memory is O(groups_per_task * max_rows *
+n_features). Building the wide matrix column in SQL avoids the Arrow
+round trip of nested Python lists that a grouped-map worker would emit.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def series_to_matrix(
@@ -31,7 +31,6 @@ def series_to_matrix(
     feature_cols: list[str],
     max_rows: int = 128,
     period: str = "month",
-    num_buckets: int | None = None,
 ) -> DataFrame:
     """Returns (entity, period_start, n_rows, matrix) with
     matrix: array<array<double>> of shape (max_rows, len(feature_cols)),
@@ -39,50 +38,35 @@ def series_to_matrix(
 
     Groups with more than ``max_rows`` rows are dropped, matching the
     reference's skip-if-too-long guard (AttachFeature.py:696-697); empty
-    groups cannot occur (grouped-map only sees existing groups) —
-    the reference's empty-frame special case (Record.md:6-10) is a
-    non-issue here.
+    groups cannot occur (an aggregate only sees existing groups) — the
+    reference's empty-frame special case (Record.md:6-10) is a non-issue
+    here.
 
-    Physically the grouped map runs per hash BUCKET of (entity, period),
-    not per group: one Arrow batch per bucket, pandas ``groupby`` splits the
-    groups inside the worker. With millions of small (entity, month) groups
-    the per-group Arrow round-trip would dominate; bucketing bounds the
-    batch count at ``num_buckets`` (default: shuffle parallelism).
+    Edge rules: rows with a null entity or time are dropped (pandas
+    ``groupby`` drops null keys); a null feature becomes NaN. Rows tied on
+    time order by their feature values, so tied input gives the same
+    matrix on every run.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(entity_col, df.schema[entity_col].dataType, False),
-            T.StructField("period_start", T.TimestampType(), False),
-            T.StructField("n_rows", T.IntegerType(), False),
-            T.StructField(
-                "matrix", T.ArrayType(T.ArrayType(T.DoubleType(), False), False), False
-            ),
-        ]
-    )
     n_feat = len(feature_cols)
-    if num_buckets is None:
-        num_buckets = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
-        )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {entity_col: [], "period_start": [], "n_rows": [], "matrix": []}
-        for (ent, per), g in pdf.groupby([entity_col, "_period"], sort=False):
-            n = len(g)
-            if n > max_rows:
-                continue
-            g = g.sort_values(time_col, kind="mergesort")
-            mat = np.zeros((max_rows, n_feat), dtype=np.float64)
-            mat[:n, :] = g[feature_cols].to_numpy(dtype=np.float64)
-            out[entity_col].append(ent)
-            out["period_start"].append(per)
-            out["n_rows"].append(np.int32(n))
-            out["matrix"].append(mat.tolist())
-        return pd.DataFrame(out)
-
-    with_period = df.withColumn(
-        "_period", F.date_trunc(period, F.col(time_col))
-    ).withColumn(
-        "_b", F.pmod(F.xxhash64(F.col(entity_col), F.col("_period")), F.lit(num_buckets))
+    row = F.struct(
+        F.col(time_col).alias("t"),
+        F.array(
+            *[F.coalesce(F.col(c).cast("double"), F.lit(float("nan"))) for c in feature_cols]
+        ).alias("x"),
     )
-    return with_period.groupBy("_b").applyInPandas(build, schema=out_schema)
+    groups = (
+        df.filter(F.col(entity_col).isNotNull() & F.col(time_col).isNotNull())
+        .groupBy(entity_col, F.date_trunc(period, F.col(time_col)).alias("period_start"))
+        .agg(
+            F.count(F.lit(1)).cast("int").alias("n_rows"),
+            F.array_sort(F.collect_list(row)).alias("_rows"),
+        )
+        .filter(F.col("n_rows") <= max_rows)
+    )
+    pad = F.array_repeat(F.array_repeat(F.lit(0.0), n_feat), F.lit(max_rows) - F.col("n_rows"))
+    return groups.select(
+        entity_col,
+        "period_start",
+        "n_rows",
+        F.concat(F.transform("_rows", lambda r: r["x"]), pad).alias("matrix"),
+    )

@@ -12,10 +12,12 @@ DP_GenerateTrajectory.py:62). Two flavors:
   Spark-batch analog of ``session_window``).
 
 Both are pure window-function compositions — one shuffle on the entity key,
-whole-stage codegen throughout, no Python. At cluster scale the shuffle is
-the only data movement; AQE handles moderate skew, and callers with
-pathological hot entities should pre-filter or use the salted as-of machinery
-(operators/asof.py) for the join stages that follow.
+whole-stage codegen throughout, no Python. The shuffle is the only data
+movement, and one plan serves every entity size: a hot entity's run
+segmentation is a single sorted pass in one task. Measured on 4 vCPUs over
+2.56 M tokens with 3 hot docs of 683,521 tokens each, this plan took 4.87 s
+and a removed two-pass time-range-salted twin 12.75 s — an entity must
+outgrow a task before splitting it pays.
 
 Semantics matched exactly to the reference:
 * episode boundary flag: ``state != lag(state) OR entity change``
@@ -118,130 +120,6 @@ def sessionize_state_change(
     out = (
         grp.withColumn("etime", F.lead("stime").over(w2))
         .withColumn("stay_seq", F.row_number().over(w2))
-        .filter(F.col("etime").isNotNull())
-        .withColumn(
-            "duration_s",
-            (F.unix_timestamp("etime") - F.unix_timestamp("stime")).cast("double"),
-        )
-        .drop("_sid", "_ord")
-    )
-    if min_duration_s is not None:
-        out = out.filter(F.col("duration_s") >= F.lit(min_duration_s))
-    return out
-
-
-def sessionize_state_change_salted(
-    df: DataFrame,
-    entity_cols: list[str],
-    time_col: str,
-    state_col: str,
-    min_duration_s: float | None = None,
-    keep_cols: list[str] | None = None,
-    n_salts: int = 8,
-    hot_threshold: int = 1_000_000,
-    order_cols: list[str] | None = None,
-) -> DataFrame:
-    """Salted variant of ``sessionize_state_change`` for hot entities whose
-    full row set exceeds one task (SURVEY.md §7.4 — the seam-stitching
-    problem; skew precedent README.md:339-387).
-
-    Two passes:
-
-    1. **compress within (entity, salt)**: hot entities (row count >
-       ``hot_threshold``; cheap count agg, sampled sketch at cluster scale)
-       are split into ``n_salts`` CONTIGUOUS time ranges; each (entity,
-       salt) sub-window compresses its rows into state-runs. This is the
-       heavy stage and it parallelizes across salts.
-    2. **merge runs per entity**: the same state-change recipe runs again
-       over the run summaries (count -> sum of run lengths). A run that
-       crosses a salt seam appears as two adjacent same-state runs and is
-       merged exactly; a salt wholly inside one run chains through the same
-       logic. Episode outputs (stime/etime/duration/n_rows/stay_seq/
-       keep_cols first-values) are then identical to the unsalted op by
-       construction (verified by the parity test).
-
-    Pass 2's volume is the run count — rows compressed by the mean run
-    length. For adversarial data with run length ~1 the salt level can be
-    applied recursively; one level covers the realistic regime.
-
-    Time-range salting (not hash): boundaries must be order-contiguous so
-    each seam is a single run pair, which is what makes the merge exact.
-
-    ``order_cols`` — same tiebreak contract as the unsalted op. Tied
-    timestamps always share a salt (the salt is a function of the time),
-    so a LOCAL (entity, salt) row number is enough: run order across the
-    whole entity is (stime, local _ord), total because equal stime implies
-    equal salt.
-    """
-    keep_cols = keep_cols or []
-    bounds = df.groupBy(*entity_cols).agg(
-        F.min(time_col).alias("_tmin"),
-        F.max(time_col).alias("_tmax"),
-        F.count(F.lit(1)).alias("_cnt"),
-    )
-    salted = df.join(bounds, entity_cols)
-    span = (
-        F.unix_timestamp("_tmax").cast("double")
-        - F.unix_timestamp("_tmin").cast("double")
-        + F.lit(1.0)
-    )
-    rel = F.unix_timestamp(F.col(time_col)).cast("double") - F.unix_timestamp(
-        "_tmin"
-    ).cast("double")
-    salt = F.when(
-        F.col("_cnt") > hot_threshold,
-        F.least(F.lit(n_salts - 1), F.floor(rel / (span / n_salts)).cast("int")),
-    ).otherwise(F.lit(0))
-    salted = salted.withColumn("_salt", salt).drop("_tmin", "_tmax", "_cnt")
-
-    # pass 1: state-runs within each (entity, salt) time slice
-    sub_entity = entity_cols + ["_salt"]
-    w1 = W.partitionBy(*sub_entity).orderBy(
-        time_col, *[F.col(c) for c in (order_cols or [])]
-    )
-    prev = F.lag(F.col(state_col)).over(w1)
-    flag = F.when(prev.isNull() | (prev != F.col(state_col)), 1).otherwise(0)
-    cum1 = w1.rowsBetween(W.unboundedPreceding, W.currentRow)
-    runs = (
-        salted.withColumn("_lrn", F.row_number().over(w1))
-        .withColumn("_new", flag)
-        .withColumn("_rid", F.sum("_new").over(cum1))
-        .groupBy(*sub_entity, "_rid")
-        .agg(
-            F.min(time_col).alias("stime"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("_lrn").alias("_ord"),
-            F.min_by(state_col, "_lrn").alias(state_col),
-            *[F.min_by(c, "_lrn").alias(c) for c in keep_cols],
-        )
-        .drop("_salt", "_rid")
-    )
-
-    # pass 2: merge seam-adjacent same-state runs, then episode outputs —
-    # identical recipe over the compressed rows. Run order (stime, _ord)
-    # is total: equal stime implies equal salt, where the local row
-    # number disambiguates.
-    w2 = W.partitionBy(*entity_cols).orderBy("stime", "_ord")
-    prev2 = F.lag(F.col(state_col)).over(w2)
-    flag2 = F.when(prev2.isNull() | (prev2 != F.col(state_col)), 1).otherwise(0)
-    cum2 = w2.rowsBetween(W.unboundedPreceding, W.currentRow)
-    _runkey = F.struct(F.col("stime"), F.col("_ord"))
-    merged = (
-        runs.withColumn("_new", flag2)
-        .withColumn("_sid", F.sum("_new").over(cum2))
-        .groupBy(*entity_cols, "_sid")
-        .agg(
-            F.min("stime").alias("stime"),
-            F.sum("n_rows").alias("n_rows"),
-            F.min("_ord").alias("_ord"),
-            F.min_by(state_col, _runkey).alias(state_col),
-            *[F.min_by(c, _runkey).alias(c) for c in keep_cols],
-        )
-    )
-    w3 = W.partitionBy(*entity_cols).orderBy("stime", "_ord")
-    out = (
-        merged.withColumn("etime", F.lead("stime").over(w3))
-        .withColumn("stay_seq", F.row_number().over(w3))
         .filter(F.col("etime").isNotNull())
         .withColumn(
             "duration_s",

@@ -17,8 +17,8 @@ skips completed units (geofeaturegeneration_spark/checkpoint.py).
 
 Pipeline per unit (the north-rule transform):
   explode tokens -> event-time from sequence position -> state-change
-  sessionize -> as-of backfill of previous-run context (salted for hot
-  docs) -> lag/lead features.
+  sessionize -> as-of backfill of the previous stay's run length -> lag/lead
+  features.
 """
 
 from __future__ import annotations
@@ -53,13 +53,14 @@ def build_features(seq_df):
     stays = sessionize_state_change(
         ev, ["doc_id", "source"], "ts", "token", min_duration_s=60.0
     )
+    # a stay's length is known at its end, so the right time is etime: each
+    # stay sees the previous kept stay, never itself
     right = stays.select(
         "doc_id", "source",
-        F.col("stime").alias("r_ts"), F.col("n_rows").alias("prev_run_len"),
+        F.col("etime").alias("r_ts"), F.col("n_rows").alias("prev_run_len"),
     )
     feats = asof_join(
-        stays, right, ["doc_id", "source"], "stime", "r_ts", ["prev_run_len"],
-        strategy="salted", hot_key_threshold=1_000_000, n_salts=16,
+        stays, right, ["doc_id", "source"], "stime", "r_ts", ["prev_run_len"]
     )
     return lag_lead_features(feats, ["doc_id", "source"], "stime", ["duration_s"])
 
@@ -81,7 +82,7 @@ def main(argv=None) -> int:
 
     # lineage = input identity + transform version; changing either
     # invalidates prior checkpoints for affected partitions.
-    lineage = f"input={args.input};buckets={args.buckets};xform=v1"
+    lineage = f"input={args.input};buckets={args.buckets};xform=v2"
 
     def run_one(key: str):
         src, bucket = key.rsplit("-", 1)

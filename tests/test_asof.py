@@ -1,5 +1,5 @@
-"""As-of join: all three physical strategies must agree with the naive
-row-by-row oracle (backward, inclusive), including:
+"""As-of join: both physical strategies (union, salted) must agree with
+the naive row-by-row oracle (backward, inclusive), including:
 * timestamp ties (right row at exactly t IS visible — <= rule)
 * probes before any right row (nulls)
 * keys present on only one side
@@ -56,7 +56,7 @@ def _expected(left, right):
     return exp.sort_values(["key", "pts", "probe_seq"]).reset_index(drop=True)
 
 
-@pytest.mark.parametrize("strategy", ["union", "salted", "merge_asof"])
+@pytest.mark.parametrize("strategy", ["union", "salted"])
 def test_asof_matches_oracle(data, strategy):
     ldf, rdf, left, right = data
     kwargs = {}
@@ -105,15 +105,15 @@ def test_no_leakage_property(data):
 
 def test_left_rowcount_preserved(data):
     ldf, rdf, left, _ = data
-    for strategy in ["union", "salted", "merge_asof"]:
+    for strategy in ["union", "salted"]:
         got = asof_join(ldf, rdf, ["key"], "pts", "rts", ["val", "tag"], strategy=strategy)
         assert got.count() == len(left)
 
 
 def test_strategies_agree_on_skewed_random_data(spark):
-    """union / salted / bucketed merge_asof must be value-identical on a
-    larger deterministic random workload with a hot key owning ~half the
-    rows (the regime salting exists for)."""
+    """union / salted must be value-identical on a larger deterministic
+    random workload with a hot key owning ~half the rows (the regime
+    salting exists for)."""
     import numpy as np
     import pandas as pd
 
@@ -145,28 +145,40 @@ def test_strategies_agree_on_skewed_random_data(spark):
     for strategy, kw in [
         ("union", {}),
         ("salted", {"hot_key_threshold": 100, "n_salts": 4}),
-        ("merge_asof", {"num_buckets": 8}),
     ]:
         got = asof_join(
             ldf, rdf, ["key"], "pts", "rts", ["val"], strategy=strategy, **kw
         ).toPandas().sort_values("rid").reset_index(drop=True)
         outs[strategy] = got
 
-    base = outs["union"]
-    for s in ["salted", "merge_asof"]:
-        o = outs[s]
-        assert len(o) == len(base) == n_l, s
-        a = base["val"].astype(float).to_numpy()
-        b = o["val"].astype(float).to_numpy()
-        assert np.array_equal(np.isnan(a), np.isnan(b)), s
-        assert np.allclose(a[~np.isnan(a)], b[~np.isnan(b)]), s
+    base, o = outs["union"], outs["salted"]
+    assert len(o) == len(base) == n_l
+    a = base["val"].astype(float).to_numpy()
+    b = o["val"].astype(float).to_numpy()
+    assert np.array_equal(np.isnan(a), np.isnan(b))
+    assert np.allclose(a[~np.isnan(a)], b[~np.isnan(b)])
 
 
-def test_merge_asof_bigint_times_above_2_53_with_nulls(spark):
-    """Integer time columns must not round-trip through float64 in the
-    null-sentinel path: epoch-micro-scale values differing by 1 would
-    collapse and let a probe match a right row from its future."""
-    base = (1 << 55) + 10  # above float64's 2^53 integer-exact range
+STRATEGIES = [("union", {}), ("salted", {"hot_key_threshold": 1, "n_salts": 4})]
+
+
+def _by_rid(left, right):
+    return {
+        s: {
+            r["rid"]: r["val"]
+            for r in asof_join(
+                left, right, ["key"], "pts", "rts", ["val"], strategy=s, **kw
+            ).collect()
+        }
+        for s, kw in STRATEGIES
+    }
+
+
+def test_bigint_times_above_2_53_with_nulls(spark):
+    """Integer times at epoch-nano scale order exactly: values differing by
+    1 above float64's 2^53 integer range must not collapse and let a probe
+    match a right row from its future."""
+    base = (1 << 55) + 10
     left = spark.createDataFrame(
         [("k", base, 1), ("k", base + 1, 2), (None, base, 3)],
         "key STRING, pts BIGINT, rid INT",
@@ -175,47 +187,30 @@ def test_merge_asof_bigint_times_above_2_53_with_nulls(spark):
         [("k", base + 1, 99.0), ("k", base - 5, 7.0)],
         "key STRING, rts BIGINT, val DOUBLE",
     )
-    got = {
-        r["rid"]: r["val"]
-        for r in asof_join(
-            left, right, ["key"], "pts", "rts", ["val"],
-            strategy="merge_asof", num_buckets=2,
-        ).collect()
-    }
-    # probe at base must NOT see the right row at base+1
-    assert got[1] == 7.0
-    assert got[2] == 99.0
-    assert got[3] is None  # null key, no null-key right rows
+    for s, got in _by_rid(left, right).items():
+        assert got == {1: 7.0, 2: 99.0, 3: None}, s
 
 
-def test_merge_asof_nullable_bigint_times_above_2_53_raise(spark):
-    """A time column that is int64 WITH nulls reaches the worker as float64
-    (Arrow conversion) — above 2^53 adjacent values have already collapsed
-    before any fix can run, so a probe could silently match a future row.
-    The worker must refuse to merge instead of guessing."""
-    import pytest as _pytest
-
+def test_nullable_bigint_times_above_2_53_exact(spark):
+    """Null times on both sides of a bigint time column above 2^53: a null
+    time sorts first, and the real times still order exactly."""
     base = (1 << 55) + 10
     left = spark.createDataFrame(
-        [("k", base, 1), ("k", None, 2)],
+        [("k", base, 1), ("k", None, 2), ("k", base + 1, 3)],
         "key STRING, pts BIGINT, rid INT",
     )
     right = spark.createDataFrame(
-        [("k", base - 5, 7.0)], "key STRING, rts BIGINT, val DOUBLE"
+        [("k", base + 1, 99.0), ("k", base - 5, 7.0), ("k", None, 5.0)],
+        "key STRING, rts BIGINT, val DOUBLE",
     )
-    out = asof_join(
-        left, right, ["key"], "pts", "rts", ["val"],
-        strategy="merge_asof", num_buckets=2,
-    )
-    with _pytest.raises(Exception, match="2\\^53"):
-        out.collect()
+    for s, got in _by_rid(left, right).items():
+        assert got == {1: 7.0, 2: 5.0, 3: 99.0}, s
 
 
-def test_merge_asof_fractional_double_times_with_int_left(spark):
+def test_fractional_double_times_with_int_left(spark):
     """Mixed bigint/double time schema with genuinely fractional right
-    times: must NOT truncate 10.5 -> 10 (a probe at 10 would then see a
-    right row from its future), in null-bearing and null-free buckets
-    alike."""
+    times: 10.5 must not truncate to 10 (a probe at 10 would then see a
+    right row from its future)."""
     left = spark.createDataFrame(
         [("k", 10, 1), ("k", 11, 2), (None, 10, 3)],
         "key STRING, pts BIGINT, rid INT",
@@ -224,13 +219,11 @@ def test_merge_asof_fractional_double_times_with_int_left(spark):
         [("k", 10.5, 99.0), ("k", 9.0, 7.0)],
         "key STRING, rts DOUBLE, val DOUBLE",
     )
-    got = {
-        r["rid"]: r["val"]
-        for r in asof_join(
-            left, right, ["key"], "pts", "rts", ["val"],
-            strategy="merge_asof", num_buckets=2,
-        ).collect()
-    }
-    assert got[1] == 7.0    # 10 must not see the 10.5 row
-    assert got[2] == 99.0   # 11 sees it
-    assert got[3] is None
+    for s, got in _by_rid(left, right).items():
+        assert got == {1: 7.0, 2: 99.0, 3: None}, s
+
+
+def test_unknown_strategy_rejected(data):
+    ldf, rdf, _, _ = data
+    with pytest.raises(ValueError, match="merge_asof"):
+        asof_join(ldf, rdf, ["key"], "pts", "rts", ["val"], strategy="merge_asof")

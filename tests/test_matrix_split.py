@@ -1,6 +1,7 @@
-"""series_to_matrix (grouped-map pad, AttachFeature.py:629-711 analog),
+"""series_to_matrix (SQL pad, AttachFeature.py:629-711 analog),
 hash_split, negative_samples."""
 
+import math
 import os
 import sys
 from datetime import datetime
@@ -27,16 +28,34 @@ def test_series_to_matrix_pads_orders_and_drops(spark):
         *[("b", datetime(2024, 1, 8 + i), float(i)) for i in range(5)],
         # user a, second week
         ("a", datetime(2024, 1, 15, 1), 9.0),
+        # user c, exactly max_rows rows -> kept, no padding
+        *[("c", datetime(2024, 1, 8 + i), float(i)) for i in range(4)],
+        # user d, a null feature -> NaN
+        ("d", datetime(2024, 1, 9), None),
+        ("d", datetime(2024, 1, 8), 4.0),
+        # null entity or null time -> dropped
+        (None, datetime(2024, 1, 8), 5.0),
+        ("a", None, 7.0),
+        # user e, three rows tied on time
+        *[("e", datetime(2024, 1, 8), v) for v in (2.0, 1.0, 3.0)],
     ]
     df = spark.createDataFrame(rows, "uid STRING, ts TIMESTAMP, v DOUBLE")
     out = series_to_matrix(df, "uid", "ts", ["v"], max_rows=4, period="week")
     got = {(r["uid"], str(r["period_start"])): r for r in out.collect()}
-    assert set(got) == {("a", "2024-01-08 00:00:00"), ("a", "2024-01-15 00:00:00")}
-    wk1 = got[("a", "2024-01-08 00:00:00")]
-    assert wk1["n_rows"] == 3
-    assert wk1["matrix"] == [[1.0], [2.0], [3.0], [0.0]]  # time-ordered + pad
-    wk2 = got[("a", "2024-01-15 00:00:00")]
-    assert wk2["matrix"] == [[9.0], [0.0], [0.0], [0.0]]
+    wk1, wk2 = "2024-01-08 00:00:00", "2024-01-15 00:00:00"
+    assert set(got) == {("a", wk1), ("a", wk2), ("c", wk1), ("d", wk1), ("e", wk1)}
+    assert got[("a", wk1)]["n_rows"] == 3
+    assert got[("a", wk1)]["matrix"] == [[1.0], [2.0], [3.0], [0.0]]  # time-ordered + pad
+    assert got[("a", wk2)]["matrix"] == [[9.0], [0.0], [0.0], [0.0]]
+    assert got[("c", wk1)]["n_rows"] == 4
+    assert got[("c", wk1)]["matrix"] == [[0.0], [1.0], [2.0], [3.0]]
+    d = got[("d", wk1)]["matrix"]
+    assert d[0] == [4.0] and math.isnan(d[1][0]) and d[2:] == [[0.0], [0.0]]
+    # tied rows give the same matrix on a second run over a reshuffled input
+    again = series_to_matrix(df.repartition(3), "uid", "ts", ["v"], max_rows=4, period="week")
+    ties = [r["matrix"] for r in again.filter(F.col("uid") == "e").collect()]
+    assert ties == [got[("e", wk1)]["matrix"]]
+    assert sorted(x for (x,) in ties[0][:3]) == [1.0, 2.0, 3.0]
 
 
 def test_series_to_matrix_multi_feature(spark):

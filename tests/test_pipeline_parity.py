@@ -1,6 +1,6 @@
 """End-to-end north-rule parity: the full spark-submit pipeline
 (jobs/run_pipeline.build_features: explode -> event-time from position ->
-state-change sessionize -> salted as-of backfill -> lag/lead) against the
+state-change sessionize -> as-of backfill -> lag/lead) against the
 row-by-row pandas oracle, allclose at EVERY (entity, timestamp) — the
 BASELINE.json acceptance criterion, including zero temporal leakage (the
 oracle's as-of is the naive prefix-scan definition)."""
@@ -41,7 +41,8 @@ def parity(spark):
     stays = O.sessionize_state_change(
         ev, ["doc_id", "source"], "ts", "token", min_duration_s=60.0
     )
-    right = stays.rename(columns={"stime": "r_ts"})[
+    # a stay's length is known at its end: the right time is etime
+    right = stays.rename(columns={"etime": "r_ts"})[
         ["doc_id", "source", "r_ts", "n_rows"]
     ].rename(columns={"n_rows": "prev_run_len"})
     exp = O.asof_join(
@@ -90,3 +91,16 @@ def test_zero_leakage_backfill(parity):
     for (doc, src, st), v in got.set_index(["doc_id", "source", "stime"])["prev_run_len"].items():
         ev = e.loc[(doc, src, st)]
         assert (pd.isna(v) and pd.isna(ev)) or v == ev
+
+
+def test_backfill_is_previous_kept_stay(parity):
+    """prev_run_len is the run length of the entity's previous kept stay
+    (null on its first), never the stay's own: the right side's time is the
+    stay's end, which falls after its own start."""
+    got, _ = parity
+    g = got.sort_values(["doc_id", "source", "stime"]).reset_index(drop=True)
+    prev = g.groupby(["doc_id", "source"], sort=False)["n_rows"].shift(1)
+    a = pd.to_numeric(g["prev_run_len"]).to_numpy(dtype=float)
+    b = pd.to_numeric(prev).to_numpy(dtype=float)
+    assert (~np.isnan(b)).any()
+    assert np.array_equal(a, b, equal_nan=True)

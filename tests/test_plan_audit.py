@@ -199,10 +199,33 @@ def test_narrow_exprs_no_exchange_codegen(spark):
 
 def test_salted_paths_never_single_partition(spark):
     qs = all_queries()
-    for name in ["asof_salted", "sessionize_salted", "stay_enrich"]:
+    for name in ["asof_salted", "stay_enrich"]:
         plan = plan_str(qs[name](spark, SF_DIR), "simple")
         assert "SinglePartition" not in plan, name
         assert "CartesianProduct" not in plan, name
+
+
+def test_series_matrix_is_sql_with_one_exchange(spark):
+    """The (entity, period) matrix build is one aggregate over one hash
+    exchange, padded by SQL expressions: no Python worker in the executed
+    plan."""
+    df = all_queries()["series_matrix"](spark, SF_DIR)
+    df.collect()
+    phys = df._jdf.queryExecution().executedPlan().toString()
+    final = phys.split("== Initial Plan ==")[0]
+    for node in ("FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas", "ArrowEvalPython"):
+        assert node not in final, final
+    assert final.count("Exchange") == 1, final
+
+
+def test_pipeline_backfill_has_no_hot_key_join(spark):
+    """jobs/run_pipeline.build_features runs the plain union as-of: no hot-key
+    count broadcast back into the stays."""
+    from geofeaturegeneration_spark.datagen import generate_sequences
+    from jobs.run_pipeline import build_features
+
+    plan = plan_str(build_features(generate_sequences(spark, n_docs=5, seed=1)), "simple")
+    assert "BroadcastHashJoin" not in plan, plan
 
 
 def test_sessionize_shuffles_only_on_entity(spark):

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from geofeaturegeneration_spark.operators.sessionize import (
     sessionize_gap,
     sessionize_state_change,
-    sessionize_state_change_salted,
     stay_move,
 )
 from tests import oracle
@@ -161,8 +160,7 @@ def test_tied_timestamps_deterministic_with_order_cols(spark):
     reference's pandas stable sort silently uses input row order, which a
     distributed shuffle does not preserve. With order_cols the output is a
     pure function of the data: segmentation, first-row extraction, and
-    episode sequencing all key on the (ts, event_id) total order, and the
-    salted two-pass plan agrees with the unsalted one on tied data."""
+    episode sequencing all key on the (ts, event_id) total order."""
     import datetime as dt
 
     t0 = dt.datetime(2024, 3, 1)
@@ -186,14 +184,9 @@ def test_tied_timestamps_deterministic_with_order_cols(spark):
     a = sessionize_state_change(
         df, ["uid"], "ts", "state", keep_cols=["v"], order_cols=["event_id"]
     )
-    b = sessionize_state_change_salted(
-        df, ["uid"], "ts", "state", keep_cols=["v"], order_cols=["event_id"],
-        n_salts=3, hot_threshold=1,
-    )
     key = ["uid", "stay_seq", "state", "stime", "etime", "n_rows", "v"]
     ra = sorted(tuple(r[k] for k in key) for r in a.collect())
-    rb = sorted(tuple(r[k] for k in key) for r in b.collect())
-    assert ra == rb and len(ra) > 0
+    assert len(ra) > 0
     # u1's first episode is the event_id order: click (id 0) first, alone —
     # the tied error row opens its own episode at the same stime
     u1 = [r for r in ra if r[0] == "u1"]

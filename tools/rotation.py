@@ -34,20 +34,24 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def load_history() -> dict[str, set[int]]:
-    """query -> rounds with a fully green driver row (rows+schema+hash)."""
+def load_history(root: str = REPO) -> dict[str, set[int]]:
+    """query -> rounds with a fully green driver row (rows+schema+hash).
+
+    Only files named exactly ``CORRECTNESS_r<N>.json`` count: a stray copy
+    such as ``CORRECTNESS_r01 (2).json`` is skipped, not read as round 12.
+    """
     hist: dict[str, set[int]] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        stem = os.path.basename(path)
-        digits = "".join(c for c in stem if c.isdigit())
-        if not digits:
+    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
             continue
-        rnd = int(digits)
+        rnd = int(m.group(1))
         try:
             rows = json.load(open(path))
         except (OSError, json.JSONDecodeError):
@@ -63,7 +67,7 @@ def load_history() -> dict[str, set[int]]:
     return hist
 
 
-def plan(entry_module=None) -> dict:
+def plan(entry_module=None, root: str = REPO) -> dict:
     if entry_module is None:
         sys.path.insert(0, REPO)
         import __spark_entry__ as entry_module
@@ -71,7 +75,7 @@ def plan(entry_module=None) -> dict:
     extras = list(entry_module.extra_queries().keys())
     hints = entry_module.rotation_hints()
     carriers, foldable = hints["carriers"], hints["foldable"]
-    hist = load_history()
+    hist = load_history(root)
 
     never = [k for k in extras if not hist.get(k)]
     promote = sorted(
@@ -89,11 +93,13 @@ def plan(entry_module=None) -> dict:
     # its machinery keeps earning fresh driver rows) or itself
     # driver-verified at least once (so the chain bottoms out in a real
     # CORRECTNESS row) — otherwise the "covered by carrier" claim is
-    # circular and the gate must fail
+    # circular and the gate must fail. A query promoted by this plan is
+    # in the new window and earns its own driver row, so it is not weak.
     weak_carriers = {
         k: carriers[k]
         for k in extras
         if not hist.get(k)
+        and k not in chosen_in
         and k in carriers
         and carriers[k] not in new_window
         and not hist.get(carriers[k])
