@@ -13,8 +13,9 @@ ordinary aggregate buckets.
 
 Scale notes: the one shuffle is the groupBy hash partitioning on (entity,
 period). A kept group holds at most ``max_rows`` rows (128 in the
-reference), so a task's memory is O(groups_per_task * max_rows *
-n_features). Building the wide matrix column in SQL avoids the Arrow
+reference), but the aggregate collects every group in full before the
+``n_rows <= max_rows`` filter runs, so a task's memory grows with the
+largest (entity, period) group, dropped or not. Building the wide matrix column in SQL avoids the Arrow
 round trip of nested Python lists that a grouped-map worker would emit.
 """
 

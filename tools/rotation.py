@@ -40,14 +40,14 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def load_history(root: str = REPO) -> dict[str, set[int]]:
+def load_history() -> dict[str, set[int]]:
     """query -> rounds with a fully green driver row (rows+schema+hash).
 
     Only files named exactly ``CORRECTNESS_r<N>.json`` count: a stray copy
     such as ``CORRECTNESS_r01 (2).json`` is skipped, not read as round 12.
     """
     hist: dict[str, set[int]] = {}
-    for path in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
         if not m:
             continue
@@ -67,7 +67,7 @@ def load_history(root: str = REPO) -> dict[str, set[int]]:
     return hist
 
 
-def plan(entry_module=None, root: str = REPO) -> dict:
+def plan(entry_module=None) -> dict:
     if entry_module is None:
         sys.path.insert(0, REPO)
         import __spark_entry__ as entry_module
@@ -75,7 +75,7 @@ def plan(entry_module=None, root: str = REPO) -> dict:
     extras = list(entry_module.extra_queries().keys())
     hints = entry_module.rotation_hints()
     carriers, foldable = hints["carriers"], hints["foldable"]
-    hist = load_history(root)
+    hist = load_history()
 
     never = [k for k in extras if not hist.get(k)]
     promote = sorted(
