@@ -4,28 +4,32 @@ Replaces the reference's file-existence resume (DP_GenerateTrajectory.py:50-52,
 ``gRefreshDataFlag`` gate AttachFeature.py:1059-1066) with a real bookkeeping
 table: one record per (job_id, partition_key) carrying status, row count,
 wall-clock, and a lineage string (input fingerprint + code version), written
-atomically AFTER the partition's output lands.
+AFTER the partition's output lands.
 
-Storage: an append-only parquet directory ("Iceberg-layout": on a cluster
-with the Iceberg runtime this becomes ``df.writeTo(table).append()`` against
-a real catalog table — the record schema and the read-latest-state logic are
-identical; the jar is not available offline, see session.py). Readers reduce
-to the latest record per partition, so re-marks and concurrent retries are
-safe: last writer wins, and output idempotency comes from dynamic partition
-overwrite, not from the marker.
+Storage: JSON marks written by the driver, one JSON line per mark in its
+own ``<attempt_id>.json`` file, through the Hadoop FileSystem API (any scheme
+the job writes to; no Spark job per mark). Readers reduce to the latest
+record per partition, so re-marks and concurrent retries are safe: last
+writer wins, and output idempotency comes from dynamic partition overwrite,
+not from the marker. A mark torn by a crash reads as absent, so its unit
+re-runs; a store of non-JSON files (the older Parquet layout) reads as
+empty, so every unit re-runs.
 
-Scale notes: the checkpoint table is tiny (one row per partition per
-attempt) and only ever read with a groupBy over partition keys — never
+Scale notes: the checkpoint table is tiny (one file per partition per
+attempt) and only ever read with a window over partition keys — never
 joined against the fact data. Resume cost is O(partitions), not O(data).
 """
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -43,16 +47,33 @@ CHECKPOINT_SCHEMA = T.StructType(
 )
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``, on any scheme the job uses."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _partition_dir(spark: SparkSession, partition_col: str, key: str) -> str:
+    """The directory name Spark's partitioned writer gives ``key``: it
+    %-escapes characters such as ``#``, ``/`` and ``=``, so key
+    ``web#crawl-0`` lands in ``part_key=web%23crawl-0``."""
+    escape = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
+    return f"{escape(partition_col)}={escape(key)}"
+
+
 class CheckpointStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
     def _read(self) -> DataFrame | None:
-        try:
-            return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(self.path)
-        except Exception:
+        fs, p = _fs_path(self.spark, self.path)
+        if not fs.exists(p):
             return None
+        # a torn mark is a malformed line (dropped) or, under a checksummed
+        # FileSystem, a corrupt file (skipped): either way it reads as absent
+        opts = dict(pathGlobFilter="*.json", mode="DROPMALFORMED", ignoreCorruptFiles="true")
+        return self.spark.read.schema(CHECKPOINT_SCHEMA).options(**opts).json(self.path)
 
     def latest(self, job_id: str) -> DataFrame | None:
         """Latest record per partition_key for a job (last writer wins)."""
@@ -89,22 +110,17 @@ class CheckpointStore:
         wall_ms: int | None = None,
         lineage: str | None = None,
     ) -> None:
-        from datetime import datetime, timezone
-
-        rec = [
-            (
-                job_id,
-                partition_key,
-                status,
-                rows,
-                wall_ms,
-                lineage,
-                uuid.uuid4().hex,
-                datetime.now(timezone.utc).replace(tzinfo=None),
-            )
-        ]
-        df = self.spark.createDataFrame(rec, CHECKPOINT_SCHEMA)
-        df.coalesce(1).write.mode("append").parquet(self.path)
+        """One JSON line in a file of its own, written by the driver."""
+        attempt_id = uuid.uuid4().hex
+        now = datetime.now(timezone.utc).isoformat()
+        rec = (job_id, partition_key, status, rows, wall_ms, lineage, attempt_id, now)
+        line = json.dumps(dict(zip(CHECKPOINT_SCHEMA.fieldNames(), rec))) + "\n"
+        fs, p = _fs_path(self.spark, f"{self.path}/{attempt_id}.json")
+        out = fs.create(p, False)
+        try:
+            out.write(bytearray(line.encode()))
+        finally:
+            out.close()
 
     def metrics(self, job_id: str) -> DataFrame | None:
         """Latest per-partition metrics — the run log the reference keeps as
@@ -115,37 +131,30 @@ class CheckpointStore:
 def prune_stale_partitions(
     spark: SparkSession, out_path: str, partition_col: str, keys: list[str]
 ) -> list[str]:
-    """Delete ``partition_col=<key>`` directories under ``out_path`` whose
-    key is not in ``keys``. Dynamic partition overwrite only replaces the
-    partitions that re-run, so shrinking the key set between runs (e.g.
-    fewer dedup buckets) would otherwise leave the previous run's
-    higher-numbered partitions on disk — served as stale rows to any reader
-    of the directory. Uses the Hadoop FileSystem API, so it works on any
-    scheme the job can write to. Returns the deleted directory names."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    root = jvm.org.apache.hadoop.fs.Path(out_path)
-    fs = root.getFileSystem(hconf)
+    """Delete the partition directories under ``out_path`` whose key is not
+    in ``keys``. Dynamic partition overwrite only replaces the partitions
+    that re-run, so shrinking the key set between runs (e.g. fewer dedup
+    buckets) would otherwise leave the previous run's higher-numbered
+    partitions on disk — served as stale rows to any reader of the
+    directory. Returns the deleted keys, unescaped."""
+    fs, root = _fs_path(spark, out_path)
     if not fs.exists(root):
         return []
-    keep = {f"{partition_col}={k}" for k in keys}
+    keep = {_partition_dir(spark, partition_col, k) for k in keys}
+    prefix = _partition_dir(spark, partition_col, "")
     pruned: list[str] = []
     for st in fs.listStatus(root):
         name = st.getPath().getName()
-        if (
-            st.isDirectory()
-            and name.startswith(f"{partition_col}=")
-            and name not in keep
-        ):
+        if st.isDirectory() and name.startswith(prefix) and name not in keep:
             fs.delete(st.getPath(), True)
-            pruned.append(name)
+            pruned.append(unquote(name[len(prefix):]))
     return pruned
 
 
 def _delete_partition_dir(
     spark: SparkSession, out_path: str, partition_col: str, key: str
 ) -> None:
-    """Delete one ``partition_col=<key>`` directory (no-op if absent).
+    """Delete ``key``'s partition directory (no-op if absent).
 
     Dynamic partition overwrite only replaces partitions PRESENT in the
     written data — a re-run whose output is zero rows for a key writes no
@@ -153,10 +162,7 @@ def _delete_partition_dir(
     run's rows for that key. Callers delete the directory explicitly
     before rewriting a partition so "this run produced nothing for key X"
     lands as an empty partition, not a stale one."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(f"{out_path}/{partition_col}={key}")
-    fs = p.getFileSystem(hconf)
+    fs, p = _fs_path(spark, f"{out_path}/{_partition_dir(spark, partition_col, key)}")
     if fs.exists(p):
         fs.delete(p, True)
 
@@ -186,6 +192,8 @@ def run_partitioned(
     re-running a partition replaces exactly its own files, so a crash
     between output-write and checkpoint-mark re-runs that partition
     idempotently (write is the source of truth; the mark only skips work).
+    The row count is taken from the write (an ``Observation``), never by
+    reading the output back; marks are JSON files written by the driver.
     Partition directories OUTSIDE ``partition_keys`` (leftovers of a
     previous run with a larger key set) are deleted up front AND their
     checkpoint marks invalidated (status "pruned" supersedes the old
@@ -203,14 +211,8 @@ def run_partitioned(
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        pruned = prune_stale_partitions(spark, out_path, partition_col, partition_keys)
-        for name in pruned:
-            store.mark(
-                job_id,
-                name.split("=", 1)[1],
-                "pruned",
-                lineage=lineage,
-            )
+        for key in prune_stale_partitions(spark, out_path, partition_col, partition_keys):
+            store.mark(job_id, key, "pruned", lineage=lineage)
         done = set() if force else store.completed(job_id, lineage)
         results: list[PartitionResult] = []
         for key in partition_keys:
@@ -218,22 +220,19 @@ def run_partitioned(
                 results.append(PartitionResult(key, 0, 0, skipped=True))
                 continue
             t0 = time.perf_counter()
-            df = run_one(key)
-            out = df.withColumn(partition_col, F.lit(key))
+            obs = Observation()
+            out = (
+                run_one(key)
+                .withColumn(partition_col, F.lit(key))
+                .observe(obs, F.count(F.lit(1)).alias("rows"))
+            )
             # invalidate BEFORE deleting: a crash between the delete and the
             # write must leave the key marked not-done (so resume re-runs
             # it), never an empty partition under a surviving "done" mark
             store.mark(job_id, key, "rerun", lineage=lineage)
             _delete_partition_dir(spark, out_path, partition_col, key)
             out.write.mode("overwrite").partitionBy(partition_col).parquet(out_path)
-            # read back with the EXPLICIT schema: a partition that produced
-            # zero rows writes no parquet files, and schema inference over a
-            # file-less directory throws UNABLE_TO_INFER_SCHEMA — empty
-            # partitions are legitimate (e.g. a quality filter rejecting a
-            # whole bucket), so the count must not depend on inference
-            n = spark.read.schema(out.schema).parquet(out_path).filter(
-                F.col(partition_col) == key
-            ).count()
+            n = obs.get["rows"]
             wall_ms = int((time.perf_counter() - t0) * 1000)
             store.mark(job_id, key, "done", rows=n, wall_ms=wall_ms, lineage=lineage)
             results.append(PartitionResult(key, n, wall_ms, skipped=False))

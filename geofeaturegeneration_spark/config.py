@@ -56,11 +56,9 @@ class EngineConfig:
     # max stay rows per (entity, month) matrix (reference gMaxRow=128,
     # Parameters.json:6)
     max_rows: int = 128
-    # event-time derivation from sequence position: epoch base + i * step
-    event_time_base: int = 1_600_000_000
+    # event-time step between sequence positions
     event_time_step_s: int = 60
-    # skew handling: entities whose row count exceeds this get salted
-    hot_key_threshold: int = 250_000
+    # salts per hot entity in the salted as-of
     n_salts: int = 16
     grid: GridConfig = field(default_factory=GridConfig)
 

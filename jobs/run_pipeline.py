@@ -11,14 +11,14 @@ pip-installed; on a cluster, zip the package for --py-files:
 Unit of resume = (source, bucket(doc_id)) — source gives Hive/Iceberg
 partition pruning on the scan, the doc_id hash bucket bounds a partition's
 size at 10^12-sequence scale so any single unit re-runs in minutes. Each
-unit writes via dynamic partition overwrite and then records
-(rows, wall_ms, lineage) to the checkpoint store; re-running after a crash
-skips completed units (geofeaturegeneration_spark/checkpoint.py).
+unit writes via dynamic partition overwrite, with its row count from the
+write, and the driver then records (rows, wall_ms, lineage) as a JSON mark;
+re-running after a crash skips completed units (checkpoint.py).
 
 Pipeline per unit (the north-rule transform):
   explode tokens -> event-time from sequence position -> state-change
-  sessionize -> as-of backfill of the previous stay's run length -> lag/lead
-  features.
+  sessionize -> previous stay's run length as a lag on the stays window ->
+  lag/lead features (one sort serves both, so the stays are computed once).
 """
 
 from __future__ import annotations
@@ -31,38 +31,36 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
+from geofeaturegeneration_spark.config import EngineConfig
 from geofeaturegeneration_spark.datagen import read_sequences
+from geofeaturegeneration_spark.functions import event_time_from_position
 from geofeaturegeneration_spark.operators import (
-    asof_join,
     lag_lead_features,
     sessionize_state_change,
 )
 from geofeaturegeneration_spark.session import get_spark
 
 EPOCH0 = 1_700_000_000
+ENTITY = ["doc_id", "source"]
 
 
 def build_features(seq_df):
     """sequences (doc_id, tokens, n_tok, source) -> per-stay feature rows."""
-    ev = seq_df.select(
-        "doc_id", "source", F.posexplode("tokens").alias("pos", "token")
-    ).withColumn("ts", F.timestamp_seconds(F.lit(EPOCH0) + F.col("pos") * 60))
-    stays = sessionize_state_change(
-        ev, ["doc_id", "source"], "ts", "token", min_duration_s=60.0
+    step_s = EngineConfig().event_time_step_s
+    ev = seq_df.select(*ENTITY, F.posexplode("tokens").alias("pos", "token")).withColumn(
+        "ts", event_time_from_position(F.col("pos"), EPOCH0, step_s)
     )
-    # a stay's length is known at its end, so the right time is etime: each
-    # stay sees the previous kept stay, never itself
-    right = stays.select(
-        "doc_id", "source",
-        F.col("etime").alias("r_ts"), F.col("n_rows").alias("prev_run_len"),
-    )
-    feats = asof_join(
-        stays, right, ["doc_id", "source"], "stime", "r_ts", ["prev_run_len"]
-    )
-    return lag_lead_features(feats, ["doc_id", "source"], "stime", ["duration_s"])
+    stays = sessionize_state_change(ev, ENTITY, "ts", "token", min_duration_s=60.0)
+    # a stay's length is known at its end, so each stay sees the previous
+    # kept stay, never itself. A doc's kept stays start at distinct times
+    # and each ends after it starts, so that stay is the lag on stime.
+    prev = F.lag("n_rows").over(W.partitionBy(*ENTITY).orderBy("stime"))
+    feats = stays.withColumn("prev_run_len", prev)
+    return lag_lead_features(feats, ENTITY, "stime", ["duration_s"])
 
 
 def main(argv=None) -> int:

@@ -4,13 +4,18 @@ resume, DP_GenerateTrajectory.py:50-52)."""
 
 import os
 import sys
+from datetime import datetime
 
 import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
+from geofeaturegeneration_spark.checkpoint import (
+    CHECKPOINT_SCHEMA,
+    CheckpointStore,
+    run_partitioned,
+)
 from geofeaturegeneration_spark.datagen import generate_sequences
 from jobs.run_pipeline import build_features
 
@@ -39,6 +44,35 @@ def test_mark_and_completed(spark, tmp_path):
     # last writer wins: re-mark a as failed
     store.mark("job", "a", "failed", lineage="v1")
     assert store.completed("job", "v1") == set()
+
+    # a mark is written by the driver: it starts no Spark job (the same
+    # probe does see the job of a read)
+    sc = spark.sparkContext
+    sc.setJobGroup("ckpt-mark", "checkpoint marks")
+    try:
+        store.mark("job", "c", "done", rows=1, lineage="v1")
+        assert sc.statusTracker().getJobIdsForGroup("ckpt-mark") == []
+        assert store.completed("job", "v1") == {"c"}
+        assert sc.statusTracker().getJobIdsForGroup("ckpt-mark") != []
+    finally:
+        sc._jsc.clearJobGroup()
+
+    # a mark torn by a crash reads as absent, and the marks before it stand
+    ck = tmp_path / "ckpt"
+    before = set(os.listdir(ck))
+    store.mark("job", "d", "done", rows=2, lineage="v1")
+    (torn,) = [f for f in set(os.listdir(ck)) - before if f.endswith(".json")]
+    text = (ck / torn).read_text()
+    (ck / torn).write_text(text[: len(text) // 2])
+    assert store.completed("job", "v1") == {"c"}
+    (ck / f".{torn}.crc").unlink()  # no checksum to fail: a malformed line
+    assert store.completed("job", "v1") == {"c"}
+
+    # a store of the older Parquet layout reads as empty: every unit re-runs
+    old = str(tmp_path / "ckpt_parquet")
+    rec = [("job", "a", "done", 10, 5, "v1", "0" * 32, datetime(2024, 1, 1))]
+    spark.createDataFrame(rec, CHECKPOINT_SCHEMA).write.parquet(old)
+    assert CheckpointStore(spark, old).completed("job", "v1") == set()
 
 
 def test_resume_skips_done_and_output_identical(spark, seq, tmp_path):
@@ -75,6 +109,31 @@ def test_resume_skips_done_and_output_identical(spark, seq, tmp_path):
     rows = {r["partition_key"]: r for r in m.collect()}
     assert set(rows) == set(sources)
     assert all(rows[s]["status"] == "done" and rows[s]["rows"] > 0 for s in sources)
+
+
+def test_escaped_partition_keys_survive_rerun(spark, seq, tmp_path):
+    """Spark writes key ``web#crawl-0`` as ``part_key=web%23crawl-0``; the
+    stale-partition prune must compare escaped names, or a second run with
+    the same keys deletes that unit's directory while its done mark stays,
+    and the unit's rows vanish."""
+    out, ck = str(tmp_path / "out_esc"), str(tmp_path / "ck_esc")
+    sources = sorted(r["source"] for r in seq.select("source").distinct().collect())
+    keys = ["web#crawl-0", "books-0"]
+    src = dict(zip(keys, sources))
+
+    def run_one(key):
+        return build_features(seq.filter(F.col("source") == src[key]))
+
+    store = CheckpointStore(spark, ck)
+    r1 = run_partitioned(spark, store, "j", keys, run_one, out, "part_key", "v1")
+    r2 = run_partitioned(spark, store, "j", keys, run_one, out, "part_key", "v1")
+    assert all(r.skipped for r in r2)
+    got = {
+        r["part_key"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("part_key").count().collect()
+    }
+    assert got == {r.partition_key: r.rows for r in r1}
+    assert all(n > 0 for n in got.values())
 
 
 def _read_sorted_rows(spark, path, drop=("part_key",)):

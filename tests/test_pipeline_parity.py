@@ -1,6 +1,7 @@
 """End-to-end north-rule parity: the full spark-submit pipeline
 (jobs/run_pipeline.build_features: explode -> event-time from position ->
-state-change sessionize -> as-of backfill -> lag/lead) against the
+state-change sessionize -> previous stay's run length as a lag on the stays
+window -> lag/lead) against the
 row-by-row pandas oracle, allclose at EVERY (entity, timestamp) — the
 BASELINE.json acceptance criterion, including zero temporal leakage (the
 oracle's as-of is the naive prefix-scan definition)."""
@@ -104,3 +105,28 @@ def test_backfill_is_previous_kept_stay(parity):
     b = pd.to_numeric(prev).to_numpy(dtype=float)
     assert (~np.isnan(b)).any()
     assert np.array_equal(a, b, equal_nan=True)
+
+
+def test_event_time_past_int32_positions(spark):
+    """Event time is computed in long: at position 7,458,061 the int32
+    product ``1_700_000_000 + pos * 60`` overflows. One doc of 7,458,062
+    zeros then [1, 2] has two kept stays, the second after the long run."""
+    from pyspark.sql import functions as F
+
+    n = 7_458_062
+    tokens = F.concat(F.array_repeat(F.lit(0), n), F.array(F.lit(1), F.lit(2)))
+    seq = spark.range(1).select(
+        F.lit("hot").alias("doc_id"),
+        tokens.alias("tokens"),
+        F.lit(n + 2).alias("n_tok"),
+        F.lit("web").alias("source"),
+    )
+    try:
+        rows = build_features(seq).orderBy("stime").collect()
+    finally:
+        # the doc's one window partition grows the JVM heap by ~3 GB; a full
+        # GC hands it back, so the rest of the session keeps its footprint
+        spark._jvm.System.gc()
+    assert [r["n_rows"] for r in rows] == [n, 1]
+    assert rows[0]["prev_run_len"] is None
+    assert rows[1]["prev_run_len"] == n

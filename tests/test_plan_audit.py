@@ -219,13 +219,24 @@ def test_series_matrix_is_sql_with_one_exchange(spark):
 
 
 def test_pipeline_backfill_has_no_hot_key_join(spark):
-    """jobs/run_pipeline.build_features runs the plain union as-of: no hot-key
-    count broadcast back into the stays."""
+    """jobs/run_pipeline.build_features takes the previous stay as a lag on
+    the stays window: no hot-key count broadcast back into the stays, and
+    with AQE off the executed plan shuffles the exploded tokens once and
+    runs the sessionize chain once (no union of two as-of sides)."""
     from geofeaturegeneration_spark.datagen import generate_sequences
     from jobs.run_pipeline import build_features
 
-    plan = plan_str(build_features(generate_sequences(spark, n_docs=5, seed=1)), "simple")
+    seq = generate_sequences(spark, n_docs=5, seed=1)
+    plan = plan_str(build_features(seq), "simple")
     assert "BroadcastHashJoin" not in plan, plan
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        phys = build_features(seq)._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert phys.count("Exchange") == 1, phys
+    assert "Union" not in phys, phys
 
 
 def test_sessionize_shuffles_only_on_entity(spark):
