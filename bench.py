@@ -19,8 +19,9 @@ Per-query time is the best of BENCH_REPEATS runs: the first run on a fresh
 plan pays one-time JVM costs (codegen compilation, class init) that are not
 properties of the plan being measured.
 The token-pipeline block measures end-to-end feature-engineering throughput
-(tokens/sec) on the synthetic north-rule sequences table: explode ->
-sessionize -> as-of backfill -> lag/lead -> chunked sequence export.
+(tokens/sec) on the synthetic north-rule sequences table: the job's
+``build_features`` (explode -> sessionize -> previous stay -> lag/lead) and
+the chunked sequence export.
 """
 
 from __future__ import annotations
@@ -37,13 +38,9 @@ from pyspark.sql import functions as F
 import __spark_entry__ as E
 from geofeaturegeneration_spark.session import get_spark
 from geofeaturegeneration_spark.datagen import generate_sequences, write_sequences, read_sequences
-from geofeaturegeneration_spark.operators import (
-    asof_join,
-    chunk_sequences,
-    lag_lead_features,
-    ordered_tokens,
-    sessionize_state_change,
-)
+from geofeaturegeneration_spark.config import EngineConfig
+from geofeaturegeneration_spark.operators import chunk_sequences
+from jobs.run_pipeline import build_features
 
 HEADLINE = [
     "tpch_pricing",
@@ -59,66 +56,12 @@ HEADLINE = [
     "vocab_encode",
     "chunk_sequences",
     "token_roundtrip",
-    "dedup_exact",
-    "minhash_pairs",
-    "ngram_jaccard",
-    "simhash",
-    "simhash_pairs",
-    "ann_lsh",
-    "ann_lsh_multi",
-    "ann_ivf",
-    "ann_ivf_trained",
-    "embedding_neardup",
-    "cosine_topk",
-    "text_stats",
-    "lang_id",
-    "fingerprint",
-    "multimodal_meta",
-    "frame_sample",
-    "embed_payload",
     "grid_cantor",
     "geohash",
     "time_features",
-    "decontaminate",
-    "source_quota",
-    "source_sample",
-    "rare_tokens",
-    "pii_scrub",
-    "line_dedup",
-    "normalize_text",
-    "clean_lines",
-    "pack_sequences",
-    "fim_transform",
-    "span_dedup",
-    "edit_join",
-    "leakage_split",
     "traj_graph",
-    "pagerank",
-    "semantic_dedup",
-    "importance_resample",
-    "temperature_mix",
-    "shuffle_shards",
-    "lm_logprob",
-    "heavy_hitters",
-    "cms_query",
-    "hll_count",
-    "hist_quantiles",
-    "corpus_divergence",
-    "bloom_screen",
-    "bpe_roundtrip",
-    "bm25_topk",
-    "ivf_lloyd",
-    "epoch_upsample",
-    # round 5: the remaining two queries promoted into the driver window
-    # by the rotation policy (the other four were already headline rows)
-    "edit_join_cross",
     "chunk_strided",
-    # round 5: the five contract-window queries that had never been
-    # headline rows — with these the bench covers the ENTIRE driver window
-    "dedup_clusters",
-    "embedding_neardup_multi",
     "negative_samples",
-    "quality_filter",
     "stay_move_spliced",
 ]
 
@@ -129,41 +72,26 @@ def run_noop(df) -> None:
 
 def token_pipeline(spark, seq_path: str) -> tuple[int, float]:
     """North-rule feature pipeline over the pre-tokenized sequences table;
-    returns (n_tokens, wall_s).
+    returns (n_tokens, wall_s). The features are the job's own transform
+    (``jobs/run_pipeline.build_features``); the export chunks each doc's
+    token array as the table holds it.
 
     The two outputs (feature rows, chunked sequences) are independent sinks
     of the same scan, so they are SUBMITTED CONCURRENTLY from two threads —
     each job's driver-side serial work (planning, AQE stage scheduling)
     overlaps the other's execution, which is what a real pipeline does with
-    independent writes. The sessionize output feeding both sides of the
-    as-of join is persisted (measured: cheaper than relying on AQE exchange
-    reuse across the salted join's divergent projections).
+    independent writes.
     """
     import threading
 
     seq = read_sequences(spark, seq_path)
     n_tokens = seq.agg(F.sum("n_tok")).collect()[0][0]
     t0 = time.perf_counter()
-    ev = seq.select(
-        "doc_id", "source", F.posexplode("tokens").alias("pos", "token")
-    ).withColumn("ts", F.timestamp_seconds(F.lit(1_700_000_000) + F.col("pos") * 60))
-    stays = sessionize_state_change(
-        ev, ["doc_id", "source"], "ts", "token", min_duration_s=60.0
-    ).persist()
-    right = stays.select(
-        "doc_id", "source",
-        F.col("stime").alias("r_ts"), F.col("n_rows").alias("prev_run_len"),
+    feats = build_features(seq)
+    chunks = chunk_sequences(
+        seq.select("doc_id", "source", "tokens"), "tokens",
+        EngineConfig().sequence_length,
     )
-    feats = asof_join(
-        stays, right, ["doc_id", "source"], "stime", "r_ts", ["prev_run_len"],
-        strategy="salted", hot_key_threshold=200_000, n_salts=8,
-    )
-    feats = lag_lead_features(feats, ["doc_id", "source"], "stime", ["duration_s"])
-    toks = ordered_tokens(
-        ev, ["doc_id", "source"], "pos", "token", out_col="tokens",
-        num_partitions=spark.sparkContext.defaultParallelism,
-    )
-    chunks = chunk_sequences(toks, "tokens", 100)
 
     errs = []
 
@@ -181,7 +109,6 @@ def token_pipeline(spark, seq_path: str) -> tuple[int, float]:
         t.start()
     for t in threads:
         t.join()
-    stays.unpersist()
     if errs:
         raise errs[0]
     return int(n_tokens), time.perf_counter() - t0

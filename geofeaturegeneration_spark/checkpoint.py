@@ -128,27 +128,27 @@ class CheckpointStore:
         return self.latest(job_id)
 
 
-def prune_stale_partitions(
+def stale_partitions(
     spark: SparkSession, out_path: str, partition_col: str, keys: list[str]
 ) -> list[str]:
-    """Delete the partition directories under ``out_path`` whose key is not
-    in ``keys``. Dynamic partition overwrite only replaces the partitions
-    that re-run, so shrinking the key set between runs (e.g. fewer dedup
-    buckets) would otherwise leave the previous run's higher-numbered
-    partitions on disk — served as stale rows to any reader of the
-    directory. Returns the deleted keys, unescaped."""
+    """Keys of the partition directories under ``out_path`` that are not in
+    ``keys``, unescaped. Dynamic partition overwrite only replaces the
+    partitions that re-run, so shrinking the key set between runs (e.g.
+    fewer buckets) would otherwise leave the previous run's
+    higher-numbered partitions on disk — served as stale rows to any
+    reader of the directory. Deletes nothing: ``run_partitioned`` marks
+    each key before deleting it."""
     fs, root = _fs_path(spark, out_path)
     if not fs.exists(root):
         return []
     keep = {_partition_dir(spark, partition_col, k) for k in keys}
     prefix = _partition_dir(spark, partition_col, "")
-    pruned: list[str] = []
+    stale: list[str] = []
     for st in fs.listStatus(root):
         name = st.getPath().getName()
         if st.isDirectory() and name.startswith(prefix) and name not in keep:
-            fs.delete(st.getPath(), True)
-            pruned.append(unquote(name[len(prefix):]))
-    return pruned
+            stale.append(unquote(name[len(prefix):]))
+    return stale
 
 
 def _delete_partition_dir(
@@ -195,11 +195,13 @@ def run_partitioned(
     The row count is taken from the write (an ``Observation``), never by
     reading the output back; marks are JSON files written by the driver.
     Partition directories OUTSIDE ``partition_keys`` (leftovers of a
-    previous run with a larger key set) are deleted up front AND their
-    checkpoint marks invalidated (status "pruned" supersedes the old
+    previous run with a larger key set) are deleted up front, each after
+    its checkpoint mark is invalidated (status "pruned" supersedes the old
     "done"), so the directory always equals exactly this run's key set and
     a LATER run that re-expands the key set re-runs the pruned keys
-    instead of resuming "done" marks whose data was deleted.
+    instead of resuming "done" marks whose data was deleted. A crash
+    between the mark and the delete leaves the data with a not-done mark,
+    never a "done" mark over deleted data.
 
     A re-run partition's directory is deleted explicitly before the write:
     dynamic overwrite only replaces partitions present in the written
@@ -211,8 +213,9 @@ def run_partitioned(
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        for key in prune_stale_partitions(spark, out_path, partition_col, partition_keys):
+        for key in stale_partitions(spark, out_path, partition_col, partition_keys):
             store.mark(job_id, key, "pruned", lineage=lineage)
+            _delete_partition_dir(spark, out_path, partition_col, key)
         done = set() if force else store.completed(job_id, lineage)
         results: list[PartitionResult] = []
         for key in partition_keys:

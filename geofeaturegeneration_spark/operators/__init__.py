@@ -12,117 +12,16 @@ from geofeaturegeneration_spark.operators.graph import (
 from geofeaturegeneration_spark.operators.windows import lag_lead_features, rolling_features
 from geofeaturegeneration_spark.operators.pivot import pivot_counts, interaction_matrix
 from geofeaturegeneration_spark.operators.vocab import build_vocab, encode_with_vocab
-from geofeaturegeneration_spark.operators.bpe import (
-    train_bpe,
-    bpe_encode,
-    bpe_encode_join,
-    bpe_decode,
-)
 from geofeaturegeneration_spark.operators.sequence import (
     ordered_tokens,
     pad_to_multiple,
     chunk_sequences,
     reassemble_chunks,
-    pack_sequences,
-    fim_transform,
-    fim_restore,
-)
-from geofeaturegeneration_spark.operators.dedup import (
-    exact_dedup,
-    minhash_signatures,
-    minhash_band_signatures,
-    minhash_band_signatures_rowwise,
-    with_band_sigs,
-    lsh_pairs_from_band_sigs,
-    connected_components,
-    dedup_clusters,
-    minhash_lsh_pairs,
-    minhash_lsh_pairs_cross,
-    ngram_jaccard_pairs,
-    simhash,
-    simhash_pairs,
-    span_dedup,
-    span_dup_intervals,
-    span_reassemble,
-    deletion_variants,
-    edit_join,
-    edit_join_cross,
-    edit_variant_table,
-)
-from geofeaturegeneration_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_blocked,
-    semantic_dedup,
-    ann_lsh_topk,
-    ann_lsh_multi_topk,
-    ann_ivf_topk,
-    ann_ivf_topk_blocked,
-    embedding_neardup_pairs,
-    embedding_neardup_multi_pairs,
-    farthest_point_centroids,
-    train_ivf_centroids,
-    lloyd_refine,
-    hyperplane_tables,
-    lsh_bucket,
-)
-from geofeaturegeneration_spark.operators.curation import (
-    decontaminate,
-    source_quota,
-    source_sample,
-    epoch_upsample,
-    rare_token_stats,
-    pii_scrub,
-    line_dedup,
-    clean_lines,
-    normalize_text,
-    quality_filter,
-    temperature_rates,
-    temperature_mix,
-)
-from geofeaturegeneration_spark.operators.importance import (
-    hashed_ngram_counts,
-    bucket_log_ratios,
-    corpus_divergence,
-    importance_weights,
-    importance_resample,
-    lm_bucket_logprobs,
-    lm_score,
-    lm_logprob,
-)
-from geofeaturegeneration_spark.operators.multimodal import (
-    attach_payload,
-    extract_meta,
-    sample_frames,
-    embed_payload,
-)
-from geofeaturegeneration_spark.operators.sketch import (
-    cms_build,
-    cms_merge,
-    cms_query,
-    heavy_hitters,
-    bloom_build,
-    bloom_screen,
-    bloom_novel,
-    hll_build,
-    hll_merge,
-    hll_estimate,
-    hll_count,
-    hist_build,
-    hist_merge,
-    hist_quantiles,
-    hist_quantile_values,
-)
-from geofeaturegeneration_spark.operators.retrieval import (
-    bm25_hard_negatives,
-    bm25_scores,
-    bm25_topk,
 )
 from geofeaturegeneration_spark.operators.matrix import series_to_matrix
 from geofeaturegeneration_spark.operators.split import (
     hash_split,
-    leakage_safe_split,
     negative_samples,
-    shuffle_shards,
 )
 
 __all__ = [
@@ -137,98 +36,13 @@ __all__ = [
     "rolling_features",
     "pivot_counts",
     "interaction_matrix",
-    "bpe_decode",
-    "bpe_encode",
-    "bpe_encode_join",
     "build_vocab",
     "encode_with_vocab",
     "ordered_tokens",
     "pad_to_multiple",
     "chunk_sequences",
     "reassemble_chunks",
-    "pack_sequences",
-    "fim_transform",
-    "fim_restore",
-    "exact_dedup",
-    "minhash_signatures",
-    "minhash_band_signatures",
-    "minhash_band_signatures_rowwise",
-    "with_band_sigs",
-    "lsh_pairs_from_band_sigs",
-    "minhash_lsh_pairs",
-    "minhash_lsh_pairs_cross",
-    "connected_components",
-    "dedup_clusters",
-    "span_dedup",
-    "deletion_variants",
-    "edit_join",
-    "edit_join_cross",
-    "edit_variant_table",
-    "span_dup_intervals",
-    "span_reassemble",
-    "ngram_jaccard_pairs",
-    "simhash",
-    "simhash_pairs",
-    "cosine_topk",
-    "cosine_topk_blocked",
-    "semantic_dedup",
-    "ann_lsh_topk",
-    "ann_lsh_multi_topk",
-    "ann_ivf_topk",
-    "ann_ivf_topk_blocked",
-    "embedding_neardup_pairs",
-    "embedding_neardup_multi_pairs",
-    "farthest_point_centroids",
-    "lloyd_refine",
-    "train_bpe",
-    "train_ivf_centroids",
-    "hyperplane_tables",
-    "lsh_bucket",
-    "decontaminate",
-    "source_quota",
-    "source_sample",
-    "epoch_upsample",
-    "rare_token_stats",
-    "pii_scrub",
-    "line_dedup",
-    "clean_lines",
-    "normalize_text",
-    "quality_filter",
-    "temperature_rates",
-    "temperature_mix",
-    "hashed_ngram_counts",
-    "bucket_log_ratios",
-    "importance_weights",
-    "importance_resample",
-    "corpus_divergence",
-    "lm_bucket_logprobs",
-    "lm_score",
-    "lm_logprob",
-    "attach_payload",
-    "extract_meta",
-    "sample_frames",
-    "embed_payload",
     "series_to_matrix",
     "hash_split",
-    "leakage_safe_split",
     "negative_samples",
-    "shuffle_shards",
-    "cms_build",
-    "cms_merge",
-    "cms_query",
-    "heavy_hitters",
-    "bloom_build",
-    "bloom_screen",
-    "bloom_novel",
-    "hll_build",
-    "hll_merge",
-    "hll_estimate",
-    "hll_count",
-    "hist_build",
-    "hist_merge",
-    "hist_quantiles",
-    "hist_quantile_values",
-    "bm25_scores",
-    "bm25_hard_negatives",
-    "bm25_topk",
 ]
