@@ -1,7 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-``queries()`` and ``extra_queries()`` expose every implemented operator
-from SURVEY.md §2 as (spark, sf_dir) -> DataFrame callables;
+``queries()`` exposes every implemented operator from SURVEY.md §2 (plus the
+training-data-pipeline additions: dedup, similarity search, text analysis,
+multimodal plumbing) as (spark, sf_dir) -> DataFrame callables;
 ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each.
 
 Cross-engine determinism rules used throughout (validated empirically):
@@ -10,7 +11,9 @@ Cross-engine determinism rules used throughout (validated empirically):
   ``('0x'||substr(md5(x),1,15))::BIGINT``);
 * epoch seconds = Spark ``unix_timestamp`` (floor) == DuckDB
   ``epoch_us(ts)//1000000`` (NOT ``epoch(ts)::BIGINT``, which rounds);
-* float aggregates are rounded before output;
+* dot products / norms are left-associated explicit sums in both engines,
+  giving bit-identical doubles; float aggregates are still rounded before
+  output as a belt-and-braces measure;
 * count/row_number/sum-of-int results are cast so both engines emit the
   same integer width (DuckDB sum(int)->HUGEINT, row_number->BIGINT would
   otherwise mismatch Spark's long/int).
@@ -23,10 +26,12 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from geofeaturegeneration_spark.functions import text as X
 from geofeaturegeneration_spark.functions.grid import (
     cantor_pair,
     cantor_unpair_x,
     cantor_unpair_y,
+    geohash_encode,
     gps_to_latcol,
     gps_to_loncol,
     grid_to_centre_lat,
@@ -34,18 +39,32 @@ from geofeaturegeneration_spark.functions.grid import (
     with_geohash,
 )
 from geofeaturegeneration_spark.operators import (
+    ann_ivf_topk,
+    ann_ivf_topk_blocked,
+    ann_lsh_topk,
+    embedding_neardup_pairs,
     asof_join,
+    attach_payload,
     build_vocab,
     chunk_sequences,
+    cosine_topk,
     encode_with_vocab,
+    edit_join,
+    edit_join_cross,
+    exact_dedup,
+    extract_meta,
+    fim_transform,
     interaction_matrix,
     lag_lead_features,
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
     ordered_tokens,
     pivot_counts,
     reassemble_chunks,
     rolling_features,
     sessionize_gap,
     sessionize_state_change,
+    simhash,
     stay_move,
 )
 from geofeaturegeneration_spark.operators.windows import (
@@ -54,11 +73,12 @@ from geofeaturegeneration_spark.operators.windows import (
     sliding_subsequences,
 )
 from geofeaturegeneration_spark.operators.matrix import series_to_matrix
-from geofeaturegeneration_spark.operators.split import hash_split, md5_long, negative_samples
+from geofeaturegeneration_spark.operators.split import hash_split, negative_samples
 from geofeaturegeneration_spark.operators.util import ensure_min_partitions
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 GRID_PARAMS = {"slon": 116.0, "slat": 39.5, "deltalon": 0.01, "deltalat": 0.008}
+EMB_DIM = 64
 SEQ_LEN = 32
 TOKEN_MOD = 30000
 
@@ -109,9 +129,9 @@ def _darr_csv(col) -> F.Column:
 
 def _docs_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents with a parallelism floor: the test fixture is one small
-    single-row-group file (scan = 1 task), but the token queries downstream
-    are CPU-bound (md5 per word). ensure_min_partitions is a no-op when the
-    source is already wide (real deployments)."""
+    single-row-group file (scan = 1 task), but the dedup/shingle operators
+    downstream are CPU-bound (md5 per shingle). ensure_min_partitions is a
+    no-op when the source is already wide (real deployments)."""
     return ensure_min_partitions(_t(spark, sf_dir, "documents"))
 
 
@@ -400,7 +420,7 @@ def q_interaction(spark, sf_dir):
 
 def q_vocab(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
-    wordsdf = docs.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
+    wordsdf = docs.select(F.explode(X.words(F.col("text"))).alias("word"))
     return build_vocab(wordsdf, "word", id_col="vocab_id")
 
 
@@ -415,8 +435,8 @@ def q_vocab_encode(spark, sf_dir):
 def _doc_tokens(spark, sf_dir):
     docs = _docs_wide(spark, sf_dir)
     exploded = docs.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "word")
-    ).withColumn("tid", (md5_long(F.col("word")) % TOKEN_MOD).cast("int"))
+        "doc_id", F.posexplode(X.words(F.col("text"))).alias("pos", "word")
+    ).withColumn("tid", (X.md5_long(F.col("word")) % TOKEN_MOD).cast("int"))
     return ordered_tokens(
         exploded, ["doc_id"], "pos", "tid", out_col="tokens",
         num_partitions=spark.sparkContext.defaultParallelism,
@@ -457,11 +477,120 @@ def q_token_roundtrip(spark, sf_dir):
     return back.select("doc_id", "n_tok", _arr_csv("tokens").alias("tokens"))
 
 
+def q_dedup_exact(spark, sf_dir):
+    docs = _docs_wide(spark, sf_dir)
+    return exact_dedup(docs, "doc_id", "text")
+
+
+def q_minhash_pairs(spark, sf_dir):
+    docs = _docs_wide(spark, sf_dir)
+    return minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=16, bands=4)
+
+
+def q_minhash_cross(spark, sf_dir):
+    """Incremental-ingest dedup shape: screen the odd-id half (the 'new
+    batch') against the even-id half (the 'existing corpus')."""
+    from geofeaturegeneration_spark.operators import minhash_lsh_pairs_cross
+
+    docs = _docs_wide(spark, sf_dir)
+    return minhash_lsh_pairs_cross(
+        docs.filter(F.col("doc_id") % 2 == 1),
+        docs.filter(F.col("doc_id") % 2 == 0),
+        "doc_id", "text", k=3, n_hashes=16, bands=4,
+    )
+
+
+def q_dedup_clusters(spark, sf_dir):
+    """Pairwise near-dup hits -> connected components -> one keeper per
+    cluster (iterative min-label propagation; the oracle reaches the same
+    fixpoint with a recursive CTE)."""
+    from geofeaturegeneration_spark.operators import dedup_clusters
+
+    docs = _docs_wide(spark, sf_dir)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=16, bands=4)
+    return dedup_clusters(docs, "doc_id", pairs)
+
+
+def q_leakage_split(spark, sf_dir):
+    """Train/test split drawn on the dedup CLUSTER, not the doc id
+    (operators/split.py:leakage_safe_split): near-duplicates never
+    straddle the boundary. The cluster assignment is the in-window
+    dedup_clusters pipeline; the oracle extends its recursive-CTE
+    fixpoint with the same md5 bucket on cluster_id."""
+    from geofeaturegeneration_spark.operators import (
+        dedup_clusters,
+        leakage_safe_split,
+    )
+
+    docs = _docs_wide(spark, sf_dir)
+    pairs = minhash_lsh_pairs(docs, "doc_id", "text", k=3, n_hashes=16, bands=4)
+    clusters = dedup_clusters(docs, "doc_id", pairs).select(
+        "doc_id", "cluster_id"
+    )
+    return leakage_safe_split(
+        docs.select("doc_id"), "doc_id", clusters
+    ).select("doc_id", "split_bucket", "is_test")
+
+
+def q_edit_join(spark, sf_dir):
+    """Edit-distance similarity self-join (round 4): every doc pair whose
+    24-char ascii_key canonical forms are within Levenshtein distance 1,
+    with the exact distance — the character-level dedup sibling (minhash =
+    token shingles, simhash = bits, edit_join = chars). Blocking is the
+    symmetric-delete neighborhood (provably complete, so the result is
+    EXACTLY the quadratic levenshtein join the oracle runs); ascii_key
+    strips to [a-z0-9 ] first so Spark and DuckDB levenshtein count the
+    same edits even on hostile unicode (fuzz gate)."""
+    docs = _docs_wide(spark, sf_dir)
+    keyed = docs.select("doc_id", X.ascii_key(F.col("text"), 24).alias("key"))
+    return edit_join(keyed, "doc_id", "key", max_dist=1)
+
+
+def q_edit_join_cross(spark, sf_dir):
+    """Incremental-ingest shape of the in-window edit_join: screen the
+    odd-doc_id half (the 'new batch') against the even half (the
+    'existing corpus') — same complete symmetric-delete blocking, corpus
+    side persistable via edit_variant_table."""
+    docs = _docs_wide(spark, sf_dir)
+    keyed = docs.select("doc_id", X.ascii_key(F.col("text"), 24).alias("key"))
+    batch = keyed.filter(F.col("doc_id") % 2 == 1)
+    corpus = keyed.filter(F.col("doc_id") % 2 == 0)
+    return edit_join_cross(batch, corpus, "doc_id", "key", max_dist=1)
+
+
+def q_pagerank(spark, sf_dir):
+    """TextRank-shaped PageRank (round 4): the corpus word-adjacency graph
+    (distinct consecutive-word pairs, self-loops dropped) ranked by
+    integer-exact PageRank — keyword importance over the documents table
+    (Mihalcea & Tarau 2004 applied the same recurrence to exactly this
+    graph). Every arithmetic step is int64 floor-division/summation, so
+    the DuckDB oracle replays the 5 iterations as an unrolled CTE chain
+    bit-for-bit."""
+    from geofeaturegeneration_spark.operators import pagerank
+
+    docs = _docs_wide(spark, sf_dir)
+    w = docs.select(
+        F.posexplode(X.words(F.col("text"))).alias("pos", "w"), "doc_id"
+    )
+    from pyspark.sql import Window as W
+
+    nxt = w.select(
+        "doc_id", "pos", F.col("w").alias("src"),
+        F.lead("w").over(
+            W.partitionBy("doc_id").orderBy("pos")
+        ).alias("dst"),
+    ).filter(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
+    edges = nxt.select("src", "dst").distinct()
+    return pagerank(edges, n_iter=5).select(
+        F.col("node").alias("word"), "rank"
+    )
+
+
 def q_traj_pagerank(spark, sf_dir):
     """Weighted PageRank over the trajectory transition graph (edge weight
     = n_trips): location importance — the PoI-significance feature the
     reference's declared graph output would feed. Same exact integer
-    recurrence as ``graph.pagerank``, weighted form."""
+    recurrence as the in-window pagerank, weighted form."""
     from geofeaturegeneration_spark.operators import pagerank, trajectory_graph
 
     ev = _t(spark, sf_dir, "events")
@@ -475,11 +604,346 @@ def q_traj_pagerank(spark, sf_dir):
     ).select(F.col("node"), "rank")
 
 
+def q_edit_clusters(spark, sf_dir):
+    """Edit-distance pairs -> connected components -> one keeper per
+    cluster: the keeper-selection composition for the character-level
+    dedup family (same min-label fixpoint as the in-window
+    dedup_clusters, fed by edit_join instead of minhash)."""
+    from geofeaturegeneration_spark.operators import dedup_clusters
+
+    docs = _docs_wide(spark, sf_dir)
+    keyed = docs.select("doc_id", X.ascii_key(F.col("text"), 24).alias("key"))
+    pairs = edit_join(keyed, "doc_id", "key", max_dist=1)
+    return dedup_clusters(docs, "doc_id", pairs)
+
+
+def q_bm25_negatives(spark, sf_dir):
+    """DPR-style hard-negative mining: the same every-83rd-doc queries as
+    the in-window bm25_topk, with each query's own source document (its
+    natural positive, always the #1 hit) anti-joined out and ranks
+    re-numbered — the top-k lexically-confusable-but-not-relevant docs
+    that make the hardest contrastive training negatives."""
+    from geofeaturegeneration_spark.operators import bm25_hard_negatives
+
+    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
+    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
+        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
+    )
+    pos = qs.select("q_id", F.col("q_id").alias("doc_id"))
+    return bm25_hard_negatives(
+        docs, "doc_id", "text", qs, "q_id", "q_text", pos, k=10
+    )
+
+
+def q_fim_transform(spark, sf_dir):
+    """Fill-in-middle training export (round 4, PSM order): a deterministic
+    60% of docs rewritten to [PRE] prefix [SUF] suffix [MID] middle with
+    md5-drawn cut points; sentinel ids sit just above the hashed-token
+    space (TOKEN_MOD..TOKEN_MOD+2). Tokens are only moved, never
+    recomputed — fim_restore inverts exactly (pinned in
+    tests/test_sequence.py)."""
+    toks = _doc_tokens(spark, sf_dir)
+    out = fim_transform(
+        toks,
+        "tokens",
+        rate_ppm=600_000,
+        prefix_tok=TOKEN_MOD,
+        suffix_tok=TOKEN_MOD + 1,
+        middle_tok=TOKEN_MOD + 2,
+    )
+    return out.select(
+        "doc_id",
+        "is_fim",
+        "fim_lo",
+        "fim_hi",
+        F.size("tokens").cast("int").alias("n_tok"),
+        _arr_csv("tokens_fim").alias("tokens_fim"),
+    )
+
+
+def q_ngram_jaccard(spark, sf_dir):
+    """max_doc_freq=5 exercises the explicit hot-shingle cap (drops 29
+    shingles and shifts 13 jaccard values at sf0.01 vs uncapped, so the
+    driver row proves the capped semantics, not just the happy path)."""
+    docs = _docs_wide(spark, sf_dir)
+    return ngram_jaccard_pairs(
+        docs, "doc_id", "text", k=3, threshold=0.4, max_doc_freq=5
+    )
+
+
+def q_simhash(spark, sf_dir):
+    docs = _docs_wide(spark, sf_dir)
+    return simhash(docs, "doc_id", "text", bits=32)
+
+
+def q_simhash_pairs(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import simhash_pairs
+
+    docs = _docs_wide(spark, sf_dir)
+    return simhash_pairs(docs, "doc_id", "text", bits=32, max_hamming=3)
+
+
+def q_minhash_sigs(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import minhash_signatures
+
+    docs = _docs_wide(spark, sf_dir)
+    return minhash_signatures(docs, "doc_id", "text", k=3, n_hashes=8)
+
+
 def q_interaction_wide(spark, sf_dir):
     from geofeaturegeneration_spark.operators.pivot import interaction_matrix_wide
 
     ev = _t(spark, sf_dir, "events")
     return interaction_matrix_wide(ev, "user_id", "event_type", items=EVENT_TYPES)
+
+
+def q_cosine_topk(spark, sf_dir):
+    """Exact top-k, blocked-GEMM plan: tiles meet in a cogrouped Arrow
+    batch and score via one numpy matmul — no join node, the scale form of
+    exact brute force (round 3; the BroadcastNestedLoopJoin form this
+    replaced survives as extra query cosine_topk_join, same oracle)."""
+    from geofeaturegeneration_spark.operators import cosine_topk_blocked
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return cosine_topk_blocked(emb, "vec_id", "embedding", k=5)
+
+
+def q_cosine_topk_join(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return cosine_topk(emb, "vec_id", "embedding", k=5)
+
+
+def q_ann_lsh(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return ann_lsh_topk(emb, "vec_id", "embedding", k=3, n_bits=8)
+
+
+def q_ann_lsh_multi(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import ann_lsh_multi_topk
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return ann_lsh_multi_topk(
+        emb, "vec_id", "embedding", dim=EMB_DIM, k=3, n_tables=3, n_bits=8
+    )
+
+
+_IVF_CENTROIDS: dict = {}
+
+
+def _ivf_seed_rows(spark, sf_dir):
+    # the quantizer is trained once per table and reused across calls —
+    # production IVF ships pre-trained centroids; repeated searches should
+    # not re-pay the training scan. The cache holds PLAIN PYTHON rows, not a
+    # DataFrame: a cached DataFrame is bound to its SparkSession and breaks
+    # when bench/tests stop and recreate sessions in one process.
+    from geofeaturegeneration_spark.operators.similarity import _norm, _to_double
+
+    if sf_dir not in _IVF_CENTROIDS:
+        emb = _t(spark, sf_dir, "embeddings")
+        v = _to_double(F.col("embedding"))
+        rows = (
+            emb.select(F.col("vec_id"), v.alias("_v"), _norm(v).alias("_n"))
+            # zero-norm exclusion (similarity-family rule): a zero vector
+            # must never seed a centroid — its cosine is undefined
+            .filter(F.col("_n") > 0)
+            .orderBy("vec_id").limit(8).select("_v", "_n").collect()
+        )
+        _IVF_CENTROIDS[sf_dir] = [
+            (i + 1, list(r["_v"]), float(r["_n"])) for i, r in enumerate(rows)
+        ]
+    return _IVF_CENTROIDS[sf_dir]
+
+
+def q_ann_ivf(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    cent = spark.createDataFrame(
+        _ivf_seed_rows(spark, sf_dir), "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
+    )
+    return ann_ivf_topk_blocked(
+        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1,
+        centroids=cent,
+    )
+
+
+def q_ann_ivf_join(spark, sf_dir):
+    """Exactness twin: the join-form IVF plan (broadcast-quantizer
+    assignment + fold-dot list equi-join) that the contract's blocked-GEMM
+    plan replaced — same oracle, kept value-exact as the cross-check."""
+    emb = _t(spark, sf_dir, "embeddings")
+    cent = spark.createDataFrame(
+        _ivf_seed_rows(spark, sf_dir), "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
+    )
+    return ann_ivf_topk(
+        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1,
+        centroids=cent,
+    )
+
+
+_IVF_FPS: dict = {}
+
+
+def q_ann_ivf_trained(spark, sf_dir):
+    """IVF search with a TRAINED quantizer: deterministic farthest-point
+    (k-center) seeding under cosine distance — engine-reproducible, so the
+    DuckDB oracle replays the exact seed selection in chained CTEs. Same
+    search plan as ann_ivf; only the centroid table differs (and the
+    inverted lists it induces are far better balanced than first-N)."""
+    from geofeaturegeneration_spark.operators import farthest_point_centroids
+
+    emb = _t(spark, sf_dir, "embeddings")
+    if sf_dir not in _IVF_FPS:
+        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
+        _IVF_FPS[sf_dir] = [
+            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
+        ]
+    cent = spark.createDataFrame(
+        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
+    )
+    return ann_ivf_topk_blocked(
+        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1, centroids=cent
+    )
+
+
+def q_ivf_lloyd(spark, sf_dir):
+    """Distributed spherical-k-means refinement
+    (operators/similarity.py:lloyd_refine): the farthest-point seeds
+    (same cached table as ann_ivf_trained) refined by TWO full-corpus
+    Lloyd iterations inside Spark — assignment is greatest-struct argmax
+    over literal centroids (pure map-side), the spherical mean is an
+    exact int64 sum of round(1e9 * x/|x|) per coordinate (shuffle-order-
+    proof), and the per-centroid finisher (left-associated sum of
+    squares -> sqrt -> divide) replays bit-for-bit in the oracle's
+    chained CTEs. Output is the long-form refined quantizer: one row per
+    (centroid, dimension) with the coordinate as round(1e9 * c) and the
+    kept/refined norm as round(1e6 * cn)."""
+    from geofeaturegeneration_spark.operators import (
+        farthest_point_centroids,
+        lloyd_refine,
+    )
+
+    emb = _t(spark, sf_dir, "embeddings")
+    if sf_dir not in _IVF_FPS:
+        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
+        _IVF_FPS[sf_dir] = [
+            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
+        ]
+    cent = spark.createDataFrame(
+        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
+    )
+    refined = lloyd_refine(emb, "vec_id", "embedding", cent, iters=2)
+    return refined.select(
+        F.col("_cid").alias("cid"),
+        F.round(F.lit(1_000_000.0) * F.col("_cn")).cast("long").alias(
+            "cn_ppm"
+        ),
+        F.posexplode("_cv").alias("d0", "c"),
+    ).select(
+        "cid",
+        (F.col("d0") + 1).cast("int").alias("d"),
+        F.round(F.lit(1_000_000_000.0) * F.col("c")).cast("long").alias(
+            "c_ppb"
+        ),
+        "cn_ppm",
+    )
+
+
+def q_semantic_dedup(spark, sf_dir):
+    """SemDeDup (Abbas et al. 2023): cluster embeddings with the
+    deterministic farthest-point quantizer (same trained table as
+    ann_ivf_trained — cached), then within each cluster drop every row
+    that has a lower-id neighbor at cosine >= 0.3, keeping the smallest-id
+    exemplar per duplicate neighborhood. Assignment + screening both run
+    as blocked GEMM; the oracle replays the fold-dot rule exactly."""
+    from geofeaturegeneration_spark.operators import semantic_dedup
+
+    emb = _t(spark, sf_dir, "embeddings")
+    if sf_dir not in _IVF_FPS:
+        from geofeaturegeneration_spark.operators import farthest_point_centroids
+
+        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
+        _IVF_FPS[sf_dir] = [
+            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
+        ]
+    cent = spark.createDataFrame(
+        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
+    )
+    return semantic_dedup(
+        emb, "vec_id", "embedding", threshold=0.3, n_clusters=8,
+        centroids=cent,
+    )
+
+
+def q_embedding_neardup(spark, sf_dir):
+    emb = _t(spark, sf_dir, "embeddings")
+    return embedding_neardup_pairs(emb, "vec_id", "embedding", threshold=0.35, n_bits=8)
+
+
+def q_embedding_neardup_multi(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import embedding_neardup_multi_pairs
+
+    emb = _t(spark, sf_dir, "embeddings")
+    return embedding_neardup_multi_pairs(
+        emb, "vec_id", "embedding", dim=EMB_DIM, threshold=0.35,
+        n_tables=3, n_bits=8,
+    )
+
+
+def q_text_stats(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    t = F.col("text")
+    return docs.select(
+        "doc_id",
+        X.n_words(t).alias("n_words"),
+        X.token_count(t).alias("n_tokens"),
+        F.round(X.avg_word_len(t), 6).alias("avg_word_len"),
+        F.round(X.punct_ratio(t), 6).alias("punct_ratio"),
+        F.round(X.stopword_ratio(t), 6).alias("stopword_ratio"),
+        X.quality_score(t).alias("quality"),
+    )
+
+
+def q_repetition(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    t = F.col("text")
+    return docs.select(
+        "doc_id",
+        F.round(X.dup_word_fraction(t), 6).alias("dup_word_frac"),
+        F.round(X.top_word_share(t), 6).alias("top_word_share"),
+        F.round(X.top_bigram_share(t), 6).alias("top_bigram_share"),
+        F.round(X.dup_line_fraction(t), 6).alias("dup_line_frac"),
+    )
+
+
+def q_lang_id(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return docs.select("doc_id", "lang", X.lang_id(F.col("text")).alias("pred_lang"))
+
+
+def q_fingerprint(spark, sf_dir):
+    docs = _docs_wide(spark, sf_dir)
+    return docs.select("doc_id", X.fingerprint(F.col("text")).alias("fp"))
+
+
+def q_multimodal_meta(spark, sf_dir):
+    docs = _t(spark, sf_dir, "documents")
+    return extract_meta(attach_payload(docs, "doc_id", "text"))
+
+
+def q_frame_sample(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import sample_frames
+
+    docs = _t(spark, sf_dir, "documents")
+    return sample_frames(attach_payload(docs, "doc_id", "text"), every_n=4).select(
+        "doc_id", "frame_idx", "frame_off", "frame_len"
+    )
+
+
+def q_embed_payload(spark, sf_dir):
+    from geofeaturegeneration_spark.operators import embed_payload
+
+    docs = _t(spark, sf_dir, "documents")
+    out = embed_payload(attach_payload(docs, "doc_id", "text"), dim=8)
+    return out.select("doc_id", _darr_csv("embedding").alias("embedding"))
 
 
 def q_minmax(spark, sf_dir):
@@ -631,17 +1095,114 @@ def q_time_features(spark, sf_dir):
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver contract. HARD CONSTRAINT (measured in round 2): the
     driver evaluates only the FIRST 50 dict entries — round 2 registered 55
-    and the last five got no CORRECTNESS row. Physical-strategy twins and
-    folded variants live in ``extra_queries()`` — same oracle discipline,
-    checked by tools/compare_oracle.py and pytest, just outside the
-    50-entry window."""
+    and the last five got no CORRECTNESS row. This dict therefore holds
+    exactly 50 entries, with the five that had never been driver-verified
+    (series_matrix, contrastive, stay_enrich, hash_split, negative_samples)
+    moved to the front. Physical-strategy twins and folded variants live in
+    ``extra_queries()`` — same oracle discipline, checked by
+    tools/compare_oracle.py and pytest, just outside the driver window."""
     return {
+        # --- round 5: the six operators whose distinctive machinery never
+        # had a driver CORRECTNESS row, promoted by the rotation POLICY
+        # (tools/rotation.py: CORRECTNESS_r01-r04 history joined against
+        # rotation_hints(); this window is the tool's verbatim proposal).
+        # Slots freed by folding series_matrix, contrastive, hash_split,
+        # repetition, multimodal_meta, grid_cantor — each long driver-green
+        # with its machinery still covered in-window or by pytest (reasons
+        # recorded in rotation_hints()["foldable"] and at their new
+        # extra_queries() entries) ---
+        "bpe_roundtrip": q_bpe_roundtrip,
         "chunk_strided": q_chunk_strided,
+        "edit_join_cross": q_edit_join_cross,
+        "epoch_upsample": q_epoch_upsample,
+        "ivf_lloyd": q_ivf_lloyd,
+        "leakage_split": q_leakage_split,
+        # --- driver-green in earlier rounds ---
         "stay_enrich": q_stay_enrich,
         "negative_samples": q_negative_samples,
-        # trajectory transition graph (the reference's declared
-        # TrajectoryGraph output, never shipped there)
+        # --- new operators round 3 (never driver-run): next in line ---
+        "decontaminate": q_decontaminate,
+        "rare_tokens": q_rare_tokens,
+        "pii_scrub": q_pii_scrub,
+        "line_dedup": q_line_dedup,
+        # round-4 text-rewrite operators, promoted for first driver rows:
+        # slots freed by folding minhash_cross (the cross-corpus form of
+        # the in-window minhash_pairs — same signature+banding machinery,
+        # green rows r01-r03) and ann_ivf (the fixed-quantizer sibling of
+        # the in-window ann_ivf_trained, which runs the same blocked-GEMM
+        # search path — green rows r01-r03) into extra_queries()
+        "clean_lines": q_clean_lines,
+        "normalize_text": q_normalize_text,
+        # round-3 late additions: driver slots freed by folding the
+        # simhash and minhash_sigs STAGE queries into extra_queries() —
+        # their code paths stay driver-verified through the end-product
+        # queries that compose them (simhash_pairs, minhash_pairs/cross)
+        "quality_filter": q_quality_filter,
+        "pack_sequences": q_pack_sequences,
+        # round 4: the last two operators with no driver row ever — slots
+        # freed by folding `vocab` (the literal first stage of vocab_encode,
+        # which stays in-window) and `token_roundtrip` (a property test of
+        # chunk_sequences; byte-equality stays pinned in tests/test_sequence
+        # .py) into extra_queries()
+        "source_quota": q_source_quota,
+        "source_sample": q_source_sample,
+        # round 4: exact substring-level dedup (new operator) — slot freed
+        # by folding `fingerprint` (the literal first stage of dedup_exact,
+        # which stays in-window) into extra_queries()
+        "span_dedup": q_span_dedup,
+        # round 4: trajectory transition graph (the reference's declared
+        # TrajectoryGraph output, never shipped there) — slot freed by
+        # folding `decimate` (a two-expression row filter, driver-green
+        # r01-r03) into extra_queries()
         "traj_graph": q_traj_graph,
+        # round 4: SemDeDup embedding-space dedup (new operator) — slot
+        # freed by folding `minmax_norm` (a two-expression window op,
+        # driver-green r01-r03) into extra_queries()
+        "semantic_dedup": q_semantic_dedup,
+        # round 4: DSIR importance resampling (new operator; its
+        # importance_weights stage is verified transitively — resample IS
+        # weights + TakeOrdered — and value-exact in extras) — slot freed
+        # by folding `tokens_ordered` (the literal input stage of the
+        # in-window chunk_sequences, same _doc_tokens output) into
+        # extra_queries()
+        "importance_resample": q_importance_resample,
+        # round 4: deterministic global shuffle->shard export (new
+        # operator) — slot freed by folding `time_features` (pure calendar
+        # column expressions, driver-green r01-r03) into extra_queries()
+        "shuffle_shards": q_shuffle_shards,
+        # round 4: BM25 lexical retrieval (new operator — the lexical
+        # sibling of the embedding similarity family) — slot freed by
+        # folding `tpch_pricing` (a generic TPC-H demo aggregation from
+        # round 1, driver-green r01-r03, not a SURVEY §2 operator; the
+        # TPC-H layer keeps orders_enrich in-window) into extra_queries()
+        "bm25_topk": q_bm25_topk,
+        # round 4: HLL cardinality sketch (new operator — completes the
+        # mergeable-sketch triad: CMS = frequency, Bloom = membership,
+        # HLL = cardinality) — slot freed by folding `orders_enrich` (the
+        # remaining TPC-H demo aggregation, driver-green r01-r03, not a
+        # SURVEY §2 operator; the §2.3 broadcast-enrich row is carried by
+        # the in-window stay_enrich) into extra_queries()
+        "hll_count": q_hll_count,
+        # round 4 (this session): edit-distance fuzzy join (new operator —
+        # the character-level member of the dedup family) — slot freed by
+        # folding `ngram_jaccard` (driver-green r01-r03; the shingle-based
+        # dedup family keeps minhash_pairs / simhash_pairs / dedup_exact /
+        # dedup_clusters / span_dedup in-window) into extra_queries()
+        "edit_join": q_edit_join,
+        # round 4 (this session): fill-in-middle export (new operator —
+        # the infilling member of the sequence-export family) — slot freed
+        # by folding `interaction_matrix` (driver-green r01-r03; the pivot
+        # family keeps pivot_counts in-window, and the wide twin was
+        # already in extras) into extra_queries()
+        "fim_transform": q_fim_transform,
+        # round 4 (this session): integer-exact PageRank (new operator —
+        # TextRank keyword scoring over the corpus bigram graph; the
+        # link-graph quality-prior machinery for web-scale curation) —
+        # slot freed by folding `sessionize_gap` (driver-green r01-r03;
+        # the sessionization family keeps sessionize_state +
+        # stay_move_spliced + asof_salted in-window) into extra_queries()
+        "pagerank": q_pagerank,
+        # --- the rest of the contract ---
         "sessionize_state": q_sessionize_state,
         "stay_move_spliced": q_stay_move_spliced,
         "asof_salted": q_asof_salted,
@@ -650,70 +1211,974 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pivot_counts": q_pivot_counts,
         "vocab_encode": q_vocab_encode,
         "chunk_sequences": q_chunks,
+        "dedup_exact": q_dedup_exact,
+        "minhash_pairs": q_minhash_pairs,
+        "dedup_clusters": q_dedup_clusters,
+        "simhash_pairs": q_simhash_pairs,
+        "cosine_topk": q_cosine_topk,
+        "ann_lsh_multi": q_ann_lsh_multi,
+        "ann_ivf_trained": q_ann_ivf_trained,
+        "embedding_neardup_multi": q_embedding_neardup_multi,
+        "text_stats": q_text_stats,
+        # round 4: HDR-histogram quantile sketch (new operator — the
+        # distribution member of the sketch family) — slot freed by
+        # folding `lang_id` (driver-green r01-r03; a pure column-expression
+        # classifier with no join/shuffle, and the text-function family
+        # keeps text_stats + repetition + quality_filter + clean_lines +
+        # normalize_text in-window) into extra_queries()
+        "hist_quantiles": q_hist_quantiles,
+        # round 4: CCNet-style hashed-bigram LM scoring (new operator) —
+        # slot freed by folding `embed_payload` (driver-green r01-r03; the
+        # multimodal family keeps two in-window slots) into extra_queries()
+        "lm_logprob": q_lm_logprob,
+        # round 4: mergeable-sketch family (new operators). Slots freed by
+        # folding `frame_sample` (driver-green r01-r03; multimodal keeps
+        # multimodal_meta in-window) and `sliding_subseq` (driver-green
+        # r01-r03; the windows family keeps lag_lead + rolling in-window)
+        # into extra_queries().
+        "heavy_hitters": q_heavy_hitters,
+        "bloom_screen": q_bloom_screen,
+        # corpus drift monitor (KL/JS over the shared hashed-gram space):
+        # promoted round 4 for its first driver row — unlike the other
+        # extras it has no in-window query composing it; slot freed by
+        # folding geohash (green rows r01-r03, pure-expression encode
+        # whose geo sibling grid_cantor carried the family through r04)
+        "corpus_divergence": q_corpus_divergence,
     }
 
 
+def q_decontaminate(spark, sf_dir):
+    """Test-set decontamination: flag training docs sharing any 3-word
+    shingle with a benchmark set (here: every 97th doc plays the eval
+    set — both sides derive deterministically from the documents table).
+    The benchmark shingle set is broadcast; corpus side is one explode +
+    one groupBy — the C4/GPT-3 n-gram-overlap rule at corpus scale."""
+    from geofeaturegeneration_spark.operators import decontaminate
+
+    docs = _docs_wide(spark, sf_dir)
+    train = docs.filter(F.col("doc_id") % 97 != 0)
+    bench = docs.filter(F.col("doc_id") % 97 == 0).select(
+        F.col("doc_id").alias("bid"), F.col("text").alias("btext")
+    )
+    return decontaminate(train, "doc_id", "text", bench, "bid", "btext", k=3)
+
+
+def q_source_quota(spark, sf_dir):
+    """Mixing-recipe primitive: keep at most 50 docs per source, chosen by
+    the smallest md5(id#mix) — a deterministic draw reproducible across
+    engines, re-runs, and cluster sizes."""
+    from geofeaturegeneration_spark.operators import source_quota
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return source_quota(docs, "doc_id", quota=50, by="source")
+
+
+def q_source_sample(spark, sf_dir):
+    """Ratio form of the mixing recipe: src0 kept at 80%, src1 at 30%,
+    everything else dropped — one broadcast join + a filter, the draw a
+    pure function of doc_id so the sample is stable and monotone under
+    rate increases."""
+    from geofeaturegeneration_spark.operators import source_sample
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return source_sample(
+        docs, "doc_id", {"src0": 800_000, "src1": 300_000}
+    )
+
+
+def q_epoch_upsample(spark, sf_dir):
+    """Repetition form of the mixing recipe
+    (operators/curation.py:epoch_upsample): src0 at 2.3 epochs (two
+    guaranteed copies + a 30% hash-drawn third), src1 at 0.7 (the
+    sub-1.0 draw degrades to source_sample), everything else exactly one
+    copy — one broadcast rate join + one linear explode(sequence),
+    copies numbered by a 1-based epoch column."""
+    from geofeaturegeneration_spark.operators import epoch_upsample
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return epoch_upsample(
+        docs, "doc_id", {"src0": 2_300_000, "src1": 700_000}
+    )
+
+
+_SPAN_DISC = (
+    "this document is provided as is without warranty of any kind whatsoever"
+)
+
+
+def q_span_dedup(spark, sf_dir):
+    """Exact substring-level dedup at 8-token window granularity (the Lee
+    et al. verbatim-span modality). Every third doc gets the same 12-word
+    disclaimer appended (identically in the SQL oracle): the span survives
+    only in the smallest such doc_id and is cut everywhere else, while
+    organic duplicated 8-grams in the synthetic corpus dedup too."""
+    from geofeaturegeneration_spark.operators import span_dedup
+
+    docs = _docs_wide(spark, sf_dir)
+    spiked = docs.select(
+        "doc_id",
+        F.when(
+            F.col("doc_id") % 3 == 0,
+            F.concat(F.col("text"), F.lit(" " + _SPAN_DISC)),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    return span_dedup(spiked, "doc_id", "text", k=8)
+
+
+def q_rare_tokens(spark, sf_dir):
+    """Corpus-frequency quality signal: per-doc fraction of tokens whose
+    total corpus count <= 2. Counts table is vocabulary-sized and
+    broadcast, so the zipf-skewed token key is never a shuffle key."""
+    from geofeaturegeneration_spark.operators import rare_token_stats
+
+    docs = _docs_wide(spark, sf_dir)
+    return rare_token_stats(docs, "doc_id", "text", rare_below=2)
+
+
+def q_heavy_hitters(spark, sf_dir):
+    """EXACT frequent 3-word shingles via the lossless count-min screen
+    (operators/sketch.py:heavy_hitters). At sf0.01 the shingle key has
+    ~16k distinct values against a width-8192 sketch, so the screen runs
+    with REAL cell collisions and must still return the byte-exact
+    ``GROUP BY HAVING`` answer — which is the oracle. The full-cardinality
+    value shuffle never happens: the only wide shuffle is the
+    (depth x width)-bounded sketch build; the second pass filters map-side
+    through chained broadcast lookups before the (heavy-only) groupBy."""
+    from geofeaturegeneration_spark.operators import heavy_hitters
+    from geofeaturegeneration_spark.operators.dedup import _shingles_expr
+
+    docs = _docs_wide(spark, sf_dir)
+    stream = (
+        docs.select(F.split(F.col("text"), " ").alias("_gfs_w"))
+        .select(F.explode_outer(_shingles_expr("_gfs_w", 3)).alias("shingle"))
+        .filter(F.col("shingle").isNotNull())
+    )
+    return heavy_hitters(stream, "shingle", min_count=5, depth=4, width=8192)
+
+
+def q_bloom_screen(spark, sf_dir):
+    """Incremental cross-batch dedup screen (operators/sketch.py): build
+    the Bloom position table over the even-doc_id half of the corpus (the
+    'already ingested' side, touched exactly once), then flag a batch of
+    the odd half PLUS every 10th even doc — true re-ingested duplicates,
+    so the no-false-negative side of the screen is exercised non-vacuously
+    (every doc_id%10==0 row must flag true). The oracle replays the
+    identical salted-md5 bit positions, so the ~(1-e^(-kn/m))^k spurious
+    flags match bit-for-bit too. Screen side is k chained broadcast joins,
+    zero batch-side shuffle."""
+    from geofeaturegeneration_spark.operators import bloom_build, bloom_screen
+
+    docs = _docs_wide(spark, sf_dir)
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = docs.filter(
+        (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
+    ).select("doc_id", "text")
+    bloom = bloom_build(corpus, "text", m_bits=1 << 14, k=4)
+    return bloom_screen(batch, "text", bloom, m_bits=1 << 14, k=4).select(
+        "doc_id", "might_contain"
+    )
+
+
+def q_corpus_divergence(spark, sf_dir):
+    """Distribution drift between the even- and odd-doc_id halves of the
+    corpus over hashed 1..2-gram buckets (operators/importance.py:
+    corpus_divergence): one row (kl_ab, kl_ba, js) in nats. Each bucket's
+    contribution is one fixed float expression rounded to scaled int64,
+    so the sums are exact and the oracle replays them bit-for-bit
+    (including the shared ghost term for buckets observed in neither
+    half)."""
+    from geofeaturegeneration_spark.operators import corpus_divergence
+
+    docs = _docs_wide(spark, sf_dir)
+    return corpus_divergence(
+        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text",
+        docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
+        n=2, buckets=1024, scale=10_000_000,
+    )
+
+
+def q_cms_merge(spark, sf_dir):
+    """Shard mergeability of the count-min sketch: build one sketch per
+    corpus half (even/odd doc_id word streams) and cms_merge them — the
+    result must equal the one-pass sketch of the whole stream, which is
+    what the oracle computes (one GROUP BY over the union). Pins the
+    cell-wise-sum semantics cross-engine."""
+    from geofeaturegeneration_spark.operators import cms_build, cms_merge
+
+    docs = _docs_wide(spark, sf_dir)
+    tok = lambda pred: docs.filter(pred).select(  # noqa: E731
+        F.explode(F.split(F.col("text"), " ")).alias("w")
+    )
+    a = cms_build(tok(F.col("doc_id") % 2 == 0), "w", depth=3, width=64)
+    b = cms_build(tok(F.col("doc_id") % 2 == 1), "w", depth=3, width=64)
+    return cms_merge(a, b)
+
+
+def q_bloom_novel(spark, sf_dir):
+    """bloom_novel over the same corpus/batch split as the in-window
+    bloom_screen contract query: the guaranteed-novel keeper ids (the
+    screen's flags inverted into a keep set, spurious drops included)."""
+    from geofeaturegeneration_spark.operators import bloom_novel
+
+    docs = _docs_wide(spark, sf_dir)
+    corpus = docs.filter(F.col("doc_id") % 2 == 0)
+    batch = docs.filter(
+        (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
+    ).select("doc_id", "text")
+    return bloom_novel(
+        batch, "text", corpus, m_bits=1 << 14, k=4
+    ).select("doc_id")
+
+
+def q_cms_query(spark, sf_dir):
+    """Count-min point estimates for every distinct word, sketched at a
+    deliberately COLLIDING geometry (depth 3, width 64 for a ~31-word
+    vocabulary over ~27k occurrences) so the oracle replays real cell
+    aliasing, not just exact counts — pins the Kirsch-Mitzenmacher
+    (h1 + d*h2) % width cell math and the min-over-rows lookup
+    bit-for-bit cross-engine."""
+    from geofeaturegeneration_spark.operators import cms_build, cms_query
+
+    docs = _docs_wide(spark, sf_dir)
+    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+    sketch = cms_build(tok, "w", depth=3, width=64)
+    return cms_query(sketch, tok.distinct(), "w", depth=3, width=64)
+
+
+def q_hll_count(spark, sf_dir):
+    """HLL distinct-word count (operators/sketch.py:hll_count) exercised
+    through the SHARDED path: one register table per doc_id-parity half,
+    hll_merge, then the estimate — pinning both the mergeability claim
+    (merge == one-pass build, exactly) and the estimate expression
+    (exact int64 register/Z math; the float tail rounded to 1e6-scaled
+    int64, since the linear-counting branch's ln() is engine-specific at
+    1 ulp) against an oracle that builds the registers in one pass. The word
+    vocabulary at sf0.01 lands in the linear-counting branch; the raw
+    branch is pinned at 100k distinct in tests/test_sketch.py."""
+    from geofeaturegeneration_spark.operators import (
+        hll_build,
+        hll_estimate,
+        hll_merge,
+    )
+
+    docs = _docs_wide(spark, sf_dir)
+    tok = docs.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
+    )
+    a = hll_build(tok.filter(F.col("doc_id") % 2 == 0), "w", p=12)
+    b = hll_build(tok.filter(F.col("doc_id") % 2 == 1), "w", p=12)
+    # the estimate crosses engines as round(1e6 * est): the linear-
+    # counting branch goes through ln(), which is 1-ulp engine-specific
+    # (JVM StrictMath vs DuckDB libm) — the repo-wide scaled-int rule
+    # absorbs it (same as corpus_divergence / lm_logprob)
+    return hll_estimate(hll_merge(a, b), p=12).select(
+        "filled",
+        "z_scaled",
+        F.round(F.lit(1_000_000.0) * F.col("est")).cast("long").alias(
+            "est_ppm"
+        ),
+    )
+
+
+def q_hll_registers(spark, sf_dir):
+    """The HLL register table itself (r, max rank) at p=8 over the word
+    stream — the exact-integer artifact the in-window hll_count estimate
+    is computed from, oracle-replayed row-for-row (bin()-based bit
+    lengths agree across engines)."""
+    from geofeaturegeneration_spark.operators import hll_build
+
+    docs = _docs_wide(spark, sf_dir)
+    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+    return hll_build(tok, "w", p=8)
+
+
+def q_hist_quantiles(spark, sf_dir):
+    """Doc-length distribution cuts (operators/sketch.py:hist_build/
+    hist_quantiles) through the SHARDED path: one base-2 HDR bucket table
+    per doc_id-parity half, hist_merge (integer sums — merge == one-pass
+    build exactly), then p25/p50/p90/p99 of n_chars. Bucket ids, lower
+    edges, cumulative ranks and ceil-rank targets are ALL exact integer
+    arithmetic in the shared Spark/DuckDB dialect, so the oracle replays
+    the full pipeline bit-for-bit from a single-pass build."""
+    from geofeaturegeneration_spark.operators import (
+        hist_build,
+        hist_merge,
+        hist_quantiles,
+    )
+
+    docs = _docs_wide(spark, sf_dir).select(
+        "doc_id", F.col("n_chars").cast("long").alias("n_chars")
+    )
+    a = hist_build(docs.filter(F.col("doc_id") % 2 == 0), "n_chars", sub_bits=5)
+    b = hist_build(docs.filter(F.col("doc_id") % 2 == 1), "n_chars", sub_bits=5)
+    return hist_quantiles(
+        hist_merge(a, b), [250_000, 500_000, 900_000, 990_000], sub_bits=5
+    )
+
+
+def q_hll_count_by(spark, sf_dir):
+    """Per-SOURCE distinct-word counts (group_cols form of hll_count):
+    one register table per source, bounded at sources x 2^p rows, one
+    hash shuffle — the grouped sibling of the in-window hll_count."""
+    from geofeaturegeneration_spark.operators import hll_count
+
+    docs = _docs_wide(spark, sf_dir)
+    tok = docs.select(
+        "source", F.explode(F.split(F.col("text"), " ")).alias("w")
+    )
+    return hll_count(tok, "w", p=10, group_cols=["source"]).select(
+        "source",
+        "filled",
+        "z_scaled",
+        F.round(F.lit(1_000_000.0) * F.col("est")).cast("long").alias(
+            "est_ppm"
+        ),
+    )
+
+
+def q_hist_quantiles_by(spark, sf_dir):
+    """Per-SOURCE doc-length cuts (group_cols form of hist_quantiles):
+    one bounded histogram per source, p50/p99 each — the keyed-window
+    path that scales to millions of groups (each per-q pass is a filtered
+    aggregate over the bounded bucket table, never a probe join)."""
+    from geofeaturegeneration_spark.operators import hist_quantile_values
+
+    docs = _docs_wide(spark, sf_dir).select(
+        "source", F.col("n_chars").cast("long").alias("n_chars")
+    )
+    return hist_quantile_values(
+        docs, "n_chars", [500_000, 990_000], sub_bits=5,
+        group_cols=["source"],
+    )
+
+
+def q_hist_buckets(spark, sf_dir):
+    """The HDR bucket table itself (b, cnt) over n_chars — the exact-
+    integer artifact the in-window hist_quantiles reads, oracle-replayed
+    row-for-row."""
+    from geofeaturegeneration_spark.operators import hist_build
+
+    docs = _docs_wide(spark, sf_dir).select(
+        F.col("n_chars").cast("long").alias("n_chars")
+    )
+    return hist_build(docs, "n_chars", sub_bits=5)
+
+
+def q_pii_scrub(spark, sf_dir):
+    """PII redaction over the documents corpus. The synthetic text carries
+    no PII, so the query SPIKES deterministic emails / phones / IPs / SSNs /
+    card numbers into a doc_id-keyed subset first (identically in the SQL
+    oracle) — the redaction and the per-pattern counters are then exercised
+    on every pattern, not vacuously green on untouched text."""
+    from geofeaturegeneration_spark.operators import pii_scrub
+
+    docs = _docs_wide(spark, sf_dir)
+    did = F.col("doc_id")
+    spiked = docs.select(
+        "doc_id",
+        F.concat(
+            F.col("text"),
+            F.when(
+                did % 7 == 0,
+                F.concat(
+                    F.lit(" reach me at user"),
+                    did.cast("string"),
+                    F.lit("@example.com"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                did % 5 == 0,
+                F.concat(
+                    F.lit(" or 415-555-"),
+                    F.lpad((did % 10000).cast("string"), 4, "0"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                did % 9 == 0,
+                F.concat(
+                    F.lit(" from 10.0."),
+                    (did % 256).cast("string"),
+                    F.lit("."),
+                    ((did * 7) % 256).cast("string"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                did % 13 == 0,
+                F.concat(
+                    F.lit(" ssn 123-45-"),
+                    F.lpad((did % 10000).cast("string"), 4, "0"),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(did % 17 == 0, F.lit(" card 4111111111111111")).otherwise(
+                F.lit("")
+            ),
+        ).alias("text"),
+    )
+    return pii_scrub(spiked, "doc_id", "text")
+
+
+def q_line_dedup(spark, sf_dir):
+    """Corpus-level duplicate-line removal. The synthetic docs are single
+    lines, so the query first LINE-IFIES each doc (newline after every 8
+    words) and appends a BLANK separator line plus one shared boilerplate
+    line to every doc — the C4 shape: the boilerplate survives only in the
+    lowest-(doc_id, line_no) position corpus-wide, organic 8-gram
+    collisions dedup too, and the blank line (shared by every doc) is
+    exempt from dedup and survives everywhere, so the exemption rule is
+    exercised non-vacuously."""
+    from geofeaturegeneration_spark.operators import line_dedup
+
+    docs = _docs_wide(spark, sf_dir)
+    lined = docs.select(
+        "doc_id",
+        F.concat(
+            F.regexp_replace(F.col("text"), r"((\S+ ){7}\S+) ", "$1\n"),
+            F.lit("\n\nsubscribe to our newsletter today"),
+        ).alias("text"),
+    )
+    return line_dedup(lined, "doc_id", "text")
+
+
+def q_line_dedup_doc(spark, sf_dir):
+    """The per_doc=True scope of line_dedup: each doc gets the shared
+    boilerplate line TWICE plus a trailing copy of its own first 8-word
+    line — within a doc the second copies drop, but (unlike the corpus
+    rule) every doc keeps one boilerplate copy, and the blank separator
+    stays exempt. Winner key gains the doc id, so both shuffles are
+    doc-keyed."""
+    from geofeaturegeneration_spark.operators import line_dedup
+
+    docs = _docs_wide(spark, sf_dir)
+    first8 = F.regexp_extract(F.col("text"), r"^(\S+( \S+){7})", 1)
+    lined = docs.select(
+        "doc_id",
+        F.concat(
+            F.regexp_replace(F.col("text"), r"((\S+ ){7}\S+) ", "$1\n"),
+            F.lit(
+                "\n\nsubscribe to our newsletter today"
+                "\nsubscribe to our newsletter today\n"
+            ),
+            first8,
+        ).alias("text"),
+    )
+    return line_dedup(lined, "doc_id", "text", per_doc=True)
+
+
+def q_clean_lines(spark, sf_dir):
+    """C4 intra-document line cleaning. The synthetic docs are single
+    lines, so the query first LINE-IFIES each doc (a '.' + newline after
+    every 6 words — lines that PASS the rules), then appends lines that
+    each violate exactly one rule (a 2-word line, a javascript line with
+    terminal punctuation, a 9-word line without terminal punctuation) so
+    every line rule fires non-vacuously; every 7th doc gets a Lorem Ipsum
+    line and every 11th a curly-brace line so both page-level verdict
+    rules fire too (the Lorem line itself PASSES the line rules — only
+    the doc verdict sees it)."""
+    from geofeaturegeneration_spark.operators import clean_lines
+
+    docs = _docs_wide(spark, sf_dir)
+    lined = docs.select(
+        "doc_id",
+        F.concat(
+            F.regexp_replace(F.col("text"), r"((\S+ ){5}\S+) ", "$1.\n"),
+            F.lit(
+                "\ntoo short.\nenable javascript to view this site now."
+                "\nthis trailing line has no terminal punctuation at all"
+            ),
+            F.when(
+                F.col("doc_id") % 7 == 0,
+                F.lit("\nLorem Ipsum dolor sit amet consectetur."),
+            ).otherwise(F.lit("")),
+            F.when(
+                F.col("doc_id") % 11 == 0,
+                F.lit("\nfunction f() { return 1; } and some words here."),
+            ).otherwise(F.lit("")),
+        ).alias("text"),
+    )
+    return clean_lines(lined, "doc_id", "text")
+
+
+def q_normalize_text(spark, sf_dir):
+    """Unicode + whitespace normalization. The synthetic docs are clean
+    ASCII, so the query spikes every doc with each byte form the operator
+    exists to canonicalize: a BOM, an NFD-decomposed accent (e + U+0301),
+    the U+212B ANGSTROM singleton (NFC maps it to U+00C5), a C1 control
+    (U+0085), a ZERO WIDTH SPACE, a CRLF, a C0 control, tab/space runs,
+    and padded document edges — every rule fires non-vacuously, and
+    `changed` is true everywhere the
+    spike applied (the oracle builds the identical spike from chr()
+    codepoints and runs DuckDB's nfc_normalize — utf8proc's UAX #15,
+    matching the unicodedata path in the Spark side's Arrow stage)."""
+    from geofeaturegeneration_spark.operators import normalize_text
+
+    docs = _docs_wide(spark, sf_dir)
+    spiked = docs.select(
+        "doc_id",
+        F.concat(
+            # BOM, then NFD e + COMBINING ACUTE, the U+212B ANGSTROM
+            # singleton, a C1 control (U+0085 NEL) and a ZERO WIDTH SPACE
+            F.lit("\ufeff  Cafe\u0301 \u212b \u0085x\u200by  \r\n"),
+            F.col("text"),
+            F.lit("\ttail\x01 here  \n\n"),
+        ).alias("text"),
+    )
+    return normalize_text(spiked, "doc_id", "text")
+
+
+def _space_canonical(docs):
+    """Collapse space runs and trim edge spaces — the round-trip DOMAIN of
+    the word-level BPE (split-on-space pre-tokenization is lossy on space
+    structure BY DESIGN; decode joins words with one space). The composed
+    pipeline guarantees this shape by running normalize_text before any
+    tokenization; the query states the precondition explicitly so the
+    identity oracle is honest on arbitrary input (found by
+    tools/fuzz_oracle.py: multi-space / edge-space docs broke the raw
+    identity). Only the ASCII space is canonicalized — newlines/tabs ride
+    inside words and round-trip untouched."""
+    return docs.select(
+        "doc_id",
+        F.trim(F.regexp_replace(F.col("text"), " +", " ")).alias("text"),
+    )
+
+
+def q_bpe_roundtrip(spark, sf_dir):
+    """BPE tokenizer inverse property, end-to-end through the trained
+    artifact: train_bpe on the documents corpus (driver merge loop over
+    the corpus-size-independent word-count table), bpe_encode every doc
+    to subword ids (the zero-shuffle mapInArrow plan: per-task word
+    cache, flat int32 token buffers), bpe_decode back. The identity
+    holds on SPACE-CANONICAL text (the tokenizer's round-trip domain —
+    see _space_canonical), so both sides canonicalize first and the
+    oracle is that same canonicalization. Token-LEVEL correctness is
+    pinned by tests/test_bpe.py against an independent Sennrich-style
+    reference implementation (regex trainer, rank-order apply)."""
+    from geofeaturegeneration_spark.operators import (
+        bpe_decode,
+        bpe_encode,
+        train_bpe,
+    )
+
+    docs = _space_canonical(_docs_wide(spark, sf_dir))
+    art = train_bpe(docs, "text", n_merges=60)
+    enc = bpe_encode(docs, "doc_id", "text", art)
+    return bpe_decode(enc, "doc_id", "tokens", art)
+
+
+def q_bpe_roundtrip_join(spark, sf_dir):
+    """Exactness twin: the same inverse property through the word-table
+    JOIN encode plan (bpe_encode_join) instead of the zero-shuffle
+    mapInArrow default — pins that both physical strategies produce the
+    same tokens (and therefore the same decode)."""
+    from geofeaturegeneration_spark.operators import (
+        bpe_decode,
+        bpe_encode_join,
+        train_bpe,
+    )
+
+    docs = _space_canonical(_docs_wide(spark, sf_dir))
+    art = train_bpe(docs, "text", n_merges=60)
+    enc = bpe_encode_join(docs, "doc_id", "text", art)
+    return bpe_decode(enc, "doc_id", "tokens", art)
+
+
+def q_quality_filter(spark, sf_dir):
+    """C4/Gopher keep decision over the documents corpus; thresholds tuned
+    so the synthetic docs split into keeps AND drops on several rules
+    (word count, stopword share, duplicate-word fraction) — not a
+    vacuously-true verdict."""
+    from geofeaturegeneration_spark.operators import quality_filter
+
+    docs = _docs_wide(spark, sf_dir)
+    return quality_filter(
+        docs, "doc_id", "text",
+        min_words=30, max_words=70,
+        min_avg_word_len=3.0, max_avg_word_len=6.0,
+        max_punct_ratio=0.05, max_stopword_ratio=0.2,
+        max_dup_word_fraction=0.8,
+    )
+
+
+def q_pack_sequences(spark, sf_dir):
+    """Corpus-level packing: documents' token streams concatenated in
+    deterministic hash order within 8 pack groups and cut into SEQ_LEN
+    training sequences crossing doc boundaries (unpadded here so n_real
+    exposes each group's final partial chunk to the oracle; padding is
+    pytest-covered)."""
+    from geofeaturegeneration_spark.operators import pack_sequences
+
+    toks = _doc_tokens(spark, sf_dir)
+    packed = pack_sequences(toks, "doc_id", "tokens", SEQ_LEN, n_groups=8)
+    return packed.select(
+        "grp", "chunk_id", _arr_csv("tokens").alias("chunk"), "n_real"
+    )
+
+
+def q_pack_segments(spark, sf_dir):
+    """pack_sequences(with_segments=True): the packed chunks plus the
+    block-diagonal-attention metadata — per-token 0-based segment ids
+    (increment at every doc boundary inside the chunk) and the per-chunk
+    contributing-doc count. The segment id is doc_ordinal - min(ordinal
+    in chunk) over the SAME window the pack offset uses, so the metadata
+    costs no extra shuffle."""
+    from geofeaturegeneration_spark.operators import pack_sequences
+
+    toks = _doc_tokens(spark, sf_dir)
+    packed = pack_sequences(
+        toks, "doc_id", "tokens", SEQ_LEN, n_groups=8, with_segments=True
+    )
+    return packed.select(
+        "grp",
+        "chunk_id",
+        _arr_csv("tokens").alias("chunk"),
+        _arr_csv("segs").alias("segs"),
+        "n_docs",
+        "n_real",
+    )
+
+
+DSIR_BUCKETS = 1024
+DSIR_SCALE = 10_000
+DSIR_K = 200
+
+
+def _dsir_corpora(spark, sf_dir):
+    """Deterministic target/raw split of the documents table for the DSIR
+    queries: every 11th doc plays the high-quality target corpus, the rest
+    are the raw pool (the same %-derivation pattern as decontaminate)."""
+    docs = _docs_wide(spark, sf_dir)
+    raw = docs.filter(F.col("doc_id") % 11 != 0).select("doc_id", "text")
+    target = docs.filter(F.col("doc_id") % 11 == 0).select(
+        F.col("doc_id").alias("tid"), F.col("text").alias("ttext")
+    )
+    return raw, target
+
+
+def q_importance_resample(spark, sf_dir):
+    """DSIR importance resampling: greedy top-k raw docs by hashed-bigram
+    log importance ratio against the target corpus. Integer llr sums keep
+    the ranking shuffle-order-proof; selection is TakeOrdered."""
+    from geofeaturegeneration_spark.operators import importance_resample
+
+    raw, target = _dsir_corpora(spark, sf_dir)
+    return importance_resample(
+        raw, "doc_id", "text", target, "tid", "ttext",
+        k=DSIR_K, buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
+    )
+
+
+def q_importance_weights(spark, sf_dir):
+    """The weights stage of importance_resample: per-doc integer llr sums
+    + the derived double weight over the full raw pool."""
+    from geofeaturegeneration_spark.operators import importance_weights
+
+    raw, target = _dsir_corpora(spark, sf_dir)
+    return importance_weights(
+        raw, "doc_id", "text", target, "tid", "ttext",
+        buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
+    )
+
+
+def q_shuffle_shards(spark, sf_dir):
+    """Deterministic global corpus shuffle + fixed-size shard export:
+    pos = global rank by (md5(id#shuffle), id) via distributed
+    zipWithIndex — NO single-partition window; identical at any
+    parallelism, which is exactly what the oracle's row_number replay
+    checks."""
+    from geofeaturegeneration_spark.operators import shuffle_shards
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return shuffle_shards(docs, "doc_id", shard_size=256)
+
+
+def q_lm_logprob(spark, sf_dir):
+    """CCNet-style hashed-bigram LM scoring: train on the %11 target
+    corpus, score the raw pool. Integer lp sums keep the score
+    shuffle-order-proof; avg_logprob is one IEEE division (higher = more
+    target-like; perplexity = exp(-avg) is monotone in it)."""
+    from geofeaturegeneration_spark.operators import lm_logprob
+
+    raw, target = _dsir_corpora(spark, sf_dir)
+    return lm_logprob(
+        raw, "doc_id", "text", target, "tid", "ttext",
+        buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
+    )
+
+
+def q_bm25_topk(spark, sf_dir):
+    """BM25 lexical top-k retrieval: every 83rd document (offset 5)
+    plays a more-like-this query against the full corpus — the
+    decontamination-audit / data-selection shape. Scaled-int64 term
+    contributions keep the score shuffle-order-proof; rank ties break on
+    doc_id. Query terms are broadcast so corpus postings for non-query
+    terms never shuffle."""
+    from geofeaturegeneration_spark.operators import bm25_topk
+
+    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
+    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
+        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
+    )
+    return bm25_topk(docs, "doc_id", "text", qs, "q_id", "q_text", k=10)
+
+
+def q_bm25_scores(spark, sf_dir):
+    """The pre-top-k stage of q_bm25_topk: the full (query, matching doc)
+    score table — same corpora, no rank window."""
+    from geofeaturegeneration_spark.operators import bm25_scores
+
+    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
+    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
+        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
+    )
+    return bm25_scores(docs, "doc_id", "text", qs, "q_id", "q_text")
+
+
+def q_bm25_topk_maxdf(spark, sf_dir):
+    """q_bm25_topk under the max_df_frac=0.78 stop-filter: terms in more
+    than floor(0.78 * N) docs are pruned from scoring — the knob that
+    bounds the postings x queries join at corpus scale. At sf0.01 the
+    threshold (390 of 500 docs) keeps 14 of the 31 vocabulary terms, so
+    the pruning is exercised non-vacuously on both sides."""
+    from geofeaturegeneration_spark.operators import bm25_topk
+
+    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
+    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
+        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
+    )
+    return bm25_topk(
+        docs, "doc_id", "text", qs, "q_id", "q_text", k=10,
+        max_df_frac=0.78,
+    )
+
+
+def q_temperature_mix(spark, sf_dir):
+    """Temperature-scaled mixture sampling (alpha=0.5 upsample-the-tail,
+    target half the corpus): driver-computed integer ppm rates realized
+    through the source_sample draw."""
+    from geofeaturegeneration_spark.operators import temperature_mix
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
+    return temperature_mix(docs, "doc_id", alpha=0.5, target_frac=0.5)
+
+
+def q_temperature_tokens(spark, sf_dir):
+    """Token-budget temperature mixing (alpha=0.5, target half the corpus
+    TOKENS): group mass = exact int64 word-count sums instead of doc
+    counts — the form pretraining mixes are specified in. Same pure
+    per-row draw; different salt so the two samples are independent."""
+    from geofeaturegeneration_spark.functions.text import n_words
+    from geofeaturegeneration_spark.operators import temperature_mix
+
+    docs = _t(spark, sf_dir, "documents").select(
+        "doc_id", "source", n_words(F.col("text")).alias("n_tok")
+    )
+    return temperature_mix(
+        docs, "doc_id", alpha=0.5, target_frac=0.5,
+        salt="tokrate", weight_col="n_tok",
+    ).drop("n_tok")
+
+
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Oracle-matched queries OUTSIDE the 50-entry window: physical twins
-    of contract entries (identical output, different plan), literal stages
-    of a contract entry, and variants folded out of the window in earlier
-    rounds. Run by tools/compare_oracle.py and swept by
-    tests/test_plan_audit.py exactly like the contract."""
+    """Oracle-matched queries OUTSIDE the driver's 50-entry window: physical
+    twins of contract entries (identical output, different plan) and folded
+    standalone variants, plus round-3 curation operators added after the
+    window filled (decontaminate / source_quota / rare_tokens — distinct
+    operators, full oracle + pytest coverage, driver slot pending). Run by
+    tools/compare_oracle.py and swept by tests/test_plan_audit.py exactly
+    like the contract."""
     return {
-        # folded out of the contract window in rounds 4-5, each with green
-        # CORRECTNESS rows (series_matrix + contrastive r03-r04; hash_split
-        # r01+r03-r04; grid_cantor r01-r04); grid_cantor's math rides
-        # stay_enrich, and series_matrix/contrastive are pytest-pinned
-        # (test_matrix_split.py)
+        # round 5: folded out of the driver window by the rotation policy
+        # (tools/rotation.py) to give bpe_roundtrip / chunk_strided /
+        # edit_join_cross / epoch_upsample / ivf_lloyd / leakage_split
+        # their first CORRECTNESS rows. Each is long driver-green
+        # (series_matrix + contrastive r03-r04; hash_split r01+r03-r04;
+        # repetition r02-r04; multimodal_meta + grid_cantor r01-r04) and
+        # keeps coverage: repetition's pure expressions sit beside the
+        # in-window text_stats, grid_cantor's math rides stay_enrich,
+        # hash_split's md5 draw is leakage_split's split stage,
+        # multimodal_meta's Arrow path has frame_sample/embed_payload here,
+        # and series_matrix/contrastive are pytest-pinned
+        # (test_matrix_split.py) — all six stay value-exact under
+        # compare_oracle.
         "series_matrix": q_series_matrix,
         "contrastive": q_contrastive,
         "hash_split": q_hash_split,
+        "repetition": q_repetition,
+        "multimodal_meta": q_multimodal_meta,
         "grid_cantor": q_grid,
-        # `vocab` is the literal first stage of the in-window vocab_encode
-        # (build_vocab feeds the encode join); `token_roundtrip` is the
-        # inverse-property test of the in-window chunk_sequences
-        # (byte-equality also pinned in tests/test_sequence.py)
+        # round 4: folded out of the driver window to give source_quota and
+        # source_sample their first CORRECTNESS rows. `vocab` is the literal
+        # first stage of the in-window vocab_encode (build_vocab feeds the
+        # encode join); `token_roundtrip` is the inverse-property test of
+        # the in-window chunk_sequences (byte-equality also pinned in
+        # tests/test_sequence.py). Both stay value-exact under
+        # compare_oracle.
         "vocab": q_vocab,
         "token_roundtrip": q_token_roundtrip,
-        # TPC-H demo aggregations from round 1 (green rows r01-r03), not
-        # SURVEY §2 operators
+        # round 4: folded to give bm25_topk its first driver row — a
+        # generic TPC-H demo aggregation from round 1 (driver-green
+        # r01-r03), not a SURVEY §2 operator; orders_enrich keeps the
+        # TPC-H join layer in-window. `bm25_scores` is the pre-top-k
+        # stage of the in-window bm25_topk (full score table, no rank
+        # window), verified here value-exact.
         "tpch_pricing": q_tpch_pricing,
-        "orders_enrich": q_orders_enrich,
-        # TakeOrdered top-k + broadcast enrich (same family as orders_enrich)
-        "top_customers": q_top_customers,
+        "bm25_scores": q_bm25_scores,
+        # the stop-filtered (max_df_frac) form of the in-window bm25_topk —
+        # the quadratic-safety knob, exercised non-vacuously
+        "bm25_topk_maxdf": q_bm25_topk_maxdf,
+        # DPR hard-negative mining: bm25_scores minus the query's own
+        # positive, ranks re-numbered — the contrastive-training sibling
+        "bm25_negatives": q_bm25_negatives,
+        # the per_doc=True scope of the in-window line_dedup (within-doc
+        # repeated-line trim, no cross-doc state)
+        "line_dedup_doc": q_line_dedup_doc,
+        # with_segments=True form of the in-window pack_sequences: the
+        # block-diagonal-attention metadata (per-token segment ids +
+        # per-chunk doc counts)
+        "pack_segments": q_pack_segments,
+        # round 4: folded to free the heavy_hitters / bloom_screen sketch
+        # slots — frame_sample keeps its multimodal sibling
+        # (multimodal_meta) in-window, sliding_subseq its windows siblings
+        # (lag_lead, rolling); both were driver-green r01-r03 and stay
+        # value-exact under compare_oracle.
+        "frame_sample": q_frame_sample,
         "sliding_subseq": q_sliding,
+        # round 4: the literal first stage of the in-window dedup_exact
+        # (exact_dedup groups BY this fingerprint) — folded to free the
+        # span_dedup slot
+        "fingerprint": q_fingerprint,
         # same output as stay_move_spliced minus the first/last raw-point
         # splice (the simpler variant; spliced is the full reference rule)
         "stay_move": q_stay_move,
-        # the gap-rule sessionizer; its machinery stays in-window through
-        # sessionize_state
+        # round 4 (this session): folded out of the driver window
+        # (driver-green r01-r03) to give pagerank its first CORRECTNESS
+        # row; the gap-rule sessionizer stays value-exact here and its
+        # machinery stays in-window through sessionize_state
         "sessionize_gap": q_sessionize_gap,
         # same output as asof_salted via the union-window plan
         "asof_union": q_asof_union,
         # standalone range-frame rolling (contract 'rolling' folds both)
         "rolling_range": q_rolling_range,
-        # interaction_wide is interaction_matrix's wide pivot twin
+        # round 4 (this session): folded out of the driver window
+        # (driver-green r01-r03) to give edit_join and fim_transform their
+        # first CORRECTNESS rows; both stay value-exact under
+        # compare_oracle. interaction_wide is interaction_matrix's wide
+        # pivot twin; ngram_jaccard's shingle machinery stays in-window
+        # through minhash_pairs (same _shingles_expr stage).
         "interaction_matrix": q_interaction,
+        "ngram_jaccard": q_ngram_jaccard,
+        # keeper-selection composition of the edit family: edit pairs ->
+        # the same connected-components fixpoint as dedup_clusters
+        "edit_clusters": q_edit_clusters,
         "interaction_wide": q_interaction_wide,
-        # two-expression window operators (green rows r01-r03)
+        # TakeOrdered top-k + broadcast enrich (same family as orders_enrich)
+        "top_customers": q_top_customers,
+        # contract 'cosine_topk' now runs the blocked-GEMM plan; the
+        # original expression-fold self-join stays here as its exactness twin
+        "cosine_topk_join": q_cosine_topk_join,
+        # contract 'ann_ivf'/'ann_ivf_trained' now run the blocked-GEMM
+        # plan (round 4); the join-form IVF stays here as its exactness twin
+        "ann_ivf_join": q_ann_ivf_join,
+        # signature STAGE queries folded out of the driver window (late
+        # round 3) to give quality_filter and pack_sequences contract
+        # slots; both stages stay driver-verified transitively — the
+        # in-window simhash_pairs / minhash_pairs / minhash_cross queries
+        # compute these exact signatures as their first step — and stay
+        # value-exact here under compare_oracle
+        "simhash": q_simhash,
+        "minhash_sigs": q_minhash_sigs,
+        # single-table variants of the multi-table ANN contract entries —
+        # folded here (round 3) to free driver slots for pii_scrub and
+        # line_dedup, mirroring the round-2 strategy-twin folds; both were
+        # driver-green in r02 and stay under the local oracle gate
+        "ann_lsh": q_ann_lsh,
+        "embedding_neardup": q_embedding_neardup,
+        # round 4: folded out of the driver window (driver-green r01-r03;
+        # two-expression operators) to give the new traj_graph and
+        # semantic_dedup operators their first CORRECTNESS rows; both stay
+        # value-exact under compare_oracle
         "decimate": q_decimate,
         "minmax_norm": q_minmax,
+        # round 4: folded out of the driver window (driver-green r01-r03)
+        # to give importance_resample and shuffle_shards contract rows —
         # tokens_ordered is the literal input stage of the in-window
         # chunk_sequences (same _doc_tokens output, chunking added);
         # time_features is pure calendar expressions
         "tokens_ordered": q_tokens_ordered,
         "time_features": q_time_features,
+        # the weights stage of the in-window importance_resample (resample
+        # IS this table + TakeOrdered) — verified transitively, value-exact
+        # here
+        "importance_weights": q_importance_weights,
+        # temperature-scaled mixing: a driver-side rate computation whose
+        # corpus-side filter IS the in-window source_sample draw — verified
+        # transitively through source_sample's contract row
+        "temperature_mix": q_temperature_mix,
+        # token-budget form of the same recipe (weight_col): group mass =
+        # exact int64 token sums, rates realized through the identical
+        # source_sample draw
+        "temperature_tokens": q_temperature_tokens,
+        # round 4: folded out of the driver window (driver-green r01-r03)
+        # to give lm_logprob a contract row — the multimodal family keeps
+        # multimodal_meta and frame_sample in-window
+        "embed_payload": q_embed_payload,
         # node-degree features derived ENTIRELY from the in-window
         # traj_graph edge table (union + groupBy of its output) — verified
         # transitively by the contract entry, value-exact here
         "graph_nodes": q_graph_nodes,
         # weighted (n_trips) PageRank over the in-window traj_graph edge
         # table — location importance; exact int64 recurrence, unrolled
-        # CTE oracle
+        # CTE oracle like the in-window pagerank
         "traj_pagerank": q_traj_pagerank,
-        # pure column exprs (green rows r01-r03), canonical vectors pinned
-        # in test_grid.py
+        # the sketch ESTIMATES themselves, oracle-pinned cross-engine (the
+        # in-window heavy_hitters oracle checks only the exact final
+        # answer, which the lossless screen guarantees regardless of the
+        # sketch values; this extra replays the Kirsch-Mitzenmacher cell
+        # math bit-for-bit)
+        "cms_query": q_cms_query,
+        # sketch-shard mergeability, oracle-pinned: cms_merge over the two
+        # corpus halves' sketches must equal the one-pass build (the SQL
+        # groups the union directly)
+        "cms_merge": q_cms_merge,
+        # the novel-keeper form of the in-window bloom_screen (same split,
+        # same bit math — the screen's flags inverted to a keep set)
+        "bloom_novel": q_bloom_novel,
+        # the exact-integer register table the in-window hll_count
+        # estimate is computed from, oracle-replayed row-for-row
+        "hll_registers": q_hll_registers,
+        # the exact-integer HDR bucket table the in-window hist_quantiles
+        # reads, oracle-replayed row-for-row
+        "hist_buckets": q_hist_buckets,
+        # the group_cols form of the in-window hist_quantiles (per-source
+        # cuts; keyed windows, same bucket/rank math)
+        "hist_quantiles_by": q_hist_quantiles_by,
+        # the group_cols form of the in-window hll_count (per-source
+        # distinct words; same register/estimate math per group)
+        "hll_count_by": q_hll_count_by,
+        # folded round 4 to free hist_quantiles' driver slot: pure
+        # column-expression language classifier, driver-green r01-r03;
+        # the text family keeps five in-window rows
+        "lang_id": q_lang_id,
+        # folded round 4 to free hll_count's driver slot: a TPC-H demo
+        # aggregation (green rows r01-r03), not a SURVEY §2 operator — the
+        # §2.3 broadcast-enrich row is carried by in-window stay_enrich
+        "orders_enrich": q_orders_enrich,
+        # folded round 4 to free corpus_divergence's driver slot: green
+        # rows r01-r03, pure column exprs, canonical vectors pinned in
+        # test_grid.py; grid_cantor keeps the geo-function family in-window
         "geohash": q_geohash,
+        # folded round 4 to free driver slots for clean_lines and
+        # normalize_text (first-ever rows): both had green rows r01-r03
+        # and stay transitively driver-verified — minhash_cross through
+        # minhash_pairs (same signature+banding machinery), ann_ivf
+        # through ann_ivf_trained (same blocked-GEMM search path)
+        "minhash_cross": q_minhash_cross,
+        "ann_ivf": q_ann_ivf,
+        # exactness twin of the in-window (round 5) bpe_roundtrip: the
+        # same inverse property through the word-table JOIN encode plan
+        # instead of the zero-shuffle mapInArrow default
+        "bpe_roundtrip_join": q_bpe_roundtrip_join,
     }
 
 
@@ -723,12 +2188,35 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _MD5L = "('0x'||substr(md5({x}),1,15))::BIGINT"
 
+# hll_count's estimate constant — computed by the SAME Python expression the
+# operator uses (operators/sketch.py:_hll_alpha), so the double literal the
+# oracle parses is bit-identical to the one Spark's plan carries
+from geofeaturegeneration_spark.operators.sketch import _hll_alpha as _HLL_A
+from geofeaturegeneration_spark.operators.sketch import (
+    _hist_id_expr as _HIST_ID,
+    _hist_lo_expr as _HIST_LO,
+)
+
+_HLL_C12 = _HLL_A(4096) * 4096 * 4096 * (1 << 49)
+_HLL_C10 = _HLL_A(1024) * 1024 * 1024 * (1 << 51)
 _SEC = "epoch_us({x})//1000000"
+_NORM_TEXT = "regexp_replace(trim(lower(text)),'\\s+',' ','g')"
+_STOP = "('the','a','of','and','to','in','is','it')"
+
+_WORD_EDGES_CTES = (
+    "wd AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents)",
+    "t AS (SELECT doc_id, unnest(ws) AS tw,"
+    " unnest(generate_series(1, len(ws))) AS pos FROM wd)",
+    "e0 AS (SELECT lag(tw) OVER (PARTITION BY doc_id ORDER BY pos) AS src,"
+    " tw AS dst FROM t)",
+    "e AS (SELECT DISTINCT src, dst, 1 AS w FROM e0"
+    " WHERE src IS NOT NULL AND src != dst)",
+)
 
 
 def _pagerank_sql(
-    edges_ctes: tuple[str, ...],
-    node_alias: str,
+    edges_ctes=_WORD_EDGES_CTES,
+    node_alias: str = "word",
     n_iter: int = 5,
     d: int = 850_000,
     scale: int = 10**12,
@@ -770,6 +2258,161 @@ tok AS (
   FROM documents
 )"""
 
+_SHINGLE_CTE = f"""
+w AS (SELECT doc_id, string_split(text,' ') ws FROM documents),
+sh AS (
+  SELECT DISTINCT doc_id, ({_MD5L.format(x='s')}) % 2147483647 AS h
+  FROM (SELECT doc_id,
+               unnest(list_transform(generate_series(1, len(ws)-2),
+                                     i -> array_to_string(ws[i:i+2],' '))) AS s
+        FROM w)
+)"""
+
+# Minhash-pair -> connected-component fixpoint, shared by dedup_clusters
+# and leakage_split: bands from the shingle stream, symmetric edges, the
+# recursive reachability closure, min-label components, and per-component
+# representatives (cluster_id = min doc_id).
+_CLUSTER_CTES = f"""
+WITH RECURSIVE {_SHINGLE_CTE.strip()},
+perm AS (SELECT i, (2*i+1)::BIGINT AS a, (i*i+1)::BIGINT AS b FROM range(16) t(i)),
+sig AS (SELECT doc_id, i, MIN((a*h+b) % 2147483647) AS mh
+        FROM sh, perm GROUP BY 1,2),
+band AS (SELECT doc_id, (i//4)::INT AS band,
+                string_agg(mh::VARCHAR, '-' ORDER BY i) AS sig_str
+         FROM sig GROUP BY 1,2),
+prs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM band a JOIN band b ON a.band=b.band AND a.sig_str=b.sig_str
+                                AND a.doc_id < b.doc_id),
+edges AS (SELECT id_a AS src, id_b AS dst FROM prs
+          UNION SELECT id_b, id_a FROM prs),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+reach(a, b) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
+),
+cc AS (SELECT a AS id, min(b) AS component FROM reach GROUP BY a),
+asg AS (SELECT d.doc_id, coalesce(cc.component, d.doc_id) AS comp
+        FROM documents d LEFT JOIN cc ON d.doc_id = cc.id),
+reps AS (SELECT comp, min(doc_id) AS cluster_id FROM asg GROUP BY 1)"""
+
+# DSIR shared CTEs (importance_weights / importance_resample): hashed
+# 1..2-gram bucket streams over the %11 target/raw split, bucket counts,
+# scaled-int log ratios (ln-term order fixed to match bucket_log_ratios),
+# per-doc int64 sums. generate_series(1,0) is EMPTY in DuckDB, so one-word
+# docs contribute their unigram only — same as Spark's guarded shingles.
+_DSIR_GRAM = """
+SELECT doc_id, g FROM (
+  SELECT doc_id, unnest(ws) AS g FROM {src}
+  UNION ALL
+  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
+                        i -> array_to_string(ws[i:i+1],' '))) AS g FROM {src})
+"""
+_DSIR_CTES = f"""
+WITH
+rawd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+         WHERE doc_id % 11 <> 0),
+tgtd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+         WHERE doc_id % 11 = 0),
+rg AS (SELECT doc_id, ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
+       FROM ({_DSIR_GRAM.format(src='rawd')})),
+tg AS (SELECT doc_id, ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
+       FROM ({_DSIR_GRAM.format(src='tgtd')})),
+rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
+tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
+tot AS (SELECT (SELECT sum(c) FROM tc) AS tt, (SELECT sum(c) FROM rc) AS tr),
+llr AS (SELECT b,
+               round(10000.0 * (ln(coalesce(tc.c, 0)::DOUBLE + 1.0)
+                     - ln(coalesce(rc.c, 0)::DOUBLE + 1.0)
+                     + ln(tr::DOUBLE + 1024.0)
+                     - ln(tt::DOUBLE + 1024.0)))::BIGINT AS llr
+        FROM tc FULL OUTER JOIN rc USING (b), tot),
+w AS (SELECT rg.doc_id, count(*)::INT AS n_grams,
+             sum(coalesce(llr.llr, 0))::BIGINT AS llr_sum
+      FROM rg LEFT JOIN llr USING (b) GROUP BY rg.doc_id)
+"""
+
+# Hashed-bigram LM CTEs (lm_logprob): (space, g) streams — space 0 =
+# contexts (all words but the doc's last; ws[1:0] is EMPTY for one-word
+# docs), space 1 = bigrams (generate_series(1,0) is EMPTY) — hashed per
+# space, model trained on the %11 target corpus. Smoothing floors are
+# PYTHON literals shared with the operator (alpha=1 -> bigram floor
+# round(scale*ln(1)) = 0; context floor round(scale*ln(alpha*buckets))).
+_LM_D_CTX = 69315  # round(10000 * ln(1.0 * 1024))
+_LM_STREAM = """
+SELECT doc_id, 0 AS space, unnest(ws[1:len(ws)-1]) AS g FROM {src}
+UNION ALL
+SELECT doc_id, 1 AS space, unnest(list_transform(generate_series(1, len(ws)-1),
+                      i -> array_to_string(ws[i:i+1],' '))) AS g FROM {src}
+"""
+_LM_CTES = f"""
+WITH
+rawd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+         WHERE doc_id % 11 <> 0),
+tgtd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+         WHERE doc_id % 11 = 0),
+tb AS (SELECT space, ({_MD5L.format(x="g || '#lm' || space::VARCHAR")}) % 1024 AS b
+       FROM ({_LM_STREAM.format(src='tgtd')})),
+rb AS (SELECT doc_id, space,
+              ({_MD5L.format(x="g || '#lm' || space::VARCHAR")}) % 1024 AS b
+       FROM ({_LM_STREAM.format(src='rawd')})),
+model AS (SELECT space, b,
+                 round(10000.0 * CASE WHEN space = 1
+                       THEN ln(count(*)::DOUBLE + 1.0)
+                       ELSE ln(count(*)::DOUBLE + 1024.0) END)::BIGINT AS llp
+          FROM tb GROUP BY space, b),
+sc AS (SELECT rb.doc_id,
+              sum(rb.space)::INT AS n_bigrams,
+              sum((CASE WHEN rb.space = 1 THEN 1 ELSE -1 END)
+                  * coalesce(model.llp,
+                             CASE WHEN rb.space = 1 THEN 0
+                                  ELSE {_LM_D_CTX} END))::BIGINT AS lp_sum
+       FROM rb LEFT JOIN model USING (space, b) GROUP BY rb.doc_id)
+"""
+
+
+# BM25 CTEs (retrieval.bm25_scores / bm25_topk; k1=1.2, b=0.75,
+# scale=10000; queries = every 83rd doc, offset 5). The per-(doc,term)
+# contribution replays the operator's fixed float tree verbatim —
+#   idf = ln((n - df + 0.5) / (df + 0.5) + 1.0)
+#   tfn = (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
+#   contrib = round(10000.0 * (idf * tfn)) :: BIGINT
+# — so per-pair scores are exact integer sums on both engines; n and
+# avgdl are exact-int-to-double conversions + one IEEE division.
+def _bm25_ctes(dft_having: str = "") -> str:
+    """BM25 oracle CTE chain; ``dft_having`` appends a HAVING clause to the
+    document-frequency table — the max_df/max_df_frac pruning hook
+    (operators/retrieval.py bm25_scores)."""
+    return f"""
+WITH
+d AS (SELECT doc_id, coalesce(len(string_split(text,' ')), 0)::BIGINT AS dl,
+             string_split(text,' ') AS ws
+      FROM documents),
+st AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl
+       FROM d),
+q AS (SELECT DISTINCT doc_id AS q_id, unnest(ws) AS term
+      FROM d WHERE doc_id % 83 = 5),
+toks AS (SELECT doc_id, dl, unnest(ws) AS term FROM d),
+tf AS (SELECT doc_id, dl, term, count(*)::BIGINT AS tf
+       FROM toks WHERE term IN (SELECT term FROM q)
+       GROUP BY 1, 2, 3),
+dft AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1{dft_having}),
+c AS (SELECT tf.doc_id, tf.term,
+             round(10000.0 * (
+               ln((st.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
+               * ((tf.tf * 2.2)
+                  / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl)))
+             ))::BIGINT AS contrib
+      FROM tf CROSS JOIN st JOIN dft USING (term)),
+s AS (SELECT q.q_id, c.doc_id, count(*)::INT AS n_terms,
+             sum(c.contrib)::BIGINT AS score_int
+      FROM c JOIN q USING (term)
+      GROUP BY 1, 2)
+"""
+
+
+_BM25_CTES = _bm25_ctes()
+
 
 # Hash-sampled negative-candidate CTEs (expects an ``inter`` CTE with
 # DISTINCT (user_id, grid) in scope). Mirrors the sampled path of
@@ -795,6 +2438,235 @@ rk AS (SELECT user_id, grid,
                  ({_MD5L.format(x="user_id::VARCHAR || '#' || grid::VARCHAR")}) ASC,
                  grid ASC))::INT AS neg_rank
        FROM unv)"""
+
+
+def _dot_sql(a: str, b: str, acol: str = "embedding", bcol: str = "embedding") -> str:
+    return " + ".join(
+        f"({a}.{acol}[{i}]::DOUBLE * {b}.{bcol}[{i}]::DOUBLE)"
+        for i in range(1, EMB_DIM + 1)
+    )
+
+
+def _sqnorm_sql() -> str:
+    return " + ".join(
+        f"(embedding[{i}]::DOUBLE * embedding[{i}]::DOUBLE)"
+        for i in range(1, EMB_DIM + 1)
+    )
+
+
+def _ivf_search_sql(cent_ctes: str, k: int = 3, nprobe: int = 1) -> str:
+    """Shared IVF assignment+search SQL; ``cent_ctes`` must define a CTE
+    ``cent(cid, cv, cn)`` (may reference ``n``). Mirrors ann_ivf_topk.
+
+    Every CTE is MATERIALIZED: DuckDB inlines CTEs referenced more than
+    once, and the farthest-point chain references each d_j twice (by
+    s_{j+1} AND d_{j+1}), exploding to 2^k re-evaluations of the 64-term
+    dot chains — measured 99.3 s plain vs 0.94 s materialized at sf0.01,
+    byte-identical results."""
+    sql = f"""
+WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+{cent_ctes},
+asg AS (SELECT n.vec_id, n.embedding, n.nn, cent.cid,
+               row_number() OVER (
+                 PARTITION BY n.vec_id
+                 ORDER BY ({_dot_sql('n', 'cent', bcol='cv')}) / (n.nn * cent.cn) DESC,
+                          cent.cid ASC) AS crank
+        FROM n CROSS JOIN cent),
+home AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank = 1),
+probe AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank <= {nprobe}),
+p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id, b.cid AS list_id,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM probe a JOIN home b ON a.cid = b.cid AND a.vec_id != b.vec_id),
+r AS (SELECT vec_id, nn_id, list_id, cos,
+             (row_number() OVER (PARTITION BY vec_id
+                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
+      FROM p)
+SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", list_id::BIGINT AS list_id
+FROM r WHERE rnk <= {k}
+"""
+    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
+
+
+def _semantic_dedup_sql(threshold: float, cent_ctes: str) -> str:
+    """SemDeDup keep verdicts; ``cent_ctes`` must define ``cent(cid,cv,cn)``
+    (the trained farthest-point quantizer). Mirrors operators/similarity
+    .semantic_dedup: home-cluster assignment by (cos desc, cid asc), then
+    drop iff a lower-id same-cluster row has cosine >= threshold. Same
+    MATERIALIZED discipline as _ivf_search_sql (the fps chain re-references
+    its CTEs)."""
+    sql = f"""
+WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+{cent_ctes},
+asg AS (SELECT n.vec_id, n.embedding, n.nn, cent.cid,
+               row_number() OVER (
+                 PARTITION BY n.vec_id
+                 ORDER BY ({_dot_sql('n', 'cent', bcol='cv')}) / (n.nn * cent.cn) DESC,
+                          cent.cid ASC) AS crank
+        FROM n CROSS JOIN cent),
+home AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank = 1),
+drops AS (SELECT DISTINCT a.vec_id
+          FROM home a JOIN home b
+            ON a.cid = b.cid AND b.vec_id < a.vec_id
+          WHERE ({_dot_sql('a', 'b')}) / (a.nn * b.nn) >= {threshold})
+SELECT h.vec_id, h.cid::INT AS cluster_id, (d.vec_id IS NULL) AS keep
+FROM home h LEFT JOIN drops d ON h.vec_id = d.vec_id
+UNION ALL
+SELECT vec_id, NULL::INT AS cluster_id, true AS keep
+FROM embeddings WHERE (({_sqnorm_sql()}) > 0) IS NOT TRUE
+"""
+    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
+
+
+def _fps_cent_ctes(k: int = 8, salt: str = "ivfseed") -> str:
+    """Farthest-point (k-center) seed selection as chained CTEs — replays
+    operators/similarity.farthest_point_centroids exactly: seed 1 = min
+    md5(id#salt); seed j = argmin over vectors of max cosine to the seeds
+    so far (running ``greatest`` — max is exact, so the fold order doesn't
+    matter), ties by vec_id. No cross-row float aggregation anywhere, so
+    both engines agree bit-for-bit."""
+    h_expr = _MD5L.format(x=f"vec_id::VARCHAR || '#{salt}'")
+    parts = [
+        f"""s1 AS (SELECT vec_id, embedding, nn
+      FROM (SELECT *, {h_expr} AS hh FROM n)
+      ORDER BY hh, vec_id LIMIT 1)""",
+        f"""d1 AS (SELECT n.vec_id, n.embedding, n.nn,
+             ({_dot_sql('n', 's1')}) / (n.nn * s1.nn) AS mc
+      FROM n CROSS JOIN s1)""",
+        "s2 AS (SELECT vec_id, embedding, nn FROM d1 ORDER BY mc ASC, vec_id ASC LIMIT 1)",
+    ]
+    for j in range(3, k + 1):
+        parts.append(
+            f"""d{j - 1} AS (SELECT d.vec_id, d.embedding, d.nn,
+             greatest(d.mc, ({_dot_sql('d', f's{j - 1}')}) / (d.nn * s{j - 1}.nn)) AS mc
+      FROM d{j - 2} d CROSS JOIN s{j - 1})"""
+        )
+        parts.append(
+            f"s{j} AS (SELECT vec_id, embedding, nn FROM d{j - 1} ORDER BY mc ASC, vec_id ASC LIMIT 1)"
+        )
+    cent = "cent AS (" + "\n  UNION ALL ".join(
+        f"SELECT {i} AS cid, embedding AS cv, nn AS cn FROM s{i}"
+        for i in range(1, k + 1)
+    ) + ")"
+    parts.append(cent)
+    return ",\n".join(parts)
+
+
+def _lloyd_sql(k: int = 8, iters: int = 2, scale: int = 10**9) -> str:
+    """operators/similarity.lloyd_refine replayed as chained CTEs: cent0 =
+    the farthest-point seeds (same chain as ann_ivf_trained), then per
+    iteration assignment (row_number over cos DESC, cid — identical to the
+    Spark greatest-struct argmax), exact int64 coordinate sums of
+    round(scale * x/|x|), and the fixed-order finisher (left-assoc sum of
+    squares -> sqrt -> divide; empty clusters / zero sums keep the previous
+    centroid). Same MATERIALIZED discipline as _ivf_search_sql."""
+    parts = [_fps_cent_ctes(k), "cent0 AS (SELECT cid, cv::DOUBLE[] AS cv, cn FROM cent)"]
+    for i in range(1, iters + 1):
+        p = f"cent{i - 1}"
+        parts.append(
+            f"""a{i} AS (SELECT n.vec_id, n.embedding, n.nn, c.cid,
+             ({_dot_sql('n', 'c', bcol='cv')}) / (n.nn * c.cn) AS cos
+      FROM n CROSS JOIN {p} c)"""
+        )
+        parts.append(
+            f"""asg{i} AS (SELECT vec_id, embedding, nn, cid FROM (
+      SELECT *, row_number() OVER (PARTITION BY vec_id
+                                   ORDER BY cos DESC, cid) AS rn FROM a{i})
+      WHERE rn = 1)"""
+        )
+        parts.append(
+            f"""sm{i} AS (SELECT cid, d,
+             sum(round({float(scale)!r} * embedding[d]::DOUBLE / nn)::BIGINT) AS s
+      FROM asg{i} CROSS JOIN range(1, {EMB_DIM + 1}) t(d) GROUP BY cid, d)"""
+        )
+        parts.append(
+            f"sv{i} AS (SELECT cid, list(s::DOUBLE ORDER BY d) AS sv"
+            f" FROM sm{i} GROUP BY cid)"
+        )
+        sumsq = " + ".join(
+            f"(sv[{j}] * sv[{j}])" for j in range(1, EMB_DIM + 1)
+        )
+        parts.append(f"nm{i} AS (SELECT cid, sv, sqrt({sumsq}) AS nrm FROM sv{i})")
+        arr = ", ".join(f"m.sv[{j}] / m.nrm" for j in range(1, EMB_DIM + 1))
+        parts.append(
+            f"""cent{i} AS (SELECT p.cid,
+      CASE WHEN m.cid IS NULL OR m.nrm = 0.0 THEN p.cv ELSE [{arr}] END AS cv,
+      CASE WHEN m.cid IS NULL OR m.nrm = 0.0 THEN p.cn ELSE 1.0 END AS cn
+      FROM {p} p LEFT JOIN nm{i} m ON p.cid = m.cid)"""
+        )
+    ctes = ",\n".join(parts)
+    sql = f"""
+WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+{ctes}
+SELECT c.cid, t.d::INT AS d,
+       round(1000000000.0 * c.cv[t.d])::BIGINT AS c_ppb,
+       round(1000000.0 * c.cn)::BIGINT AS cn_ppm
+FROM cent{iters} c CROSS JOIN range(1, {EMB_DIM + 1}) t(d)
+"""
+    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
+
+
+def _hp_bucket_sql(planes: list[list[float]]) -> str:
+    """One hash table's bucket id as DuckDB SQL — each bit's hyperplane dot
+    is the SAME left-associated fold (0.0 + t1 + t2 + ...) as the Spark
+    per-plane aggregate in operators/similarity._hp_exploded, so signs
+    match bitwise."""
+    bits = []
+    for bit, coefs in enumerate(planes):
+        dot = "0.0 + " + " + ".join(
+            f"(embedding[{i + 1}]::DOUBLE * {c})" for i, c in enumerate(coefs)
+        )
+        bits.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << bit} ELSE 0 END)")
+    return " + ".join(bits)
+
+
+def _hp_bk_ctes(n_tables: int, n_bits: int) -> str:
+    from geofeaturegeneration_spark.operators.similarity import hyperplane_tables
+
+    hp = hyperplane_tables(EMB_DIM, n_tables, n_bits, "hp")
+    return "\nUNION ALL\n".join(
+        f"SELECT vec_id, embedding, nn, {t} AS t,"
+        f" ({_hp_bucket_sql(hp[t])})::BIGINT AS bucket FROM nrm"
+        for t in range(n_tables)
+    )
+
+
+def _neardup_multi_sql(
+    threshold: float = 0.35, n_tables: int = 3, n_bits: int = 8
+) -> str:
+    return f"""
+WITH nrm AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+bk AS ({_hp_bk_ctes(n_tables, n_bits)}),
+p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
+                          AND a.vec_id < b.vec_id)
+SELECT id_a, id_b, round(max(cos),6) AS cos_sim
+FROM p WHERE cos >= {threshold} GROUP BY 1, 2
+"""
+
+
+def _ann_lsh_multi_sql(n_tables: int = 3, n_bits: int = 8, k: int = 3) -> str:
+    return f"""
+WITH nrm AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+bk AS ({_hp_bk_ctes(n_tables, n_bits)}),
+p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
+                          AND a.vec_id != b.vec_id),
+d AS (SELECT vec_id, nn_id, max(cos) AS cos, count(*)::INT AS n_hit
+      FROM p GROUP BY 1,2),
+r AS (SELECT vec_id, nn_id, cos, n_hit,
+             (row_number() OVER (PARTITION BY vec_id
+                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
+      FROM d)
+SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", n_hit
+FROM r WHERE rnk <= {k}
+"""
 
 
 # DuckDB mirror of functions/grid.geohash_encode — same quantization
@@ -846,6 +2718,38 @@ FROM q
 """
 
 
+def _lang_case() -> str:
+    langs = sorted(X.LANG_STOPWORDS.keys())
+    counts = {
+        lang: f"len(list_filter(string_split(text,' '), w -> w IN {tuple(sw)}))"
+        for lang, sw in X.LANG_STOPWORDS.items()
+    }
+    branches = []
+    for idx, lang in enumerate(langs):
+        later = langs[idx + 1:]
+        cond = f"s_{lang} > 0"
+        if later:
+            cond += f" AND s_{lang} >= greatest({', '.join('s_' + l for l in later)})"
+        branches.append(f"WHEN {cond} THEN '{lang}'")
+    case = "CASE " + " ".join(branches) + " ELSE 'und' END"
+    score_cols = ", ".join(f"{expr} AS s_{lang}" for lang, expr in counts.items())
+    return f"""
+WITH s AS (SELECT doc_id, lang, {score_cols} FROM documents)
+SELECT doc_id, lang, {case} AS pred_lang FROM s
+"""
+
+
+def oracle_sql() -> dict[str, str]:
+    d = _oracle_sql()
+    # blocked-GEMM and fold-join cosine top-k share one oracle: identical
+    # output by construction (rank flips would need two distinct candidate
+    # cosines within ~1e-13 — verified exact at sf0.01 and sf0.1)
+    d["cosine_topk_join"] = d["cosine_topk"]
+    d["ann_ivf_join"] = d["ann_ivf"]
+    d["ivf_lloyd"] = _lloyd_sql(k=8, iters=2)
+    return d
+
+
 def rotation_hints() -> dict[str, dict]:
     """Rotation metadata consumed by ``tools/rotation.py`` (the round-4
     verdict's "rotation as policy" ask). Two keys:
@@ -870,18 +2774,43 @@ def rotation_hints() -> dict[str, dict]:
         "vocab": "vocab_encode",
         "token_roundtrip": "chunk_sequences",
         "tokens_ordered": "chunk_sequences",
+        "fingerprint": "dedup_exact",
+        "minhash_sigs": "minhash_pairs",
+        "simhash": "simhash_pairs",
+        "bm25_scores": "bm25_topk",
+        "bm25_topk_maxdf": "bm25_topk",
+        "bm25_negatives": "bm25_topk",
+        "importance_weights": "importance_resample",
         "graph_nodes": "traj_graph",
-        # PageRank over the in-window traj_graph edge table; the integer
-        # recurrence itself is pinned by tests/test_graph.py and
-        # tests/test_properties.py and stays value-exact under
-        # compare_oracle
-        "traj_pagerank": "traj_graph",
+        "hll_registers": "hll_count",
+        "hist_buckets": "hist_quantiles",
+        "bpe_roundtrip_join": "bpe_roundtrip",
         # physical twins — identical output, different plan
         "sessionize_gap": "sessionize_state",
         "asof_union": "asof_salted",
         "stay_move": "stay_move_spliced",
         "rolling_range": "rolling",
-        # same kernel, different scope knob
+        "cosine_topk_join": "cosine_topk",
+        "ann_ivf_join": "ann_ivf_trained",
+        "ann_ivf": "ann_ivf_trained",
+        "ann_lsh": "ann_lsh_multi",
+        "minhash_cross": "minhash_pairs",
+        "embedding_neardup": "embedding_neardup_multi",
+        "edit_clusters": "edit_join",
+        # same kernel / same deterministic draw, different scope knob
+        "line_dedup_doc": "line_dedup",
+        "pack_segments": "pack_sequences",
+        "hist_quantiles_by": "hist_quantiles",
+        "hll_count_by": "hll_count",
+        "cms_query": "heavy_hitters",
+        "cms_merge": "heavy_hitters",
+        "bloom_novel": "bloom_screen",
+        "temperature_mix": "source_sample",
+        "temperature_tokens": "source_sample",
+        "traj_pagerank": "pagerank",
+        "lang_id": "text_stats",
+        "frame_sample": "multimodal_meta",
+        "embed_payload": "multimodal_meta",
         "interaction_matrix": "pivot_counts",
         "interaction_wide": "pivot_counts",
         "sliding_subseq": "rolling",
@@ -889,19 +2818,38 @@ def rotation_hints() -> dict[str, dict]:
     }
     foldable = {
         # reason strings are documentation for the proposal output
+        "repetition": "pure expressions beside text_stats (its carrier)",
         "grid_cantor": "grid math also rides the in-window stay_enrich",
+        "multimodal_meta": "Arrow meta family; 4 green driver rounds,"
+        " frame_sample/embed_payload twins stay oracle-exact in extras",
         "contrastive": "green r03+r04; composition of split/window"
         " machinery pinned by tests/test_matrix_split.py",
         "series_matrix": "green r03+r04; the SQL collect/sort/pad plan is"
         " pytest-pinned (test_matrix_split.py, test_plan_audit.py)",
         "hash_split": "green r01+r03+r04; the md5 draw is the same kernel"
-        " as the in-window negative_samples ranking",
+        " as leakage_split's split stage",
     }
     return {"carriers": carriers, "foldable": foldable}
 
 
-def oracle_sql() -> dict[str, str]:
+def _oracle_sql() -> dict[str, str]:
     sec_ts = _SEC.format(x="ts")
+    # PII oracle pieces are GENERATED from the operator's own pattern table
+    # so the two sides cannot drift; every pattern is RE2-and-Java identical
+    # (no lookaround/backrefs — see curation.PII_PATTERNS)
+    from geofeaturegeneration_spark.operators.curation import PII_PATTERNS
+
+    pii_clean = "text"
+    for _n, _p, _t in PII_PATTERNS:
+        pii_clean = f"regexp_replace({pii_clean}, '{_p}', '{_t}', 'g')"
+    pii_counts = ",\n       ".join(
+        f"len(regexp_extract_all(text, '{_p}'))::INT AS n_{_n}"
+        for _n, _p, _t in PII_PATTERNS
+    )
+    lsh_bucket_sql = " + ".join(
+        f"(CASE WHEN embedding[{k + 1}] > 0 THEN {1 << k} ELSE 0 END)"
+        for k in range(8)
+    )
     return {
         "tpch_pricing": """
 SELECT l_returnflag, l_linestatus,
@@ -919,6 +2867,48 @@ SELECT n_name, count(*)::BIGINT AS n_orders,
 FROM orders JOIN customer ON o_custkey=c_custkey
             JOIN nation ON c_nationkey=n_nationkey
 GROUP BY 1
+""",
+        # mirrors operators/retrieval (k1=1.2, b=0.75, scale=10000;
+        # queries = every 83rd doc, offset 5): per-(doc,term) BM25
+        # contribution in the IDENTICAL float expression order, rounded
+        # to scaled int64 (exact integer per-pair sums); n and avgdl are
+        # the same exact-int-to-double conversions + one IEEE division.
+        # sum(BIGINT) is HUGEINT in DuckDB -> cast back to BIGINT.
+        "bm25_topk": _BM25_CTES + """
+SELECT q_id, doc_id, rank, n_terms, score_int,
+       score_int::DOUBLE / 10000.0 AS score
+FROM (SELECT *, CAST(row_number() OVER
+        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
+        AS rank FROM s)
+WHERE rank <= 10
+""",
+        "bm25_scores": _BM25_CTES + """
+SELECT q_id, doc_id, n_terms, score_int,
+       score_int::DOUBLE / 10000.0 AS score
+FROM s
+""",
+        # max_df_frac=0.78 stop-filter: HAVING prunes the df table, the
+        # same place the Spark side filters; floor(frac * n) replays the
+        # one IEEE multiply+floor exactly
+        "bm25_topk_maxdf": _bm25_ctes(
+            "\n       HAVING count(*) <= floor(0.78 * (SELECT n FROM st))"
+        ) + """
+SELECT q_id, doc_id, rank, n_terms, score_int,
+       score_int::DOUBLE / 10000.0 AS score
+FROM (SELECT *, CAST(row_number() OVER
+        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
+        AS rank FROM s)
+WHERE rank <= 10
+""",
+        # bm25_negatives: the bm25 score table minus each query's own
+        # source doc (its positive), ranks re-numbered over the survivors
+        "bm25_negatives": _BM25_CTES + """
+SELECT q_id, doc_id, rank, n_terms, score_int,
+       score_int::DOUBLE / 10000.0 AS score
+FROM (SELECT *, CAST(row_number() OVER
+        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
+        AS rank FROM s WHERE doc_id != q_id)
+WHERE rank <= 10
 """,
         "top_customers": """
 WITH rev AS (
@@ -1219,13 +3209,241 @@ FROM allr, wins t
 WHERE i < nw AND pos > i*{SEQ_LEN // 2} AND pos <= i*{SEQ_LEN // 2} + {SEQ_LEN}
 GROUP BY 1, 2
 """,
+        # edit_clusters: the dedup_clusters fixpoint over edit pairs
+        "edit_clusters": """
+WITH RECURSIVE k AS (SELECT doc_id, substr(trim(regexp_replace(lower(regexp_replace(substr(text,1,96),'[^A-Za-z0-9 ]','','g')),' +',' ','g')),1,24) AS key FROM documents),
+k2 AS (SELECT * FROM k WHERE len(key) >= 1),
+prs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM k2 a JOIN k2 b ON a.doc_id < b.doc_id
+        WHERE levenshtein(a.key, b.key) <= 1),
+edges AS (SELECT id_a AS src, id_b AS dst FROM prs
+          UNION SELECT id_b, id_a FROM prs),
+nodes AS (SELECT DISTINCT src AS id FROM edges),
+reach(a, b) AS (
+  SELECT id, id FROM nodes
+  UNION
+  SELECT r.a, e.dst FROM reach r JOIN edges e ON r.b = e.src
+),
+cc AS (SELECT a AS id, min(b) AS component FROM reach GROUP BY a),
+asg AS (SELECT d.doc_id, coalesce(cc.component, d.doc_id) AS comp
+        FROM documents d LEFT JOIN cc ON d.doc_id = cc.id),
+reps AS (SELECT comp, min(doc_id) AS cluster_id FROM asg GROUP BY 1)
+SELECT a.doc_id, r.cluster_id, (a.doc_id = r.cluster_id) AS is_keeper
+FROM asg a JOIN reps r ON a.comp = r.comp
+""",
+        # pagerank: 5 iterations unrolled into a CTE chain (see
+        # _pagerank_sql) — exact int64 recurrence, bit-identical ranks
+        "pagerank": _pagerank_sql(),
         # traj_pagerank: weighted unrolled chain over the traj edge CTEs
         "traj_pagerank": _pagerank_sql(('r0 AS (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn FROM events)', 'f2 AS (SELECT *, CASE WHEN lag(event_type) OVER wx IS NULL OR lag(event_type) OVER wx != event_type THEN 1 ELSE 0 END AS new FROM r0 WINDOW wx AS (PARTITION BY user_id ORDER BY rn))', 's2 AS (SELECT *, SUM(new) OVER (PARTITION BY user_id ORDER BY rn ROWS UNBOUNDED PRECEDING) AS sid FROM f2)', 'g2 AS (SELECT user_id, sid, min(ts) AS stime, min(rn) AS ord, arg_min(event_type, rn) AS event_type FROM s2 GROUP BY 1,2)', 'le AS (SELECT *, lead(stime) OVER wy AS etime FROM g2 WINDOW wy AS (PARTITION BY user_id ORDER BY stime, ord))', 'stays2 AS (SELECT user_id, stime, event_type FROM le WHERE etime IS NOT NULL AND (epoch_us(etime)//1000000 - epoch_us(stime)//1000000) >= 600)', 'ed0 AS (SELECT user_id, lag(event_type) OVER (PARTITION BY user_id ORDER BY stime) AS src, event_type AS dst FROM stays2)', 'e AS (SELECT src, dst, count(*)::BIGINT AS w FROM ed0 WHERE src IS NOT NULL AND src != dst GROUP BY 1,2)'), node_alias="node"),
+        # edit_join: the oracle IS the naive quadratic join — the operator's
+        # symmetric-delete blocking is complete, so they agree exactly;
+        # both engines measure distance over the identical ascii_key form
+        # (pure ASCII, so char edits count the same under Java and utf8)
+        "edit_join": """
+WITH k AS (SELECT doc_id, substr(trim(regexp_replace(lower(regexp_replace(substr(text,1,96),'[^A-Za-z0-9 ]','','g')),' +',' ','g')),1,24) AS key FROM documents),
+k2 AS (SELECT * FROM k WHERE len(key) >= 1)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       levenshtein(a.key, b.key)::INT AS dist
+FROM k2 a JOIN k2 b ON a.doc_id < b.doc_id
+WHERE levenshtein(a.key, b.key) <= 1
+""",
+        "edit_join_cross": """
+WITH k AS (SELECT doc_id, substr(trim(regexp_replace(lower(regexp_replace(substr(text,1,96),'[^A-Za-z0-9 ]','','g')),' +',' ','g')),1,24) AS key FROM documents),
+k2 AS (SELECT * FROM k WHERE len(key) >= 1)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       levenshtein(a.key, b.key)::INT AS dist
+FROM k2 a JOIN k2 b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
+WHERE levenshtein(a.key, b.key) <= 1
+""",
+        # fim_transform: built explode-side (no list slicing — see the
+        # chunk_sequences note): each source position gets its PSM output
+        # rank, sentinels ride in as three extra rows per selected doc
+        "fim_transform": f"""
+WITH {_TOKENS_CTE.strip()},
+sized AS (SELECT doc_id, tokens, len(tokens) AS n,
+       CASE WHEN (('0x'||substr(md5(doc_id::VARCHAR || '#fim'),1,15))::BIGINT) % 1000000 < 600000 THEN 1 ELSE 0 END AS is_fim,
+       (('0x'||substr(md5(doc_id::VARCHAR || '#fim-a'),1,15))::BIGINT) % (len(tokens)+1) AS ha,
+       (('0x'||substr(md5(doc_id::VARCHAR || '#fim-b'),1,15))::BIGINT) % (len(tokens)+1) AS hb
+  FROM tok),
+cuts AS (SELECT doc_id, tokens, n, is_fim,
+       least(ha, hb)::INT AS lo, greatest(ha, hb)::INT AS hi FROM sized),
+realr AS (SELECT doc_id, is_fim, lo, hi, n, unnest(tokens) AS tid,
+       unnest(generate_series(1, n)) AS pos FROM cuts),
+ordr AS (SELECT doc_id, is_fim, lo, hi, n, tid,
+       CASE WHEN is_fim = 0 THEN pos
+            WHEN pos <= lo THEN pos
+            WHEN pos > hi THEN pos - hi + lo + 1
+            ELSE pos + n - hi + 2 END AS ord
+  FROM realr),
+sents AS (
+  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD} AS tid, 0 AS ord
+  FROM cuts WHERE is_fim = 1
+  UNION ALL
+  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD + 1}, lo + 1
+  FROM cuts WHERE is_fim = 1
+  UNION ALL
+  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD + 2}, lo + n - hi + 2
+  FROM cuts WHERE is_fim = 1),
+allr AS (SELECT * FROM ordr UNION ALL SELECT * FROM sents)
+SELECT doc_id, is_fim::INT AS is_fim, lo AS fim_lo, hi AS fim_hi,
+       n::INT AS n_tok,
+       array_to_string(list(tid ORDER BY ord), ',') AS tokens_fim
+FROM allr GROUP BY 1, 2, 3, 4, 5
+""",
+        # identity oracle: the Spark side runs decode(encode(text)) through
+        # the trained BPE artifact and must reproduce the corpus bytes
+        "bpe_roundtrip": """
+SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g'), ' ') AS text
+FROM documents
+""",
+        "bpe_roundtrip_join": """
+SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g'), ' ') AS text
+FROM documents
+""",
         "token_roundtrip": f"""
 WITH {_TOKENS_CTE.strip()}
 SELECT doc_id, len(tokens)::INT AS n_tok,
        array_to_string(tokens, ',') AS tokens
 FROM tok
+""",
+        "dedup_exact": f"""
+SELECT {_MD5L.format(x=_NORM_TEXT)} AS fp,
+       count(*)::BIGINT AS n_copies,
+       min(doc_id) AS keep_id
+FROM documents GROUP BY 1
+""",
+        "minhash_pairs": f"""
+WITH {_SHINGLE_CTE.strip()},
+perm AS (SELECT i, (2*i+1)::BIGINT AS a, (i*i+1)::BIGINT AS b FROM range(16) t(i)),
+sig AS (SELECT doc_id, i, MIN((a*h+b) % 2147483647) AS mh
+        FROM sh, perm GROUP BY 1,2),
+band AS (SELECT doc_id, (i//4)::INT AS band,
+                string_agg(mh::VARCHAR, '-' ORDER BY i) AS sig_str
+         FROM sig GROUP BY 1,2)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+FROM band a JOIN band b ON a.band=b.band AND a.sig_str=b.sig_str
+                        AND a.doc_id < b.doc_id
+""",
+        "minhash_cross": f"""
+WITH {_SHINGLE_CTE.strip()},
+perm AS (SELECT i, (2*i+1)::BIGINT AS a, (i*i+1)::BIGINT AS b FROM range(16) t(i)),
+sig AS (SELECT doc_id, i, MIN((a*h+b) % 2147483647) AS mh
+        FROM sh, perm GROUP BY 1,2),
+band AS (SELECT doc_id, (i//4)::INT AS band,
+                string_agg(mh::VARCHAR, '-' ORDER BY i) AS sig_str
+         FROM sig GROUP BY 1,2)
+SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+FROM band a JOIN band b ON a.band=b.band AND a.sig_str=b.sig_str
+WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
+""",
+        "dedup_clusters": f"""
+{_CLUSTER_CTES}
+SELECT a.doc_id, r.cluster_id, (a.doc_id = r.cluster_id) AS is_keeper
+FROM asg a JOIN reps r ON a.comp = r.comp
+""",
+        # leakage_safe_split: the SAME cluster fixpoint, with the split
+        # bucket drawn on cluster_id instead of doc_id — every member of
+        # a near-dup cluster lands on one side of the boundary
+        "leakage_split": f"""
+{_CLUSTER_CTES}
+SELECT a.doc_id,
+       ((({_MD5L.format(x="r.cluster_id::VARCHAR || 'split'")}) % 100))::INT
+         AS split_bucket,
+       ((({_MD5L.format(x="r.cluster_id::VARCHAR || 'split'")}) % 100) < 20)
+         AS is_test
+FROM asg a JOIN reps r ON a.comp = r.comp
+""",
+        "ngram_jaccard": f"""
+WITH {_SHINGLE_CTE.strip()},
+dfreq AS (SELECT h, count(*)::BIGINT AS df FROM sh GROUP BY 1),
+shf AS (SELECT sh.* FROM sh JOIN dfreq USING(h) WHERE df <= 5),
+sizes AS (SELECT doc_id, count(*)::BIGINT AS n FROM shf GROUP BY 1),
+inter AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*)::BIGINT AS ni
+          FROM shf a JOIN shf b ON a.h=b.h AND a.doc_id<b.doc_id GROUP BY 1,2)
+SELECT id_a, id_b,
+       round(ni::DOUBLE/(na.n+nb.n-ni)::DOUBLE, 6) AS jaccard
+FROM inter JOIN sizes na ON inter.id_a=na.doc_id
+           JOIN sizes nb ON inter.id_b=nb.doc_id
+WHERE round(ni::DOUBLE/(na.n+nb.n-ni)::DOUBLE, 6) >= 0.4
+""",
+        "simhash": f"""
+WITH wd AS (SELECT doc_id, {_MD5L.format(x='w')} AS h
+            FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)),
+bits AS (SELECT b, (1::BIGINT << b) AS pow2 FROM range(32) t(b)),
+contrib AS (SELECT doc_id, b, pow2, SUM(2*((h//pow2)%2)-1)::BIGINT AS s
+            FROM wd, bits GROUP BY 1,2,3)
+SELECT doc_id,
+       SUM(CASE WHEN s > 0 THEN pow2 ELSE 0 END)::BIGINT AS simhash
+FROM contrib GROUP BY 1
+""",
+        "cosine_topk": f"""
+WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
+           WHERE ({_sqnorm_sql()}) > 0),
+p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM n a JOIN n b ON a.vec_id != b.vec_id),
+r AS (SELECT vec_id, nn_id, cos,
+             (row_number() OVER (PARTITION BY vec_id
+                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
+      FROM p)
+SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank"
+FROM r WHERE rnk <= 5
+""",
+        "ann_ivf": _ivf_search_sql(
+            """cent AS (SELECT (row_number() OVER (ORDER BY vec_id))::INT AS cid,
+                embedding AS cv, nn AS cn
+         FROM (SELECT * FROM n ORDER BY vec_id LIMIT 8))"""
+        ),
+        "ann_ivf_trained": _ivf_search_sql(_fps_cent_ctes(8)),
+        "semantic_dedup": _semantic_dedup_sql(0.3, _fps_cent_ctes(8)),
+        "embedding_neardup": f"""
+WITH base AS (SELECT vec_id, embedding,
+                     ({lsh_bucket_sql})::BIGINT AS bucket FROM embeddings),
+n AS (SELECT vec_id, embedding, bucket, sqrt({_sqnorm_sql()}) AS nn FROM base
+           WHERE ({_sqnorm_sql()}) > 0),
+p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
+SELECT id_a, id_b, round(cos,6) AS cos_sim FROM p WHERE cos >= 0.35
+""",
+        "ann_lsh": f"""
+WITH base AS (SELECT vec_id, embedding,
+                     ({lsh_bucket_sql})::BIGINT AS bucket FROM embeddings),
+n AS (SELECT vec_id, embedding, bucket, sqrt({_sqnorm_sql()}) AS nn FROM base
+           WHERE ({_sqnorm_sql()}) > 0),
+p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id, a.bucket AS bucket,
+             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
+      FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id != b.vec_id),
+r AS (SELECT vec_id, nn_id, bucket, cos,
+             (row_number() OVER (PARTITION BY vec_id
+                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
+      FROM p)
+SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", bucket
+FROM r WHERE rnk <= 3
+""",
+        "ann_lsh_multi": _ann_lsh_multi_sql(),
+        "embedding_neardup_multi": _neardup_multi_sql(),
+        "simhash_pairs": f"""
+WITH wd AS (SELECT doc_id, {_MD5L.format(x='w')} AS h
+            FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)),
+bits AS (SELECT b, (1::BIGINT << b) AS pow2 FROM range(32) t(b)),
+contrib AS (SELECT doc_id, b, pow2, SUM(2*((h//pow2)%2)-1)::BIGINT AS s
+            FROM wd, bits GROUP BY 1,2,3),
+sig AS (SELECT doc_id,
+               SUM(CASE WHEN s > 0 THEN pow2 ELSE 0 END)::BIGINT AS sh
+        FROM contrib GROUP BY 1)
+SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+       bit_count(xor(a.sh, b.sh))::INT AS hamming
+FROM sig a JOIN sig b ON a.doc_id < b.doc_id
+WHERE bit_count(xor(a.sh, b.sh)) <= 3
+""",
+        "minhash_sigs": f"""
+WITH {_SHINGLE_CTE.strip()},
+perm AS (SELECT i, (2*i+1)::BIGINT AS a, (i*i+1)::BIGINT AS b FROM range(8) t(i)),
+shd AS (SELECT DISTINCT doc_id, h FROM sh)
+SELECT doc_id, i::INT AS i, MIN((a*h+b) % 2147483647)::BIGINT AS mh
+FROM shd, perm GROUP BY 1, 2
 """,
         "interaction_wide": """
 SELECT user_id,
@@ -1235,6 +3453,82 @@ SELECT user_id,
        count(*) FILTER (WHERE event_type='signup')::BIGINT AS signup,
        count(*) FILTER (WHERE event_type='view')::BIGINT AS "view"
 FROM events GROUP BY 1
+""",
+        "text_stats": f"""
+SELECT doc_id,
+       len(string_split(text,' '))::INT AS n_words,
+       len(regexp_extract_all(text, '{X.TOKEN_REGEX}'))::INT AS n_tokens,
+       round(length(replace(text,' ',''))::DOUBLE
+             / greatest(len(string_split(text,' ')),1)::DOUBLE, 6) AS avg_word_len,
+       round((length(text) - length(regexp_replace(text,'[^A-Za-z0-9 ]','','g')))::DOUBLE
+             / greatest(length(text),1)::DOUBLE, 6) AS punct_ratio,
+       round(len(list_filter(string_split(text,' '), w -> w IN {_STOP}))::DOUBLE
+             / greatest(len(string_split(text,' ')),1)::DOUBLE, 6) AS stopword_ratio,
+       round(0.4*least(len(string_split(text,' '))::DOUBLE/100.0, 1.0)
+             + 0.3*(1.0 - (length(text) - length(regexp_replace(text,'[^A-Za-z0-9 ]','','g')))::DOUBLE
+                          / greatest(length(text),1)::DOUBLE)
+             + 0.3*(1.0 - len(list_filter(string_split(text,' '), w -> w IN {_STOP}))::DOUBLE
+                          / greatest(len(string_split(text,' ')),1)::DOUBLE), 6) AS quality
+FROM documents
+""",
+        "lang_id": _lang_case(),
+        "repetition": """
+WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws,
+                  string_split(text, chr(10)) AS ls
+           FROM documents),
+b AS (SELECT doc_id, ws, ls,
+             CASE WHEN len(ws) >= 2
+                  THEN list_transform(generate_series(1, len(ws) - 1),
+                                      i -> ws[i] || ' ' || ws[i + 1])
+                  ELSE [] END AS bs
+      FROM w)
+SELECT doc_id,
+       round((len(ws) - len(list_distinct(ws))) / greatest(len(ws), 1), 6)
+         AS dup_word_frac,
+       round(list_max(list_transform(list_distinct(ws),
+                                     w2 -> len(list_filter(ws, x -> x = w2))))
+             / greatest(len(ws), 1), 6) AS top_word_share,
+       CASE WHEN len(bs) > 0
+            THEN round(list_max(list_transform(list_distinct(bs),
+                                b2 -> len(list_filter(bs, x -> x = b2))))
+                       / len(bs), 6)
+            ELSE 0.0 END AS top_bigram_share,
+       round((len(ls) - len(list_distinct(ls))) / greatest(len(ls), 1), 6)
+         AS dup_line_frac
+FROM b
+""",
+        "fingerprint": f"""
+SELECT doc_id, {_MD5L.format(x=_NORM_TEXT)} AS fp FROM documents
+""",
+        "frame_sample": """
+WITH m AS (
+  SELECT doc_id, octet_length(encode(text))::BIGINT AS n,
+         (octet_length(encode(text)) % 16 + 1)::BIGINT AS n_frames
+  FROM documents),
+s AS (SELECT doc_id, n, greatest(n // n_frames, 1) AS flen,
+             unnest(generate_series(0, n_frames - 1, 4)) AS frame_idx
+      FROM m)
+SELECT doc_id, frame_idx::INT AS frame_idx,
+       (frame_idx * flen)::BIGINT AS frame_off,
+       least(flen, n - frame_idx * flen)::BIGINT AS frame_len
+FROM s
+""",
+        "embed_payload": """
+SELECT doc_id,
+       array_to_string(
+         list_transform(generate_series(0, 7),
+                        i -> round((((octet_length(encode(text)) * (i + 3)) % 997)
+                                    / 997.0) * 1000000)::BIGINT),
+         ',') AS embedding
+FROM documents
+""",
+        "multimodal_meta": """
+SELECT doc_id,
+       octet_length(encode(text))::BIGINT AS byte_len,
+       (octet_length(encode(text)) % 640 + 1)::INT AS width,
+       ((octet_length(encode(text)) * 7) % 480 + 1)::INT AS height,
+       (octet_length(encode(text)) % 16 + 1)::INT AS n_frames
+FROM documents
 """,
         "minmax_norm": """
 SELECT event_id, event_type,
@@ -1402,6 +3696,636 @@ SELECT event_id,
        month(ts)::INT AS "month",
        hour(ts)::INT AS "hour"
 FROM events
+""",
+        # mirrors operators/curation.decontaminate: distinct 3-shingle
+        # hashes (md5 % MERSENNE31, same as the dedup family) on both
+        # sides, benchmark = every 97th doc
+        "decontaminate": f"""
+WITH
+dw AS (SELECT doc_id, string_split(text,' ') ws FROM documents WHERE doc_id % 97 <> 0),
+dsh AS (SELECT DISTINCT doc_id, ({_MD5L.format(x='s')}) % 2147483647 AS h
+        FROM (SELECT doc_id,
+                     unnest(list_transform(generate_series(1, len(ws)-2),
+                                           i -> array_to_string(ws[i:i+2],' '))) AS s
+              FROM dw)),
+bw AS (SELECT doc_id, string_split(text,' ') ws FROM documents WHERE doc_id % 97 = 0),
+bsh AS (SELECT DISTINCT ({_MD5L.format(x='s')}) % 2147483647 AS h
+        FROM (SELECT unnest(list_transform(generate_series(1, len(ws)-2),
+                                           i -> array_to_string(ws[i:i+2],' '))) AS s
+              FROM bw)),
+hits AS (SELECT doc_id, count(*)::INT AS n_hits
+         FROM dsh JOIN bsh USING (h) GROUP BY doc_id)
+SELECT d.doc_id,
+       coalesce(h.n_hits, 0)::INT AS n_hits,
+       coalesce(h.n_hits, 0) >= 1 AS contaminated
+FROM (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0) d
+LEFT JOIN hits h USING (doc_id)
+""",
+        # mirrors operators/curation.source_quota (quota=50, salt 'mix')
+        "source_quota": f"""
+WITH rk AS (
+  SELECT doc_id, source,
+         (row_number() OVER (PARTITION BY source ORDER BY
+            ({_MD5L.format(x="doc_id::VARCHAR || '#mix'")}) ASC,
+            doc_id ASC))::INT AS mix_rank
+  FROM documents)
+SELECT doc_id, source, mix_rank FROM rk WHERE mix_rank <= 50
+""",
+        # mirrors operators/curation.source_sample (ppm rates, salt
+        # 'mixrate'): integer ppm threshold — exact in any engine
+        "source_sample": f"""
+SELECT doc_id, source
+FROM documents
+WHERE ({_MD5L.format(x="doc_id::VARCHAR || '#mixrate'")}) % 1000000
+      < (CASE source WHEN 'src0' THEN 800000
+                     WHEN 'src1' THEN 300000 ELSE 0 END)
+""",
+        # epoch_upsample: floor(ppm/1e6) guaranteed copies + one more iff
+        # md5(id#epoch) % 1e6 < ppm % 1e6; generate_series(1, 0) is empty
+        # in DuckDB and the Spark side filters n >= 1 before its ANSI
+        # sequence, so the engines agree on dropped rows
+        "epoch_upsample": f"""
+WITH j AS (SELECT doc_id, source,
+       (CASE source WHEN 'src0' THEN 2300000
+                    WHEN 'src1' THEN 700000 ELSE 1000000 END)::BIGINT AS ppm,
+       ({_MD5L.format(x="doc_id::VARCHAR || '#epoch'")}) % 1000000 AS h
+ FROM documents),
+n AS (SELECT doc_id, source,
+       (ppm // 1000000) + (CASE WHEN h < ppm % 1000000
+                                THEN 1 ELSE 0 END) AS n
+ FROM j)
+SELECT doc_id, source, unnest(generate_series(1, n))::INT AS epoch
+FROM n WHERE n >= 1
+""",
+        # mirrors operators/curation.temperature_mix (alpha=0.5,
+        # target_frac=0.5): the rate formula replays with the same float-op
+        # order (sqrt is IEEE-exact in both engines; temperature_rates
+        # routes alpha=0.5 through math.sqrt, never pow); the corpus-side
+        # draw is the integer-ppm source_sample threshold
+        "temperature_mix": f"""
+WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
+t AS (SELECT sum(n)::DOUBLE AS total_n, sum(sqrt(n::DOUBLE)) AS tot FROM c),
+p AS (SELECT source,
+             floor(1000000 * least(1.0,
+                 0.5 * total_n * sqrt(n::DOUBLE) / tot / n))::BIGINT AS ppm
+      FROM c, t)
+SELECT d.doc_id, d.source
+FROM documents d JOIN p USING (source)
+WHERE ({_MD5L.format(x="d.doc_id::VARCHAR || '#mixrate'")}) % 1000000 < p.ppm
+""",
+        # mirrors operators/curation.temperature_mix with weight_col
+        # (token-budget mixing, salt 'tokrate'): group mass = exact BIGINT
+        # word-count sums (whitespace split, the repo-wide token
+        # convention), then the identical sqrt rate formula and integer-ppm
+        # draw. DuckDB sums to HUGEINT -> cast back to BIGINT like Spark's
+        # long before the float normalization.
+        "temperature_tokens": f"""
+WITH c AS (SELECT source,
+                  sum(len(string_split(text, ' ')))::BIGINT AS n
+           FROM documents GROUP BY source),
+t AS (SELECT sum(n)::DOUBLE AS total_n, sum(sqrt(n::DOUBLE)) AS tot FROM c),
+p AS (SELECT source,
+             floor(1000000 * least(1.0,
+                 0.5 * total_n * sqrt(n::DOUBLE) / tot / n))::BIGINT AS ppm
+      FROM c, t)
+SELECT d.doc_id, d.source
+FROM documents d JOIN p USING (source)
+WHERE ({_MD5L.format(x="d.doc_id::VARCHAR || '#tokrate'")}) % 1000000 < p.ppm
+""",
+        # mirrors operators/split.shuffle_shards (shard_size=256, salt
+        # 'shuffle'): the distributed zipWithIndex result must equal the
+        # naive global row_number definition at any parallelism
+        "shuffle_shards": f"""
+WITH p AS (
+  SELECT doc_id, source,
+         (row_number() OVER (ORDER BY
+            ({_MD5L.format(x="doc_id::VARCHAR || '#shuffle'")}) ASC,
+            doc_id ASC) - 1)::BIGINT AS pos
+  FROM documents)
+SELECT doc_id, source, pos, pos // 256 AS shard, pos % 256 AS shard_pos
+FROM p
+""",
+        # mirror operators/importance (n=2, buckets=1024, alpha=1.0,
+        # scale=10000; target = every 11th doc): hashed 1..2-gram buckets,
+        # per-bucket scaled-int log ratio with the SAME ln-term order as
+        # bucket_log_ratios, integer per-doc sums. sum(BIGINT) is HUGEINT
+        # in DuckDB -> cast back to BIGINT to match Spark's long.
+        "importance_weights": _DSIR_CTES + """
+SELECT doc_id, n_grams, llr_sum, llr_sum::DOUBLE / 10000.0 AS weight
+FROM w
+""",
+        "importance_resample": _DSIR_CTES + f"""
+SELECT doc_id, n_grams, llr_sum, llr_sum::DOUBLE / 10000.0 AS weight,
+       llr_sum AS score
+FROM (SELECT *, row_number() OVER (ORDER BY llr_sum DESC, doc_id ASC) AS rn
+      FROM w)
+WHERE rn <= {DSIR_K}
+""",
+        # mirrors operators/importance.lm_logprob (buckets=1024, alpha=1.0,
+        # scale=10000; target = every 11th doc): hashed-bigram LM trained
+        # on the target, scaled-int per-bucket log-probs, exact int64
+        # per-doc sums; avg_logprob is one IEEE division. Docs with < 2
+        # words keep a (0, 0, NULL) row.
+        "lm_logprob": _LM_CTES + """
+SELECT d.doc_id,
+       coalesce(sc.n_bigrams, 0) AS n_bigrams,
+       coalesce(sc.lp_sum, 0)::BIGINT AS lp_sum,
+       CASE WHEN sc.n_bigrams > 0
+            THEN sc.lp_sum::DOUBLE / (10000.0 * sc.n_bigrams)
+       END AS avg_logprob
+FROM (SELECT doc_id FROM documents WHERE doc_id % 11 <> 0) d
+LEFT JOIN sc USING (doc_id)
+""",
+        # mirrors operators/curation.rare_token_stats (rare_below=2);
+        # rare_frac is one IEEE division of two exact bigints — identical
+        # in any engine
+        # heavy_hitters: the CMS screen is LOSSLESS (estimates never
+        # undercount), so the Spark result is byte-identical to the naive
+        # exact query — which is therefore the oracle. Same 3-word-shingle
+        # construction as _SHINGLE_CTE (without DISTINCT/hashing: the
+        # sketch counts multiplicity of the raw shingle strings).
+        "heavy_hitters": """
+WITH w AS (SELECT string_split(text,' ') ws FROM documents),
+g AS (SELECT unnest(list_transform(generate_series(1, len(ws)-2),
+                                   i -> array_to_string(ws[i:i+2],' '))) AS shingle
+      FROM w WHERE len(ws) >= 3)
+SELECT shingle, count(*) AS cnt
+FROM g GROUP BY shingle HAVING count(*) >= 5
+""",
+        # bloom_screen: replay the Kirsch-Mitzenmacher bit positions
+        # (h1 + i*h2) % 2^14 from the two salted base md5s; might_contain
+        # = all 4 positions of the batch value present in the corpus's
+        # DISTINCT position set (matches Spark's chained broadcast left
+        # joins bit-for-bit, spurious flags included).
+        "bloom_screen": f"""
+WITH d2 AS (SELECT doc_id,
+                   ({_MD5L.format(x="text || '#bloom#a'")}) AS h1,
+                   ({_MD5L.format(x="text || '#bloom#b'")}) AS h2
+            FROM documents),
+pos AS (SELECT DISTINCT (h1 + i*h2) % 16384 AS pos
+        FROM d2, range(4) t(i) WHERE doc_id % 2 = 0),
+batch AS (SELECT doc_id, h1, h2 FROM d2
+          WHERE doc_id % 2 = 1 OR doc_id % 10 = 0),
+bp AS (SELECT doc_id, (h1 + i*h2) % 16384 AS pos
+       FROM batch, range(4) t(i))
+SELECT bp.doc_id, (count(p.pos) = 4) AS might_contain
+FROM bp LEFT JOIN pos p USING (pos) GROUP BY bp.doc_id
+""",
+        # corpus_divergence: same gram/bucket construction as the DSIR
+        # CTEs over the two corpus halves; per-bucket terms rounded to
+        # scaled int64 in the IDENTICAL expression order (p = (c+1)/d with
+        # d = total + alpha*buckets as a plain double; term =
+        # p*(ln p - ln q)); ghost row = the shared absent-bucket term
+        # times (buckets - observed), exact integer multiply.
+        "corpus_divergence": f"""
+WITH ad AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+            WHERE doc_id % 2 = 0),
+bd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
+       WHERE doc_id % 2 = 1),
+ag AS (SELECT ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
+       FROM ({_DSIR_GRAM.format(src='ad')})),
+bg AS (SELECT ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
+       FROM ({_DSIR_GRAM.format(src='bd')})),
+ac AS (SELECT b, count(*) AS c FROM ag GROUP BY b),
+bc AS (SELECT b, count(*) AS c FROM bg GROUP BY b),
+tot AS (SELECT (SELECT sum(c) FROM ac)::DOUBLE + 1024.0 AS da,
+               (SELECT sum(c) FROM bc)::DOUBLE + 1024.0 AS db),
+j AS (SELECT coalesce(ac.c,0)::DOUBLE + 1.0 AS na,
+             coalesce(bc.c,0)::DOUBLE + 1.0 AS nb
+      FROM ac FULL OUTER JOIN bc USING (b)),
+terms AS (SELECT
+    round(10000000.0 * ((na/da) * (ln(na/da) - ln(nb/db))))::BIGINT AS ab,
+    round(10000000.0 * ((nb/db) * (ln(nb/db) - ln(na/da))))::BIGINT AS ba,
+    (round(10000000.0 * ((na/da) * (ln(na/da) - ln((na/da + nb/db)/2.0))))::BIGINT
+     + round(10000000.0 * ((nb/db) * (ln(nb/db) - ln((na/da + nb/db)/2.0))))::BIGINT) AS js2
+  FROM j, tot),
+ghost AS (SELECT
+    round(10000000.0 * ((1.0/da) * (ln(1.0/da) - ln(1.0/db))))::BIGINT
+      * (1024 - (SELECT count(*) FROM j)) AS ab,
+    round(10000000.0 * ((1.0/db) * (ln(1.0/db) - ln(1.0/da))))::BIGINT
+      * (1024 - (SELECT count(*) FROM j)) AS ba,
+    (round(10000000.0 * ((1.0/da) * (ln(1.0/da) - ln((1.0/da + 1.0/db)/2.0))))::BIGINT
+     + round(10000000.0 * ((1.0/db) * (ln(1.0/db) - ln((1.0/da + 1.0/db)/2.0))))::BIGINT)
+      * (1024 - (SELECT count(*) FROM j)) AS js2
+  FROM tot)
+SELECT sum(ab)::DOUBLE / 10000000.0 AS kl_ab,
+       sum(ba)::DOUBLE / 10000000.0 AS kl_ba,
+       sum(js2)::DOUBLE / (2.0 * 10000000.0) AS js
+FROM (SELECT * FROM terms UNION ALL SELECT * FROM ghost)
+""",
+        # cms_merge: merged shard sketches == one GROUP BY over the union
+        # of the two halves' (d, cell) streams, same KM cell math
+        "cms_merge": f"""
+WITH t AS (SELECT unnest(string_split(text,' ')) AS wd FROM documents),
+hh AS (SELECT ({_MD5L.format(x="wd || '#cms#a'")}) AS h1,
+              ({_MD5L.format(x="wd || '#cms#b'")}) AS h2 FROM t)
+SELECT d::INT AS d, ((h1 + d*h2) % 64)::INT AS w, count(*) AS cnt
+FROM hh, range(3) t2(d) GROUP BY 1, 2
+""",
+        # bloom_novel: the bloom_screen oracle's flags inverted into the
+        # keeper id set (docs missing at least one of the 4 bit positions)
+        "bloom_novel": f"""
+WITH d2 AS (SELECT doc_id,
+                   ({_MD5L.format(x="text || '#bloom#a'")}) AS h1,
+                   ({_MD5L.format(x="text || '#bloom#b'")}) AS h2
+            FROM documents),
+pos AS (SELECT DISTINCT (h1 + i*h2) % 16384 AS pos
+        FROM d2, range(4) t(i) WHERE doc_id % 2 = 0),
+batch AS (SELECT doc_id, h1, h2 FROM d2
+          WHERE doc_id % 2 = 1 OR doc_id % 10 = 0),
+bp AS (SELECT doc_id, (h1 + i*h2) % 16384 AS pos
+       FROM batch, range(4) t(i))
+SELECT bp.doc_id
+FROM bp LEFT JOIN pos p USING (pos) GROUP BY bp.doc_id
+HAVING count(p.pos) < 4
+""",
+        # cms_query: replay the KM cell math — cells (h1 + d*h2) % 64 from
+        # the two salted base md5s, sketch = per-cell counts, estimate =
+        # min over the 3 rows (0 when a cell is empty). Collisions at
+        # width 64 are real and must match bit-for-bit.
+        "cms_query": f"""
+WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
+hh AS (SELECT w, ({_MD5L.format(x="w || '#cms#a'")}) AS h1,
+              ({_MD5L.format(x="w || '#cms#b'")}) AS h2 FROM t),
+sk AS (SELECT d, (h1 + d*h2) % 64 AS wc, count(*) AS cnt
+       FROM hh, range(3) t2(d) GROUP BY d, wc),
+items AS (SELECT DISTINCT w, h1, h2 FROM hh),
+lu AS (SELECT i.w, coalesce(sk.cnt, 0) AS c
+       FROM (SELECT w, d, (h1 + d*h2) % 64 AS wc
+             FROM items, range(3) t3(d)) i
+       LEFT JOIN sk ON sk.d = i.d AND sk.wc = i.wc)
+SELECT w, min(c) AS est FROM lu GROUP BY w
+""",
+        # hll_count: replay the full HLL pipeline in ONE pass (the Spark
+        # side shards by doc_id parity and merges — register max is
+        # associative, so the tables are identical by construction, which
+        # is exactly the mergeability claim this row pins). Register index
+        # = low 12 bits of the 60-bit md5, rank = 49 - bitlen(upper bits)
+        # (bin() is minimal in both engines), Z carried as an exact
+        # 2^49-scaled int64; the only floats are the final fixed-order
+        # expression with the SAME alpha*m^2*2^49 literal (computed by the
+        # operator's own _hll_alpha above) and the linear-counting branch.
+        "hll_count": f"""
+WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
+h AS (SELECT ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
+reg AS (SELECT h % 4096 AS r,
+               CASE WHEN h // 4096 = 0 THEN 0
+                    ELSE length(bin(h // 4096)) END AS bl
+        FROM h),
+rg AS (SELECT r, max(49 - bl) AS rank FROM reg GROUP BY r),
+ag AS (SELECT count(*) AS filled,
+              coalesce(sum(1::BIGINT << (49 - rank)), 0)::BIGINT AS z1
+       FROM rg),
+zz AS (SELECT filled,
+              (z1 + (4096 - filled) * {1 << 49})::BIGINT AS z_scaled
+       FROM ag)
+SELECT filled, z_scaled,
+       round(1000000.0 * (
+         CASE WHEN ({_HLL_C12!r} / z_scaled::DOUBLE) <= 10240.0
+                   AND (4096 - filled) > 0
+              THEN 4096.0 * ln(4096.0 / (4096 - filled)::DOUBLE)
+              ELSE {_HLL_C12!r} / z_scaled::DOUBLE END))::BIGINT AS est_ppm
+FROM zz
+""",
+        # hll_count_by: the group_cols form at p=10 — the identical
+        # register/Z/estimate math replayed PER SOURCE (constant computed
+        # by the operator's own _hll_alpha, as above)
+        "hll_count_by": f"""
+WITH t AS (SELECT source, unnest(string_split(text,' ')) AS w
+           FROM documents),
+h AS (SELECT source, ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
+reg AS (SELECT source, h % 1024 AS r,
+               CASE WHEN h // 1024 = 0 THEN 0
+                    ELSE length(bin(h // 1024)) END AS bl
+        FROM h),
+rg AS (SELECT source, r, max(51 - bl) AS rank FROM reg GROUP BY 1, 2),
+ag AS (SELECT source, count(*) AS filled,
+              coalesce(sum(1::BIGINT << (51 - rank)), 0)::BIGINT AS z1
+       FROM rg GROUP BY source),
+zz AS (SELECT source, filled,
+              (z1 + (1024 - filled) * {1 << 51})::BIGINT AS z_scaled
+       FROM ag)
+SELECT source, filled, z_scaled,
+       round(1000000.0 * (
+         CASE WHEN ({_HLL_C10!r} / z_scaled::DOUBLE) <= 2560.0
+                   AND (1024 - filled) > 0
+              THEN 1024.0 * ln(1024.0 / (1024 - filled)::DOUBLE)
+              ELSE {_HLL_C10!r} / z_scaled::DOUBLE END))::BIGINT AS est_ppm
+FROM zz
+""",
+        # hll_registers: the exact-integer register table at p=8 —
+        # row-for-row the artifact hll_count estimates from
+        "hll_registers": f"""
+WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
+h AS (SELECT ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
+reg AS (SELECT h % 256 AS r,
+               CASE WHEN h // 256 = 0 THEN 0
+                    ELSE length(bin(h // 256)) END AS bl
+        FROM h)
+SELECT r::INT AS r, max(53 - bl)::INT AS rank FROM reg GROUP BY r
+""",
+        # hist_quantiles: replay the HDR histogram pipeline in ONE pass
+        # (the Spark side shards by doc_id parity and merges — integer
+        # sums are associative, so the bucket tables are identical; that
+        # IS the mergeability claim). Bucket ids / lower edges come from
+        # the operator's OWN shared-dialect expression strings (_HIST_ID /
+        # _HIST_LO above — bin(), >>, CASE: parsed identically by both
+        # engines); ranks and ceil targets are exact integers.
+        "hist_quantiles": f"""
+WITH v AS (SELECT n_chars::BIGINT AS v FROM documents
+           WHERE n_chars IS NOT NULL),
+bk AS (SELECT ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
+       FROM v GROUP BY 1),
+c AS (SELECT b, ({_HIST_LO("b", 5)}) AS lo,
+             sum(cnt) OVER (ORDER BY b) AS cum,
+             sum(cnt) OVER () AS total
+      FROM bk),
+q AS (SELECT unnest([250000, 500000, 900000, 990000]::BIGINT[]) AS q_ppm)
+SELECT q.q_ppm,
+       arg_min(c.lo, c.b)::BIGINT AS value,
+       min((q.q_ppm * c.total + 999999) // 1000000)::BIGINT AS rank
+FROM q JOIN c ON c.cum >= (q.q_ppm * c.total + 999999) // 1000000
+GROUP BY q.q_ppm
+""",
+        # hist_quantiles_by: the per-source (group_cols) form — same
+        # bucket/rank math partitioned by source; the oracle may use the
+        # probe-join formulation freely (values, not plans, are compared)
+        "hist_quantiles_by": f"""
+WITH v AS (SELECT source, n_chars::BIGINT AS v FROM documents
+           WHERE n_chars IS NOT NULL),
+bk AS (SELECT source, ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
+       FROM v GROUP BY 1, 2),
+c AS (SELECT source, b, ({_HIST_LO("b", 5)}) AS lo,
+             sum(cnt) OVER (PARTITION BY source ORDER BY b) AS cum,
+             sum(cnt) OVER (PARTITION BY source) AS total
+      FROM bk),
+q AS (SELECT unnest([500000, 990000]::BIGINT[]) AS q_ppm)
+SELECT c.source, q.q_ppm,
+       arg_min(c.lo, c.b)::BIGINT AS value,
+       min((q.q_ppm * c.total + 999999) // 1000000)::BIGINT AS rank
+FROM q JOIN c ON c.cum >= (q.q_ppm * c.total + 999999) // 1000000
+GROUP BY c.source, q.q_ppm
+""",
+        # hist_buckets: the exact-integer HDR bucket table itself
+        "hist_buckets": f"""
+WITH v AS (SELECT n_chars::BIGINT AS v FROM documents
+           WHERE n_chars IS NOT NULL)
+SELECT ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
+FROM v GROUP BY 1
+""",
+        "rare_tokens": """
+WITH t AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
+c AS (SELECT w, count(*) AS cnt FROM t GROUP BY w),
+j AS (SELECT t.doc_id, c.cnt FROM t JOIN c USING (w))
+SELECT doc_id,
+       count(*)::INT AS n_tokens,
+       sum(CASE WHEN cnt <= 2 THEN 1 ELSE 0 END)::INT AS n_rare,
+       (sum(CASE WHEN cnt <= 2 THEN 1 ELSE 0 END)::DOUBLE
+          / count(*)::DOUBLE) AS rare_frac
+FROM j GROUP BY doc_id
+""",
+        "pii_scrub": f"""
+WITH spiked AS (SELECT doc_id, text
+ || CASE WHEN doc_id%7=0 THEN ' reach me at user' || doc_id::VARCHAR || '@example.com' ELSE '' END
+ || CASE WHEN doc_id%5=0 THEN ' or 415-555-' || lpad((doc_id%10000)::VARCHAR,4,'0') ELSE '' END
+ || CASE WHEN doc_id%9=0 THEN ' from 10.0.' || (doc_id%256)::VARCHAR || '.' || ((doc_id*7)%256)::VARCHAR ELSE '' END
+ || CASE WHEN doc_id%13=0 THEN ' ssn 123-45-' || lpad((doc_id%10000)::VARCHAR,4,'0') ELSE '' END
+ || CASE WHEN doc_id%17=0 THEN ' card 4111111111111111' ELSE '' END AS text
+ FROM documents),
+cnt AS (SELECT doc_id, {pii_clean} AS clean,
+       {pii_counts}
+       FROM spiked)
+SELECT doc_id, clean, n_email, n_ssn, n_phone, n_ip, n_num,
+       (n_email + n_ssn + n_phone + n_ip + n_num)::INT AS pii_total
+FROM cnt
+""",
+        # mirrors operators/curation.line_dedup (min_len=1): lines shorter
+        # than 1 char (i.e. empty separator lines) are EXEMPT from dedup
+        # and kept unconditionally
+        "line_dedup": """
+WITH lined AS (SELECT doc_id,
+        regexp_replace(text, '((\\S+ ){7}\\S+) ', '\\1' || chr(10), 'g')
+        || chr(10) || chr(10) || 'subscribe to our newsletter today' AS text
+      FROM documents),
+ls AS (SELECT doc_id, string_split(text, chr(10)) AS arr FROM lined),
+lines AS (SELECT doc_id, unnest(arr) AS line,
+                 unnest(generate_series(0, len(arr)-1)) AS line_no FROM ls),
+h AS (SELECT doc_id, line_no, line,
+             ('0x' || substr(md5(line),1,15))::BIGINT AS hh FROM lines),
+win AS (SELECT doc_id, line_no, line,
+               row_number() OVER (PARTITION BY hh ORDER BY doc_id, line_no) AS rn
+        FROM h WHERE length(line) >= 1),
+kept AS (SELECT doc_id, line_no, line FROM win WHERE rn = 1
+         UNION ALL
+         SELECT doc_id, line_no, line FROM h WHERE length(line) < 1),
+agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) AS clean,
+               count(*)::INT AS n_kept
+        FROM kept GROUP BY doc_id),
+tot AS (SELECT doc_id, count(*)::INT AS n_lines FROM lines GROUP BY doc_id)
+SELECT t.doc_id, coalesce(a.clean,'') AS clean, t.n_lines,
+       coalesce(a.n_kept,0)::INT AS n_kept
+FROM tot t LEFT JOIN agg a USING (doc_id)
+""",
+        # per_doc scope: winner partition gains doc_id; same exemption
+        "line_dedup_doc": """
+WITH lined AS (SELECT doc_id,
+        regexp_replace(text, '((\\S+ ){7}\\S+) ', '\\1' || chr(10), 'g')
+        || chr(10) || chr(10) || 'subscribe to our newsletter today'
+        || chr(10) || 'subscribe to our newsletter today' || chr(10)
+        || regexp_extract(text, '^(\\S+( \\S+){7})', 1) AS text
+      FROM documents),
+ls AS (SELECT doc_id, string_split(text, chr(10)) AS arr FROM lined),
+lines AS (SELECT doc_id, unnest(arr) AS line,
+                 unnest(generate_series(0, len(arr)-1)) AS line_no FROM ls),
+h AS (SELECT doc_id, line_no, line,
+             ('0x' || substr(md5(line),1,15))::BIGINT AS hh FROM lines),
+win AS (SELECT doc_id, line_no, line,
+               row_number() OVER (PARTITION BY doc_id, hh
+                                  ORDER BY line_no) AS rn
+        FROM h WHERE length(line) >= 1),
+kept AS (SELECT doc_id, line_no, line FROM win WHERE rn = 1
+         UNION ALL
+         SELECT doc_id, line_no, line FROM h WHERE length(line) < 1),
+agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) AS clean,
+               count(*)::INT AS n_kept
+        FROM kept GROUP BY doc_id),
+tot AS (SELECT doc_id, count(*)::INT AS n_lines FROM lines GROUP BY doc_id)
+SELECT t.doc_id, coalesce(a.clean,'') AS clean, t.n_lines,
+       coalesce(a.n_kept,0)::INT AS n_kept
+FROM tot t LEFT JOIN agg a USING (doc_id)
+""",
+        # mirrors operators/curation.clean_lines (C4 line rules: >=5 words,
+        # terminal punctuation after rtrim, no 'javascript'; page verdict:
+        # >=3 kept lines, no 'lorem ipsum' (ci), no '{') over the same
+        # line-ified + rule-spiked corpus as the Spark query
+        "clean_lines": """
+WITH lined AS (SELECT doc_id,
+        regexp_replace(text, '((\\S+ ){5}\\S+) ', '\\1.' || chr(10), 'g')
+        || chr(10) || 'too short.'
+        || chr(10) || 'enable javascript to view this site now.'
+        || chr(10) || 'this trailing line has no terminal punctuation at all'
+        || CASE WHEN doc_id%7=0
+                THEN chr(10) || 'Lorem Ipsum dolor sit amet consectetur.'
+                ELSE '' END
+        || CASE WHEN doc_id%11=0
+                THEN chr(10) || 'function f() { return 1; } and some words here.'
+                ELSE '' END AS text
+      FROM documents),
+ls AS (SELECT doc_id, text, string_split(text, chr(10)) AS arr FROM lined),
+lines AS (SELECT doc_id, unnest(arr) AS line,
+                 unnest(generate_series(0, len(arr)-1)) AS line_no FROM ls),
+ok AS (SELECT doc_id, line_no, line FROM lines
+       WHERE len(list_filter(string_split(line, ' '), w -> w <> '')) >= 5
+         AND right(rtrim(line), 1) IN ('.','!','?','"','''')
+         AND NOT contains(lower(line), 'javascript')),
+agg AS (SELECT doc_id, string_agg(line, chr(10) ORDER BY line_no) AS clean,
+               count(*)::INT AS n_kept
+        FROM ok GROUP BY doc_id),
+tot AS (SELECT doc_id, count(*)::INT AS n_lines FROM lines GROUP BY doc_id)
+SELECT t.doc_id, coalesce(a.clean,'') AS clean, t.n_lines,
+       coalesce(a.n_kept,0)::INT AS n_kept,
+       (coalesce(a.n_kept,0) >= 3
+        AND NOT contains(lower(l.text), 'lorem ipsum')
+        AND NOT contains(l.text, '{')) AS keep
+FROM tot t
+LEFT JOIN agg a USING (doc_id)
+JOIN lined l ON l.doc_id = t.doc_id
+""",
+        # mirrors operators/curation.normalize_text rule-for-rule; the
+        # spike is rebuilt from chr() codepoints (769 = COMBINING ACUTE,
+        # 8491 = ANGSTROM SIGN singleton, 13/10 = CRLF, 9 = tab, 1 = C0
+        # control) and DuckDB's nfc_normalize binds the same utf8proc
+        # library as the Spark side's pyarrow utf8_normalize kernel
+        "normalize_text": """
+WITH spiked AS (SELECT doc_id,
+        chr(65279) || '  Cafe' || chr(769) || ' ' || chr(8491) || ' '
+        || chr(133) || 'x' || chr(8203) || 'y  ' || chr(13) || chr(10)
+        || text
+        || chr(9) || 'tail' || chr(1) || ' here  ' || chr(10) || chr(10) AS text
+      FROM documents),
+s1 AS (SELECT doc_id, text AS orig,
+              regexp_replace(text, '\\r\\n?', chr(10), 'g') AS t FROM spiked),
+s2 AS (SELECT doc_id, orig,
+              regexp_replace(t,
+                '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F-\\x9F\\x{200B}\\x{FEFF}]',
+                '', 'g') AS t
+       FROM s1),
+s3 AS (SELECT doc_id, orig, nfc_normalize(t) AS t FROM s2),
+s4 AS (SELECT doc_id, orig, regexp_replace(t, '[ \\t]+', ' ', 'g') AS t FROM s3),
+s5 AS (SELECT doc_id, orig, regexp_replace(t, ' *\\n *', chr(10), 'g') AS t FROM s4),
+s6 AS (SELECT doc_id, orig,
+              regexp_replace(t, '^[\\n ]+|[\\n ]+$', '', 'g') AS t FROM s5)
+SELECT doc_id, t AS norm, coalesce(t <> orig, false) AS changed FROM s6
+""",
+        # mirrors operators/dedup.span_dedup (k=8, md5 60-bit window hash,
+        # min-(doc,pos) winner, gaps-and-islands span merge); the oracle's
+        # per-token range join replaces the engine's complement slicing —
+        # same kept set, O(n^2)-ish is fine at oracle scale
+        "span_dedup": f"""
+WITH spiked AS (SELECT doc_id,
+        text || CASE WHEN doc_id%3=0 THEN ' {_SPAN_DISC}' ELSE '' END AS text
+      FROM documents),
+w AS (SELECT doc_id, string_split(text,' ') ws FROM spiked),
+win AS (SELECT doc_id,
+               unnest(generate_series(0, len(ws)-8)) AS pos,
+               unnest(list_transform(generate_series(1, len(ws)-7),
+                                     i -> array_to_string(ws[i:i+7],' '))) AS s
+        FROM w),
+h AS (SELECT doc_id, pos, ('0x'||substr(md5(s),1,15))::BIGINT AS hh FROM win),
+rk AS (SELECT doc_id, pos,
+              row_number() OVER (PARTITION BY hh ORDER BY doc_id, pos) AS rn
+       FROM h),
+losers AS (SELECT doc_id, pos FROM rk WHERE rn > 1),
+lag_t AS (SELECT doc_id, pos,
+                 lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
+          FROM losers),
+isl AS (SELECT doc_id, pos,
+               sum(CASE WHEN prev IS NULL OR pos - prev > 8 THEN 1 ELSE 0 END)
+                   OVER (PARTITION BY doc_id ORDER BY pos) AS island
+        FROM lag_t),
+iv AS (SELECT doc_id, island, min(pos) AS ds, max(pos)+8 AS de
+       FROM isl GROUP BY 1, 2),
+toks AS (SELECT doc_id, unnest(ws) AS wd,
+                unnest(generate_series(0, len(ws)-1)) AS p FROM w),
+dup_tok AS (SELECT DISTINCT t.doc_id, t.p
+            FROM toks t JOIN iv ON t.doc_id = iv.doc_id
+                              AND t.p >= iv.ds AND t.p < iv.de),
+kept AS (SELECT t.doc_id, t.wd, t.p FROM toks t
+         LEFT JOIN dup_tok d ON t.doc_id = d.doc_id AND t.p = d.p
+         WHERE d.doc_id IS NULL),
+agg AS (SELECT doc_id, string_agg(wd, ' ' ORDER BY p) AS clean,
+               count(*) AS nk FROM kept GROUP BY doc_id),
+tot AS (SELECT doc_id, len(ws) AS n FROM w)
+SELECT t.doc_id, coalesce(a.clean,'') AS clean, t.n::INT AS n_tokens,
+       (t.n - coalesce(a.nk,0))::INT AS n_dup_tokens
+FROM tot t LEFT JOIN agg a USING (doc_id)
+""",
+        "pack_sequences": f"""
+WITH {_TOKENS_CTE.strip()},
+d AS (SELECT doc_id, tokens,
+             ('0x'||substr(md5('pack:'||doc_id),1,15))::BIGINT AS dh
+      FROM tok),
+e AS (SELECT dh % 8 AS g, dh, doc_id, unnest(tokens) AS tid,
+             unnest(generate_series(1, len(tokens))) AS pos
+      FROM d),
+r AS (SELECT g, tid,
+             row_number() OVER (PARTITION BY g ORDER BY dh, doc_id, pos) - 1 AS gp
+      FROM e)
+SELECT g::INT AS grp, (gp // {SEQ_LEN})::INT AS chunk_id,
+       array_to_string(list(tid ORDER BY gp % {SEQ_LEN}), ',') AS chunk,
+       count(*)::INT AS n_real
+FROM r GROUP BY 1, 2
+""",
+        # with_segments form: dord (the doc ordinal within the pack
+        # group — dense_rank == Spark's row_number because doc ids are
+        # unique by precondition) rebased per chunk to 0-based segment ids
+        "pack_segments": f"""
+WITH {{tokens_cte}},
+d AS (SELECT doc_id, tokens,
+             ('0x'||substr(md5('pack:'||doc_id),1,15))::BIGINT AS dh
+      FROM tok),
+e AS (SELECT dh % 8 AS g, dh, doc_id, unnest(tokens) AS tid,
+             unnest(generate_series(1, len(tokens))) AS pos
+      FROM d),
+r AS (SELECT g, tid,
+             row_number() OVER (PARTITION BY g ORDER BY dh, doc_id, pos) - 1 AS gp,
+             dense_rank() OVER (PARTITION BY g ORDER BY dh, doc_id) AS dord
+      FROM e),
+c AS (SELECT g, (gp // {SEQ_LEN}) AS chunk_id, gp % {SEQ_LEN} AS pic,
+             tid, dord FROM r),
+a AS (SELECT g, chunk_id, list(tid ORDER BY pic) AS chunk_l,
+             list(dord ORDER BY pic) AS dl,
+             min(dord) AS mn, max(dord) AS mx, count(*)::INT AS n_real
+      FROM c GROUP BY 1, 2)
+SELECT g::INT AS grp, chunk_id::INT AS chunk_id,
+       array_to_string(chunk_l, ',') AS chunk,
+       array_to_string(list_transform(dl, x -> x - mn), ',') AS segs,
+       (mx - mn + 1)::INT AS n_docs, n_real
+FROM a
+""".format(tokens_cte=_TOKENS_CTE.strip()),
+        "quality_filter": f"""
+WITH s AS (SELECT doc_id,
+       len(string_split(text,' ')) AS nw,
+       round(length(replace(text,' ',''))::DOUBLE
+             / greatest(len(string_split(text,' ')),1)::DOUBLE, 6) AS awl,
+       round((length(text) - length(regexp_replace(text,'[^A-Za-z0-9 ]','','g')))::DOUBLE
+             / greatest(length(text),1)::DOUBLE, 6) AS pr,
+       round(len(list_filter(string_split(text,' '), w -> w IN {_STOP}))::DOUBLE
+             / greatest(len(string_split(text,' ')),1)::DOUBLE, 6) AS sr,
+       round((len(string_split(text,' ')) - len(list_distinct(string_split(text,' '))))
+             / greatest(len(string_split(text,' ')), 1), 6) AS dwf
+  FROM documents),
+f AS (SELECT doc_id, nw::INT AS n_words,
+       nw < 30 AS too_short, nw > 70 AS too_long,
+       (awl < 3.0 OR awl > 6.0) AS bad_word_len,
+       pr > 0.05 AS too_punct, sr > 0.2 AS stop_stuffed,
+       dwf > 0.8 AS repetitive
+  FROM s)
+SELECT doc_id, n_words, too_short, too_long, bad_word_len, too_punct,
+       stop_stuffed, repetitive,
+       (NOT too_short AND NOT too_long AND NOT bad_word_len AND NOT too_punct
+        AND NOT stop_stuffed AND NOT repetitive) AS keep
+FROM f
 """,
     }
 

@@ -11,7 +11,10 @@ batch pipeline over CSV stage files) as an idiomatic Spark DataFrame engine:
 * **bucket-pivot aggregates** (``GenerateGeographicFeature.py:214-218``),
 * **vocabulary encoding** with reserved pad 0 (``CommonCode.py:295-336``),
 * **padded sequence export** (``DP_GenerateTrajectory.py:33-93``),
-* per-partition **checkpoint / lineage / resume** (``DP_GenerateTrajectory.py:50-52``).
+* per-partition **checkpoint / lineage / resume** (``DP_GenerateTrajectory.py:50-52``),
+
+plus large-scale training-data ops (dedup, similarity search, text analysis,
+multimodal plumbing) that the 100 TB use-case needs.
 
 Everything here derives from public knowledge only: the Apache Spark / PySpark
 API and the reference repo's observable behavior.

@@ -11,23 +11,16 @@ Reference analogs:
   DP_GenerateTrajectory_ContainNegativeSample.py:1-8). Random choice is
   replaced by a deterministic hash ranking for the same reason.
 
-Both use the md5-based 60-bit hash (``md5_long``), so any engine
+Both use the md5-based 60-bit hash (functions.text.md5_long), so any engine
 reproduces the exact membership.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-
-def md5_long(c: Column) -> Column:
-    """Stable 60-bit content hash as int64: first 15 hex chars of md5.
-
-    Engine-portable: DuckDB ``('0x' || substr(md5(x),1,15))::BIGINT`` yields
-    the identical value (verified: md5('abc') -> 648541476951500027 in both).
-    """
-    return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("long")
+from geofeaturegeneration_spark.functions.text import md5_long
 
 
 def hash_split(
@@ -40,6 +33,41 @@ def hash_split(
     ).cast("int")
     return df.withColumn("split_bucket", bucket).withColumn(
         "is_test", F.col("split_bucket") < test_pct
+    )
+
+
+def leakage_safe_split(
+    df: DataFrame,
+    id_col: str,
+    clusters: DataFrame,
+    cluster_col: str = "cluster_id",
+    test_pct: int = 20,
+    salt: str = "split",
+) -> DataFrame:
+    """``hash_split`` drawn on the DEDUP CLUSTER instead of the row id, so
+    a document and all of its near-duplicates land in the SAME split —
+    the leakage-safe form of the train/test draw (a doc whose near-copy
+    sits in the training set is not a fair eval row; plain per-doc
+    hashing splits ~test_pct of every multi-doc cluster across the
+    boundary). ``clusters`` is the (id_col, cluster_col) assignment from
+    ``dedup.dedup_clusters`` — cluster_id is the cluster's min doc id, so
+    singletons behave exactly like a per-doc draw with the same salt.
+
+    Rows without an assignment (not in ``clusters``) fall back to their
+    own id — the split is total. One broadcast-or-hash join on id + the
+    pure hash expression; no extra shuffle beyond the join."""
+    asg = clusters.select(
+        F.col(id_col), F.col(cluster_col).alias("_gfs_cluster")
+    )
+    key = F.coalesce(F.col("_gfs_cluster"), F.col(id_col))
+    bucket = (
+        md5_long(F.concat(key.cast("string"), F.lit(salt))) % 100
+    ).cast("int")
+    return (
+        df.join(asg, id_col, "left")
+        .withColumn("split_bucket", bucket)
+        .withColumn("is_test", F.col("split_bucket") < test_pct)
+        .drop("_gfs_cluster")
     )
 
 
@@ -186,3 +214,95 @@ def contrastive_samples(
         )
     )
     return sl.join(negs, entity_col, "left")
+
+
+def shuffle_shards(
+    df: DataFrame,
+    id_col: str,
+    shard_size: int,
+    salt: str = "shuffle",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Deterministic global corpus shuffle + fixed-size shard assignment —
+    the export step between curation and training: training loops want the
+    corpus in a random-but-reproducible order, cut into equal shards
+    (webdataset/TFRecord-style), and the order must not depend on cluster
+    size, partition count, or input file layout.
+
+    Every row gets its global position ``pos`` (0-based) in the total
+    order by ``(md5(id#salt), id)`` — a stable pseudo-random permutation,
+    re-drawable with a different salt — plus ``shard = pos / shard_size``
+    and ``shard_pos = pos % shard_size``. Output ``shard`` is ready for
+    ``write.partitionBy('shard')``; only the LAST shard is ever short.
+
+    Scale shape: NO global single-partition window (the naive
+    ``row_number() OVER (ORDER BY h)`` formulation). The stream is
+    range-partitioned on the hash, sorted within partitions, and positions
+    are assigned as partition-offset + local index inside one
+    ``mapInPandas`` pass — the distributed zipWithIndex pattern the vocab
+    builder uses (vocab.build_vocab), including its lineage-cut guard:
+    ``repartitionByRange`` samples boundaries nondeterministically, so the
+    partitioning is pinned with a lazy ``localCheckpoint`` before the
+    count pass and the assignment pass read it (a recomputed partition
+    could otherwise disagree with the collected counts). Positions depend
+    only on the global sort order, not on boundary placement, so the
+    result is identical at any parallelism — the property the oracle
+    checks. Cost: one range shuffle of the full rows + one tiny counts
+    collect (one row per partition)."""
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    if shard_size < 1:
+        raise ValueError("shard_size must be >= 1")
+    for c in ("pos", "shard", "shard_pos"):
+        if c in df.columns:
+            raise ValueError(f"shuffle_shards output column '{c}' already exists")
+    spark = df.sparkSession
+    if num_partitions is None:
+        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+    h = md5_long(F.concat(F.col(id_col).cast("string"), F.lit(f"#{salt}")))
+    ranged = (
+        df.withColumn("_shuf_h", h)
+        .repartitionByRange(num_partitions, F.col("_shuf_h"), F.col(id_col))
+        .sortWithinPartitions(F.col("_shuf_h").asc(), F.col(id_col).asc())
+        .localCheckpoint(eager=False)
+    )
+    counts = (
+        ranged.withColumn("_pid", F.spark_partition_id())
+        .groupBy("_pid")
+        .count()
+        .collect()
+    )
+    n_by_pid = {r["_pid"]: r["count"] for r in counts}
+    starts: dict[int, int] = {}
+    acc = 0
+    for pid in range(num_partitions):
+        starts[pid] = acc
+        acc += n_by_pid.get(pid, 0)
+
+    out_schema = T.StructType(
+        [f for f in df.schema.fields]
+        + [
+            T.StructField("pos", T.LongType(), False),
+            T.StructField("shard", T.LongType(), False),
+            T.StructField("shard_pos", T.LongType(), False),
+        ]
+    )
+
+    def assign(iterator):
+        from pyspark import TaskContext
+
+        next_pos = starts[TaskContext.get().partitionId()]
+        for pdf in iterator:
+            n = len(pdf)
+            pdf = pdf.drop(columns=["_shuf_h"])
+            pos = np.arange(next_pos, next_pos + n, dtype="int64")
+            pdf["pos"] = pos
+            pdf["shard"] = pos // shard_size
+            pdf["shard_pos"] = pos % shard_size
+            next_pos += n
+            yield pdf
+
+    return ranged.mapInPandas(assign, schema=out_schema)

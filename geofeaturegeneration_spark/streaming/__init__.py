@@ -1,11 +1,27 @@
 from geofeaturegeneration_spark.streaming.asof import stream_asof_join
+from geofeaturegeneration_spark.streaming.screen import (
+    stream_bloom_screen,
+    stream_edit_screen,
+    stream_minhash_screen,
+)
 from geofeaturegeneration_spark.streaming.sessions import (
+    stream_exact_dedup,
     stream_gap_sessions,
     stream_running_features,
+)
+from geofeaturegeneration_spark.streaming.stats import (
+    stream_hist_buckets,
+    stream_hll_registers,
 )
 
 __all__ = [
     "stream_gap_sessions",
     "stream_running_features",
+    "stream_exact_dedup",
     "stream_asof_join",
+    "stream_minhash_screen",
+    "stream_bloom_screen",
+    "stream_edit_screen",
+    "stream_hll_registers",
+    "stream_hist_buckets",
 ]

@@ -57,6 +57,39 @@ def stream_gap_sessions(
     )
 
 
+def stream_exact_dedup(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    time_col: str,
+    watermark: str = "1 hour",
+) -> DataFrame:
+    """Streaming exact dedup: ONE survivor per normalized-content
+    fingerprint within the watermark window — the first row PROCESSED,
+    which among same-micro-batch duplicates is scheduling-dependent (an
+    inherent streaming-dedup property, not a bug). The fingerprint matches
+    the batch ``exact_dedup`` (md5 of trimmed, lower-cased,
+    whitespace-collapsed text -> 60-bit int), so the two legs of a lambda
+    architecture agree on the surviving fingerprint SET; the batch leg's
+    deterministic ``keep_id`` is the canonical survivor choice when row
+    identity matters.
+
+    ``dropDuplicatesWithinWatermark`` keyed on the fingerprint keeps one
+    tiny (fp) state row per distinct document and EVICTS it once the
+    watermark passes — plain ``dropDuplicates([fp])`` would never expire
+    state (Spark only bounds dedup state when the event-time column is part
+    of the key set or the within-watermark variant is used), growing one
+    row per distinct document for the life of the query."""
+    from geofeaturegeneration_spark.functions.text import fingerprint
+
+    return (
+        docs.withColumn("_fp", fingerprint(F.col(text_col)))
+        .withWatermark(time_col, watermark)
+        .dropDuplicatesWithinWatermark(["_fp"])
+        .withColumnRenamed("_fp", "fp")
+    )
+
+
 RUNNING_STATE_SCHEMA = T.StructType(
     [
         T.StructField("n", T.LongType()),

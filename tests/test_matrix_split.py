@@ -141,3 +141,33 @@ def test_contrastive_samples(spark):
     assert len(only) == 2 and set(only) <= {3, 4, 5}
 
 
+def test_leakage_safe_split_clusters_never_straddle(spark):
+    """Every member of a near-dup cluster lands in the same split; docs
+    without an assignment fall back to their own id (== hash_split)."""
+    from geofeaturegeneration_spark.operators import (
+        hash_split,
+        leakage_safe_split,
+    )
+
+    docs = spark.createDataFrame(
+        [(i,) for i in range(40)], "doc_id INT"
+    )
+    # clusters: {0..4} -> 0, {10,11} -> 10, rest unassigned
+    clusters = spark.createDataFrame(
+        [(i, 0) for i in range(5)] + [(10, 10), (11, 10)],
+        "doc_id INT, cluster_id INT",
+    )
+    out = leakage_safe_split(docs, "doc_id", clusters).collect()
+    by_id = {r["doc_id"]: (r["split_bucket"], r["is_test"]) for r in out}
+    assert len(by_id) == 40  # the split is total
+    assert len({by_id[i] for i in range(5)}) == 1  # whole cluster together
+    assert by_id[10] == by_id[11]
+    # unassigned docs match the plain per-doc draw with the same salt
+    plain = {
+        r["doc_id"]: (r["split_bucket"], r["is_test"])
+        for r in hash_split(docs, "doc_id").collect()
+    }
+    for i in range(12, 40):
+        assert by_id[i] == plain[i]
+    # cluster members inherit the cluster representative's draw
+    assert by_id[0] == plain[0] and by_id[10] == plain[10]

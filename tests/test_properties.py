@@ -9,11 +9,14 @@ deliberately small and ``deadline`` disabled (JVM latency is not a
 property failure). Failures shrink to minimal counterexamples as usual.
 """
 
+import hashlib
+import math
 import os
 import sys
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -23,6 +26,103 @@ SETTINGS = dict(
     suppress_health_check=[HealthCheck.too_slow],
     print_blob=True,
 )
+
+
+def _md5_60(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+# ---------------------------------------------------------------- epochs
+@settings(**SETTINGS)
+@given(
+    ids=st.lists(
+        st.integers(min_value=0, max_value=10**9),
+        min_size=1, max_size=30, unique=True,
+    ),
+    rates=st.dictionaries(
+        st.sampled_from(["a", "b", "c"]),
+        st.integers(min_value=0, max_value=3_500_000),
+        max_size=3,
+    ),
+    default_ppm=st.integers(min_value=0, max_value=2_000_000),
+)
+def test_epoch_upsample_matches_python_model(spark, ids, rates, default_ppm):
+    """Copy multiset == the documented pure function of (id, salt, ppm)."""
+    from geofeaturegeneration_spark.operators import epoch_upsample
+
+    rows = [(i, ["a", "b", "c", "d"][i % 4]) for i in ids]
+    df = spark.createDataFrame(rows, "doc_id LONG, source STRING")
+    got = sorted(
+        (r["doc_id"], r["epoch"])
+        for r in epoch_upsample(
+            df, "doc_id", rates, default_ppm=default_ppm
+        ).collect()
+    )
+    want = []
+    for i, src in rows:
+        ppm = rates.get(src, default_ppm)
+        n = ppm // 1_000_000 + (
+            1 if _md5_60(f"{i}#epoch") % 1_000_000 < ppm % 1_000_000 else 0
+        )
+        want.extend((i, e) for e in range(1, n + 1))
+    assert got == sorted(want)
+
+
+# ------------------------------------------------------------- histogram
+@settings(**SETTINGS)
+@given(
+    vals=st.lists(
+        st.integers(min_value=0, max_value=10**12),
+        min_size=1, max_size=60,
+    ),
+    q_ppm=st.integers(min_value=1, max_value=1_000_000),
+    sub_bits=st.integers(min_value=0, max_value=6),
+)
+def test_hist_quantile_error_bound(spark, vals, q_ppm, sub_bits):
+    """The quantile estimate never over-reports and under-reports by at
+    most one HDR bucket width (relative 2^-sub_bits)."""
+    from geofeaturegeneration_spark.operators import hist_quantile_values
+
+    df = spark.createDataFrame([(v,) for v in vals], "v LONG")
+    out = hist_quantile_values(df, "v", [q_ppm], sub_bits=sub_bits).collect()
+    assert len(out) == 1
+    est = out[0]["value"]
+    k = math.ceil(q_ppm * len(vals) / 1_000_000)
+    exact = sorted(vals)[k - 1]
+    width = max(1, est >> sub_bits) if sub_bits else max(1, est)
+    assert est <= exact, (est, exact)
+    assert exact - est < (1 if est < (1 << sub_bits) else width) + 1, (
+        est, exact, sub_bits,
+    )
+
+
+# ------------------------------------------------------------------ bm25
+@settings(**SETTINGS)
+@given(
+    data=st.data(),
+    n_docs=st.integers(min_value=1, max_value=8),
+    n_qs=st.integers(min_value=1, max_value=3),
+)
+def test_bm25_matches_python_model(spark, data, n_docs, n_qs):
+    """Scores equal the exact scaled-int Python replay on random corpora
+    drawn from a tiny alphabet (forcing heavy term collisions), including
+    empty texts (the single-''-term convention)."""
+    from geofeaturegeneration_spark.operators import bm25_scores
+    from tests.test_retrieval import _py_bm25
+
+    word = st.sampled_from(["x", "y", "z", "zz"])
+    text = st.lists(word, min_size=0, max_size=6).map(" ".join)
+    corpus = [(i, data.draw(text)) for i in range(n_docs)]
+    queries = [(100 + j, data.draw(text)) for j in range(n_qs)]
+    docs = spark.createDataFrame(corpus, "doc_id INT, text STRING")
+    qs = spark.createDataFrame(queries, "q_id INT, q_text STRING")
+    got = {
+        (r["q_id"], r["doc_id"]): (r["n_terms"], r["score_int"])
+        for r in bm25_scores(
+            docs, "doc_id", "text", qs, "q_id", "q_text"
+        ).collect()
+    }
+    assert got == _py_bm25(corpus, queries)
 
 
 # ------------------------------------------------------ chunk round-trip
@@ -60,6 +160,77 @@ def test_chunk_reassemble_roundtrip(spark, toks, seq_len):
     # even for an empty array (greatest(n_chunks, 1) — no doc silently
     # vanishes from the export) and the n_tok slice recovers []
     assert got == {i: arr for i, arr, _ in rows}
+
+
+# ------------------------------------------------------------- edit_join
+@settings(**SETTINGS)
+@given(
+    strs=st.lists(
+        st.text(alphabet="ab ", max_size=6), min_size=2, max_size=25
+    ),
+    d=st.integers(min_value=0, max_value=2),
+)
+def test_edit_join_matches_python_model(spark, strs, d):
+    """Pairs == the naive quadratic levenshtein join (completeness of the
+    symmetric-delete blocking) on arbitrary short keys incl. empties."""
+    import itertools
+
+    from geofeaturegeneration_spark.operators import edit_join
+
+    def lev(a, b):
+        dd = list(range(len(b) + 1))
+        for i, ca in enumerate(a, 1):
+            prev, dd[0] = dd[:], i
+            for j, cb in enumerate(b, 1):
+                dd[j] = min(prev[j] + 1, dd[j - 1] + 1, prev[j - 1] + (ca != cb))
+        return dd[len(b)]
+
+    df = spark.createDataFrame(
+        [(i, s) for i, s in enumerate(strs)], "id LONG, key STRING"
+    )
+    got = {
+        (r["id_a"], r["id_b"], r["dist"])
+        for r in edit_join(df, "id", "key", max_dist=d, min_len=0).collect()
+    }
+    want = {
+        (i, j, lev(strs[i], strs[j]))
+        for i, j in itertools.combinations(range(len(strs)), 2)
+        if lev(strs[i], strs[j]) <= d
+    }
+    assert got == want
+
+
+# --------------------------------------------------------- fim_transform
+@settings(**SETTINGS)
+@given(
+    docs=st.lists(
+        st.lists(st.integers(min_value=0, max_value=99), max_size=12),
+        min_size=1, max_size=20,
+    ),
+    rate=st.integers(min_value=0, max_value=1_000_000),
+)
+def test_fim_matches_python_model(spark, docs, rate):
+    """tokens_fim == the documented pure function of (id, salt, tokens):
+    md5 draw, md5 cut points, PSM permutation; untouched otherwise."""
+    from geofeaturegeneration_spark.operators import fim_transform
+
+    rows = [(i, t) for i, t in enumerate(docs)]
+    df = spark.createDataFrame(rows, "doc_id LONG, tokens ARRAY<INT>")
+    got = {
+        r["doc_id"]: (r["is_fim"], r["fim_lo"], r["fim_hi"], r["tokens_fim"])
+        for r in fim_transform(
+            df, "tokens", rate_ppm=rate, prefix_tok=-1, suffix_tok=-2,
+            middle_tok=-3,
+        ).collect()
+    }
+    for i, t in rows:
+        n = len(t)
+        sel = _md5_60(f"{i}#fim") % 1_000_000 < rate
+        a = _md5_60(f"{i}#fim-a") % (n + 1)
+        b = _md5_60(f"{i}#fim-b") % (n + 1)
+        lo, hi = min(a, b), max(a, b)
+        fim = [-1] + t[:lo] + [-2] + t[hi:] + [-3] + t[lo:hi] if sel else t
+        assert got[i] == (int(sel), lo, hi, fim)
 
 
 # -------------------------------------------------------------- pagerank

@@ -163,6 +163,76 @@ def test_ordered_tokens_null_rows_dropped_consistently(spark):
     assert fast == slow == {"a": [10, 20]}
 
 
+def test_pack_sequences_conservation_and_padding(spark):
+    """Packing conserves every token in deterministic hash order within each
+    group, n_real is seq_len everywhere except at most one partial chunk per
+    group, padding right-fills only that chunk, and the result is invariant
+    under input repartitioning (parallelism independence)."""
+    from geofeaturegeneration_spark.functions.text import md5_long
+    from geofeaturegeneration_spark.operators import pack_sequences
+
+    rows = [(i, [i * 100 + j for j in range(5 + i % 7)]) for i in range(40)]
+    df = spark.createDataFrame(rows, "doc_id INT, tokens ARRAY<INT>")
+    L, G = 8, 3
+    packed = pack_sequences(df, "doc_id", "tokens", L, n_groups=G).collect()
+
+    # expected concatenation per group: docs ordered by (md5 hash, id)
+    hashed = df.select(
+        "doc_id", "tokens",
+        md5_long(F.concat(F.lit("pack:"), F.col("doc_id").cast("string"))).alias("dh"),
+    ).collect()
+    streams = {}
+    for r in sorted(hashed, key=lambda r: (r["dh"], r["doc_id"])):
+        streams.setdefault(r["dh"] % G, []).extend(r["tokens"])
+
+    for g, stream in streams.items():
+        chunks = sorted(
+            (r for r in packed if r["grp"] == g), key=lambda r: r["chunk_id"]
+        )
+        flat = [t for r in chunks for t in r["tokens"]]
+        assert flat == stream, f"group {g} not conserved in order"
+        assert [r["chunk_id"] for r in chunks] == list(range(len(chunks)))
+        assert all(r["n_real"] == L for r in chunks[:-1])
+        assert 1 <= chunks[-1]["n_real"] <= L
+
+    padded = {
+        (r["grp"], r["chunk_id"]): r
+        for r in pack_sequences(
+            df, "doc_id", "tokens", L, n_groups=G, pad_value=0
+        ).collect()
+    }
+    for r in padded.values():
+        assert len(r["tokens"]) == L
+        assert r["tokens"][r["n_real"]:] == [0] * (L - r["n_real"])
+
+    again = {
+        (r["grp"], r["chunk_id"]): r["tokens"]
+        for r in pack_sequences(
+            df.repartition(7), "doc_id", "tokens", L, n_groups=G
+        ).collect()
+    }
+    assert again == {
+        (r["grp"], r["chunk_id"]): r["tokens"] for r in packed
+    }
+
+
+def test_pack_sequences_window_is_over_docs_not_tokens(spark):
+    """Scale shape: the running-offset Window must consume DOC rows (below
+    the posexplode Generate in the plan), never the exploded token rows."""
+    from geofeaturegeneration_spark.operators import pack_sequences
+
+    df = spark.createDataFrame(
+        [(1, [1, 2, 3]), (2, [4, 5])], "doc_id INT, tokens ARRAY<INT>"
+    )
+    plan = (
+        pack_sequences(df, "doc_id", "tokens", 4, n_groups=2)
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    gen = plan.index("Generate")
+    win = plan.index("Window")
+    assert win > gen, "Window must appear BELOW the Generate (doc rows)\n" + plan
+
+
 def test_chunk_strided_matches_python_replay(spark):
     from geofeaturegeneration_spark.operators.sequence import chunk_sequences
 
@@ -211,3 +281,193 @@ def test_chunk_strided_validates_stride(spark):
         chunk_sequences(df, "tokens", 8, stride=9)  # gaps would drop tokens
     with pytest.raises(ValueError):
         chunk_sequences(df, "tokens", 8, stride=0)
+
+
+def test_pack_sequences_segments(spark):
+    """with_segments: per-token segment ids are 0-based per chunk,
+    increment exactly at doc boundaries, padding positions carry -1,
+    n_docs counts contributing docs, and tokens equal the plain form."""
+    from geofeaturegeneration_spark.operators import pack_sequences
+
+    rows = [
+        (1, list(range(100, 105))),   # 5 tokens
+        (2, list(range(200, 207))),   # 7 tokens
+        (3, list(range(300, 303))),   # 3 tokens
+        (4, []),                      # empty doc: contributes nothing
+    ]
+    df = spark.createDataFrame(rows, "doc_id INT, tokens ARRAY<INT>")
+    kw = dict(seq_len=6, n_groups=1, pad_value=0)
+    plain = {
+        (r["grp"], r["chunk_id"]): (list(r["tokens"]), r["n_real"])
+        for r in pack_sequences(df, "doc_id", "tokens", **kw).collect()
+    }
+    got = sorted(
+        pack_sequences(
+            df, "doc_id", "tokens", with_segments=True, **kw
+        ).collect(),
+        key=lambda r: (r["grp"], r["chunk_id"]),
+    )
+    # token stream identical to the plain form
+    for r in got:
+        assert (list(r["tokens"]), r["n_real"]) == plain[(r["grp"], r["chunk_id"])]
+        assert len(r["segs"]) == len(r["tokens"]) == 6
+    # 15 real tokens in one group -> chunks of 6/6/3(+3 pad)
+    assert [r["n_real"] for r in got] == [6, 6, 3]
+    all_toks = [t for r in got for t in r["tokens"]][:15]
+    all_segs = [s for r in got for s in r["segs"]]
+    # padding is masked with -1
+    assert all_segs[15:] == [-1, -1, -1]
+    # per chunk: segs start at 0 and increment exactly where the packed
+    # token stream crosses a doc boundary (doc sizes 5/7/3 in SOME
+    # deterministic hash order)
+    import itertools
+
+    sizes = {1: 5, 2: 7, 3: 3}
+    # recover doc order from the token values (each doc's tokens are
+    # distinctive centuries)
+    order = [k for k, _ in itertools.groupby(all_toks, key=lambda t: t // 100)]
+    assert sorted(order) == [1, 2, 3]
+    # expected global doc index per position
+    gidx = []
+    for di, doc in enumerate(order):
+        gidx.extend([di] * sizes[doc])
+    for r, lo in zip(got, range(0, 15, 6)):
+        real = r["segs"][: r["n_real"]]
+        base = gidx[lo]
+        assert real == [g - base for g in gidx[lo:lo + r["n_real"]]]
+        assert r["n_docs"] == len(set(gidx[lo:lo + r["n_real"]]))
+    # unpadded form: no pad positions, segs lengths == n_real
+    raw = pack_sequences(
+        df, "doc_id", "tokens", seq_len=6, n_groups=1, with_segments=True
+    ).collect()
+    assert all(len(r["segs"]) == r["n_real"] for r in raw)
+
+
+# ---------------------------------------------------------------------------
+# fim_transform / fim_restore
+# ---------------------------------------------------------------------------
+
+def _fim_input(spark, n=60):
+    rows = [(i, list(range(i * 100, i * 100 + (i % 9)))) for i in range(n)]
+    return spark.createDataFrame(rows, "doc_id BIGINT, tokens ARRAY<INT>")
+
+
+def test_fim_roundtrip_and_passthrough(spark):
+    from geofeaturegeneration_spark.operators.sequence import (
+        fim_restore,
+        fim_transform,
+    )
+
+    df = _fim_input(spark)
+    out = fim_transform(
+        df, "tokens", rate_ppm=500_000, prefix_tok=-1, suffix_tok=-2,
+        middle_tok=-3,
+    )
+    back = fim_restore(out, "tokens_fim")
+    assert back.filter(F.col("tokens_restored") != F.col("tokens")).count() == 0
+    # both selected and unselected rows must actually occur
+    sel = out.filter("is_fim = 1").count()
+    assert 0 < sel < out.count()
+    # unselected rows pass through byte-identical
+    assert (
+        out.filter("is_fim = 0")
+        .filter(F.col("tokens_fim") != F.col("tokens"))
+        .count()
+        == 0
+    )
+
+
+def test_fim_psm_shape_and_conservation(spark):
+    """Selected rows: exactly the three sentinels in P..S..M order, cut
+    points honored, and the source tokens conserved as a multiset."""
+    from geofeaturegeneration_spark.operators.sequence import fim_transform
+
+    P, S, M = -1, -2, -3
+    df = _fim_input(spark)
+    rows = fim_transform(
+        df, "tokens", rate_ppm=1_000_000, prefix_tok=P, suffix_tok=S,
+        middle_tok=M,
+    ).collect()
+    assert all(r["is_fim"] == 1 for r in rows)
+    for r in rows:
+        t, f, lo, hi = r["tokens"], r["tokens_fim"], r["fim_lo"], r["fim_hi"]
+        n = len(t)
+        assert 0 <= lo <= hi <= n
+        assert len(f) == n + 3
+        # PSM order with the documented layout
+        assert f[0] == P
+        assert f[lo + 1] == S
+        assert f[lo + 1 + (n - hi) + 1] == M
+        assert f[1 : lo + 1] == t[:lo]                      # prefix
+        assert f[lo + 2 : lo + 2 + n - hi] == t[hi:]        # suffix
+        assert f[lo + 3 + n - hi :] == t[lo:hi]             # middle
+        assert sorted(x for x in f if x >= 0) == sorted(t)
+
+
+def test_fim_rate_monotone_and_partition_invariant(spark):
+    from geofeaturegeneration_spark.operators.sequence import fim_transform
+
+    df = _fim_input(spark, n=120)
+    sel = {}
+    for ppm in (200_000, 700_000):
+        out = fim_transform(
+            df, "tokens", rate_ppm=ppm, prefix_tok=-1, suffix_tok=-2,
+            middle_tok=-3,
+        )
+        sel[ppm] = {r["doc_id"] for r in out.filter("is_fim = 1").collect()}
+    assert sel[200_000] <= sel[700_000]  # raising the rate only ADDS docs
+
+    base = fim_transform(
+        df, "tokens", rate_ppm=700_000, prefix_tok=-1, suffix_tok=-2,
+        middle_tok=-3,
+    )
+    rep = fim_transform(
+        df.repartition(7, "doc_id"), "tokens", rate_ppm=700_000,
+        prefix_tok=-1, suffix_tok=-2, middle_tok=-3,
+    )
+    a = {r["doc_id"]: r["tokens_fim"] for r in base.collect()}
+    b = {r["doc_id"]: r["tokens_fim"] for r in rep.collect()}
+    assert a == b
+
+
+def test_fim_empty_doc(spark):
+    from geofeaturegeneration_spark.operators.sequence import fim_transform
+
+    df = spark.createDataFrame([(1, [])], "doc_id BIGINT, tokens ARRAY<INT>")
+    r = fim_transform(
+        df, "tokens", rate_ppm=1_000_000, prefix_tok=-1, suffix_tok=-2,
+        middle_tok=-3,
+    ).collect()[0]
+    assert (r["fim_lo"], r["fim_hi"]) == (0, 0)
+    assert r["tokens_fim"] == [-1, -2, -3]
+
+
+def test_fim_null_tokens_pass_through(spark):
+    """ADVICE r04 #4: a NULL tokens array must behave like an unselected
+    row (is_fim = 0, output NULL pass-through), never a half-transformed
+    row with NULL cut points corrupting the export column."""
+    from geofeaturegeneration_spark.operators.sequence import (
+        fim_restore,
+        fim_transform,
+    )
+
+    df = spark.createDataFrame(
+        [(0, [1, 2, 3, 4]), (1, None), (2, [])],
+        "doc_id BIGINT, tokens ARRAY<INT>",
+    )
+    out = fim_transform(
+        df, "tokens", rate_ppm=1_000_000, prefix_tok=-1, suffix_tok=-2,
+        middle_tok=-3,
+    )
+    rows = {r["doc_id"]: r for r in out.collect()}
+    # at rate 1e6 every NON-NULL row is selected; the null row is not
+    assert rows[0]["is_fim"] == 1 and rows[2]["is_fim"] == 1
+    assert rows[1]["is_fim"] == 0
+    assert rows[1]["tokens_fim"] is None
+    assert rows[1]["fim_lo"] is None and rows[1]["fim_hi"] is None
+    # restore still round-trips the whole frame (null passes through)
+    back = {
+        r["doc_id"]: r["tokens_restored"]
+        for r in fim_restore(out, "tokens_fim").collect()
+    }
+    assert back == {0: [1, 2, 3, 4], 1: None, 2: []}

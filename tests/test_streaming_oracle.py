@@ -1,8 +1,20 @@
-"""The stateful streaming as-of join replayed against the DuckDB oracle:
-finalized probes over the sf events table must equal DuckDB's ASOF LEFT
-JOIN (``asof_salted``'s oracle in ``oracle_sql()``) exactly, so the
-streaming leg is checked against the cross-engine-exact batch answer, not
-merely the batch operator's output.
+"""Streaming operators replayed against the DuckDB oracle (round-4
+verdict ask #4, extended): for the three screens with persisted batch
+twins — minhash, bloom, edit — and the two running-sketch streams — HLL
+registers, HDR histogram buckets — drive the STREAMING operator over the
+sf0.01 documents table shaped exactly like the batch contract query,
+then compare the micro-batch sink rows to the batch oracle SQL
+(``oracle_sql()`` keys ``minhash_cross`` / ``bloom_screen`` /
+``edit_join_cross`` / ``hll_registers`` / ``hist_buckets``) executed by
+DuckDB over the same parquet. This closes the one operator family whose
+correctness previously never touched an oracle: the stream's emitted set
+must equal the cross-engine-exact batch answer, not merely the batch
+operator's output. The sketch streams additionally force MULTI-batch
+ingestion (maxFilesPerTrigger=1 over 4 files) so cross-micro-batch
+max/sum associativity is exercised against the oracle, not just within
+one batch. The stateful as-of stream is replayed too: finalized probes
+over the sf events table must equal DuckDB's ASOF LEFT JOIN
+(``asof_salted``'s oracle) exactly.
 """
 
 from __future__ import annotations
@@ -20,11 +32,20 @@ import __spark_entry__ as E
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.01")
 
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(os.path.join(SF_DIR, "events.parquet")),
+    not os.path.exists(os.path.join(SF_DIR, "documents.parquet")),
     reason="sf testdata not present",
 )
 
 T0 = datetime(2024, 1, 1, 12, 0, 0)
+
+
+def _oracle_rows(key: str):
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{os.path.join(SF_DIR, 'documents.parquet')}'"
+    )
+    return con.execute(E.oracle_sql()[key]).fetchall()
 
 
 def _run_stream(out, name_prefix: str):
@@ -35,6 +56,176 @@ def _run_stream(out, name_prefix: str):
     )
     assert q.awaitTermination(300), "streaming query did not finish"
     return out.sparkSession.sql(f"SELECT * FROM {name}")
+
+
+def _docs(spark):
+    return spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+
+
+def test_stream_minhash_screen_matches_duckdb_oracle(spark, tmp_path):
+    """Odd half streamed against the even half's persisted band table ==
+    the minhash_cross batch oracle, value-exact."""
+    from geofeaturegeneration_spark.operators import minhash_band_signatures
+    from geofeaturegeneration_spark.streaming import stream_minhash_screen
+
+    docs = _docs(spark)
+    path = str(tmp_path / "mh_in")
+    arriving = docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "text", F.lit(T0).alias("ts")
+    )
+    arriving.write.parquet(path)
+    schema = spark.read.parquet(path).schema
+    corpus_bands = minhash_band_signatures(
+        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text",
+        k=3, n_hashes=16, bands=4,
+    )
+    sink = _run_stream(
+        stream_minhash_screen(
+            spark.readStream.schema(schema).parquet(path),
+            "doc_id", "text", "ts", corpus_bands,
+            corpus_id_col="doc_id", watermark="1 hour",
+            k=3, n_hashes=16, bands=4,
+        ),
+        "mh_oracle",
+    )
+    got = sorted(
+        (r["doc_id"], r["corpus_id"]) for r in sink.collect()
+    )
+    want = sorted((a, b) for a, b in _oracle_rows("minhash_cross"))
+    assert got == want
+    assert got, "vacuous: no cross near-dup pairs at this SF"
+
+
+def test_stream_bloom_screen_matches_duckdb_oracle(spark, tmp_path):
+    """The odd-half + every-10th-even batch streamed against the even
+    half's Bloom position table == the bloom_screen batch oracle
+    bit-for-bit (including the spurious ~(1-e^{-kn/m})^k flags)."""
+    from geofeaturegeneration_spark.operators import bloom_build
+    from geofeaturegeneration_spark.streaming import stream_bloom_screen
+
+    docs = _docs(spark)
+    path = str(tmp_path / "bloom_in")
+    batch = docs.filter(
+        (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
+    ).select("doc_id", "text")
+    batch.write.parquet(path)
+    schema = spark.read.parquet(path).schema
+    bloom = bloom_build(
+        docs.filter(F.col("doc_id") % 2 == 0), "text", m_bits=1 << 14, k=4
+    )
+    sink = _run_stream(
+        stream_bloom_screen(
+            spark.readStream.schema(schema).parquet(path),
+            "text", bloom, m_bits=1 << 14, k=4,
+        ).select("doc_id", "might_contain"),
+        "bloom_oracle",
+    )
+    got = sorted((r["doc_id"], r["might_contain"]) for r in sink.collect())
+    want = sorted((i, bool(m)) for i, m in _oracle_rows("bloom_screen"))
+    assert got == want
+    # the no-false-negative side, non-vacuously: re-ingested corpus
+    # members always flag
+    assert all(m for i, m in got if i % 10 == 0 and i % 2 == 0)
+
+
+def test_stream_edit_screen_matches_duckdb_oracle(spark, tmp_path):
+    """Odd half streamed against the even half's persisted edit-variant
+    table == the edit_join_cross batch oracle (exact levenshtein <= 1
+    matches over ascii_key forms)."""
+    from geofeaturegeneration_spark.functions.text import ascii_key
+    from geofeaturegeneration_spark.operators import edit_variant_table
+    from geofeaturegeneration_spark.streaming import stream_edit_screen
+
+    docs = _docs(spark)
+    keyed = docs.select(
+        "doc_id", ascii_key(F.col("text"), 24).alias("key")
+    )
+    path = str(tmp_path / "edit_in")
+    keyed.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "key", F.lit(T0).alias("ts")
+    ).write.parquet(path)
+    schema = spark.read.parquet(path).schema
+    variants = edit_variant_table(
+        keyed.filter(F.col("doc_id") % 2 == 0), "doc_id", "key", max_dist=1
+    )
+    sink = _run_stream(
+        stream_edit_screen(
+            spark.readStream.schema(schema).parquet(path),
+            "doc_id", "key", "ts", variants,
+            watermark="1 hour", max_dist=1,
+        ),
+        "edit_oracle",
+    )
+    got = sorted(
+        (r["doc_id"], r["corpus_id"], r["dist"]) for r in sink.collect()
+    )
+    want = sorted((a, b, d) for a, b, d in _oracle_rows("edit_join_cross"))
+    assert got == want
+    assert got, "vacuous: no edit-distance matches at this SF"
+
+
+def _run_stream_complete(out, name_prefix: str):
+    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.format("memory").queryName(name)
+        .outputMode("complete").trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(300), "streaming query did not finish"
+    return out.sparkSession.sql(f"SELECT * FROM {name}")
+
+
+def test_stream_hll_registers_match_duckdb_oracle(spark, tmp_path):
+    """The running HLL register table over the streamed word corpus ==
+    the hll_registers batch oracle row-for-row (max is associative
+    across micro-batches; the oracle is the exact-integer artifact)."""
+    from geofeaturegeneration_spark.streaming import stream_hll_registers
+
+    docs = _docs(spark)
+    path = str(tmp_path / "hll_in")
+    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
+    # several files -> several micro-batches under availableNow
+    tok.repartition(4).write.parquet(path)
+    schema = spark.read.parquet(path).schema
+    sink = _run_stream_complete(
+        stream_hll_registers(
+            spark.readStream.schema(schema).option(
+                "maxFilesPerTrigger", 1
+            ).parquet(path),
+            "w", p=8,
+        ),
+        "hll_oracle",
+    )
+    got = sorted(tuple(r) for r in sink.collect())
+    want = sorted(tuple(r) for r in _oracle_rows("hll_registers"))
+    assert got == want
+    assert got, "vacuous: empty register table"
+
+
+def test_stream_hist_buckets_match_duckdb_oracle(spark, tmp_path):
+    """The running HDR bucket table over the streamed n_chars column ==
+    the hist_buckets batch oracle row-for-row (sum is associative
+    across micro-batches)."""
+    from geofeaturegeneration_spark.streaming import stream_hist_buckets
+
+    docs = _docs(spark)
+    path = str(tmp_path / "hist_in")
+    docs.select(F.col("n_chars").cast("long").alias("n_chars")).repartition(
+        4
+    ).write.parquet(path)
+    schema = spark.read.parquet(path).schema
+    sink = _run_stream_complete(
+        stream_hist_buckets(
+            spark.readStream.schema(schema).option(
+                "maxFilesPerTrigger", 1
+            ).parquet(path),
+            "n_chars", sub_bits=5,
+        ),
+        "hist_oracle",
+    )
+    got = sorted(tuple(r) for r in sink.collect())
+    want = sorted(tuple(r) for r in _oracle_rows("hist_buckets"))
+    assert got == want
+    assert got, "vacuous: empty bucket table"
 
 
 def test_stream_asof_join_matches_duckdb_oracle(spark, tmp_path):

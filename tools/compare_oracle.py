@@ -21,7 +21,7 @@ sys.path.insert(0, ".")
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents",
+    "orders", "lineitem", "events", "documents", "embeddings",
 ]
 
 

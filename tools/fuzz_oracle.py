@@ -1,17 +1,18 @@
 """Adversarial-input oracle gate: run the WHOLE contract (queries() +
 extra_queries() vs their DuckDB oracles, via tools/compare_oracle.py)
-against hostile randomized documents and events tables.
+against a hostile randomized documents/embeddings table.
 
 The driver's correctness gate and the local compare both run on the
-fixed synthetic corpus, whose content is benign; a Spark/DuckDB semantic
+fixed synthetic corpus, whose text is benign; a Spark/DuckDB semantic
 divergence that only shows on nasty content (empty strings, multi-space
-runs, CRLF/controls/NFD/fullwidth byte forms, 500x word repeats, tied
-timestamps, gaps at the session threshold) would be invisible there.
-This tool regenerates only the free-content tables — schema-identical to
-the real ones (documents: doc_id BIGINT, text, lang, source, n_chars;
-events: event_id, ts, user_id, event_type, value, props) — symlinks the
-TPC-H-ish tables from a base sf dir, and exit-codes like compare_oracle
-(non-zero on any value mismatch).
+runs, CRLF/controls/NFD/fullwidth byte forms, 500x word repeats,
+whole-doc duplicates, shared spans/lines, PII shapes, zero / duplicate /
+antipodal embeddings, top-k ties) would be invisible there. This tool
+regenerates only the two free-content tables — schema-identical to the
+real ones (documents: doc_id BIGINT, text, lang, source, n_chars;
+embeddings: vec_id BIGINT, embedding FLOAT[64], label INT) — symlinks
+the TPC-H-ish tables from a base sf dir, and exit-codes like
+compare_oracle (non-zero on any value mismatch).
 
     python tools/fuzz_oracle.py [seed] [base_sf_dir]
 
@@ -49,7 +50,7 @@ NASTY_SNIPPETS = [
     "emoji \U0001f469‍\U0001f4bb keep zwj",  # ZWJ sequence
     "reach me at bob@example.com or +1-555-123-4567 today",  # PII shapes
     "ssn 123-45-6789 card 4111 1111 1111 1111",
-    "{ \"json\": true } lorem ipsum dolor",  # braces
+    "{ \"json\": true } lorem ipsum dolor",  # clean_lines banned content
     "buy now!!! $$$ %%% @@@ ###",            # punct-heavy
     "1 22 333 4444 55555 666666 7777777",    # digit tokens
 ]
@@ -68,7 +69,7 @@ def build_documents(seed: int):
     def add(text: str):
         nonlocal did
         lang = rng.choice(LANGS)
-        # skewed sources incl. a 1-doc tail source
+        # skewed sources incl. a 1-doc tail source (source_quota edge)
         source = f"src{min(rng.randrange(20), rng.randrange(20))}" if did % 97 else "srcTINY"
         rows.append((did, text, lang, source, len(text)))
         did += 1
@@ -81,6 +82,20 @@ def build_documents(seed: int):
     add("spam " * 499 + "spam")
     pat = _doc_text(rng)[:40] or "a b c d e f g"
     add(" ".join([pat] * 40))
+    # whole-doc duplicates and near-duplicates (minhash/simhash/exact)
+    base = _doc_text(rng) or "base doc text"
+    for _ in range(3):
+        add(base)
+    add(base + " tail")
+    add("head " + base)
+    # shared span embedded in distinct docs (span_dedup)
+    span = " ".join(rng.choice(WORDS) for _ in range(30))
+    for _ in range(3):
+        add(f"{_doc_text(rng)} {span} {_doc_text(rng)}")
+    # shared lines across docs (line_dedup) + blank separator lines
+    shared = "this exact line recurs across documents."
+    for _ in range(4):
+        add(f"{_doc_text(rng)}\n{shared}\n\n{_doc_text(rng)}")
     return rows
 
 
@@ -168,6 +183,35 @@ def build_events(seed: int):
     return rows
 
 
+def build_embeddings(seed: int):
+    rng = random.Random(seed + 1)
+    rows = []
+    vid = 0
+
+    def addv(vec):
+        nonlocal vid
+        rows.append((vid, [float(x) for x in vec], vid % 10))
+        vid += 1
+
+    def rand_vec():
+        return [rng.gauss(0, 1) for _ in range(64)]
+
+    for _ in range(180):
+        addv(rand_vec())
+    addv([0.0] * 64)                      # zero vector (degenerate norm)
+    addv([1e-30] * 64)                    # denormal-ish tiny
+    addv([1e18] * 64)                     # huge but finite in float32
+    base = rand_vec()
+    addv(base)
+    addv(base)                            # exact duplicate -> top-k tie
+    addv([-x for x in base])              # antipodal
+    addv([x * (1 + 1e-7) for x in base])  # near-duplicate
+    one_hot = [0.0] * 64
+    one_hot[7] = 1.0
+    addv(one_hot)
+    return rows
+
+
 def main() -> None:
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     base_sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
@@ -208,7 +252,20 @@ def main() -> None:
         ),
         f"{out_dir}/events.parquet",
     )
-    print(f"fuzz corpus (seed {seed}): {len(docs)} docs, "
+    embs = build_embeddings(seed)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([r[0] for r in embs], pa.int64()),
+                "embedding": pa.array(
+                    [r[1] for r in embs], pa.list_(pa.float32())
+                ),
+                "label": pa.array([r[2] for r in embs], pa.int32()),
+            }
+        ),
+        f"{out_dir}/embeddings.parquet",
+    )
+    print(f"fuzz corpus (seed {seed}): {len(docs)} docs, {len(embs)} vecs, "
           f"{len(evs)} events -> {out_dir}")
     rc = subprocess.call(
         [sys.executable,

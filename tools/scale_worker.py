@@ -1,8 +1,25 @@
 """Subprocess worker for the scaling bench: run the token feature pipeline
-(``bench.token_pipeline``) at a fixed local[] parallelism and print one
-JSON line.
+at a fixed local[] parallelism and print one JSON line.
 
-    python tools/scale_worker.py <cpus> <seq_path> [n_runs]
+    python tools/scale_worker.py <cpus> <seq_path> [n_runs] [job]
+
+job = "pipeline" (default: the token feature pipeline), "bpe"
+(bpe_encode over the dedup-scaling text corpus with a 200-merge artifact
+trained once outside the timed region: the zero-shuffle mapInArrow
+encode — per-task word cache, flat int32 token buffers), "pack"
+(corpus-level training-sequence packing over the same table: offset
+window over doc rows + linear explode; n_groups is FIXED at 64 across
+parallelism levels so the output is provably identical while the work
+redistributes), "semdedup" (semantic_dedup over a synthetic embedding
+corpus; quantizer trained once outside the timed region), or "dsir"
+(importance_weights over the dedup-scaling text corpus: hashed 1..2-gram
+counting + broadcast ratio join — the gram-counting stage is the
+embarrassingly-parallel CPU bulk, the same shape that dominates at
+corpus scale), or "normalize" (normalize_text over the same corpus with
+10% of docs spiked non-ASCII — the realistic mixed-byte-form shape), or
+"span" (span_dedup over the same corpus — window hashes, map-side
+min-struct winner, loser join, gaps-and-islands merge, reassembly: the
+only shuffle-bearing text job in the set).
 """
 
 from __future__ import annotations
@@ -18,6 +35,7 @@ def main() -> None:
     cpus = int(sys.argv[1])
     seq_path = sys.argv[2]
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 2
+    job = sys.argv[4] if len(sys.argv) > 4 else "pipeline"
 
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     from bench import token_pipeline
@@ -40,11 +58,361 @@ def main() -> None:
                 f"-XX:ParallelGCThreads={gc_threads} -XX:ConcGCThreads={max(1, gc_threads // 4)}"
         },
     )
+    if job == "pack":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.datagen import read_sequences
+        from geofeaturegeneration_spark.operators import pack_sequences
+
+        def run_job(spark, seq_path):
+            seq = read_sequences(spark, seq_path)
+            n_tok = seq.agg(F.sum("n_tok")).collect()[0][0]
+            t0 = time.perf_counter()
+            packed = pack_sequences(
+                seq.select("doc_id", "tokens"), "doc_id", "tokens",
+                seq_len=512, n_groups=64,
+            )
+            packed.write.format("noop").mode("overwrite").save()
+            return n_tok, time.perf_counter() - t0
+    elif job == "semdedup":
+        import time
+
+        from geofeaturegeneration_spark.operators import (
+            semantic_dedup,
+            train_ivf_centroids,
+        )
+
+        def run_job(spark, emb_path):
+            emb = spark.read.parquet(emb_path)
+            n_vecs = emb.count()
+            # train once, dedup many — the production shape; the trainer's
+            # 10k-sample collect + driver k-means is a fixed cost shared by
+            # every level, so it stays outside the timed region
+            cents = train_ivf_centroids(emb, "vec_id", "embedding", k=16)
+            t0 = time.perf_counter()
+            out = semantic_dedup(
+                emb, "vec_id", "embedding", threshold=0.95,
+                n_clusters=16, centroids=cents, n_blocks=4,
+            )
+            out.write.format("noop").mode("overwrite").save()
+            return n_vecs, time.perf_counter() - t0
+    elif job == "lloyd":
+        import time
+
+        from geofeaturegeneration_spark.operators import (
+            lloyd_refine,
+            train_ivf_centroids,
+        )
+
+        def run_job(spark, emb_path):
+            emb = spark.read.parquet(emb_path)
+            n_vecs = emb.count()
+            # seeds trained once (fixed cost shared by both levels, same
+            # rule as the semdedup job); the timed region is the TWO
+            # full-corpus Lloyd iterations — each one corpus scan of
+            # literal-centroid assignment + the (cid, dim) int-sum agg
+            cents = train_ivf_centroids(emb, "vec_id", "embedding", k=16)
+            t0 = time.perf_counter()
+            out = lloyd_refine(emb, "vec_id", "embedding", cents, iters=2)
+            out.write.format("noop").mode("overwrite").save()
+            # work metric = vector-iterations (each assigns + contributes)
+            return n_vecs * 2, time.perf_counter() - t0
+    elif job == "dsir":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import importance_weights
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path)
+            raw = docs.filter(F.col("doc_id") % 11 != 0).select(
+                "doc_id", "text"
+            )
+            target = docs.filter(F.col("doc_id") % 11 == 0).select(
+                F.col("doc_id").alias("tid"), F.col("text").alias("ttext")
+            )
+            # grams scored = raw-side 1..2-gram occurrences: a pure
+            # expression agg over the raw docs (one cheap pass, NOT timed —
+            # it is a property of the corpus, identical at every level)
+            n_grams = raw.agg(
+                F.sum(2 * F.size(F.split("text", " ")) - 1)
+            ).collect()[0][0]
+            t0 = time.perf_counter()
+            w = importance_weights(
+                raw, "doc_id", "text", target, "tid", "ttext"
+            )
+            w.write.format("noop").mode("overwrite").save()
+            return n_grams, time.perf_counter() - t0
+    elif job == "bpe":
+        import time
+
+        from geofeaturegeneration_spark.operators import bpe_encode, train_bpe
+
+        # size scan splits to the DATA, not the default 128 MB: encode is
+        # CPU-heavy per byte, and the ~250 MB bench corpus would otherwise
+        # scan as 2-8 splits — a narrow first stage that Amdahl-caps the
+        # high-parallelism level (at 100 TB the same rule says 8-64 MB
+        # text splits; split count tracks bytes, so the setting is
+        # scale-invariant). With wide splits the operator's parallelism
+        # floor no-ops and the plan is scan -> Arrow encode, no exchange.
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 << 20))
+        _bpe_cache: dict = {}
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path).select("doc_id", "text")
+            # train once, encode many — the production shape: the merge
+            # loop runs over the corpus-size-independent word-count table
+            # and its artifact is a fixed cost shared by every level, so
+            # training stays outside the timed region (like the semdedup
+            # quantizer). Work metric = subword tokens emitted: a property
+            # of (corpus, artifact), identical at every level — computed
+            # by one untimed encode pass. Both are cached across the
+            # n_runs repeats of THIS process (same corpus, same artifact);
+            # only the timed encode below repeats.
+            if path not in _bpe_cache:
+                art = train_bpe(docs, "text", n_merges=200)
+                enc = bpe_encode(docs, "doc_id", "text", art)
+                _bpe_cache[path] = (art, enc.agg({"n_tok": "sum"}).collect()[0][0])
+            art, n_sub = _bpe_cache[path]
+            t0 = time.perf_counter()
+            bpe_encode(docs, "doc_id", "text", art).write.format(
+                "noop"
+            ).mode("overwrite").save()
+            return n_sub, time.perf_counter() - t0
+    elif job == "normalize":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import normalize_text
+
+        # CPU-heavy per byte like bpe: size scan splits to the data so the
+        # first stage is wide at both levels (scale-invariant rule). 4 MB
+        # splits, not 8: the first cut at 8 MB gave ~12 tasks for a 90 MB
+        # corpus — 1.5 waves at 8 slots, and the wave-quantization tail
+        # alone caps efficiency at ~0.67 regardless of the kernel
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 << 20))
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path).select("doc_id", "text")
+            # 10% of docs carry non-ASCII byte forms (BOM + NFD accent +
+            # CRLF) — the realistic mixed-corpus shape: the kernel's
+            # string_is_ascii short-circuit must carry most batches but
+            # must NOT be allowed to no-op the whole measurement
+            spiked = docs.withColumn(
+                "text",
+                F.when(
+                    F.col("doc_id") % 10 == 0,
+                    F.concat(
+                        F.lit("\ufeffCafe\u0301 \r\n"), F.col("text")
+                    ),
+                ).otherwise(F.col("text")),
+            )
+            # work metric = characters scanned (a corpus property,
+            # identical at every level, NOT timed)
+            n_chars = spiked.agg(F.sum(F.length("text"))).collect()[0][0]
+            t0 = time.perf_counter()
+            normalize_text(spiked, "doc_id", "text").write.format(
+                "noop"
+            ).mode("overwrite").save()
+            return n_chars, time.perf_counter() - t0
+    elif job in ("span", "span_intervals"):
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import span_dedup
+        from geofeaturegeneration_spark.operators.dedup import (
+            span_dup_intervals,
+        )
+
+        # same split sizing as normalize/bpe: the first stage (split +
+        # window-hash explode) is CPU-heavy per byte, so splits must track
+        # the data for the stage to be wide at both levels
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 << 20))
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path).select("doc_id", "text")
+            # work metric = corpus token count (a corpus property,
+            # identical at every level, NOT timed). The dedup-scaling
+            # corpus is the right stressor: copy-0 docs win, every exact/
+            # near dup contributes its full text as duplicated windows, so
+            # the loser join + span merge + reassembly all carry real mass
+            n_tok = docs.agg(
+                F.sum(F.size(F.split("text", " ")))
+            ).collect()[0][0]
+            t0 = time.perf_counter()
+            # span_intervals isolates stages 1-2 (window-hash md5 stream +
+            # min-struct winner + loser join + island merge) from the
+            # reassembly join — the decomposition evidence for the
+            # composite number, same method as the dedup job's md5-stage
+            # attribution in BASELINE.md
+            out = (
+                span_dup_intervals(docs, "doc_id", "text", k=50)
+                if job == "span_intervals"
+                else span_dedup(docs, "doc_id", "text", k=50)
+            )
+            out.write.format("noop").mode("overwrite").save()
+            return n_tok, time.perf_counter() - t0
+    elif job == "edit":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.functions.text import ascii_key
+        from geofeaturegeneration_spark.operators import edit_join
+
+        # the variant explode + hash join are CPU-heavy per key byte —
+        # same split sizing rule as normalize/span so the first stage is
+        # wide at both levels
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 << 20))
+
+        def run_job(spark, path):
+            # key canonicalization is embarrassingly parallel scan work;
+            # what the scaling claim must cover is the operator's own
+            # machinery (variant explode + hash join + distinct + verify),
+            # so the keyed table is materialized once UNTIMED and the job
+            # times edit_join over it — the dedup-scaling corpus is the
+            # right stressor: every copy group collapses to identical or
+            # near-identical 24-char keys, so the variant join carries
+            # real dist-0/1 pair mass, not just candidate churn
+            key_path = path + "_edit_keys"
+            if not os.path.exists(os.path.join(key_path, "_SUCCESS")):
+                docs = spark.read.parquet(path).select("doc_id", "text")
+                docs.select(
+                    "doc_id", ascii_key(F.col("text"), 24).alias("key")
+                ).repartition(32).write.mode("overwrite").parquet(key_path)
+            keyed = spark.read.parquet(key_path)
+            # work metric = key count (a corpus property, identical at
+            # every level, NOT timed)
+            n_keys = keyed.count()
+            t0 = time.perf_counter()
+            edit_join(keyed, "doc_id", "key", max_dist=1).write.format(
+                "noop"
+            ).mode("overwrite").save()
+            return n_keys, time.perf_counter() - t0
+    elif job == "pr":
+        import time
+
+        from pyspark.sql import Window as W
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import pagerank
+
+        def run_job(spark, path):
+            # the scaling claim targets the ITERATIVE join/agg rounds, so
+            # the edge table is synthesized once UNTIMED — a natural-text
+            # bigram graph off the zipf corpus has only ~2k distinct edges
+            # (vocab-bounded), which measures per-round job overhead, not
+            # the operator; a web-shaped random graph (4M edges, 250k
+            # nodes, md5-deterministic) gives the rounds real shuffle mass
+            n_edges = int(os.environ.get("PR_EDGES", 4_000_000))
+            pr_iters = int(os.environ.get("PR_ITERS", 5))
+            edge_path = f"/tmp/gfg_scale_pr_edges_{n_edges}"
+            if not os.path.exists(os.path.join(edge_path, "_SUCCESS")):
+                from geofeaturegeneration_spark.functions.text import (
+                    md5_long,
+                )
+
+                n_nodes = max(n_edges // 16, 1)
+                e = (
+                    spark.range(n_edges)
+                    .select(
+                        (md5_long(F.concat(F.lit("s"), F.col("id")))
+                         % n_nodes).alias("src"),
+                        (md5_long(F.concat(F.lit("d"), F.col("id")))
+                         % n_nodes).alias("dst"),
+                    )
+                    .filter(F.col("src") != F.col("dst"))
+                    .distinct()
+                )
+                e.repartition(32).write.mode("overwrite").parquet(edge_path)
+            edges = spark.read.parquet(edge_path)
+            # work metric = edge count x iterations (a corpus property)
+            n_real = edges.count()
+            t0 = time.perf_counter()
+            pagerank(edges, n_iter=pr_iters).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return n_real * pr_iters, time.perf_counter() - t0
+    elif job == "sketch":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import heavy_hitters
+        from geofeaturegeneration_spark.operators.dedup import _shingles_expr
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path)
+            # work metric = 3-word shingle occurrences (each is hashed
+            # depth+? times across the two passes); a cheap expression agg,
+            # identical at every level, NOT timed
+            n_shingles = docs.agg(
+                F.sum(F.greatest(F.size(F.split("text", " ")) - 2, F.lit(0)))
+            ).collect()[0][0]
+            t0 = time.perf_counter()
+            stream = (
+                docs.select(F.split(F.col("text"), " ").alias("_gfs_w"))
+                .select(
+                    F.explode_outer(_shingles_expr("_gfs_w", 3)).alias("shingle")
+                )
+                .filter(F.col("shingle").isNotNull())
+            )
+            hh = heavy_hitters(stream, "shingle", min_count=20)
+            hh.write.format("noop").mode("overwrite").save()
+            return n_shingles, time.perf_counter() - t0
+    elif job == "hll":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import hll_count
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path)
+            # work metric = word occurrences (each is md5-hashed once)
+            n_words = docs.agg(
+                F.sum(F.size(F.split("text", " ")))
+            ).collect()[0][0]
+            t0 = time.perf_counter()
+            words = docs.select(
+                F.explode(F.split(F.col("text"), " ")).alias("w")
+            )
+            hll_count(words, "w", p=14).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            return n_words, time.perf_counter() - t0
+    elif job == "hist":
+        import time
+
+        from pyspark.sql import functions as F
+
+        from geofeaturegeneration_spark.operators import hist_quantile_values
+
+        def run_job(spark, path):
+            docs = spark.read.parquet(path)
+            n_words = docs.agg(
+                F.sum(F.size(F.split("text", " ")))
+            ).collect()[0][0]
+            t0 = time.perf_counter()
+            lens = docs.select(
+                F.explode(F.split(F.col("text"), " ")).alias("w")
+            ).select(F.length("w").cast("long").alias("v"))
+            hist_quantile_values(
+                lens, "v", [500_000, 990_000], sub_bits=5
+            ).write.format("noop").mode("overwrite").save()
+            return n_words, time.perf_counter() - t0
+    else:
+        run_job = token_pipeline
 
     walls = []
     n_tokens = 0
     for _ in range(n_runs):
-        n_tokens, wall = token_pipeline(spark, seq_path)
+        n_tokens, wall = run_job(spark, seq_path)
         walls.append(wall)
     best = min(walls)
     print(json.dumps({

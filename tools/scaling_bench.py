@@ -1,11 +1,10 @@
 """Two-parallelism scaling bench (north-rule evidence).
 
-A real N -> 4N executor comparison needs a cluster; one host evidences the
-same property by running the token feature pipeline (``bench.token_pipeline``:
-the job's ``build_features`` plus the chunk export) at local[N] and
-local[4N] on the same input, each level in a fresh process.
+A real N -> 4N executor comparison needs a cluster; this sandbox evidences
+the same property by running the identical job at local[8] and local[32]
+on the same input (32 physical cores, so 4x genuinely more compute).
 
-    python tools/scaling_bench.py [--n-docs 100000] [--n-low 2] [--md-out BENCH.md]
+    python tools/scaling_bench.py [--n-docs 20000] [--md-out BENCH.md]
 
 scaling efficiency = (thr_4N / thr_N) / 4
 """
@@ -47,10 +46,45 @@ def ensure_input(n_docs: int) -> str:
     return path
 
 
-def run_level(cpus: int, seq_path: str) -> dict:
+def ensure_emb_input(n_vecs: int, dim: int = 64, n_latent: int = 16) -> str:
+    """Scaling input for the semantic-dedup job: ``n_vecs`` embeddings
+    around ``n_latent`` latent directions (unit center + 0.5-sigma noise,
+    same-cluster non-dup cosine ~ 0.8), with every 5th vector a planted
+    near-duplicate of the previous one (cos ~ 0.999) so the screen has
+    real work at threshold 0.95. Deterministic (seeded numpy)."""
+    path = f"/tmp/gfg_scale_emb_{n_vecs}"
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return path
+    import numpy as np
+    import pandas as pd
+
+    from geofeaturegeneration_spark.session import get_spark
+
+    rng = np.random.default_rng(42)
+    centers = rng.standard_normal((n_latent, dim))
+    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
+    cl = rng.integers(0, n_latent, n_vecs)
+    V = centers[cl] + 0.5 * rng.standard_normal((n_vecs, dim)) / np.sqrt(dim)
+    dup = np.arange(n_vecs) % 5 == 4
+    V[dup] = V[np.arange(n_vecs)[dup] - 1] + 0.001 * rng.standard_normal(
+        (int(dup.sum()), dim)
+    )
+    pdf = pd.DataFrame(
+        {"vec_id": np.arange(n_vecs, dtype=np.int64),
+         "embedding": list(V.astype(np.float32))}
+    )
+    spark = get_spark("scale_emb_gen")
+    spark.createDataFrame(pdf, "vec_id LONG, embedding ARRAY<FLOAT>").repartition(
+        32
+    ).write.mode("overwrite").parquet(path)
+    spark.stop()
+    return path
+
+
+def run_level(cpus: int, seq_path: str, job: str = "pipeline") -> dict:
     out = subprocess.run(
         [sys.executable, os.path.join(os.path.dirname(__file__), "scale_worker.py"),
-         str(cpus), seq_path, os.environ.get("SCALE_RUNS", "4")],
+         str(cpus), seq_path, os.environ.get("SCALE_RUNS", "4"), job],
         capture_output=True, text=True, check=True,
     )
     return json.loads(out.stdout.strip().splitlines()[-1])
@@ -65,13 +99,44 @@ def main() -> None:
                         "raw-CPU probe shows only ~3.4x capacity from 8->32 "
                         "threads — so 8->32 measures the host, not the engine)")
     p.add_argument("--md-out", default=None, help="append a results section to this md file")
+    p.add_argument("--job", default="pipeline",
+                   choices=["pipeline", "pack", "semdedup", "dsir",
+                            "sketch", "bpe", "normalize", "span",
+                            "span_intervals", "hll", "hist", "lloyd",
+                            "edit", "pr"],
+                   help="pipeline = token feature pipeline; pack = "
+                        "pack_sequences over the same table; semdedup = "
+                        "semantic_dedup over a synthetic embedding corpus "
+                        "(--n-vecs); dsir = importance_weights over the "
+                        "dedup-scaling text corpus (--n-copies/"
+                        "--text-repeat); sketch = count-min heavy_hitters "
+                        "over the same corpus's 3-word shingles; bpe = "
+                        "bpe_encode over the same corpus (artifact "
+                        "trained once, untimed; sized by --n-copies/"
+                        "--text-repeat)")
+    p.add_argument("--n-vecs", type=int, default=400000,
+                   help="corpus size for --job semdedup")
+    p.add_argument("--n-copies", type=int, default=20,
+                   help="corpus replication for --job dsir (20 -> 100k docs)")
+    p.add_argument("--text-repeat", type=int, default=3,
+                   help="doc-length multiplier for --job dsir")
     args = p.parse_args()
 
-    seq_path = ensure_input(args.n_docs)
-    lo = run_level(args.n_low, seq_path)
-    hi = run_level(args.n_low * 4, seq_path)
+    if args.job in ("semdedup", "lloyd"):
+        seq_path = ensure_emb_input(args.n_vecs)
+    elif args.job in ("dsir", "sketch", "bpe", "normalize", "span",
+                      "span_intervals", "hll", "hist", "edit", "pr"):
+        sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+        from dedup_scaling import ensure_corpus
+
+        seq_path = ensure_corpus(args.n_copies, args.text_repeat)
+    else:
+        seq_path = ensure_input(args.n_docs)
+    lo = run_level(args.n_low, seq_path, args.job)
+    hi = run_level(args.n_low * 4, seq_path, args.job)
     ratio = hi["tokens_per_sec"] / lo["tokens_per_sec"]
     result = {
+        "job": args.job,
         "n_docs": args.n_docs,
         "n_tokens": hi["n_tokens"],
         f"local{args.n_low}": lo,
@@ -81,13 +146,33 @@ def main() -> None:
     }
     print(json.dumps(result))
 
+    job_title = {
+        "pipeline": "token feature pipeline",
+        "pack": "pack_sequences (seq_len=512, n_groups=64)",
+        "semdedup": "semantic_dedup (16 trained clusters, threshold 0.95)",
+        "dsir": "DSIR importance_weights (hashed 1..2-grams, 8192 buckets)",
+        "sketch": "count-min heavy_hitters (3-word shingles, depth 4, width 8192, min_count 20)",
+        "bpe": "bpe_encode (200-merge artifact trained once, untimed)",
+        "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
+        "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
+        "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
+        "hll": "hll_count (distinct words, p=14)",
+        "hist": "hist_quantile_values (word-length p50/p99, sub_bits=5)",
+        "lloyd": "lloyd_refine (16 centroids, 2 full-corpus iterations)",
+        "edit": "edit_join (24-char ascii keys, max_dist=1, symmetric-delete blocking)",
+        "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
+    }[args.job]
+    unit = {"semdedup": "vectors", "dsir": "grams", "sketch": "shingles",
+            "bpe": "subword tokens", "normalize": "chars",
+            "hll": "words", "hist": "words",
+            "lloyd": "vector-iterations"}.get(args.job, "tokens")
     if args.md_out:
         with open(args.md_out, "a") as f:
             f.write(
-                f"\n## Scaling evidence (token feature pipeline, "
-                f"{hi['n_tokens']:,} tokens)\n\n"
+                f"\n## Scaling evidence ({job_title}, "
+                f"{hi['n_tokens']:,} {unit})\n\n"
                 "Same job, same input, two parallelism levels:\n\n"
-                "| level | wall (best of runs) | tokens/sec |\n"
+                f"| level | wall (best of runs) | {unit}/sec |\n"
                 "| --- | --- | --- |\n"
                 f"| local[{args.n_low}] | {lo['wall_s']} s | {lo['tokens_per_sec']:,} |\n"
                 f"| local[{args.n_low * 4}] | {hi['wall_s']} s | {hi['tokens_per_sec']:,} |\n\n"
