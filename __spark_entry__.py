@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exposes every implemented operator from SURVEY.md §2 (plus the
-training-data-pipeline additions: dedup, similarity search, text analysis,
-multimodal plumbing) as (spark, sf_dir) -> DataFrame callables;
+training-data-pipeline additions: dedup, similarity search, text
+analysis) as (spark, sf_dir) -> DataFrame callables;
 ``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each.
 
 Cross-engine determinism rules used throughout (validated empirically):
@@ -44,7 +44,6 @@ from geofeaturegeneration_spark.operators import (
     ann_lsh_topk,
     embedding_neardup_pairs,
     asof_join,
-    attach_payload,
     build_vocab,
     chunk_sequences,
     cosine_topk,
@@ -52,7 +51,6 @@ from geofeaturegeneration_spark.operators import (
     edit_join,
     edit_join_cross,
     exact_dedup,
-    extract_meta,
     fim_transform,
     interaction_matrix,
     lag_lead_features,
@@ -617,24 +615,6 @@ def q_edit_clusters(spark, sf_dir):
     return dedup_clusters(docs, "doc_id", pairs)
 
 
-def q_bm25_negatives(spark, sf_dir):
-    """DPR-style hard-negative mining: the same every-83rd-doc queries as
-    the in-window bm25_topk, with each query's own source document (its
-    natural positive, always the #1 hit) anti-joined out and ranks
-    re-numbered — the top-k lexically-confusable-but-not-relevant docs
-    that make the hardest contrastive training negatives."""
-    from geofeaturegeneration_spark.operators import bm25_hard_negatives
-
-    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
-    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
-        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
-    )
-    pos = qs.select("q_id", F.col("q_id").alias("doc_id"))
-    return bm25_hard_negatives(
-        docs, "doc_id", "text", qs, "q_id", "q_text", pos, k=10
-    )
-
-
 def q_fim_transform(spark, sf_dir):
     """Fill-in-middle training export (round 4, PSM order): a deterministic
     60% of docs rewritten to [PRE] prefix [SUF] suffix [MID] middle with
@@ -924,28 +904,6 @@ def q_fingerprint(spark, sf_dir):
     return docs.select("doc_id", X.fingerprint(F.col("text")).alias("fp"))
 
 
-def q_multimodal_meta(spark, sf_dir):
-    docs = _t(spark, sf_dir, "documents")
-    return extract_meta(attach_payload(docs, "doc_id", "text"))
-
-
-def q_frame_sample(spark, sf_dir):
-    from geofeaturegeneration_spark.operators import sample_frames
-
-    docs = _t(spark, sf_dir, "documents")
-    return sample_frames(attach_payload(docs, "doc_id", "text"), every_n=4).select(
-        "doc_id", "frame_idx", "frame_off", "frame_len"
-    )
-
-
-def q_embed_payload(spark, sf_dir):
-    from geofeaturegeneration_spark.operators import embed_payload
-
-    docs = _t(spark, sf_dir, "documents")
-    out = embed_payload(attach_payload(docs, "doc_id", "text"), dim=8)
-    return out.select("doc_id", _darr_csv("embedding").alias("embedding"))
-
-
 def q_minmax(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     out = minmax_normalize(ev, "value", group_cols=["event_type"])
@@ -1096,21 +1054,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver contract. HARD CONSTRAINT (measured in round 2): the
     driver evaluates only the FIRST 50 dict entries — round 2 registered 55
     and the last five got no CORRECTNESS row. This dict therefore holds
-    exactly 50 entries, with the five that had never been driver-verified
-    (series_matrix, contrastive, stay_enrich, hash_split, negative_samples)
-    moved to the front. Physical-strategy twins and folded variants live in
-    ``extra_queries()`` — same oracle discipline, checked by
-    tools/compare_oracle.py and pytest, just outside the driver window."""
+    at most 50 entries; tools/rotation.py chooses which. Physical-strategy
+    twins and folded variants live in ``extra_queries()`` — same oracle
+    discipline, checked by tools/compare_oracle.py and pytest, just
+    outside the driver window."""
     return {
         # --- round 5: the six operators whose distinctive machinery never
         # had a driver CORRECTNESS row, promoted by the rotation POLICY
         # (tools/rotation.py: CORRECTNESS_r01-r04 history joined against
         # rotation_hints(); this window is the tool's verbatim proposal).
         # Slots freed by folding series_matrix, contrastive, hash_split,
-        # repetition, multimodal_meta, grid_cantor — each long driver-green
-        # with its machinery still covered in-window or by pytest (reasons
-        # recorded in rotation_hints()["foldable"] and at their new
-        # extra_queries() entries) ---
+        # repetition, multimodal_meta (since retired), grid_cantor — each
+        # long driver-green with its machinery still covered in-window or
+        # by pytest (reasons recorded in rotation_hints()["foldable"] and at
+        # their new extra_queries() entries) ---
         "bpe_roundtrip": q_bpe_roundtrip,
         "chunk_strided": q_chunk_strided,
         "edit_join_cross": q_edit_join_cross,
@@ -1170,12 +1127,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # operator) — slot freed by folding `time_features` (pure calendar
         # column expressions, driver-green r01-r03) into extra_queries()
         "shuffle_shards": q_shuffle_shards,
-        # round 4: BM25 lexical retrieval (new operator — the lexical
-        # sibling of the embedding similarity family) — slot freed by
-        # folding `tpch_pricing` (a generic TPC-H demo aggregation from
-        # round 1, driver-green r01-r03, not a SURVEY §2 operator; the
-        # TPC-H layer keeps orders_enrich in-window) into extra_queries()
-        "bm25_topk": q_bm25_topk,
         # round 4: HLL cardinality sketch (new operator — completes the
         # mergeable-sketch triad: CMS = frequency, Bloom = membership,
         # HLL = cardinality) — slot freed by folding `orders_enrich` (the
@@ -1228,14 +1179,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # normalize_text in-window) into extra_queries()
         "hist_quantiles": q_hist_quantiles,
         # round 4: CCNet-style hashed-bigram LM scoring (new operator) —
-        # slot freed by folding `embed_payload` (driver-green r01-r03; the
-        # multimodal family keeps two in-window slots) into extra_queries()
+        # slot freed by folding the multimodal payload embedding (since
+        # retired with its module) into extra_queries()
         "lm_logprob": q_lm_logprob,
         # round 4: mergeable-sketch family (new operators). Slots freed by
-        # folding `frame_sample` (driver-green r01-r03; multimodal keeps
-        # multimodal_meta in-window) and `sliding_subseq` (driver-green
-        # r01-r03; the windows family keeps lag_lead + rolling in-window)
-        # into extra_queries().
+        # folding the multimodal frame sampler (since retired) and
+        # `sliding_subseq` (driver-green r01-r03; the windows family keeps
+        # lag_lead + rolling in-window) into extra_queries().
         "heavy_hitters": q_heavy_hitters,
         "bloom_screen": q_bloom_screen,
         # corpus drift monitor (KL/JS over the shared hashed-gram space):
@@ -1906,52 +1856,6 @@ def q_lm_logprob(spark, sf_dir):
     )
 
 
-def q_bm25_topk(spark, sf_dir):
-    """BM25 lexical top-k retrieval: every 83rd document (offset 5)
-    plays a more-like-this query against the full corpus — the
-    decontamination-audit / data-selection shape. Scaled-int64 term
-    contributions keep the score shuffle-order-proof; rank ties break on
-    doc_id. Query terms are broadcast so corpus postings for non-query
-    terms never shuffle."""
-    from geofeaturegeneration_spark.operators import bm25_topk
-
-    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
-    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
-        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
-    )
-    return bm25_topk(docs, "doc_id", "text", qs, "q_id", "q_text", k=10)
-
-
-def q_bm25_scores(spark, sf_dir):
-    """The pre-top-k stage of q_bm25_topk: the full (query, matching doc)
-    score table — same corpora, no rank window."""
-    from geofeaturegeneration_spark.operators import bm25_scores
-
-    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
-    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
-        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
-    )
-    return bm25_scores(docs, "doc_id", "text", qs, "q_id", "q_text")
-
-
-def q_bm25_topk_maxdf(spark, sf_dir):
-    """q_bm25_topk under the max_df_frac=0.78 stop-filter: terms in more
-    than floor(0.78 * N) docs are pruned from scoring — the knob that
-    bounds the postings x queries join at corpus scale. At sf0.01 the
-    threshold (390 of 500 docs) keeps 14 of the 31 vocabulary terms, so
-    the pruning is exercised non-vacuously on both sides."""
-    from geofeaturegeneration_spark.operators import bm25_topk
-
-    docs = _docs_wide(spark, sf_dir).select("doc_id", "text")
-    qs = docs.filter(F.col("doc_id") % 83 == 5).select(
-        F.col("doc_id").alias("q_id"), F.col("text").alias("q_text")
-    )
-    return bm25_topk(
-        docs, "doc_id", "text", qs, "q_id", "q_text", k=10,
-        max_df_frac=0.78,
-    )
-
-
 def q_temperature_mix(spark, sf_dir):
     """Temperature-scaled mixture sampling (alpha=0.5 upsample-the-tail,
     target half the corpus): driver-computed integer ppm rates realized
@@ -1993,19 +1897,17 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # edit_join_cross / epoch_upsample / ivf_lloyd / leakage_split
         # their first CORRECTNESS rows. Each is long driver-green
         # (series_matrix + contrastive r03-r04; hash_split r01+r03-r04;
-        # repetition r02-r04; multimodal_meta + grid_cantor r01-r04) and
-        # keeps coverage: repetition's pure expressions sit beside the
-        # in-window text_stats, grid_cantor's math rides stay_enrich,
-        # hash_split's md5 draw is leakage_split's split stage,
-        # multimodal_meta's Arrow path has frame_sample/embed_payload here,
-        # and series_matrix/contrastive are pytest-pinned
-        # (test_matrix_split.py) — all six stay value-exact under
+        # repetition r02-r04; grid_cantor r01-r04) and keeps coverage:
+        # repetition's pure expressions sit beside the in-window
+        # text_stats, grid_cantor's math rides stay_enrich, hash_split's
+        # md5 draw is leakage_split's split stage, and
+        # series_matrix/contrastive are pytest-pinned
+        # (test_matrix_split.py) — all five stay value-exact under
         # compare_oracle.
         "series_matrix": q_series_matrix,
         "contrastive": q_contrastive,
         "hash_split": q_hash_split,
         "repetition": q_repetition,
-        "multimodal_meta": q_multimodal_meta,
         "grid_cantor": q_grid,
         # round 4: folded out of the driver window to give source_quota and
         # source_sample their first CORRECTNESS rows. `vocab` is the literal
@@ -2016,20 +1918,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # compare_oracle.
         "vocab": q_vocab,
         "token_roundtrip": q_token_roundtrip,
-        # round 4: folded to give bm25_topk its first driver row — a
-        # generic TPC-H demo aggregation from round 1 (driver-green
-        # r01-r03), not a SURVEY §2 operator; orders_enrich keeps the
-        # TPC-H join layer in-window. `bm25_scores` is the pre-top-k
-        # stage of the in-window bm25_topk (full score table, no rank
-        # window), verified here value-exact.
+        # round 4: folded out of the driver window — a generic TPC-H demo
+        # aggregation from round 1 (driver-green r01-r03), not a SURVEY §2
+        # operator; orders_enrich keeps the TPC-H join layer in-window.
         "tpch_pricing": q_tpch_pricing,
-        "bm25_scores": q_bm25_scores,
-        # the stop-filtered (max_df_frac) form of the in-window bm25_topk —
-        # the quadratic-safety knob, exercised non-vacuously
-        "bm25_topk_maxdf": q_bm25_topk_maxdf,
-        # DPR hard-negative mining: bm25_scores minus the query's own
-        # positive, ranks re-numbered — the contrastive-training sibling
-        "bm25_negatives": q_bm25_negatives,
         # the per_doc=True scope of the in-window line_dedup (within-doc
         # repeated-line trim, no cross-doc state)
         "line_dedup_doc": q_line_dedup_doc,
@@ -2037,12 +1929,10 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # block-diagonal-attention metadata (per-token segment ids +
         # per-chunk doc counts)
         "pack_segments": q_pack_segments,
-        # round 4: folded to free the heavy_hitters / bloom_screen sketch
-        # slots — frame_sample keeps its multimodal sibling
-        # (multimodal_meta) in-window, sliding_subseq its windows siblings
-        # (lag_lead, rolling); both were driver-green r01-r03 and stay
-        # value-exact under compare_oracle.
-        "frame_sample": q_frame_sample,
+        # round 4: folded to free a heavy_hitters / bloom_screen sketch
+        # slot — sliding_subseq keeps its windows siblings (lag_lead,
+        # rolling) in-window; driver-green r01-r03 and value-exact under
+        # compare_oracle.
         "sliding_subseq": q_sliding,
         # round 4: the literal first stage of the in-window dedup_exact
         # (exact_dedup groups BY this fingerprint) — folded to free the
@@ -2119,10 +2009,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exact int64 token sums, rates realized through the identical
         # source_sample draw
         "temperature_tokens": q_temperature_tokens,
-        # round 4: folded out of the driver window (driver-green r01-r03)
-        # to give lm_logprob a contract row — the multimodal family keeps
-        # multimodal_meta and frame_sample in-window
-        "embed_payload": q_embed_payload,
         # node-degree features derived ENTIRELY from the in-window
         # traj_graph edge table (union + groupBy of its output) — verified
         # transitively by the contract entry, value-exact here
@@ -2369,49 +2255,6 @@ sc AS (SELECT rb.doc_id,
                                   ELSE {_LM_D_CTX} END))::BIGINT AS lp_sum
        FROM rb LEFT JOIN model USING (space, b) GROUP BY rb.doc_id)
 """
-
-
-# BM25 CTEs (retrieval.bm25_scores / bm25_topk; k1=1.2, b=0.75,
-# scale=10000; queries = every 83rd doc, offset 5). The per-(doc,term)
-# contribution replays the operator's fixed float tree verbatim —
-#   idf = ln((n - df + 0.5) / (df + 0.5) + 1.0)
-#   tfn = (tf * 2.2) / (tf + 1.2 * (0.25 + 0.75 * dl / avgdl))
-#   contrib = round(10000.0 * (idf * tfn)) :: BIGINT
-# — so per-pair scores are exact integer sums on both engines; n and
-# avgdl are exact-int-to-double conversions + one IEEE division.
-def _bm25_ctes(dft_having: str = "") -> str:
-    """BM25 oracle CTE chain; ``dft_having`` appends a HAVING clause to the
-    document-frequency table — the max_df/max_df_frac pruning hook
-    (operators/retrieval.py bm25_scores)."""
-    return f"""
-WITH
-d AS (SELECT doc_id, coalesce(len(string_split(text,' ')), 0)::BIGINT AS dl,
-             string_split(text,' ') AS ws
-      FROM documents),
-st AS (SELECT count(*)::DOUBLE AS n, sum(dl)::DOUBLE / count(*) AS avgdl
-       FROM d),
-q AS (SELECT DISTINCT doc_id AS q_id, unnest(ws) AS term
-      FROM d WHERE doc_id % 83 = 5),
-toks AS (SELECT doc_id, dl, unnest(ws) AS term FROM d),
-tf AS (SELECT doc_id, dl, term, count(*)::BIGINT AS tf
-       FROM toks WHERE term IN (SELECT term FROM q)
-       GROUP BY 1, 2, 3),
-dft AS (SELECT term, count(*)::BIGINT AS df FROM tf GROUP BY 1{dft_having}),
-c AS (SELECT tf.doc_id, tf.term,
-             round(10000.0 * (
-               ln((st.n - dft.df + 0.5) / (dft.df + 0.5) + 1.0)
-               * ((tf.tf * 2.2)
-                  / (tf.tf + 1.2 * (0.25 + 0.75 * tf.dl / st.avgdl)))
-             ))::BIGINT AS contrib
-      FROM tf CROSS JOIN st JOIN dft USING (term)),
-s AS (SELECT q.q_id, c.doc_id, count(*)::INT AS n_terms,
-             sum(c.contrib)::BIGINT AS score_int
-      FROM c JOIN q USING (term)
-      GROUP BY 1, 2)
-"""
-
-
-_BM25_CTES = _bm25_ctes()
 
 
 # Hash-sampled negative-candidate CTEs (expects an ``inter`` CTE with
@@ -2777,9 +2620,6 @@ def rotation_hints() -> dict[str, dict]:
         "fingerprint": "dedup_exact",
         "minhash_sigs": "minhash_pairs",
         "simhash": "simhash_pairs",
-        "bm25_scores": "bm25_topk",
-        "bm25_topk_maxdf": "bm25_topk",
-        "bm25_negatives": "bm25_topk",
         "importance_weights": "importance_resample",
         "graph_nodes": "traj_graph",
         "hll_registers": "hll_count",
@@ -2809,8 +2649,6 @@ def rotation_hints() -> dict[str, dict]:
         "temperature_tokens": "source_sample",
         "traj_pagerank": "pagerank",
         "lang_id": "text_stats",
-        "frame_sample": "multimodal_meta",
-        "embed_payload": "multimodal_meta",
         "interaction_matrix": "pivot_counts",
         "interaction_wide": "pivot_counts",
         "sliding_subseq": "rolling",
@@ -2820,8 +2658,6 @@ def rotation_hints() -> dict[str, dict]:
         # reason strings are documentation for the proposal output
         "repetition": "pure expressions beside text_stats (its carrier)",
         "grid_cantor": "grid math also rides the in-window stay_enrich",
-        "multimodal_meta": "Arrow meta family; 4 green driver rounds,"
-        " frame_sample/embed_payload twins stay oracle-exact in extras",
         "contrastive": "green r03+r04; composition of split/window"
         " machinery pinned by tests/test_matrix_split.py",
         "series_matrix": "green r03+r04; the SQL collect/sort/pad plan is"
@@ -2867,48 +2703,6 @@ SELECT n_name, count(*)::BIGINT AS n_orders,
 FROM orders JOIN customer ON o_custkey=c_custkey
             JOIN nation ON c_nationkey=n_nationkey
 GROUP BY 1
-""",
-        # mirrors operators/retrieval (k1=1.2, b=0.75, scale=10000;
-        # queries = every 83rd doc, offset 5): per-(doc,term) BM25
-        # contribution in the IDENTICAL float expression order, rounded
-        # to scaled int64 (exact integer per-pair sums); n and avgdl are
-        # the same exact-int-to-double conversions + one IEEE division.
-        # sum(BIGINT) is HUGEINT in DuckDB -> cast back to BIGINT.
-        "bm25_topk": _BM25_CTES + """
-SELECT q_id, doc_id, rank, n_terms, score_int,
-       score_int::DOUBLE / 10000.0 AS score
-FROM (SELECT *, CAST(row_number() OVER
-        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
-        AS rank FROM s)
-WHERE rank <= 10
-""",
-        "bm25_scores": _BM25_CTES + """
-SELECT q_id, doc_id, n_terms, score_int,
-       score_int::DOUBLE / 10000.0 AS score
-FROM s
-""",
-        # max_df_frac=0.78 stop-filter: HAVING prunes the df table, the
-        # same place the Spark side filters; floor(frac * n) replays the
-        # one IEEE multiply+floor exactly
-        "bm25_topk_maxdf": _bm25_ctes(
-            "\n       HAVING count(*) <= floor(0.78 * (SELECT n FROM st))"
-        ) + """
-SELECT q_id, doc_id, rank, n_terms, score_int,
-       score_int::DOUBLE / 10000.0 AS score
-FROM (SELECT *, CAST(row_number() OVER
-        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
-        AS rank FROM s)
-WHERE rank <= 10
-""",
-        # bm25_negatives: the bm25 score table minus each query's own
-        # source doc (its positive), ranks re-numbered over the survivors
-        "bm25_negatives": _BM25_CTES + """
-SELECT q_id, doc_id, rank, n_terms, score_int,
-       score_int::DOUBLE / 10000.0 AS score
-FROM (SELECT *, CAST(row_number() OVER
-        (PARTITION BY q_id ORDER BY score_int DESC, doc_id ASC) AS INT)
-        AS rank FROM s WHERE doc_id != q_id)
-WHERE rank <= 10
 """,
         "top_customers": """
 WITH rev AS (
@@ -3499,36 +3293,6 @@ FROM b
 """,
         "fingerprint": f"""
 SELECT doc_id, {_MD5L.format(x=_NORM_TEXT)} AS fp FROM documents
-""",
-        "frame_sample": """
-WITH m AS (
-  SELECT doc_id, octet_length(encode(text))::BIGINT AS n,
-         (octet_length(encode(text)) % 16 + 1)::BIGINT AS n_frames
-  FROM documents),
-s AS (SELECT doc_id, n, greatest(n // n_frames, 1) AS flen,
-             unnest(generate_series(0, n_frames - 1, 4)) AS frame_idx
-      FROM m)
-SELECT doc_id, frame_idx::INT AS frame_idx,
-       (frame_idx * flen)::BIGINT AS frame_off,
-       least(flen, n - frame_idx * flen)::BIGINT AS frame_len
-FROM s
-""",
-        "embed_payload": """
-SELECT doc_id,
-       array_to_string(
-         list_transform(generate_series(0, 7),
-                        i -> round((((octet_length(encode(text)) * (i + 3)) % 997)
-                                    / 997.0) * 1000000)::BIGINT),
-         ',') AS embedding
-FROM documents
-""",
-        "multimodal_meta": """
-SELECT doc_id,
-       octet_length(encode(text))::BIGINT AS byte_len,
-       (octet_length(encode(text)) % 640 + 1)::INT AS width,
-       ((octet_length(encode(text)) * 7) % 480 + 1)::INT AS height,
-       (octet_length(encode(text)) % 16 + 1)::INT AS n_frames
-FROM documents
 """,
         "minmax_norm": """
 SELECT event_id, event_type,

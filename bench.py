@@ -70,9 +70,6 @@ HEADLINE = [
     "text_stats",
     "lang_id",
     "fingerprint",
-    "multimodal_meta",
-    "frame_sample",
-    "embed_payload",
     "grid_cantor",
     "geohash",
     "time_features",
@@ -103,7 +100,6 @@ HEADLINE = [
     "corpus_divergence",
     "bloom_screen",
     "bpe_roundtrip",
-    "bm25_topk",
     "ivf_lloyd",
     "epoch_upsample",
     # round 5: the remaining two queries promoted into the driver window

@@ -1,9 +1,11 @@
 """SparkSession factory.
 
-Local-mode defaults are tuned for the sandbox (single JVM, 32 threads,
-128 GiB); on a real cluster the same config keys apply, only the master and
-memory sizing change. AQE is always on: it gives runtime shuffle-partition
-coalescing and skew-join splitting for free, which matters at 100 TB.
+Local-mode defaults size themselves from the host: the master takes
+``$SPARK_GRAFT_CPUS`` threads and the driver heap half the host's memory
+limit (``default_driver_memory``); on a real cluster the same config keys
+apply, only the master and memory sizing change. AQE is always on: it
+gives runtime shuffle-partition coalescing and skew-join splitting for
+free, which matters at 100 TB.
 """
 
 from __future__ import annotations
@@ -20,6 +22,36 @@ _ICEBERG_CONFIGS = {
     "spark.sql.catalog.local": "org.apache.iceberg.spark.SparkCatalog",
     "spark.sql.catalog.local.type": "hadoop",
 }
+
+# cgroup v2 and v1 memory limits; "max" (v2) or a page-rounded 2^63 (v1)
+# means no limit, which the min() with physical memory absorbs
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_DRIVER_MEMORY_CAP_MB = 48 * 1024
+
+
+def default_driver_memory(cgroup_limits=_CGROUP_LIMITS) -> str:
+    """Half of this host's memory limit, capped at 48g, as a
+    ``spark.driver.memory`` value in megabytes.
+
+    The limit is the smallest numeric cgroup limit in ``cgroup_limits``
+    and the physical memory from ``os.sysconf``. A heap sized past what
+    the host can hold never spills: Spark sizes execution memory from the
+    heap, so sorts and window buffers grow until the kernel kills the JVM.
+    Half leaves the other half to Python workers, the page cache and
+    ``spark.local.dir`` on ``/dev/shm``."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in cgroup_limits:
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():
+            limit = min(limit, int(value))
+    return f"{min(limit // 2 // 2**20, _DRIVER_MEMORY_CAP_MB)}m"
 
 
 def get_spark(
@@ -58,8 +90,14 @@ def get_spark(
         # the init cliff.
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
+        # the \r[Stage ...] bar shares terminal lines with tool output
+        # (compare_oracle's OK lines), so line counts undercount
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
     # Shuffle/spill dirs on tmpfs when available: local-mode disk bandwidth

@@ -1,6 +1,6 @@
 """Unit tests for the training-data pipeline operators: dedup, similarity,
-text analysis, multimodal plumbing. Property-style checks against small
-hand-built corpora (the DuckDB value-exact check runs separately via
+text analysis. Property-style checks against small hand-built corpora
+(the DuckDB value-exact check runs separately via
 tools/compare_oracle.py / the external driver)."""
 
 import math
@@ -22,10 +22,8 @@ from geofeaturegeneration_spark.functions.text import (
 )
 from geofeaturegeneration_spark.operators import (
     ann_lsh_topk,
-    attach_payload,
     cosine_topk,
     exact_dedup,
-    extract_meta,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     semantic_dedup,
@@ -166,24 +164,6 @@ def test_lang_stopword_lists_disjoint_enough(spark):
     assert not (en & fr) and not (en & de) and not (fr & de)
 
 
-def test_multimodal_meta_deterministic(spark, corpus):
-    out = extract_meta(attach_payload(corpus, "doc_id", "text"))
-    rows = {r["doc_id"]: r for r in out.collect()}
-    texts = {r["doc_id"]: r["text"] for r in corpus.collect()}
-    for i, t in texts.items():
-        n = len(t.encode())
-        assert rows[i]["byte_len"] == n
-        assert rows[i]["width"] == n % 640 + 1
-        assert rows[i]["height"] == (n * 7) % 480 + 1
-        assert rows[i]["n_frames"] == n % 16 + 1
-
-
-def test_decode_stub_raises(spark):
-    from geofeaturegeneration_spark.operators.multimodal import decode_image
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x00")
-
-
 def test_ann_ivf_topk(spark, vectors):
     from geofeaturegeneration_spark.operators import ann_ivf_topk
 
@@ -296,36 +276,6 @@ def test_embedding_neardup_pairs(spark):
            embedding_neardup_pairs(df, "vec_id", "embedding", threshold=0.99, n_bits=4).collect()}
     assert set(out) == {(0, 1), (0, 3), (1, 3)}
     assert all(v >= 0.99 for v in out.values())
-
-
-def test_sample_frames_shapes(spark, corpus):
-    from geofeaturegeneration_spark.operators import sample_frames
-
-    out = sample_frames(attach_payload(corpus, "doc_id", "text"), every_n=4)
-    rows = out.collect()
-    texts = {r["doc_id"]: r["text"].encode() for r in corpus.collect()}
-    by_doc = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    for doc_id, payload in texts.items():
-        n = len(payload)
-        n_frames = n % 16 + 1
-        expect_idx = list(range(0, n_frames, 4))
-        got = sorted(by_doc[doc_id], key=lambda r: r["frame_idx"])
-        assert [r["frame_idx"] for r in got] == expect_idx
-        flen = max(n // n_frames, 1)
-        for r in got:
-            assert bytes(r["frame_payload"]) == payload[r["frame_off"]:r["frame_off"] + flen]
-
-
-def test_embed_payload_deterministic(spark, corpus):
-    from geofeaturegeneration_spark.operators import embed_payload
-
-    out = {r["doc_id"]: r["embedding"] for r in
-           embed_payload(attach_payload(corpus, "doc_id", "text"), dim=4).collect()}
-    texts = {r["doc_id"]: len(r["text"].encode()) for r in corpus.collect()}
-    for doc_id, n in texts.items():
-        assert out[doc_id] == [((n * (i + 3)) % 997) / 997.0 for i in range(4)]
 
 
 def test_multi_table_lsh_amplifies_recall(spark):
@@ -1319,46 +1269,3 @@ def test_edit_join_cross_same_id_semantics(spark):
         ).collect()
     }
     assert full == {(7, 8, 0), (7, 7, 1)}
-
-
-def _ppm_decode(payload: bytes):
-    """Pure-Python P6 PPM header parse — the 'real codec' stand-in: three
-    whitespace-separated header tokens after the magic (width, height,
-    maxval), then raw pixel bytes. One frame per still image."""
-    if not payload.startswith(b"P6"):
-        raise ValueError("not a P6 PPM payload")
-    fields = payload[2:].split(None, 3)
-    width, height = int(fields[0]), int(fields[1])
-    return width, height, 1
-
-
-def test_extract_meta_real_codec_drops_in(spark):
-    """VERDICT r04 ask #3: a real decoder drops into extract_meta's
-    ``decoder`` seam without touching the Arrow plumbing — a pure PPM
-    header parser recovers the TRUE pixel dimensions (not the byte-length
-    fake), schema and row set unchanged."""
-    from geofeaturegeneration_spark.operators.multimodal import extract_meta
-
-    def ppm(doc_id, w, h):
-        header = f"P6\n{w} {h}\n255\n".encode()
-        return (doc_id, header + bytes(3 * w * h), "image/x-portable-pixmap")
-
-    imgs = [ppm(1, 4, 3), ppm(2, 16, 2), ppm(3, 1, 1)]
-    df = spark.createDataFrame(
-        imgs, "doc_id BIGINT, payload BINARY, media_type STRING"
-    )
-    rows = {r["doc_id"]: r for r in extract_meta(df, decoder=_ppm_decode).collect()}
-    assert {(r["width"], r["height"], r["n_frames"]) for r in rows.values()} == {
-        (4, 3, 1), (16, 2, 1), (1, 1, 1)
-    }
-    for doc_id, w, h in [(1, 4, 3), (2, 16, 2), (3, 1, 1)]:
-        r = rows[doc_id]
-        assert (r["width"], r["height"]) == (w, h)
-        assert r["byte_len"] == len(ppm(doc_id, w, h)[1])
-    # default (no decoder) keeps the oracle-replayable fake: byte-len math
-    fake = {r["doc_id"]: r for r in extract_meta(df).collect()}
-    for doc_id in (1, 2, 3):
-        n = fake[doc_id]["byte_len"]
-        assert fake[doc_id]["width"] == n % 640 + 1
-        assert fake[doc_id]["height"] == (n * 7) % 480 + 1
-        assert fake[doc_id]["n_frames"] == n % 16 + 1

@@ -34,7 +34,7 @@ def plan_str(df, mode: str = "formatted") -> str:
 
 
 def test_filter_and_column_pushdown(spark):
-    # tpch_pricing folded to extras round 4 (slot given to bm25_topk)
+    # tpch_pricing folded to extras round 4
     plan = plan_str({**E.queries(), **E.extra_queries()}["tpch_pricing"](spark, SF_DIR))
     scan = [b for b in plan.split("\n\n") if "PushedFilters" in b][0]
     assert "PushedFilters" in scan and "l_shipdate" in scan.split("PushedFilters")[1].split("\n")[0]
@@ -273,26 +273,13 @@ def test_shingle_and_ngram_split_staged_once(spark):
         shingle_hashes,
     )
 
-    from geofeaturegeneration_spark.streaming.screen import _band_rows
-
     df = spark.createDataFrame([(1, "a b c d e f g")], "doc_id INT, text STRING")
-    tdf = spark.createDataFrame(
-        [(1, "a b c d e f g", "2024-01-01 00:00:00")],
-        "doc_id INT, text STRING, ts STRING",
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
     consumers = {
         "shingle_hashes": shingle_hashes(df, "doc_id", "text"),
         "band_sigs": minhash_band_signatures(df, "doc_id", "text"),
         "band_sigs_rowwise": minhash_band_signatures_rowwise(df, "doc_id", "text"),
         "top_word_share": df.select(top_word_share(F.col("text")).alias("s")),
         "top_bigram_share": df.select(top_bigram_share(F.col("text")).alias("s")),
-        # streaming cross-corpus screen's signature stage, audited via its
-        # batch plan (the same InferFiltersFromGenerate hazard applies per
-        # micro-batch; dropDuplicatesWithinWatermark blocks auditing the
-        # full stream_minhash_screen on a batch frame)
-        "stream_screen_bands": _band_rows(
-            tdf, "doc_id", "text", "ts", 3, 16, 4
-        ),
     }
     for name, out in consumers.items():
         plan = out._jdf.queryExecution().optimizedPlan().toString()

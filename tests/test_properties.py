@@ -96,35 +96,6 @@ def test_hist_quantile_error_bound(spark, vals, q_ppm, sub_bits):
     )
 
 
-# ------------------------------------------------------------------ bm25
-@settings(**SETTINGS)
-@given(
-    data=st.data(),
-    n_docs=st.integers(min_value=1, max_value=8),
-    n_qs=st.integers(min_value=1, max_value=3),
-)
-def test_bm25_matches_python_model(spark, data, n_docs, n_qs):
-    """Scores equal the exact scaled-int Python replay on random corpora
-    drawn from a tiny alphabet (forcing heavy term collisions), including
-    empty texts (the single-''-term convention)."""
-    from geofeaturegeneration_spark.operators import bm25_scores
-    from tests.test_retrieval import _py_bm25
-
-    word = st.sampled_from(["x", "y", "z", "zz"])
-    text = st.lists(word, min_size=0, max_size=6).map(" ".join)
-    corpus = [(i, data.draw(text)) for i in range(n_docs)]
-    queries = [(100 + j, data.draw(text)) for j in range(n_qs)]
-    docs = spark.createDataFrame(corpus, "doc_id INT, text STRING")
-    qs = spark.createDataFrame(queries, "q_id INT, q_text STRING")
-    got = {
-        (r["q_id"], r["doc_id"]): (r["n_terms"], r["score_int"])
-        for r in bm25_scores(
-            docs, "doc_id", "text", qs, "q_id", "q_text"
-        ).collect()
-    }
-    assert got == _py_bm25(corpus, queries)
-
-
 # ------------------------------------------------------ chunk round-trip
 @settings(**SETTINGS)
 @given(

@@ -331,412 +331,3 @@ def test_rowwise_band_sigs_match_batch(spark):
     assert batch == roww
     assert not any(t[0] == 4 for t in roww)
 
-
-def test_stream_minhash_screen_matches_batch_cross(spark, tmp_path):
-    """Streaming screen vs the batch cross screen on the same data: the
-    set of (arriving doc, corpus doc) candidate pairs must be identical,
-    and each pair must be emitted exactly once despite multi-band hits."""
-    from geofeaturegeneration_spark.operators import (
-        minhash_band_signatures,
-        minhash_lsh_pairs_cross,
-    )
-    from geofeaturegeneration_spark.streaming import stream_minhash_screen
-
-    corpus = spark.createDataFrame(
-        [
-            (100, "the quick brown fox jumps over the lazy dog"),
-            (101, "an entirely unrelated corpus document about engines"),
-        ],
-        "doc_id INT, text STRING",
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    arriving = [
-        (1, "the quick brown fox jumps over the lazy dog", t0),   # exact dup of 100
-        (2, "fresh novel text with no corpus overlap at all", t0),
-        (3, "an entirely unrelated corpus document about engines", t0),  # dup of 101
-    ]
-    schema = "doc_id INT, text STRING, ts TIMESTAMP"
-    path = str(tmp_path / "screen_in")
-    spark.createDataFrame(arriving, schema).coalesce(1).write.parquet(path)
-
-    corpus_bands = minhash_band_signatures(corpus, "doc_id", "text")
-    out = stream_minhash_screen(
-        spark.readStream.schema(schema).parquet(path),
-        "doc_id", "text", "ts", corpus_bands,
-        corpus_id_col="doc_id", watermark="1 hour",
-    )
-    name = f"screen_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    got = sorted(
-        (r["doc_id"], r["corpus_id"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    batch = minhash_lsh_pairs_cross(
-        spark.createDataFrame(
-            [(i, t) for i, t, _ in arriving], "doc_id INT, text STRING"
-        ),
-        corpus, "doc_id", "text",
-    )
-    want = sorted((r["id_a"], r["id_b"]) for r in batch.collect())
-    assert got == want
-    assert got == [(1, 100), (3, 101)]  # each pair exactly once
-
-
-def test_stream_bloom_screen_matches_batch(spark, tmp_path):
-    """Streaming Bloom screen vs the batch operator on the same data:
-    per-row flags identical (micro-batch plan IS the batch plan — the
-    screen is stateless), every true corpus member flagged, and
-    novel_only keeps exactly the batch bloom_novel set."""
-    from geofeaturegeneration_spark.operators import (
-        bloom_build,
-        bloom_novel,
-        bloom_screen,
-    )
-    from geofeaturegeneration_spark.streaming import stream_bloom_screen
-
-    corpus = spark.createDataFrame(
-        [(f"doc-{i}",) for i in range(100)], "key STRING"
-    )
-    arriving = [(i, f"doc-{i}") for i in range(80, 140)]  # 20 dups + 40 novel
-    schema = "row_id INT, key STRING"
-    path = str(tmp_path / "bloom_in")
-    spark.createDataFrame(arriving, schema).coalesce(1).write.parquet(path)
-
-    bloom = bloom_build(corpus, "key", m_bits=1 << 14, k=4)
-    # persist the position table as a real artifact, as production would
-    bpath = str(tmp_path / "bloom_table")
-    bloom.write.parquet(bpath)
-    bloom_static = spark.read.parquet(bpath)
-
-    out = stream_bloom_screen(
-        spark.readStream.schema(schema).parquet(path),
-        "key", bloom_static, m_bits=1 << 14, k=4,
-    )
-    name = f"bloom_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    got = {
-        r["row_id"]: r["might_contain"]
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    }
-    batch_df = spark.createDataFrame(arriving, schema)
-    want = {
-        r["row_id"]: r["might_contain"]
-        for r in bloom_screen(
-            batch_df, "key", bloom_static, m_bits=1 << 14, k=4
-        ).collect()
-    }
-    assert got == want
-    for i in range(80, 100):  # true members always flag
-        assert got[i] is True
-
-    # novel_only == batch bloom_novel
-    out2 = stream_bloom_screen(
-        spark.readStream.schema(schema).parquet(path),
-        "key", bloom_static, m_bits=1 << 14, k=4, novel_only=True,
-    )
-    name2 = f"bloomn_{uuid.uuid4().hex[:8]}"
-    q2 = (
-        out2.writeStream.format("memory").queryName(name2)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q2.awaitTermination(180)
-    got_novel = sorted(
-        r["row_id"] for r in spark.sql(f"SELECT * FROM {name2}").collect()
-    )
-    want_novel = sorted(
-        r["row_id"]
-        for r in bloom_novel(batch_df, "key", corpus, m_bits=1 << 14, k=4).collect()
-    )
-    assert got_novel == want_novel
-
-
-def test_stream_hll_registers_matches_batch_across_microbatches(spark, tmp_path):
-    """Running distinct count: the streaming HLL register table after the
-    whole stream equals hll_build over the same rows — with ingestion
-    FORCED through multiple micro-batches (maxFilesPerTrigger=1), so the
-    cross-batch state merge (streaming max-agg) is what is being tested,
-    not a single-batch degenerate. The estimate over the sink equals the
-    batch estimate bit-for-bit, and state is register-bounded (<= 2^p
-    rows) no matter how many keys streamed."""
-    from geofeaturegeneration_spark.operators import hll_build, hll_estimate
-    from geofeaturegeneration_spark.streaming import stream_hll_registers
-
-    schema = "key STRING"
-    path = str(tmp_path / "hll_in")
-    # three files -> three micro-batches; overlapping keys across files so
-    # the max-merge does real work
-    rows = [[(f"k-{i}",) for i in range(0, 400)],
-            [(f"k-{i}",) for i in range(200, 700)],
-            [(f"k-{i}",) for i in range(600, 1000)]]
-    for j, chunk in enumerate(rows):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append" if j else "overwrite"
-        ).parquet(path)
-
-    p = 8
-    out = stream_hll_registers(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(path),
-        "key", p=p,
-    )
-    name = f"hll_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    assert q.lastProgress["batchId"] >= 2  # really multiple micro-batches
-
-    got = sorted(
-        (r["r"], r["rank"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    batch_df = spark.createDataFrame(
-        [t for chunk in rows for t in chunk], schema
-    )
-    want = sorted(
-        (r["r"], r["rank"]) for r in hll_build(batch_df, "key", p=p).collect()
-    )
-    assert got == want
-    assert len(got) <= (1 << p)  # state bounded by the sketch geometry
-
-    # the running estimate from the sink == the batch estimate
-    sink = spark.sql(f"SELECT r, rank FROM {name}")
-    assert (
-        hll_estimate(sink, p=p).collect()
-        == hll_estimate(hll_build(batch_df, "key", p=p), p=p).collect()
-    )
-
-
-def test_stream_hist_buckets_matches_batch_across_microbatches(spark, tmp_path):
-    """Running length distribution: the streaming bucket table after the
-    whole stream equals hist_build over the same rows, with ingestion
-    forced through multiple micro-batches so the cross-batch sum-merge is
-    what is tested; the running p50/p99 from the sink equal the batch
-    quantiles exactly, and state stays bucket-bounded."""
-    from geofeaturegeneration_spark.operators import (
-        hist_build,
-        hist_quantiles,
-    )
-    from geofeaturegeneration_spark.streaming import stream_hist_buckets
-
-    schema = "v LONG"
-    path = str(tmp_path / "hist_in")
-    # overlapping magnitude ranges across files so bucket sums merge
-    rows = [[(int(i),) for i in range(1, 500)],
-            [(int(i * 7),) for i in range(1, 400)],
-            [(int(i * i),) for i in range(1, 300)]]
-    for j, chunk in enumerate(rows):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-            "append" if j else "overwrite"
-        ).parquet(path)
-
-    sb = 4
-    out = stream_hist_buckets(
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(path),
-        "v", sub_bits=sb,
-    )
-    name = f"hist_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    assert q.lastProgress["batchId"] >= 2
-
-    got = sorted(
-        (r["b"], r["cnt"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    batch_df = spark.createDataFrame(
-        [t for chunk in rows for t in chunk], schema
-    )
-    want = sorted(
-        (r["b"], r["cnt"])
-        for r in hist_build(batch_df, "v", sub_bits=sb).collect()
-    )
-    assert got == want
-    assert len(got) <= 63 * (1 << sb)
-
-    sink = spark.sql(f"SELECT b, cnt FROM {name}")
-    assert (
-        sorted(map(tuple, hist_quantiles(sink, [500_000, 990_000], sb).collect()))
-        == sorted(map(tuple, hist_quantiles(
-            hist_build(batch_df, "v", sub_bits=sb), [500_000, 990_000], sb
-        ).collect()))
-    )
-
-
-def test_stream_edit_screen_matches_batch_cross(spark, tmp_path):
-    """Streaming edit-distance screen vs the batch cross join on the same
-    data: identical (arriving, corpus, dist) matches, each emitted once
-    despite multi-variant hits, served from the PERSISTED corpus variant
-    table (the shared batch/stream artifact)."""
-    from geofeaturegeneration_spark.operators import (
-        edit_join_cross,
-        edit_variant_table,
-    )
-    from geofeaturegeneration_spark.streaming import stream_edit_screen
-
-    corpus = spark.createDataFrame(
-        [(100, "spark engine"), (101, "totally different")],
-        "doc_id INT, key STRING",
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    arriving = [
-        (1, "spark engine", t0),    # dist 0 of 100
-        (2, "spork engine", t0),    # dist 1 of 100
-        (3, "no match here", t0),
-        (4, "totally different", t0),  # dist 0 of 101
-    ]
-    schema = "doc_id INT, key STRING, ts TIMESTAMP"
-    path = str(tmp_path / "edit_in")
-    spark.createDataFrame(arriving, schema).coalesce(1).write.parquet(path)
-
-    vt_path = str(tmp_path / "edit_variants")
-    edit_variant_table(corpus, "doc_id", "key", max_dist=1).write.parquet(vt_path)
-    out = stream_edit_screen(
-        spark.readStream.schema(schema).parquet(path),
-        "doc_id", "key", "ts",
-        spark.read.parquet(vt_path),
-        watermark="1 hour", max_dist=1,
-    )
-    name = f"editscreen_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    got = sorted(
-        (r["doc_id"], r["corpus_id"], r["dist"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    batch = edit_join_cross(
-        spark.createDataFrame(
-            [(i, k) for i, k, _ in arriving], "doc_id INT, key STRING"
-        ),
-        corpus, "doc_id", "key", max_dist=1,
-    )
-    want = sorted((r["id_a"], r["id_b"], r["dist"]) for r in batch.collect())
-    assert got == want
-    assert got == [(1, 100, 0), (2, 100, 1), (4, 101, 0)]
-
-
-def test_stream_edit_screen_capped_matches_batch(spark, tmp_path):
-    """ADVICE r04 #3 regression: the max_bucket_size path (whose capped
-    corpus table is now persisted inside the screen so micro-batches do
-    not re-aggregate the corpus) matches the batch capped cross join."""
-    from geofeaturegeneration_spark.operators import (
-        edit_join_cross,
-        edit_variant_table,
-    )
-    from geofeaturegeneration_spark.streaming import stream_edit_screen
-
-    # "aa" is a degenerate key shared by many corpus docs -> its variant
-    # buckets exceed the cap and must be dropped on BOTH paths
-    corpus = spark.createDataFrame(
-        [(100 + i, "aa") for i in range(5)] + [(200, "spark engine")],
-        "doc_id INT, key STRING",
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    arriving = [(1, "ab", t0), (2, "spork engine", t0)]
-    schema = "doc_id INT, key STRING, ts TIMESTAMP"
-    path = str(tmp_path / "edit_cap_in")
-    spark.createDataFrame(arriving, schema).coalesce(1).write.parquet(path)
-    vt_path = str(tmp_path / "edit_cap_variants")
-    edit_variant_table(corpus, "doc_id", "key", max_dist=1).write.parquet(
-        vt_path
-    )
-    out = stream_edit_screen(
-        spark.readStream.schema(schema).parquet(path),
-        "doc_id", "key", "ts",
-        spark.read.parquet(vt_path),
-        watermark="1 hour", max_dist=1, max_bucket_size=3,
-    )
-    name = f"editcap_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.format("memory").queryName(name)
-        .outputMode("append").trigger(availableNow=True).start()
-    )
-    assert q.awaitTermination(180), "streaming query did not finish"
-    got = sorted(
-        (r["doc_id"], r["corpus_id"], r["dist"])
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
-    )
-    batch = edit_join_cross(
-        spark.createDataFrame(
-            [(i, k) for i, k, _ in arriving], "doc_id INT, key STRING"
-        ),
-        corpus, "doc_id", "key", max_dist=1, max_bucket_size=3,
-    )
-    want = sorted((r["id_a"], r["id_b"], r["dist"]) for r in batch.collect())
-    assert got == want
-    # the capped "aa" buckets were dropped: only the spark-engine hit
-    assert got == [(2, 200, 1)]
-    spark.catalog.clearCache()  # release the screen-internal persist
-
-
-def test_stream_edit_screen_same_id_matches_batch(spark, tmp_path):
-    """The screen's exclude_same_id mirrors the batch analog in BOTH
-    id-space regimes: a re-ingested doc sharing the corpus id space does
-    not self-match under the default; with exclude_same_id=False the
-    equal-id pair is a legitimate cross-corpus match — each mode equal to
-    edit_join_cross under the same flag."""
-    from geofeaturegeneration_spark.operators import (
-        edit_join_cross,
-        edit_variant_table,
-    )
-    from geofeaturegeneration_spark.streaming import stream_edit_screen
-
-    corpus = spark.createDataFrame(
-        [(7, "abd"), (8, "abc")], "doc_id INT, key STRING"
-    )
-    t0 = datetime(2024, 1, 1, 12, 0, 0)
-    arriving = [(7, "abc", t0), (9, "zzz", t0)]
-    schema = "doc_id INT, key STRING, ts TIMESTAMP"
-    path = str(tmp_path / "edit_sameid_in")
-    spark.createDataFrame(arriving, schema).coalesce(1).write.parquet(path)
-    vt_path = str(tmp_path / "edit_sameid_variants")
-    edit_variant_table(corpus, "doc_id", "key", max_dist=1).write.parquet(
-        vt_path
-    )
-    batch_arriving = spark.createDataFrame(
-        [(i, k) for i, k, _ in arriving], "doc_id INT, key STRING"
-    )
-    for flag in (True, False):
-        out = stream_edit_screen(
-            spark.readStream.schema(schema).parquet(path),
-            "doc_id", "key", "ts",
-            spark.read.parquet(vt_path),
-            watermark="1 hour", max_dist=1, exclude_same_id=flag,
-        )
-        name = f"editsame_{uuid.uuid4().hex[:8]}"
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        assert q.awaitTermination(180), "streaming query did not finish"
-        got = sorted(
-            (r["doc_id"], r["corpus_id"], r["dist"])
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
-        want = sorted(
-            (r["id_a"], r["id_b"], r["dist"])
-            for r in edit_join_cross(
-                batch_arriving, corpus, "doc_id", "key", max_dist=1,
-                exclude_same_id=flag,
-            ).collect()
-        )
-        assert got == want
-        assert got == (
-            [(7, 8, 0)] if flag else [(7, 7, 1), (7, 8, 0)]
-        )

@@ -45,7 +45,6 @@ SHOW = [
     ("heavy_hitters", "exact heavy hitters via lossless count-min screen: the checkpointed sketch (ONE corpus scan, shown as ExistingRDD slices) feeds depth chained BROADCAST lookups on the single rescan — the pre-screen stream never shuffles; the only value-keyed aggregate runs over surviving candidates, map-side combined"),
     ("bloom_screen", "Bloom ingest screen: k chained BROADCAST joins against the checkpointed m_bits-bounded position table (ExistingRDD, corpus scanned once at build) — the batch side has zero exchanges"),
     ("normalize_text", "unicode/whitespace canonicalization: two narrow JVM regex projections around ONE zero-shuffle mapInArrow stage (ASCII short-circuit + UAX #15 for the minority) — fixes byte forms at scan speed before anything hashes"),
-    ("bm25_topk", "BM25 retrieval: distinct query terms BROADCAST onto the corpus posting stream (non-query postings never shuffle), df + contribution both read the ONE lineage-cut tf table (ExistingRDD — without the cut, pruning re-specialized the subtree and the corpus explode ran twice), exact int64 partial-agg score sums, WindowGroupLimit top-k per query"),
     ("hll_count", "HLL distinct count: narrow md5/bit projection (NO explode — one register per row) + ONE bounded groupBy per shard, register-wise max merge, single-row estimate — the corpus never shuffles on the value"),
     ("hist_quantiles", "HDR quantiles: bounded groupBy(b) per shard, cell-sum merge; JOIN-FREE selection — the cumulative window and each per-q filtered aggregate read the lineage-cut bucket table (ExistingRDD, <= ~63*2^sub_bits rows); with group_cols the window is keyed and millions of groups scale as one hash shuffle"),
     ("bpe_roundtrip", "BPE encode+decode: ZERO key shuffles — scan -> round-robin parallelism floor -> mapInArrow encode (bounded artifact in the closure, per-task word cache, flat int32 token buffers: no per-token Python object on the output path) -> Arrow decode; tokenization is a per-document pure function and the plan says so (10-25x faster than the join twin bpe_roundtrip_join at every parallelism level, scaling efficiency 0.98 at 262M tokens)"),
