@@ -20,8 +20,9 @@ plan pays one-time JVM costs (codegen compilation, class init) that are not
 properties of the plan being measured.
 The token-pipeline block measures end-to-end feature-engineering throughput
 (tokens/sec) on the synthetic north-rule sequences table: the job's
-``build_features`` (explode -> sessionize -> previous stay -> lag/lead) and
-the chunked sequence export.
+``build_features`` (one SQL-array projection per doc: state-change runs ->
+min-duration filter -> previous stay and lag/lead from the neighbouring
+runs) and the chunked sequence export.
 """
 
 from __future__ import annotations

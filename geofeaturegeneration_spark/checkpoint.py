@@ -8,16 +8,17 @@ AFTER the partition's output lands.
 
 Storage: JSON marks written by the driver, one JSON line per mark in its
 own ``<attempt_id>.json`` file, through the Hadoop FileSystem API (any scheme
-the job writes to; no Spark job per mark). Readers reduce to the latest
-record per partition, so re-marks and concurrent retries are safe: last
-writer wins, and output idempotency comes from dynamic partition overwrite,
-not from the marker. A mark torn by a crash reads as absent, so its unit
-re-runs; a store of non-JSON files (the older Parquet layout) reads as
-empty, so every unit re-runs.
+the job writes to; no Spark job per mark). The driver reads them back the
+same way and reduces them to the latest record per partition, so re-marks
+and concurrent retries are safe: last writer wins, and output idempotency
+comes from dynamic partition overwrite, not from the marker. A mark torn by
+a crash reads as absent, so its unit re-runs; a store of non-JSON files (the
+older Parquet layout) reads as empty, so every unit re-runs.
 
 Scale notes: the checkpoint table is tiny (one file per partition per
-attempt) and only ever read with a window over partition keys — never
-joined against the fact data. Resume cost is O(partitions), not O(data).
+attempt) and never joined against the fact data; reading it starts no Spark
+job. Resume cost is O(marks): the store is not compacted, so it grows with
+attempts, not only with partitions.
 """
 
 from __future__ import annotations
@@ -29,7 +30,8 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,40 +68,42 @@ class CheckpointStore:
         self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame | None:
-        fs, p = _fs_path(self.spark, self.path)
-        if not fs.exists(p):
+    def _latest(self, job_id: str) -> list[dict] | None:
+        """Latest record per partition_key for a job, read by the driver
+        (None when there is no store). Last writer wins: records are
+        ordered by ``updated_at``, then ``attempt_id``."""
+        fs, root = _fs_path(self.spark, self.path)
+        if not fs.exists(root):
             return None
-        # a torn mark is a malformed line (dropped) or, under a checksummed
-        # FileSystem, a corrupt file (skipped): either way it reads as absent
-        opts = dict(pathGlobFilter="*.json", mode="DROPMALFORMED", ignoreCorruptFiles="true")
-        return self.spark.read.schema(CHECKPOINT_SCHEMA).options(**opts).json(self.path)
+        glob = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/*.json")
+        records: list[dict] = []
+        for st in fs.globStatus(glob) or []:
+            records += _parse_marks(self.spark, fs, st.getPath())
+        latest: dict[str, dict] = {}
+        for rec in sorted(records, key=lambda r: (r["updated_at"], r["attempt_id"])):
+            if rec["job_id"] == job_id:
+                latest[rec["partition_key"]] = rec
+        return list(latest.values())
 
     def latest(self, job_id: str) -> DataFrame | None:
         """Latest record per partition_key for a job (last writer wins)."""
-        df = self._read()
-        if df is None:
+        recs = self._latest(job_id)
+        if recs is None:
             return None
-        w = W.partitionBy("partition_key").orderBy(
-            F.col("updated_at").desc(), F.col("attempt_id").desc()
-        )
-        return (
-            df.filter(F.col("job_id") == job_id)
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
+        names = CHECKPOINT_SCHEMA.fieldNames()
+        return self.spark.createDataFrame(
+            [tuple(r[n] for n in names) for r in recs], CHECKPOINT_SCHEMA
         )
 
     def completed(self, job_id: str, lineage: str | None = None) -> set[str]:
         """Partition keys whose latest record is done (and, when given,
-        matches ``lineage`` — a lineage change invalidates old outputs)."""
-        df = self.latest(job_id)
-        if df is None:
-            return set()
-        df = df.filter(F.col("status") == "done")
-        if lineage is not None:
-            df = df.filter(F.col("lineage") == lineage)
-        return {r["partition_key"] for r in df.select("partition_key").collect()}
+        matches ``lineage`` — a lineage change invalidates old outputs).
+        Starts no Spark job."""
+        return {
+            r["partition_key"]
+            for r in self._latest(job_id) or []
+            if r["status"] == "done" and (lineage is None or r["lineage"] == lineage)
+        }
 
     def mark(
         self,
@@ -126,6 +130,31 @@ class CheckpointStore:
         """Latest per-partition metrics — the run log the reference keeps as
         printed shapes (README.md:277-573), as a queryable table."""
         return self.latest(job_id)
+
+
+def _parse_marks(spark: SparkSession, fs, path) -> list[dict]:
+    """The records of one mark file. A mark torn by a crash reads as
+    absent: under a checksummed FileSystem the read fails its checksum,
+    elsewhere its line does not parse."""
+    try:
+        stream = fs.open(path)
+        try:
+            raw = bytes(spark._jvm.org.apache.hadoop.io.IOUtils.readFullyToByteArray(stream))
+        finally:
+            stream.close()
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "org.apache.hadoop.fs.ChecksumException":
+            return []
+        raise
+    records = []
+    for line in raw.decode("utf-8", "replace").splitlines():
+        try:
+            rec = json.loads(line)
+            rec["updated_at"] = datetime.fromisoformat(rec["updated_at"])
+        except (ValueError, TypeError, KeyError):
+            continue  # a torn line
+        records.append({n: rec.get(n) for n in CHECKPOINT_SCHEMA.fieldNames()})
+    return records
 
 
 def stale_partitions(

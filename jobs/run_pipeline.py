@@ -15,10 +15,13 @@ unit writes via dynamic partition overwrite, with its row count from the
 write, and the driver then records (rows, wall_ms, lineage) as a JSON mark;
 re-running after a crash skips completed units (checkpoint.py).
 
-Pipeline per unit (the north-rule transform):
-  explode tokens -> event-time from sequence position -> state-change
-  sessionize -> previous stay's run length as a lag on the stays window ->
-  lag/lead features (one sort serves both, so the stays are computed once).
+Pipeline per unit (the north-rule transform): one projection per doc over
+its token array, whose event time is a function of position. Run starts ->
+one struct per run but the doc's last (its end is unobserved) -> the
+min-duration filter -> each kept stay reads the previous kept stay's run
+length and its lag/lead features off its neighbours in the same array. A
+doc's tokens arrive ordered in one row, so the plan has no exchange, no
+sort and no window; the rows come out through ``posexplode_outer``.
 """
 
 from __future__ import annotations
@@ -31,36 +34,75 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
 from geofeaturegeneration_spark.config import EngineConfig
 from geofeaturegeneration_spark.datagen import read_sequences
-from geofeaturegeneration_spark.functions import event_time_from_position
-from geofeaturegeneration_spark.operators import (
-    lag_lead_features,
-    sessionize_state_change,
-)
 from geofeaturegeneration_spark.session import get_spark
 
 EPOCH0 = 1_700_000_000
 ENTITY = ["doc_id", "source"]
 
 
-def build_features(seq_df):
-    """sequences (doc_id, tokens, n_tok, source) -> per-stay feature rows."""
+def build_features(seq_df, min_duration_s: float = 60.0):
+    """sequences (doc_id, tokens, n_tok, source) -> per-stay feature rows.
+
+    One row per (doc_id, source) in; out, one row per kept stay: the
+    state-change runs of ``sessionize_state_change`` (the doc's last run
+    dropped, runs shorter than ``min_duration_s`` filtered with ``>=``),
+    the previous kept stay's ``n_rows`` as ``prev_run_len`` (a stay's
+    length is known at its end, so a stay never sees its own), and the
+    ``duration_s`` lag/lead and ``gap_s_lag1`` of ``lag_lead_features``
+    over the kept stays.
+
+    Written as SQL text: the plan costs a few py4j calls to build, where
+    ``Column`` lambdas cost one per node. Every array the lambdas read is
+    staged as a column alias (``_s``, ``_k``), since a HOF lambda has no
+    subexpression elimination. The rows come out of ``posexplode_outer``
+    and a null filter on the index: a plain explode lets
+    ``InferFiltersFromGenerate`` copy the lambda into a filter.
+    """
     step_s = EngineConfig().event_time_step_s
-    ev = seq_df.select(*ENTITY, F.posexplode("tokens").alias("pos", "token")).withColumn(
-        "ts", event_time_from_position(F.col("pos"), EPOCH0, step_s)
+
+    def event_time(pos: str) -> str:
+        # event_time_from_position, in BIGINT so positions past int32 hold
+        return f"timestamp_seconds({EPOCH0} + CAST({pos} AS BIGINT) * {step_s})"
+
+    # positions where a run starts; sequence(0, -1) descends, so guard n = 0.
+    # tokens is bound once to t: an input that folds to a literal would
+    # otherwise be inlined into the lambda at every reference
+    starts = (
+        "transform(array(tokens), t -> IF(size(t) > 0, filter(sequence(0, size(t) - 1),"
+        " i -> i = 0 OR t[i] != t[i - 1]), array()))[0]"
     )
-    stays = sessionize_state_change(ev, ENTITY, "ts", "token", min_duration_s=60.0)
-    # a stay's length is known at its end, so each stay sees the previous
-    # kept stay, never itself. A doc's kept stays start at distinct times
-    # and each ends after it starts, so that stay is the lag on stime.
-    prev = F.lag("n_rows").over(W.partitionBy(*ENTITY).orderBy("stime"))
-    feats = stays.withColumn("prev_run_len", prev)
-    return lag_lead_features(feats, ENTITY, "stime", ["duration_s"])
+    # run k ends where run k + 1 starts, so the doc's last run has no struct
+    runs = (
+        "transform(slice(_s, 2, size(_s)), (e, k) -> named_struct("
+        "'start', CAST(_s[k] AS BIGINT), 'n_rows', CAST(e - _s[k] AS BIGINT),"
+        " 'token', tokens[_s[k]], 'stay_seq', k + 1,"
+        f" 'duration_s', CAST(CAST(e - _s[k] AS BIGINT) * {step_s} AS DOUBLE)))"
+    )
+    kept = f"filter({runs}, r -> r.duration_s >= {float(min_duration_s)!r})"
+    # neighbours among the kept stays; get() is null past either end
+    feats = (
+        "transform(_k, (r, j) -> named_struct("
+        f"'stime', {event_time('r.start')}, 'n_rows', r.n_rows, 'token', r.token,"
+        f" 'etime', {event_time('r.start + r.n_rows')}, 'stay_seq', r.stay_seq,"
+        " 'duration_s', r.duration_s,"
+        " 'prev_run_len', get(_k, j - 1).n_rows,"
+        " 'duration_s_lag1', get(_k, j - 1).duration_s,"
+        " 'duration_s_delta1', r.duration_s - get(_k, j - 1).duration_s,"
+        " 'duration_s_lead1', get(_k, j + 1).duration_s,"
+        f" 'gap_s_lag1', CAST((r.start - get(_k, j - 1).start) * {step_s} AS DOUBLE)))"
+    )
+    return (
+        seq_df.selectExpr(*ENTITY, "tokens", f"{starts} AS _s")
+        .selectExpr(*ENTITY, f"{kept} AS _k")
+        .selectExpr(*ENTITY, f"posexplode_outer({feats}) AS (_j, _f)")
+        .where("_j IS NOT NULL")
+        .selectExpr(*ENTITY, "_f.*")
+    )
 
 
 def main(argv=None) -> int:

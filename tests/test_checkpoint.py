@@ -47,14 +47,15 @@ def test_mark_and_completed(spark, tmp_path):
     store.mark("job", "a", "failed", lineage="v1")
     assert store.completed("job", "v1") == set()
 
-    # a mark is written by the driver: it starts no Spark job (the same
-    # probe does see the job of a read)
+    # marks are written and read back by the driver: neither starts a Spark
+    # job (the same probe does see the job of a real action)
     sc = spark.sparkContext
     sc.setJobGroup("ckpt-mark", "checkpoint marks")
     try:
         store.mark("job", "c", "done", rows=1, lineage="v1")
-        assert sc.statusTracker().getJobIdsForGroup("ckpt-mark") == []
         assert store.completed("job", "v1") == {"c"}
+        assert sc.statusTracker().getJobIdsForGroup("ckpt-mark") == []
+        spark.range(1).count()
         assert sc.statusTracker().getJobIdsForGroup("ckpt-mark") != []
     finally:
         sc._jsc.clearJobGroup()

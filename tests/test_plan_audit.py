@@ -11,6 +11,8 @@ collapses at 1000 executors — these tests pin the plan shape:
 * narrow expression pipelines stay in one whole-stage-codegen span with no
   exchange.
 * no executed filter of the chunk export re-evaluates its chunk lambda.
+* the pipeline's per-doc transform runs without an exchange or a window,
+  and its plan builds in a bounded number of py4j commands.
 """
 
 import os
@@ -219,25 +221,59 @@ def test_series_matrix_is_sql_with_one_exchange(spark):
     assert final.count("Exchange") == 1, final
 
 
-def test_pipeline_backfill_has_no_hot_key_join(spark):
-    """jobs/run_pipeline.build_features takes the previous stay as a lag on
-    the stays window: no hot-key count broadcast back into the stays, and
-    with AQE off the executed plan shuffles the exploded tokens once and
-    runs the sessionize chain once (no union of two as-of sides)."""
-    from geofeaturegeneration_spark.datagen import generate_sequences
+def test_pipeline_backfill_has_no_hot_key_join(spark, tmp_path):
+    """jobs/run_pipeline.build_features is one projection per doc over its
+    token array, read as the job reads it (Parquet): with AQE off the
+    executed plan has no exchange, no window, no join, no Python node, and
+    no ``Filter`` that holds a lambda (the rows leave through
+    ``posexplode_outer`` and a null filter on the index)."""
+    from geofeaturegeneration_spark.datagen import (
+        generate_sequences,
+        read_sequences,
+        write_sequences,
+    )
     from jobs.run_pipeline import build_features
 
-    seq = generate_sequences(spark, n_docs=5, seed=1)
-    plan = plan_str(build_features(seq), "simple")
-    assert "BroadcastHashJoin" not in plan, plan
+    path = str(tmp_path / "seq")
+    write_sequences(generate_sequences(spark, n_docs=5, seed=1), path)
+    seq = read_sequences(spark, path)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         phys = build_features(seq)._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
-    assert phys.count("Exchange") == 1, phys
-    assert "Union" not in phys, phys
+    for node in ("Exchange", "Window", "Join", "Union", "Python", "Pandas", "Arrow"):
+        assert node not in phys, f"{node}:\n{phys}"
+    filters = [ln for ln in phys.splitlines() if "Filter" in ln]
+    assert filters, phys  # the index null filter is there
+    for line in filters:
+        assert "lambda" not in line, phys
+
+
+def test_pipeline_plan_builds_in_few_py4j_commands(spark, monkeypatch):
+    """build_features is written as SQL text: building its plan on the
+    driver sends 34 py4j commands, where the window composition it
+    replaced sent 704 for this input, and ``Column`` lambdas send one or
+    more per expression node. Deterministic: counts commands, not
+    seconds."""
+    from py4j.clientserver import ClientServerConnection
+
+    from geofeaturegeneration_spark.datagen import generate_sequences
+    from jobs.run_pipeline import build_features
+
+    seq = generate_sequences(spark, n_docs=5, seed=1)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    build_features(seq)
+    monkeypatch.undo()
+    assert 0 < len(sent) < 100, len(sent)
 
 
 def test_sessionize_shuffles_only_on_entity(spark):
