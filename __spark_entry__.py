@@ -51,7 +51,6 @@ from geofeaturegeneration_spark.operators import (
     edit_join,
     edit_join_cross,
     exact_dedup,
-    fim_transform,
     interaction_matrix,
     lag_lead_features,
     minhash_lsh_pairs,
@@ -615,32 +614,6 @@ def q_edit_clusters(spark, sf_dir):
     return dedup_clusters(docs, "doc_id", pairs)
 
 
-def q_fim_transform(spark, sf_dir):
-    """Fill-in-middle training export (round 4, PSM order): a deterministic
-    60% of docs rewritten to [PRE] prefix [SUF] suffix [MID] middle with
-    md5-drawn cut points; sentinel ids sit just above the hashed-token
-    space (TOKEN_MOD..TOKEN_MOD+2). Tokens are only moved, never
-    recomputed — fim_restore inverts exactly (pinned in
-    tests/test_sequence.py)."""
-    toks = _doc_tokens(spark, sf_dir)
-    out = fim_transform(
-        toks,
-        "tokens",
-        rate_ppm=600_000,
-        prefix_tok=TOKEN_MOD,
-        suffix_tok=TOKEN_MOD + 1,
-        middle_tok=TOKEN_MOD + 2,
-    )
-    return out.select(
-        "doc_id",
-        "is_fim",
-        "fim_lo",
-        "fim_hi",
-        F.size("tokens").cast("int").alias("n_tok"),
-        _arr_csv("tokens_fim").alias("tokens_fim"),
-    )
-
-
 def q_ngram_jaccard(spark, sf_dir):
     """max_doc_freq=5 exercises the explicit hot-shingle cap (drops 29
     shingles and shifts 13 jaccard values at sf0.01 vs uncapped, so the
@@ -1068,7 +1041,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # long driver-green with its machinery still covered in-window or
         # by pytest (reasons recorded in rotation_hints()["foldable"] and at
         # their new extra_queries() entries) ---
-        "bpe_roundtrip": q_bpe_roundtrip,
         "chunk_strided": q_chunk_strided,
         "edit_join_cross": q_edit_join_cross,
         "epoch_upsample": q_epoch_upsample,
@@ -1090,12 +1062,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # search path — green rows r01-r03) into extra_queries()
         "clean_lines": q_clean_lines,
         "normalize_text": q_normalize_text,
-        # round-3 late additions: driver slots freed by folding the
+        # round-3 late addition: a driver slot freed by folding the
         # simhash and minhash_sigs STAGE queries into extra_queries() —
         # their code paths stay driver-verified through the end-product
         # queries that compose them (simhash_pairs, minhash_pairs/cross)
         "quality_filter": q_quality_filter,
-        "pack_sequences": q_pack_sequences,
         # round 4: the last two operators with no driver row ever — slots
         # freed by folding `vocab` (the literal first stage of vocab_encode,
         # which stays in-window) and `token_roundtrip` (a property test of
@@ -1140,12 +1111,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # dedup family keeps minhash_pairs / simhash_pairs / dedup_exact /
         # dedup_clusters / span_dedup in-window) into extra_queries()
         "edit_join": q_edit_join,
-        # round 4 (this session): fill-in-middle export (new operator —
-        # the infilling member of the sequence-export family) — slot freed
-        # by folding `interaction_matrix` (driver-green r01-r03; the pivot
-        # family keeps pivot_counts in-window, and the wide twin was
-        # already in extras) into extra_queries()
-        "fim_transform": q_fim_transform,
         # round 4 (this session): integer-exact PageRank (new operator —
         # TextRank keyword scoring over the corpus bigram graph; the
         # link-graph quality-prior machinery for web-scale curation) —
@@ -1677,62 +1642,6 @@ def q_normalize_text(spark, sf_dir):
     return normalize_text(spiked, "doc_id", "text")
 
 
-def _space_canonical(docs):
-    """Collapse space runs and trim edge spaces — the round-trip DOMAIN of
-    the word-level BPE (split-on-space pre-tokenization is lossy on space
-    structure BY DESIGN; decode joins words with one space). The composed
-    pipeline guarantees this shape by running normalize_text before any
-    tokenization; the query states the precondition explicitly so the
-    identity oracle is honest on arbitrary input (found by
-    tools/fuzz_oracle.py: multi-space / edge-space docs broke the raw
-    identity). Only the ASCII space is canonicalized — newlines/tabs ride
-    inside words and round-trip untouched."""
-    return docs.select(
-        "doc_id",
-        F.trim(F.regexp_replace(F.col("text"), " +", " ")).alias("text"),
-    )
-
-
-def q_bpe_roundtrip(spark, sf_dir):
-    """BPE tokenizer inverse property, end-to-end through the trained
-    artifact: train_bpe on the documents corpus (driver merge loop over
-    the corpus-size-independent word-count table), bpe_encode every doc
-    to subword ids (the zero-shuffle mapInArrow plan: per-task word
-    cache, flat int32 token buffers), bpe_decode back. The identity
-    holds on SPACE-CANONICAL text (the tokenizer's round-trip domain —
-    see _space_canonical), so both sides canonicalize first and the
-    oracle is that same canonicalization. Token-LEVEL correctness is
-    pinned by tests/test_bpe.py against an independent Sennrich-style
-    reference implementation (regex trainer, rank-order apply)."""
-    from geofeaturegeneration_spark.operators import (
-        bpe_decode,
-        bpe_encode,
-        train_bpe,
-    )
-
-    docs = _space_canonical(_docs_wide(spark, sf_dir))
-    art = train_bpe(docs, "text", n_merges=60)
-    enc = bpe_encode(docs, "doc_id", "text", art)
-    return bpe_decode(enc, "doc_id", "tokens", art)
-
-
-def q_bpe_roundtrip_join(spark, sf_dir):
-    """Exactness twin: the same inverse property through the word-table
-    JOIN encode plan (bpe_encode_join) instead of the zero-shuffle
-    mapInArrow default — pins that both physical strategies produce the
-    same tokens (and therefore the same decode)."""
-    from geofeaturegeneration_spark.operators import (
-        bpe_decode,
-        bpe_encode_join,
-        train_bpe,
-    )
-
-    docs = _space_canonical(_docs_wide(spark, sf_dir))
-    art = train_bpe(docs, "text", n_merges=60)
-    enc = bpe_encode_join(docs, "doc_id", "text", art)
-    return bpe_decode(enc, "doc_id", "tokens", art)
-
-
 def q_quality_filter(spark, sf_dir):
     """C4/Gopher keep decision over the documents corpus; thresholds tuned
     so the synthetic docs split into keeps AND drops on several rules
@@ -1747,44 +1656,6 @@ def q_quality_filter(spark, sf_dir):
         min_avg_word_len=3.0, max_avg_word_len=6.0,
         max_punct_ratio=0.05, max_stopword_ratio=0.2,
         max_dup_word_fraction=0.8,
-    )
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Corpus-level packing: documents' token streams concatenated in
-    deterministic hash order within 8 pack groups and cut into SEQ_LEN
-    training sequences crossing doc boundaries (unpadded here so n_real
-    exposes each group's final partial chunk to the oracle; padding is
-    pytest-covered)."""
-    from geofeaturegeneration_spark.operators import pack_sequences
-
-    toks = _doc_tokens(spark, sf_dir)
-    packed = pack_sequences(toks, "doc_id", "tokens", SEQ_LEN, n_groups=8)
-    return packed.select(
-        "grp", "chunk_id", _arr_csv("tokens").alias("chunk"), "n_real"
-    )
-
-
-def q_pack_segments(spark, sf_dir):
-    """pack_sequences(with_segments=True): the packed chunks plus the
-    block-diagonal-attention metadata — per-token 0-based segment ids
-    (increment at every doc boundary inside the chunk) and the per-chunk
-    contributing-doc count. The segment id is doc_ordinal - min(ordinal
-    in chunk) over the SAME window the pack offset uses, so the metadata
-    costs no extra shuffle."""
-    from geofeaturegeneration_spark.operators import pack_sequences
-
-    toks = _doc_tokens(spark, sf_dir)
-    packed = pack_sequences(
-        toks, "doc_id", "tokens", SEQ_LEN, n_groups=8, with_segments=True
-    )
-    return packed.select(
-        "grp",
-        "chunk_id",
-        _arr_csv("tokens").alias("chunk"),
-        _arr_csv("segs").alias("segs"),
-        "n_docs",
-        "n_real",
     )
 
 
@@ -1893,9 +1764,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     like the contract."""
     return {
         # round 5: folded out of the driver window by the rotation policy
-        # (tools/rotation.py) to give bpe_roundtrip / chunk_strided /
-        # edit_join_cross / epoch_upsample / ivf_lloyd / leakage_split
-        # their first CORRECTNESS rows. Each is long driver-green
+        # (tools/rotation.py) to give chunk_strided / edit_join_cross /
+        # epoch_upsample / ivf_lloyd / leakage_split (and one since-retired
+        # query) their first CORRECTNESS rows. Each is long driver-green
         # (series_matrix + contrastive r03-r04; hash_split r01+r03-r04;
         # repetition r02-r04; grid_cantor r01-r04) and keeps coverage:
         # repetition's pure expressions sit beside the in-window
@@ -1925,10 +1796,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the per_doc=True scope of the in-window line_dedup (within-doc
         # repeated-line trim, no cross-doc state)
         "line_dedup_doc": q_line_dedup_doc,
-        # with_segments=True form of the in-window pack_sequences: the
-        # block-diagonal-attention metadata (per-token segment ids +
-        # per-chunk doc counts)
-        "pack_segments": q_pack_segments,
         # round 4: folded to free a heavy_hitters / bloom_screen sketch
         # slot — sliding_subseq keeps its windows siblings (lag_lead,
         # rolling) in-window; driver-green r01-r03 and value-exact under
@@ -1951,8 +1818,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # standalone range-frame rolling (contract 'rolling' folds both)
         "rolling_range": q_rolling_range,
         # round 4 (this session): folded out of the driver window
-        # (driver-green r01-r03) to give edit_join and fim_transform their
-        # first CORRECTNESS rows; both stay value-exact under
+        # (driver-green r01-r03) to give edit_join (and one since-retired
+        # query) their first CORRECTNESS rows; both stay value-exact under
         # compare_oracle. interaction_wide is interaction_matrix's wide
         # pivot twin; ngram_jaccard's shingle machinery stays in-window
         # through minhash_pairs (same _shingles_expr stage).
@@ -1971,8 +1838,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # plan (round 4); the join-form IVF stays here as its exactness twin
         "ann_ivf_join": q_ann_ivf_join,
         # signature STAGE queries folded out of the driver window (late
-        # round 3) to give quality_filter and pack_sequences contract
-        # slots; both stages stay driver-verified transitively — the
+        # round 3) to give quality_filter (and one since-retired query)
+        # contract slots; both stages stay driver-verified transitively — the
         # in-window simhash_pairs / minhash_pairs / minhash_cross queries
         # compute these exact signatures as their first step — and stay
         # value-exact here under compare_oracle
@@ -2061,10 +1928,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # through ann_ivf_trained (same blocked-GEMM search path)
         "minhash_cross": q_minhash_cross,
         "ann_ivf": q_ann_ivf,
-        # exactness twin of the in-window (round 5) bpe_roundtrip: the
-        # same inverse property through the word-table JOIN encode plan
-        # instead of the zero-shuffle mapInArrow default
-        "bpe_roundtrip_join": q_bpe_roundtrip_join,
     }
 
 
@@ -2624,7 +2487,6 @@ def rotation_hints() -> dict[str, dict]:
         "graph_nodes": "traj_graph",
         "hll_registers": "hll_count",
         "hist_buckets": "hist_quantiles",
-        "bpe_roundtrip_join": "bpe_roundtrip",
         # physical twins — identical output, different plan
         "sessionize_gap": "sessionize_state",
         "asof_union": "asof_salted",
@@ -2639,7 +2501,6 @@ def rotation_hints() -> dict[str, dict]:
         "edit_clusters": "edit_join",
         # same kernel / same deterministic draw, different scope knob
         "line_dedup_doc": "line_dedup",
-        "pack_segments": "pack_sequences",
         "hist_quantiles_by": "hist_quantiles",
         "hll_count_by": "hll_count",
         "cms_query": "heavy_hitters",
@@ -3049,51 +2910,6 @@ SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        levenshtein(a.key, b.key)::INT AS dist
 FROM k2 a JOIN k2 b ON a.doc_id % 2 = 1 AND b.doc_id % 2 = 0
 WHERE levenshtein(a.key, b.key) <= 1
-""",
-        # fim_transform: built explode-side (no list slicing — see the
-        # chunk_sequences note): each source position gets its PSM output
-        # rank, sentinels ride in as three extra rows per selected doc
-        "fim_transform": f"""
-WITH {_TOKENS_CTE.strip()},
-sized AS (SELECT doc_id, tokens, len(tokens) AS n,
-       CASE WHEN (('0x'||substr(md5(doc_id::VARCHAR || '#fim'),1,15))::BIGINT) % 1000000 < 600000 THEN 1 ELSE 0 END AS is_fim,
-       (('0x'||substr(md5(doc_id::VARCHAR || '#fim-a'),1,15))::BIGINT) % (len(tokens)+1) AS ha,
-       (('0x'||substr(md5(doc_id::VARCHAR || '#fim-b'),1,15))::BIGINT) % (len(tokens)+1) AS hb
-  FROM tok),
-cuts AS (SELECT doc_id, tokens, n, is_fim,
-       least(ha, hb)::INT AS lo, greatest(ha, hb)::INT AS hi FROM sized),
-realr AS (SELECT doc_id, is_fim, lo, hi, n, unnest(tokens) AS tid,
-       unnest(generate_series(1, n)) AS pos FROM cuts),
-ordr AS (SELECT doc_id, is_fim, lo, hi, n, tid,
-       CASE WHEN is_fim = 0 THEN pos
-            WHEN pos <= lo THEN pos
-            WHEN pos > hi THEN pos - hi + lo + 1
-            ELSE pos + n - hi + 2 END AS ord
-  FROM realr),
-sents AS (
-  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD} AS tid, 0 AS ord
-  FROM cuts WHERE is_fim = 1
-  UNION ALL
-  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD + 1}, lo + 1
-  FROM cuts WHERE is_fim = 1
-  UNION ALL
-  SELECT doc_id, is_fim, lo, hi, n, {TOKEN_MOD + 2}, lo + n - hi + 2
-  FROM cuts WHERE is_fim = 1),
-allr AS (SELECT * FROM ordr UNION ALL SELECT * FROM sents)
-SELECT doc_id, is_fim::INT AS is_fim, lo AS fim_lo, hi AS fim_hi,
-       n::INT AS n_tok,
-       array_to_string(list(tid ORDER BY ord), ',') AS tokens_fim
-FROM allr GROUP BY 1, 2, 3, 4, 5
-""",
-        # identity oracle: the Spark side runs decode(encode(text)) through
-        # the trained BPE artifact and must reproduce the corpus bytes
-        "bpe_roundtrip": """
-SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g'), ' ') AS text
-FROM documents
-""",
-        "bpe_roundtrip_join": """
-SELECT doc_id, trim(regexp_replace(text, ' +', ' ', 'g'), ' ') AS text
-FROM documents
 """,
         "token_roundtrip": f"""
 WITH {_TOKENS_CTE.strip()}
@@ -4024,49 +3840,6 @@ SELECT t.doc_id, coalesce(a.clean,'') AS clean, t.n::INT AS n_tokens,
        (t.n - coalesce(a.nk,0))::INT AS n_dup_tokens
 FROM tot t LEFT JOIN agg a USING (doc_id)
 """,
-        "pack_sequences": f"""
-WITH {_TOKENS_CTE.strip()},
-d AS (SELECT doc_id, tokens,
-             ('0x'||substr(md5('pack:'||doc_id),1,15))::BIGINT AS dh
-      FROM tok),
-e AS (SELECT dh % 8 AS g, dh, doc_id, unnest(tokens) AS tid,
-             unnest(generate_series(1, len(tokens))) AS pos
-      FROM d),
-r AS (SELECT g, tid,
-             row_number() OVER (PARTITION BY g ORDER BY dh, doc_id, pos) - 1 AS gp
-      FROM e)
-SELECT g::INT AS grp, (gp // {SEQ_LEN})::INT AS chunk_id,
-       array_to_string(list(tid ORDER BY gp % {SEQ_LEN}), ',') AS chunk,
-       count(*)::INT AS n_real
-FROM r GROUP BY 1, 2
-""",
-        # with_segments form: dord (the doc ordinal within the pack
-        # group — dense_rank == Spark's row_number because doc ids are
-        # unique by precondition) rebased per chunk to 0-based segment ids
-        "pack_segments": f"""
-WITH {{tokens_cte}},
-d AS (SELECT doc_id, tokens,
-             ('0x'||substr(md5('pack:'||doc_id),1,15))::BIGINT AS dh
-      FROM tok),
-e AS (SELECT dh % 8 AS g, dh, doc_id, unnest(tokens) AS tid,
-             unnest(generate_series(1, len(tokens))) AS pos
-      FROM d),
-r AS (SELECT g, tid,
-             row_number() OVER (PARTITION BY g ORDER BY dh, doc_id, pos) - 1 AS gp,
-             dense_rank() OVER (PARTITION BY g ORDER BY dh, doc_id) AS dord
-      FROM e),
-c AS (SELECT g, (gp // {SEQ_LEN}) AS chunk_id, gp % {SEQ_LEN} AS pic,
-             tid, dord FROM r),
-a AS (SELECT g, chunk_id, list(tid ORDER BY pic) AS chunk_l,
-             list(dord ORDER BY pic) AS dl,
-             min(dord) AS mn, max(dord) AS mx, count(*)::INT AS n_real
-      FROM c GROUP BY 1, 2)
-SELECT g::INT AS grp, chunk_id::INT AS chunk_id,
-       array_to_string(chunk_l, ',') AS chunk,
-       array_to_string(list_transform(dl, x -> x - mn), ',') AS segs,
-       (mx - mn + 1)::INT AS n_docs, n_real
-FROM a
-""".format(tokens_cte=_TOKENS_CTE.strip()),
         "quality_filter": f"""
 WITH s AS (SELECT doc_id,
        len(string_split(text,' ')) AS nw,

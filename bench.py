@@ -82,8 +82,6 @@ HEADLINE = [
     "line_dedup",
     "normalize_text",
     "clean_lines",
-    "pack_sequences",
-    "fim_transform",
     "span_dedup",
     "edit_join",
     "leakage_split",
@@ -100,7 +98,6 @@ HEADLINE = [
     "hist_quantiles",
     "corpus_divergence",
     "bloom_screen",
-    "bpe_roundtrip",
     "ivf_lloyd",
     "epoch_upsample",
     # round 5: the remaining two queries promoted into the driver window

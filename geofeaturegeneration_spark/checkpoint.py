@@ -86,7 +86,9 @@ class CheckpointStore:
         return list(latest.values())
 
     def latest(self, job_id: str) -> DataFrame | None:
-        """Latest record per partition_key for a job (last writer wins)."""
+        """Latest record per partition_key for a job (last writer wins):
+        the per-partition metrics the reference keeps as printed shapes
+        (README.md:277-573), as a queryable table."""
         recs = self._latest(job_id)
         if recs is None:
             return None
@@ -125,11 +127,6 @@ class CheckpointStore:
             out.write(bytearray(line.encode()))
         finally:
             out.close()
-
-    def metrics(self, job_id: str) -> DataFrame | None:
-        """Latest per-partition metrics — the run log the reference keeps as
-        printed shapes (README.md:277-573), as a queryable table."""
-        return self.latest(job_id)
 
 
 def _parse_marks(spark: SparkSession, fs, path) -> list[dict]:

@@ -451,8 +451,7 @@ def normalize_text(
        ``replace_with_mask`` them back, so Python object conversion is
        proportional to the rows needing work, never to batch size (a
        batch with one accented row out of 10 000 converts 1 string, not
-       10 000 — the bpe_encode flat-buffer rule applied as a masked
-       rewrite).
+       10 000 — a masked rewrite).
        pyarrow 16.1's ``utf8_normalize`` kernel is NOT usable here — its
        NFC/NFKC modes never compose (upstream bug fixed in Arrow 17;
        verified in-sandbox: 'e'+U+0301 stays decomposed) — while

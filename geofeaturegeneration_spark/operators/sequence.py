@@ -220,290 +220,3 @@ def reassemble_chunks(
             out_col, F.slice(F.col(out_col), 1, F.col(n_col))
         )
     return joined
-
-
-def pack_sequences(
-    df: DataFrame,
-    id_col: str,
-    tokens_col: str,
-    seq_len: int,
-    n_groups: int = 32,
-    pad_value: int | None = None,
-    seed: str = "pack",
-    with_segments: bool = False,
-) -> DataFrame:
-    """Corpus-level sequence packing: concatenate documents' token arrays in
-    a deterministic order and cut fixed-length training sequences that CROSS
-    document boundaries — the standard pretraining packer (chunk_sequences
-    pads each document separately; packing wastes no tokens on padding
-    except the final partial sequence per group).
-
-    Documents are hashed (md5 of ``seed:id``) into ``n_groups`` independent
-    pack groups and ordered by (hash, id) within each group, so the packing
-    is a pure function of the corpus — byte-identical across runs, engines,
-    and parallelism levels. PRECONDITION: ``id_col`` values must be unique
-    (any real doc id); duplicate ids order arbitrarily between engines, so
-    the packing of a duped corpus is valid but not reproducible. Output: (grp, chunk_id, <tokens_col>, n_real)
-    where n_real < seq_len only on each group's final partial chunk; with
-    ``pad_value`` set, that chunk is right-padded to seq_len.
-
-    ``with_segments=True`` adds the DOCUMENT-BOUNDARY metadata trainers
-    need for block-diagonal attention (tokens must not attend across the
-    docs a packed sequence concatenates — the LLaMA-3/T5-pack
-    convention): ``segs``, an int array parallel to ``tokens`` holding a
-    0-based per-chunk segment id that increments at every doc boundary
-    (padding positions get -1, the mask convention), and ``n_docs``, the
-    number of documents contributing to the chunk. Costs nothing at
-    scale: the segment id is ``doc_ordinal - min(doc_ordinal in chunk)``
-    where the ordinal is a row_number over the SAME doc-level window the
-    offset already uses — no extra shuffle, no extra pass.
-
-    Scale shape: the running token offset is a window over DOC rows (one
-    row per document, sum-unbounded-preceding within the group) — never
-    over exploded tokens; the token explode is linear and feeds one
-    groupBy((grp, chunk)) whose per-chunk state is seq_len tokens.
-    ``n_groups`` is the parallelism knob: each group's offset window is a
-    single sorted task, so size it to the cluster (groups = O(executors),
-    not O(1)); packing quality is unaffected by the group count. At 100 TB
-    this is explode + two hash shuffles — no global sort, no driver state.
-    """
-    from pyspark.sql import Window as W
-
-    from geofeaturegeneration_spark.functions.text import md5_long
-
-    dh = md5_long(F.concat(F.lit(seed + ":"), F.col(id_col).cast("string")))
-    sized = df.select(
-        F.col(id_col),
-        F.col(tokens_col),
-        dh.alias("_dh"),
-        F.pmod(dh, F.lit(n_groups)).cast("int").alias("grp"),
-        F.size(F.col(tokens_col)).alias("_n"),
-    )
-    # explicit ROWS frame: the default RANGE frame makes rows with equal
-    # (hash, id) keys frame PEERS that share one cumulative sum — duplicate
-    # ids would then map their tokens to overlapping global positions
-    # (n_real > seq_len chunks). With ROWS each row gets a distinct running
-    # offset. id_col is still REQUIRED to be unique: tie order between
-    # duplicate ids is engine/run-arbitrary, so packing with duped ids is
-    # valid but not deterministic (and diverges from the SQL oracle).
-    w = (
-        W.partitionBy("grp")
-        .orderBy("_dh", id_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    if with_segments:
-        # empty docs contribute no tokens and 0 to every offset, but a
-        # row_number would still assign them an ordinal — making segment
-        # ids jump and n_docs overcount across an empty doc. Drop them
-        # BEFORE the window (offsets are unchanged; the oracle's unnest
-        # never sees them either), so ordinals are consecutive over the
-        # docs that actually own tokens.
-        sized = sized.filter(F.col("_n") > 0)
-    sized = sized.withColumn("_off", F.sum("_n").over(w) - F.col("_n"))
-    if with_segments:
-        sized = sized.withColumn("_ord", F.row_number().over(w))
-        ex = sized.select(
-            "grp", "_off", "_ord",
-            F.posexplode(F.col(tokens_col)).alias("_pos", "_tid"),
-        ).select(
-            "grp",
-            F.expr(f"(_off + _pos) div {int(seq_len)}")
-            .cast("int")
-            .alias("chunk_id"),
-            ((F.col("_off") + F.col("_pos")) % seq_len).alias("_pic"),
-            "_tid",
-            "_ord",
-        )
-        agg = ex.groupBy("grp", "chunk_id").agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(
-                        F.col("_pic").alias("p"),
-                        F.col("_tid").alias("v"),
-                        F.col("_ord").alias("o"),
-                    )
-                )
-            ).alias("_arr"),
-            F.min("_ord").alias("_o0"),
-            F.max("_ord").alias("_o1"),
-            F.count(F.lit(1)).cast("int").alias("n_real"),
-        )
-        packed = agg.select(
-            "grp",
-            "chunk_id",
-            F.transform(F.col("_arr"), lambda s: s["v"]).alias(tokens_col),
-            F.transform(
-                F.col("_arr"),
-                lambda s: (s["o"] - F.col("_o0")).cast("int"),
-            ).alias("segs"),
-            (F.col("_o1") - F.col("_o0") + 1).cast("int").alias("n_docs"),
-            "n_real",
-        )
-        if pad_value is not None:
-            short = F.col("n_real") < seq_len
-            packed = packed.withColumn(
-                tokens_col,
-                F.when(~short, F.col(tokens_col)).otherwise(
-                    F.concat(
-                        F.col(tokens_col),
-                        F.array_repeat(
-                            F.lit(pad_value), seq_len - F.col("n_real")
-                        ),
-                    )
-                ),
-            ).withColumn(
-                "segs",
-                F.when(~short, F.col("segs")).otherwise(
-                    F.concat(
-                        F.col("segs"),
-                        F.array_repeat(
-                            F.lit(-1).cast("int"),
-                            seq_len - F.col("n_real"),
-                        ),
-                    )
-                ),
-            )
-        return packed
-    ex = sized.select(
-        "grp", "_off", F.posexplode(F.col(tokens_col)).alias("_pos", "_tid")
-    ).select(
-        "grp",
-        F.expr(f"(_off + _pos) div {int(seq_len)}").cast("int").alias("chunk_id"),
-        ((F.col("_off") + F.col("_pos")) % seq_len).alias("_pic"),
-        "_tid",
-    )
-    packed = ex.groupBy("grp", "chunk_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("_pic").alias("p"), F.col("_tid").alias("v")))
-            ),
-            lambda s: s["v"],
-        ).alias(tokens_col),
-        F.count(F.lit(1)).cast("int").alias("n_real"),
-    )
-    if pad_value is not None:
-        packed = packed.withColumn(
-            tokens_col,
-            F.when(F.col("n_real") >= seq_len, F.col(tokens_col)).otherwise(
-                F.concat(
-                    F.col(tokens_col),
-                    F.array_repeat(
-                        F.lit(pad_value), seq_len - F.col("n_real")
-                    ),
-                )
-            ),
-        )
-    return packed
-
-
-def fim_transform(
-    df: DataFrame,
-    tokens_col: str,
-    *,
-    rate_ppm: int,
-    prefix_tok: int,
-    suffix_tok: int,
-    middle_tok: int,
-    id_col: str = "doc_id",
-    salt: str = "fim",
-    out_col: str | None = None,
-) -> DataFrame:
-    """Fill-in-middle transform (Bavarian et al. 2022, arXiv:2207.14255):
-    rewrite a deterministic ``rate_ppm``-fraction of documents into PSM
-    order — ``[PRE] prefix [SUF] suffix [MID] middle`` — so an
-    autoregressive model learns infilling from what remains a left-to-right
-    corpus. No analog in the reference (pandas trajectory features); this is
-    the training-export sibling of ``chunk_sequences``/``pack_sequences``.
-
-    Determinism contract (the repo-wide md5 draw, same as
-    ``source_sample``): a doc is transformed iff
-    ``md5(id#salt) % 1e6 < rate_ppm``, and the two cut points are
-    ``md5(id#salt-a) % (n+1)`` / ``md5(id#salt-b) % (n+1)`` (lo = least,
-    hi = greatest, so ``0 <= lo <= hi <= n``). Pure functions of the row id
-    — reproducible across engines, re-runs, and parallelism, and the
-    transformed set is MONOTONE under rate increases. Raising ``rate_ppm``
-    never changes a doc already transformed at a lower rate (same property
-    as source_sample's draw), so a mixing recipe can tune the FIM fraction
-    without churning previously exported data.
-
-    NULL token arrays pass through untransformed (``is_fim = 0``, cut
-    points NULL, ``out_col`` NULL like the source): ``F.size(NULL)``
-    would otherwise propagate NULL through the cut draws and silently
-    corrupt the export column of a "selected" null doc (ADVICE.md r04
-    #4; regression-pinned in test_sequence.py).
-
-    Adds columns: ``is_fim`` (int 0/1), ``fim_lo``/``fim_hi`` (the cut
-    points, computed for every non-null row so audits can replay the
-    draw), and
-    ``out_col`` (default ``<tokens_col>_fim``) — the PSM array for selected
-    docs, the untouched source array otherwise. Tokens are only MOVED,
-    never recomputed (the BASELINE per-row invariant); ``fim_restore``
-    inverts the permutation exactly.
-
-    Scale shape: zero shuffle — the whole transform is slice/concat
-    expressions inside whole-stage codegen; sentinel ids are cast to the
-    source element type so the output array type never widens.
-    """
-    from geofeaturegeneration_spark.functions.text import md5_long
-
-    out_col = out_col or f"{tokens_col}_fim"
-    elem_t = df.schema[tokens_col].dataType
-    t = F.col(tokens_col)
-    n = F.size(t)
-    ids = F.col(id_col).cast("string")
-    # null-array guard: a null tokens row is never "selected" — without
-    # this, size(NULL) nulls the cut draws while the md5 draw still
-    # selects the row, leaving out_col NULL instead of a pass-through
-    sel = t.isNotNull() & (
-        md5_long(F.concat(ids, F.lit(f"#{salt}"))) % 1_000_000
-        < int(rate_ppm)
-    )
-    a = md5_long(F.concat(ids, F.lit(f"#{salt}-a"))) % (n + 1).cast("long")
-    b = md5_long(F.concat(ids, F.lit(f"#{salt}-b"))) % (n + 1).cast("long")
-    lo = F.least(a, b).cast("int")
-    hi = F.greatest(a, b).cast("int")
-
-    def _sent(tok: int):
-        return F.array(F.lit(int(tok))).cast(elem_t)
-
-    with_cuts = df.withColumn("is_fim", sel.cast("int")).withColumn(
-        "fim_lo", lo
-    ).withColumn("fim_hi", hi)
-    fim = F.concat(
-        _sent(prefix_tok),
-        F.slice(t, 1, F.col("fim_lo")),
-        _sent(suffix_tok),
-        F.slice(t, F.col("fim_hi") + 1, n - F.col("fim_hi")),
-        _sent(middle_tok),
-        F.slice(t, F.col("fim_lo") + 1, F.col("fim_hi") - F.col("fim_lo")),
-    )
-    return with_cuts.withColumn(
-        out_col, F.when(F.col("is_fim") == 1, fim).otherwise(t)
-    )
-
-
-def fim_restore(
-    df: DataFrame,
-    fim_col: str,
-    *,
-    lo_col: str = "fim_lo",
-    hi_col: str = "fim_hi",
-    is_col: str = "is_fim",
-    out_col: str = "tokens_restored",
-) -> DataFrame:
-    """Exact inverse of ``fim_transform`` given its cut-point columns: strip
-    the three sentinels and undo the PSM permutation, recovering the source
-    token array byte-for-byte (pinned by the round-trip test). Untransformed
-    rows pass through. Pure slice/concat — zero shuffle."""
-    f = F.col(fim_col)
-    lo = F.col(lo_col)
-    hi = F.col(hi_col)
-    n = F.size(f) - 3  # original length: PSM adds exactly three sentinels
-    restored = F.concat(
-        F.slice(f, 2, lo),                      # prefix sits after [PRE]
-        F.slice(f, lo + 4 + (n - hi), hi - lo), # middle sits after [MID]
-        F.slice(f, lo + 3, n - hi),             # suffix sits after [SUF]
-    )
-    return df.withColumn(
-        out_col, F.when(F.col(is_col) == 1, restored).otherwise(f)
-    )

@@ -19,7 +19,7 @@ filter (+ optional mixing recipe + PII scrub riding the output pass) —
 (+ optional exact-substring span dedup over the surviving corpus) —
 composed as ONE resumable pipeline behind the checkpoint store (reference
 analog: the stage-separated pipeline of AttachFeature.py:1046-1112), not
-just unit operators. Three to seventeen stages, each recorded per partition in
+just unit operators. Three to sixteen stages, each recorded per partition in
 the CheckpointStore so a crash resumes without recomputing finished work:
 
 -0.3. ``clean`` (optional, per doc-id hash bucket): text canonicalization
@@ -77,24 +77,16 @@ the CheckpointStore so a crash resumes without recomputing finished work:
 5. ``span_clean`` (per doc-id hash bucket): rewrite the final text with
    the duplicated ranges cut (dedup.span_reassemble) into
    ``span_deduped/``.
-6/7. ``pack_vocab`` / ``packed`` (optional, global): tokenizer artifact
-   over the final corpus — dense word->id vocab (build_vocab) or a BPE
-   merge table (--pack-bpe, bpe.train_bpe) — then fixed-length
-   boundary-crossing training rows (encode + optional --fim-ppm
-   fill-in-middle rewrite + pack_sequences) — the curated corpus leaves the
-   job as (grp, chunk_id, tokens:array<int>, n_real) rows ready to train
-   on.
-8. ``shards`` (optional, global): deterministic global shuffle + fixed-
-   size shard assignment (shuffle_shards) over the training rows (packed
-   chunks when --pack is on, else surviving docs) — the webdataset-style
-   export order, identical at any parallelism. ``--epochs`` (per-source
-   repetition ppm, curation.epoch_upsample) multiplies rows INTO this
-   training export only: copies carry a composite ``<id>#<epoch>``
-   identity through tokenize/pack/shard, the corpus tables stay
-   one-copy-per-doc, the vocab artifact trains on unique docs, and the
-   rate tag rides a STAGE-LOCAL lineage key (packed/shards only), so
-   tuning epochs re-runs nothing upstream.
-9. ``stats`` (optional, global): corpus report card over the FINAL
+6. ``shards`` (optional, global): deterministic global shuffle + fixed-
+   size shard assignment (shuffle_shards) over the surviving docs — the
+   webdataset-style export order, identical at any parallelism.
+   ``--epochs`` (per-source repetition ppm, curation.epoch_upsample)
+   multiplies rows INTO this training export only: copies carry a
+   composite ``<id>#<epoch>`` identity through the shard permutation, the
+   corpus tables stay one-copy-per-doc, and the rate tag rides a
+   STAGE-LOCAL lineage key (shards only), so tuning epochs re-runs nothing
+   upstream.
+7. ``stats`` (optional, global): corpus report card over the FINAL
    corpus — HLL word registers (p=14), HDR doc-length buckets
    (sub_bits=5), exact doc/token totals, the distinct-word estimate and
    the p50/p99 length cuts — persisted as ONE long-form (metric, k, v)
@@ -128,11 +120,8 @@ from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partition
 from geofeaturegeneration_spark.operators import (
     bloom_build,
     bloom_screen,
-    bpe_encode,
-    build_vocab,
     decontaminate,
     dedup_clusters,
-    encode_with_vocab,
     hist_build,
     hist_quantiles,
     hll_build,
@@ -141,13 +130,10 @@ from geofeaturegeneration_spark.operators import (
     lm_score,
     lsh_pairs_from_band_sigs,
     minhash_band_signatures,
-    pack_sequences,
-    fim_transform,
     semantic_dedup,
     shuffle_shards,
     span_dup_intervals,
     span_reassemble,
-    train_bpe,
     train_ivf_centroids,
 )
 from geofeaturegeneration_spark.functions.text import n_words, words
@@ -202,11 +188,6 @@ def run_dedup_pipeline(
     epoch_rates_ppm: dict[str, int] | None = None,
     epoch_default_ppm: int = 1_000_000,
     span_k: int | None = None,
-    pack_len: int | None = None,
-    pack_bpe_merges: int | None = None,
-    pack_groups: int = 32,
-    pack_pad: int | None = None,
-    fim_rate_ppm: int | None = None,
     shard_size: int | None = None,
     stats: bool = False,
     embeddings=None,
@@ -295,18 +276,11 @@ def run_dedup_pipeline(
     stage rewrites the final text (``span_reassemble``) into
     ``span_deduped/``.
 
-    ``pack_len`` appends the TRAINING-EXPORT packing stages over the final
-    corpus (span-cleaned when ``span_k`` is set, else the deduped output):
-    a global vocab stage persists the tokenizer artifact (the dense
-    word->id table, or with ``pack_bpe_merges`` a trained BPE merge table
-    — subword ids of a bounded vocabulary), then a global pack stage
-    encodes each doc through the broadcast artifact and cuts
-    ``pack_len``-token boundary-crossing rows
-    (pack_sequences; ``pack_groups`` sizes the parallelism, ``pack_pad``
-    right-pads each group's final partial chunk). ``shard_size`` appends
-    the shuffle_shards export: every training row gets its position in a
-    deterministic global permutation plus a fixed-size shard id. All
-    geometry knobs are in the lineage key.
+    ``shard_size`` appends the shuffle_shards TRAINING export over the
+    final corpus (span-cleaned when ``span_k`` is set, else the deduped
+    output): every surviving doc gets its position in a deterministic
+    global permutation plus a fixed-size shard id. The shard size is in
+    the lineage key.
 
     ``embeddings`` (optional, (doc_id, embedding)) adds the SEMANTIC dedup
     modality (similarity.semantic_dedup — SemDeDup): a global checkpointed
@@ -318,28 +292,18 @@ def run_dedup_pipeline(
     The full curation story — filter -> perplexity -> dedup ->
     decontaminate -> semantic -> mix -> scrub -> span-dedup — is
     therefore ONE resumable artifact; per-stage wall-clock is recorded in
-    the CheckpointStore metrics table. Returns the per-stage
-    PartitionResult lists (3 to 17 of them, in pipeline order)."""
+    the CheckpointStore (``latest()``). Returns the per-stage
+    PartitionResult lists (3 to 16 of them, in pipeline order)."""
     if mix_alpha is not None and mix_rates_ppm is not None:
         raise ValueError(
             "mix_alpha (computed temperature recipe) and mix_rates_ppm "
             "(explicit rates) are mutually exclusive"
         )
-    if fim_rate_ppm is not None and pack_len is None:
-        raise ValueError(
-            "fim_rate_ppm requires pack_len (--pack SEQ_LEN): the FIM "
-            "rewrite applies to the tokenized docs the pack stage cuts"
-        )
-    if pack_bpe_merges is not None and pack_len is None:
-        raise ValueError(
-            "pack_bpe_merges requires pack_len (--pack SEQ_LEN): without "
-            "the packing stages no BPE artifact is trained"
-        )
-    if epoch_rates_ppm is not None and pack_len is None and shard_size is None:
+    if epoch_rates_ppm is not None and shard_size is None:
         raise ValueError(
             "epoch_rates_ppm materializes repeats into the TRAINING export "
-            "(packed rows / shards) — pass pack_len and/or shard_size; for "
-            "keep-or-drop mixing of the corpus itself use mix_rates_ppm"
+            "(shards) — pass shard_size; for keep-or-drop mixing of the "
+            "corpus itself use mix_rates_ppm"
         )
     store = CheckpointStore(spark, ckpt_path)
     qua_path = os.path.join(out_root, "quality")
@@ -404,13 +368,6 @@ def run_dedup_pipeline(
         )
     if span_k is not None:
         lineage += f";span={span_k}"
-    if pack_len is not None:
-        # packing geometry changes the exported training rows AND the
-        # vocab artifact they are encoded with
-        lineage += (
-            f";pack={pack_len}:{pack_groups}:{pack_pad}"
-            f":bpe{pack_bpe_merges}"
-        )
     if shard_size is not None:
         lineage += f";shards={shard_size}"
     if embeddings is not None:
@@ -975,27 +932,16 @@ def run_dedup_pipeline(
             fin_path, "part_key", lineage, force=force,
         )
 
-    # optional EXPORT stages — the step between curation and training,
+    # optional EXPORT stage — the step between curation and training,
     # over the FINAL corpus (span-cleaned when the span stages ran, else
     # the deduped output).
     #
-    # ``pack_vocab``/``packed`` (--pack SEQ_LEN, two global units):
-    # build_vocab persists the dense word->id table (the tokenizer
-    # artifact training needs for decoding; corpus-scale distinct but
-    # vocab-sized output), then encode each doc's whitespace tokens via
-    # the broadcast vocab and cut fixed-length boundary-crossing training
-    # rows with pack_sequences. The encode costs one explode + one
-    # doc_id-keyed regroup — the honest price of tokenizing text in-engine;
-    # a corpus already carrying token arrays (the pre-tokenized sequences
-    # table) would feed pack_sequences directly and skip both.
-    #
     # ``shards`` (--shard-size N, one global unit): shuffle_shards assigns
-    # every training row (packed chunks when --pack is on, else surviving
-    # docs) its position in a deterministic global permutation plus
-    # fixed-size shard ids — webdataset-style export, no global
-    # single-partition sort (distributed zipWithIndex).
-    r_voc = r_pck = r_shd = None
-    if pack_len is not None or shard_size is not None or stats:
+    # every surviving doc its position in a deterministic global
+    # permutation plus fixed-size shard ids — webdataset-style export, no
+    # global single-partition sort (distributed zipWithIndex).
+    r_shd = None
+    if shard_size is not None or stats:
         if span_k is not None:
             exp_path = fin_path
             exp_schema = T.StructType(
@@ -1024,34 +970,31 @@ def run_dedup_pipeline(
                 .drop("part_key")
             )
 
+    shd_path = os.path.join(out_root, "shards")
+    if shard_size is not None:
         # --epochs: multi-epoch repetition (curation.epoch_upsample)
         # materialized into the TRAINING export only — the corpus tables
         # (deduped / span_deduped) stay one-copy-per-doc; copies get a
-        # composite '<id>#<epoch>' identity so downstream grouping
-        # (tokenize, pack, shard permutation) treats each repeat as its
-        # own row. The vocab/BPE artifact still trains on UNIQUE docs
-        # (repeats add no information to a tokenizer — and keeping the
-        # vocab stage epoch-free means tuning epochs never retrains it).
-        def maybe_epochs(rows, id_col):
+        # composite '<id>#<epoch>' identity so the shard permutation
+        # treats each repeat as its own row.
+        def shd_one(_key: str):
+            rows = read_export()
             if epoch_rates_ppm is None:
-                return rows, id_col
+                return shuffle_shards(rows, "doc_id", shard_size)
             up = epoch_upsample(
-                rows, id_col, epoch_rates_ppm, by=mix_by,
+                rows, "doc_id", epoch_rates_ppm, by=mix_by,
                 default_ppm=epoch_default_ppm,
-            )
-            return (
-                up.withColumn(
-                    "_eid",
-                    F.concat_ws(
-                        "#", F.col(id_col).cast("string"), F.col("epoch")
-                    ),
-                ).drop("epoch"),
+            ).withColumn(
                 "_eid",
-            )
+                F.concat_ws(
+                    "#", F.col("doc_id").cast("string"), F.col("epoch")
+                ),
+            ).drop("epoch")
+            return shuffle_shards(up, "_eid", shard_size)
 
         # stage-local lineage: epoch rates change only the bytes the
-        # packed/shards stages emit (vocab and every corpus stage are
-        # epoch-free), so only those two invalidate on a rate change
+        # shards stage emits (every corpus stage is epoch-free), so only
+        # it invalidates on a rate change
         ep_tag = (
             ""
             if epoch_rates_ppm is None
@@ -1060,134 +1003,6 @@ def run_dedup_pipeline(
                 f":{epoch_default_ppm}"
             )
         )
-        # same stage-local rule for the FIM rewrite: it changes only the
-        # packed token bytes (and the shards cut from them); the vocab
-        # artifact and every corpus stage are FIM-free
-        ep_tag += (
-            "" if fim_rate_ppm is None else f";fim={fim_rate_ppm}"
-        )
-
-    voc_path = os.path.join(out_root, "pack_vocab")
-    pck_path = os.path.join(out_root, "packed")
-    if pack_len is not None:
-        # two tokenizer forms behind the same two stages: word-level dense
-        # vocab (default) or BPE subwords (--pack-bpe N_MERGES — the vocab
-        # stage persists the trained merge artifact instead, and the pack
-        # stage encodes through it)
-        if pack_bpe_merges is not None:
-            def voc_one(_key: str):
-                return train_bpe(
-                    read_export(), "text", n_merges=pack_bpe_merges
-                )
-
-            voc_schema = T.StructType(
-                [
-                    T.StructField("token_id", T.IntegerType()),
-                    T.StructField("token", T.StringType()),
-                    T.StructField("left", T.StringType()),
-                    T.StructField("right", T.StringType()),
-                    T.StructField("rank", T.IntegerType()),
-                    T.StructField("part_key", T.StringType()),
-                ]
-            )
-        else:
-            def voc_one(_key: str):
-                toks = read_export().select(
-                    F.explode(words(F.col("text"))).alias("token")
-                )
-                return build_vocab(toks, "token")
-
-            voc_schema = T.StructType(
-                [
-                    T.StructField("token", T.StringType()),
-                    T.StructField("vocab_id", T.LongType()),
-                    T.StructField("part_key", T.StringType()),
-                ]
-            )
-
-        r_voc = run_partitioned(
-            spark, store, f"{job_id}/pack_vocab", ["all"], voc_one,
-            voc_path, "part_key", lineage, force=force,
-        )
-
-        def pck_one(_key: str):
-            vocab = (
-                spark.read.schema(voc_schema).parquet(voc_path)
-                .drop("part_key")
-            )
-            rows, idc = maybe_epochs(read_export(), "doc_id")
-            if pack_bpe_merges is not None:
-                arr = bpe_encode(rows, idc, "text", vocab).select(
-                    idc, "tokens"
-                )
-            else:
-                toks = rows.select(
-                    idc,
-                    F.posexplode(words(F.col("text"))).alias("pos", "token"),
-                )
-                enc = encode_with_vocab(toks, vocab, "token")
-                arr = enc.groupBy(idc).agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(
-                                F.struct(F.col("pos"), F.col("vocab_id"))
-                            )
-                        ),
-                        lambda s: s["vocab_id"].cast("int"),
-                    ).alias("tokens")
-                )
-            if fim_rate_ppm is not None:
-                # FIM rewrite (Bavarian et al. 2022 PSM order) on the
-                # per-doc arrays BEFORE packing, so infilling spans never
-                # cross document boundaries; sentinel ids are negative —
-                # below any trained vocab id (word vocab starts at 1 with
-                # 0 reserved, BPE at 0), so decode/audit tables never
-                # collide with them
-                arr = (
-                    fim_transform(
-                        arr, "tokens", rate_ppm=fim_rate_ppm,
-                        prefix_tok=-1, suffix_tok=-2, middle_tok=-3,
-                        id_col=idc,
-                    )
-                    .select(idc, F.col("tokens_fim").alias("tokens"))
-                )
-            return pack_sequences(
-                arr, idc, "tokens", seq_len=pack_len,
-                n_groups=pack_groups, pad_value=pack_pad,
-            )
-
-        r_pck = run_partitioned(
-            spark, store, f"{job_id}/packed", ["all"], pck_one,
-            pck_path, "part_key", lineage + ep_tag, force=force,
-        )
-
-    shd_path = os.path.join(out_root, "shards")
-    if shard_size is not None:
-        pck_schema = T.StructType(
-            [
-                T.StructField("grp", T.IntegerType()),
-                T.StructField("chunk_id", T.IntegerType()),
-                T.StructField("tokens", T.ArrayType(T.IntegerType())),
-                T.StructField("n_real", T.IntegerType()),
-                T.StructField("part_key", T.StringType()),
-            ]
-        )
-
-        def shd_one(_key: str):
-            if pack_len is not None:
-                # shard the packed training rows; (grp, chunk_id) is the
-                # unique row identity shuffle_shards permutes on
-                rows = (
-                    spark.read.schema(pck_schema).parquet(pck_path)
-                    .drop("part_key")
-                    .withColumn(
-                        "_sid",
-                        F.concat_ws(":", F.col("grp"), F.col("chunk_id")),
-                    )
-                )
-                return shuffle_shards(rows, "_sid", shard_size).drop("_sid")
-            rows, idc = maybe_epochs(read_export(), "doc_id")
-            return shuffle_shards(rows, idc, shard_size)
 
         r_shd = run_partitioned(
             spark, store, f"{job_id}/shards", ["all"], shd_one,
@@ -1281,8 +1096,6 @@ def run_dedup_pipeline(
     stages.append(r_out)
     if r_spn is not None:
         stages.extend([r_spn, r_fin])
-    if r_voc is not None:
-        stages.extend([r_voc, r_pck])
     if r_shd is not None:
         stages.append(r_shd)
     if r_sts is not None:
@@ -1360,30 +1173,10 @@ def main(argv=None) -> int:
                         "granularity over the surviving corpus (global "
                         "interval stage + per-bucket rewrite into "
                         "span_deduped/)")
-    p.add_argument("--pack", type=int, default=None, metavar="SEQ_LEN",
-                   help="append the training-export packing stages: build "
-                        "the word vocab over the final corpus, encode, and "
-                        "cut SEQ_LEN-token boundary-crossing training rows "
-                        "(pack_sequences) into packed/")
-    p.add_argument("--pack-bpe", type=int, default=None, metavar="N_MERGES",
-                   help="tokenize the packed rows with a BPE artifact "
-                        "trained on the final corpus (N_MERGES merges) "
-                        "instead of the word-level dense vocab")
-    p.add_argument("--pack-groups", type=int, default=32,
-                   help="independent pack groups (parallelism knob; "
-                        "packing quality is unaffected)")
-    p.add_argument("--fim-ppm", type=int, default=None, metavar="PPM",
-                   help="rewrite this ppm fraction of docs into "
-                        "fill-in-middle (PSM) order before packing "
-                        "(requires --pack; sentinels -1/-2/-3)")
-    p.add_argument("--pack-pad", type=int, default=None,
-                   help="right-pad each group's final partial chunk with "
-                        "this token id")
     p.add_argument("--shard-size", type=int, default=None,
                    help="append the shuffle_shards export stage: "
                         "deterministic global permutation + fixed-size "
-                        "shard ids over the training rows (packed chunks "
-                        "when --pack is on, else surviving docs)")
+                        "shard ids over the surviving docs")
     p.add_argument("--stats", action="store_true",
                    help="append the corpus report-card stage: HLL word "
                         "registers + HDR length-histogram buckets + exact "
@@ -1406,9 +1199,9 @@ def main(argv=None) -> int:
     p.add_argument("--epochs", default=None,
                    help="JSON object of per-source repetition rates in ppm "
                         "(2300000 = 2.3 epochs) — curation.epoch_upsample "
-                        "materialized into the TRAINING export (packed "
-                        "rows / shards); requires --pack and/or "
-                        "--shard-size; corpus tables stay one-copy-per-doc")
+                        "materialized into the TRAINING export (shards); "
+                        "requires --shard-size; corpus tables stay "
+                        "one-copy-per-doc")
     p.add_argument("--epochs-default", type=int, default=1_000_000,
                    help="repetition ppm for sources absent from --epochs "
                         "(default 1000000 = exactly one copy)")
@@ -1462,10 +1255,7 @@ def main(argv=None) -> int:
         epoch_rates_ppm=json.loads(args.epochs) if args.epochs else None,
         epoch_default_ppm=args.epochs_default,
         span_k=args.span_dedup,
-        pack_len=args.pack, pack_bpe_merges=args.pack_bpe,
-        fim_rate_ppm=args.fim_ppm,
-        pack_groups=args.pack_groups,
-        pack_pad=args.pack_pad, shard_size=args.shard_size,
+        shard_size=args.shard_size,
         stats=args.stats,
         embeddings=embeddings, emb_fingerprint=args.embeddings,
         semantic_threshold=args.semantic_threshold,
@@ -1491,8 +1281,6 @@ def main(argv=None) -> int:
     names.append("output")
     if args.span_dedup is not None:
         names.extend(["span_intervals", "span_clean"])
-    if args.pack is not None:
-        names.extend(["pack_vocab", "packed"])
     if args.shard_size is not None:
         names.append("shards")
     if args.stats:

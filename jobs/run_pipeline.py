@@ -13,7 +13,9 @@ partition pruning on the scan, the doc_id hash bucket bounds a partition's
 size at 10^12-sequence scale so any single unit re-runs in minutes. Each
 unit writes via dynamic partition overwrite, with its row count from the
 write, and the driver then records (rows, wall_ms, lineage) as a JSON mark;
-re-running after a crash skips completed units (checkpoint.py).
+re-running after a crash skips completed units (checkpoint.py). The lineage
+holds the input's path and a digest of its data files' (path, length,
+modification time), so rewriting the input in place re-runs every unit.
 
 Pipeline per unit (the north-rule transform): one projection per doc over
 its token array, whose event time is a function of position. Run starts ->
@@ -27,6 +29,7 @@ sort and no window; the rows come out through ``posexplode_outer``.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -36,7 +39,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
+from geofeaturegeneration_spark.checkpoint import (
+    CheckpointStore,
+    _fs_path,
+    run_partitioned,
+)
 from geofeaturegeneration_spark.config import EngineConfig
 from geofeaturegeneration_spark.datagen import read_sequences
 from geofeaturegeneration_spark.session import get_spark
@@ -105,6 +112,24 @@ def build_features(seq_df, min_duration_s: float = 60.0):
     )
 
 
+def input_fingerprint(spark, path: str) -> str:
+    """Digest of the sorted (path, length, modification time) of the data
+    files under ``path``, listed by the driver through the Hadoop
+    FileSystem (no Spark job). Names starting with ``_`` or ``.`` (markers,
+    checksums) are not data, as for Spark's own reader. Rewriting the input
+    in place changes the digest even when the path stays the same."""
+    fs, root = _fs_path(spark, path)
+    files = []
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        p = st.getPath()
+        if not p.getName().startswith(("_", ".")):
+            files.append(f"{p.toString()}\t{st.getLen()}\t{st.getModificationTime()}")
+    digest = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
+    return f"{len(files)}:{digest[:16]}"
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--input", required=True, help="sequences parquet dir")
@@ -120,9 +145,12 @@ def main(argv=None) -> int:
     sources = [r["source"] for r in seq.select("source").distinct().collect()]
     keys = [f"{s}-{b}" for s in sorted(sources) for b in range(args.buckets)]
 
-    # lineage = input identity + transform version; changing either
-    # invalidates prior checkpoints for affected partitions.
-    lineage = f"input={args.input};buckets={args.buckets};xform=v2"
+    # lineage = input identity (its path and its files' content stamps) +
+    # transform version; changing either invalidates prior checkpoints.
+    lineage = (
+        f"input={args.input};files={input_fingerprint(spark, args.input)}"
+        f";buckets={args.buckets};xform=v2"
+    )
 
     def run_one(key: str):
         src, bucket = key.rsplit("-", 1)

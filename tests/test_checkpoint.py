@@ -18,7 +18,11 @@ from geofeaturegeneration_spark.checkpoint import (
     CheckpointStore,
     run_partitioned,
 )
-from geofeaturegeneration_spark.datagen import generate_sequences, write_sequences
+from geofeaturegeneration_spark.datagen import (
+    generate_sequences,
+    read_sequences,
+    write_sequences,
+)
 from jobs.run_pipeline import build_features
 
 
@@ -108,7 +112,7 @@ def test_resume_skips_done_and_output_identical(spark, seq, tmp_path):
     assert _collect_features(spark, out1) == _collect_features(spark, out2)
 
     # metrics recorded for every partition
-    m = store2.metrics("j")
+    m = store2.latest("j")
     rows = {r["partition_key"]: r for r in m.collect()}
     assert set(rows) == set(sources)
     assert all(rows[s]["status"] == "done" and rows[s]["rows"] > 0 for s in sources)
@@ -225,6 +229,30 @@ def test_pipeline_changed_input_reruns_every_unit(
     _main(spark, monkeypatch, capsys, *two, "--input", seq_dirs["b"], "--output", fresh, "--checkpoint", ckf)
     assert _same_rows(spark, out, fresh)
     assert not old.exceptAll(spark.read.parquet(fresh)).isEmpty()
+
+
+def test_pipeline_rewritten_input_reruns_every_unit(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """Rewriting the same ``--input`` path with other data changes the
+    lineage, which holds the input's files and not only its path: every
+    unit re-runs, and the output equals ``build_features`` of the new
+    input."""
+    inp, out = str(tmp_path / "seq"), str(tmp_path / "out")
+    args = ["--input", inp, "--buckets", "2", "--output", out,
+            "--checkpoint", str(tmp_path / "ck")]
+    write_sequences(generate_sequences(spark, n_docs=30, seed=1), inp)
+    first = _main(spark, monkeypatch, capsys, *args)
+    assert first["skipped"] == 0 and first["rows"] > 0
+    write_sequences(generate_sequences(spark, n_docs=30, seed=2), inp)
+    second = _main(spark, monkeypatch, capsys, *args)
+    assert second["partitions"] == first["partitions"]
+    assert second["skipped"] == 0
+
+    want = build_features(read_sequences(spark, inp))
+    got = spark.read.parquet(out).select(*want.columns)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
 def test_pipeline_shrinking_buckets_prunes_stale_partitions(
@@ -660,7 +688,7 @@ def test_full_curation_pipeline_all_stages_kill_resume(
     for job in ("corpus_dedup/quality", "corpus_dedup/signatures",
                 "corpus_dedup/clusters", "corpus_dedup/contamination",
                 "corpus_dedup/output"):
-        m = store.metrics(job)
+        m = store.latest(job)
         assert m is not None
         rows = m.collect()
         assert rows and all(
@@ -1124,147 +1152,6 @@ def test_dedup_pipeline_prior_bloom_stage(spark, tmp_path):
     )
     assert all(not r.skipped for stage in r3 for r in stage)
 
-def test_dedup_pipeline_pack_and_shard_export(spark, tmp_path):
-    """--pack/--shard-size turn the curated corpus into training rows
-    inside the same resumable artifact: packed chunks equal the
-    hand-composed vocab -> encode -> pack_sequences chain over the deduped
-    output, token conservation holds, every shard except the last is
-    exactly shard_size rows, and the export stages resume (skip) with the
-    same flags."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.functions.text import words
-    from geofeaturegeneration_spark.operators import (
-        build_vocab,
-        encode_with_vocab,
-        pack_sequences,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              pack_len=64, pack_groups=4, pack_pad=0, shard_size=16)
-
-    out, ck = str(tmp_path / "out_px"), str(tmp_path / "ck_px")
-    stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    # signatures, clusters, output, pack_vocab, packed, shards
-    assert len(stages) == 6
-    assert all(not r.skipped for st in stages for r in st)
-
-    packed = spark.read.parquet(f"{out}/packed").drop("part_key")
-    final = spark.read.parquet(f"{out}/deduped").drop(
-        "part_key", "cluster_id"
-    )
-
-    # equals hand-composed vocab -> encode -> pack over the deduped corpus
-    toks = final.select(
-        "doc_id", F.posexplode(words(F.col("text"))).alias("pos", "token")
-    )
-    vocab = build_vocab(toks.select("token"), "token")
-    enc = encode_with_vocab(toks, vocab, "token")
-    arr = enc.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("vocab_id")))
-            ),
-            lambda s: s["vocab_id"].cast("int"),
-        ).alias("tokens")
-    )
-    want_df = pack_sequences(
-        arr, "doc_id", "tokens", seq_len=64, n_groups=4, pad_value=0
-    )
-    want = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in want_df.collect()
-    )
-    got = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in packed.collect()
-    )
-    assert got == want
-
-    # conservation: every real token of the final corpus lands exactly once
-    n_tok = final.select(F.sum(F.size(words(F.col("text"))))).collect()[0][0]
-    assert packed.select(F.sum("n_real")).collect()[0][0] == n_tok
-    assert packed.filter(F.size("tokens") != 64).count() == 0  # padded
-
-    # shards: fixed-size cover of the packed rows, only the last short
-    shards = spark.read.parquet(f"{out}/shards").drop("part_key")
-    assert shards.count() == packed.count()
-    sizes = {
-        r["shard"]: r["n"]
-        for r in shards.groupBy("shard").agg(F.count("*").alias("n")).collect()
-    }
-    last = max(sizes)
-    assert all(sizes[s] == 16 for s in sizes if s != last)
-    assert 0 < sizes[last] <= 16
-    assert shards.select(F.max("shard_pos")).collect()[0][0] <= 15
-
-    # same flags resume: everything skips
-    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert all(r.skipped for st in st2 for r in st)
-
-def test_dedup_pipeline_pack_bpe(spark, tmp_path):
-    """--pack-bpe swaps the packing tokenizer for a BPE artifact trained
-    on the final corpus: packed chunks equal the hand-composed train_bpe
-    -> bpe_encode -> pack_sequences chain, and the merge count is in the
-    lineage key (same flags resume: every stage skips)."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.operators import (
-        bpe_encode,
-        pack_sequences,
-        train_bpe,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              pack_len=64, pack_bpe_merges=40, pack_groups=4, pack_pad=0)
-
-    out, ck = str(tmp_path / "out_pb"), str(tmp_path / "ck_pb")
-    stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert len(stages) == 5  # signatures, clusters, output, vocab, packed
-    assert all(not r.skipped for st in stages for r in st)
-
-    packed = spark.read.parquet(f"{out}/packed").drop("part_key")
-    final = spark.read.parquet(f"{out}/deduped").drop(
-        "part_key", "cluster_id"
-    )
-    art = train_bpe(final, "text", n_merges=40)
-    arr = bpe_encode(final, "doc_id", "text", art).select("doc_id", "tokens")
-    want_df = pack_sequences(
-        arr, "doc_id", "tokens", seq_len=64, n_groups=4, pad_value=0
-    )
-    want = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in want_df.collect()
-    )
-    got = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in packed.collect()
-    )
-    assert got == want
-    # subword conservation: packed real tokens == encoded corpus tokens
-    n_tok = arr.select(F.sum(F.size("tokens"))).collect()[0][0]
-    assert packed.select(F.sum("n_real")).collect()[0][0] == n_tok
-
-    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert all(r.skipped for st in st2 for r in st)
-
-def test_pack_bpe_without_pack_raises(spark, tmp_path):
-    """Review finding: --pack-bpe without --pack was silently ignored."""
-    import jobs.run_dedup as RD
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    with pytest.raises(ValueError, match="pack_bpe_merges requires"):
-        RD.run_dedup_pipeline(
-            spark, docs, str(tmp_path / "o"), str(tmp_path / "c"),
-            pack_bpe_merges=40,
-        )
-
 
 def test_dedup_pipeline_normalize_stage(spark, tmp_path):
     """--normalize canonicalizes byte forms BEFORE anything hashes (the
@@ -1424,178 +1311,89 @@ def test_dedup_pipeline_stats_stage(spark, tmp_path):
 
 
 def test_dedup_pipeline_epoch_upsampling_export(spark, tmp_path):
-    """--epochs materializes per-source repetition into the training
-    export only: 2.0 epochs everywhere exactly doubles the packed real
-    tokens and the shard rows vs the epoch-free run, the corpus tables
-    stay one-copy-per-doc, resume skips everything, and changing the
-    rates re-runs ONLY the packed/shards stages (stage-local lineage)."""
+    """--shard-size exports the surviving docs in shuffle_shards order:
+    every shard except the last is exactly shard_size rows, the rows equal
+    shuffle_shards over the deduped output, and a re-run with the same
+    flags skips. --epochs materializes per-source repetition into that
+    export only: 2.0 epochs everywhere exactly doubles the shard rows, the
+    corpus tables stay one-copy-per-doc, resume skips everything, and
+    changing the rates re-runs ONLY the shards stage (stage-local
+    lineage)."""
     import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.functions.text import words
+    from geofeaturegeneration_spark.operators import shuffle_shards
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text", "source")
     base = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-                pack_len=64, pack_groups=4, pack_pad=0, shard_size=16)
+                shard_size=16)
 
     out0, ck0 = str(tmp_path / "out_e0"), str(tmp_path / "ck_e0")
-    RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
-    tok0 = (
-        spark.read.parquet(f"{out0}/packed").select(F.sum("n_real"))
-        .collect()[0][0]
+    stages0 = RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
+    assert len(stages0) == 4  # signatures, clusters, output, shards
+    assert all(not r.skipped for st in stages0 for r in st)
+
+    # shards: the surviving docs in shuffle_shards order, fixed-size
+    # shards with only the last one short
+    final = spark.read.parquet(f"{out0}/deduped").drop("part_key")
+    shards0 = spark.read.parquet(f"{out0}/shards").drop("part_key")
+    cols = [*final.columns, "pos", "shard", "shard_pos"]
+    want = sorted(
+        tuple(r) for r in shuffle_shards(final, "doc_id", 16)
+        .select(cols).collect()
     )
-    n_shard_rows0 = spark.read.parquet(f"{out0}/shards").count()
+    got = sorted(tuple(r) for r in shards0.select(cols).collect())
+    assert got == want
+    n_shard_rows0 = len(got)
+    assert n_shard_rows0 == final.count() > 0
+    sizes = {
+        r["shard"]: r["n"]
+        for r in shards0.groupBy("shard").agg(F.count("*").alias("n"))
+        .collect()
+    }
+    last = max(sizes)
+    assert all(sizes[s] == 16 for s in sizes if s != last)
+    assert 0 < sizes[last] <= 16
+    assert shards0.select(F.max("shard_pos")).collect()[0][0] <= 15
+
+    # same flags resume: everything skips
+    st2 = RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
+    assert all(r.skipped for st in st2 for r in st)
 
     kw = dict(base, epoch_rates_ppm={"src0": 2_000_000},
               epoch_default_ppm=2_000_000)
     out, ck = str(tmp_path / "out_ep"), str(tmp_path / "ck_ep")
     stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert len(stages) == 6
+    assert len(stages) == 4
     assert all(not r.skipped for st in stages for r in st)
 
     # exactly 2 copies of every surviving doc reach the training export;
     # the corpus table itself is NOT duplicated
+    shd = spark.read.parquet(f"{out}/shards")
+    assert shd.count() == 2 * n_shard_rows0
+    # the two copies of one doc carry distinct composite identities
     assert (
-        spark.read.parquet(f"{out}/packed").select(F.sum("n_real"))
-        .collect()[0][0] == 2 * tok0
-    )
-    # shards cover the packed rows (chunk count is NOT exactly 2x — the
-    # doubled token stream amortizes each group's padding differently)
-    assert (
-        spark.read.parquet(f"{out}/shards").count()
-        == spark.read.parquet(f"{out}/packed").count()
-        > n_shard_rows0
+        shd.groupBy("_eid").count().filter("count > 1").count() == 0
     )
     ded = spark.read.parquet(f"{out}/deduped").drop("part_key", "cluster_id")
     assert ded.groupBy("doc_id").count().filter("count > 1").count() == 0
-    assert ded.count() == spark.read.parquet(f"{out0}/deduped").count()
+    assert ded.count() == final.count()
 
     # resume: identical flags skip every stage
     again = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
     assert all(r.skipped for st in again for r in st)
 
-    # epoch-rate change invalidates ONLY the export stages
+    # epoch-rate change invalidates ONLY the export stage
     kw2 = dict(kw, epoch_rates_ppm={"src0": 3_000_000})
     third = RD.run_dedup_pipeline(spark, docs, out, ck, **kw2)
     skipped = [all(r.skipped for r in st) for st in third]
-    assert skipped == [True, True, True, True, False, False]
-
-    # doc-level export (no packing): shard rows double exactly
-    kwd = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-               shard_size=16, epoch_rates_ppm={"src0": 2_000_000},
-               epoch_default_ppm=2_000_000)
-    outd, ckd = str(tmp_path / "out_ed"), str(tmp_path / "ck_ed")
-    RD.run_dedup_pipeline(spark, docs, outd, ckd, **kwd)
-    n_docs = spark.read.parquet(f"{outd}/deduped").count()
-    shd = spark.read.parquet(f"{outd}/shards")
-    assert shd.count() == 2 * n_docs
-    # the two copies of one doc carry distinct composite identities
-    assert (
-        shd.groupBy("_eid").count().filter("count > 1").count() == 0
-    )
+    assert skipped == [True, True, True, False]
 
     # epochs without a training export is a configuration error
-    import pytest
-
-    with pytest.raises(ValueError, match="pack_len and/or shard_size"):
+    with pytest.raises(ValueError, match="pass shard_size"):
         RD.run_dedup_pipeline(
             spark, docs, str(tmp_path / "x"), str(tmp_path / "y"),
             buckets=3, epoch_rates_ppm={"src0": 2_000_000},
-        )
-
-
-def test_dedup_pipeline_pack_with_fim(spark, tmp_path):
-    """--fim-ppm rewrites a deterministic fraction of the tokenized docs
-    into PSM order before packing: packed rows equal the hand-composed
-    vocab -> encode -> fim_transform -> pack chain, sentinels appear (and
-    only the three negative ids), total real tokens grow by exactly
-    3 x n_fim docs, and changing the rate invalidates the pack stages on
-    resume (lineage) while the corpus stages skip."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.functions.text import words
-    from geofeaturegeneration_spark.operators import (
-        build_vocab,
-        encode_with_vocab,
-        fim_transform,
-        pack_sequences,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              pack_len=64, pack_groups=4, pack_pad=0)
-
-    out, ck = str(tmp_path / "out_fim"), str(tmp_path / "ck_fim")
-    RD.run_dedup_pipeline(spark, docs, out, ck, fim_rate_ppm=500_000, **kw)
-    packed = spark.read.parquet(f"{out}/packed").drop("part_key")
-    final = spark.read.parquet(f"{out}/deduped").drop(
-        "part_key", "cluster_id"
-    )
-
-    toks = final.select(
-        "doc_id", F.posexplode(words(F.col("text"))).alias("pos", "token")
-    )
-    vocab = build_vocab(toks.select("token"), "token")
-    enc = encode_with_vocab(toks, vocab, "token")
-    arr = enc.groupBy("doc_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("vocab_id")))
-            ),
-            lambda s: s["vocab_id"].cast("int"),
-        ).alias("tokens")
-    )
-    fim = fim_transform(
-        arr, "tokens", rate_ppm=500_000, prefix_tok=-1, suffix_tok=-2,
-        middle_tok=-3, id_col="doc_id",
-    )
-    want_df = pack_sequences(
-        fim.select("doc_id", F.col("tokens_fim").alias("tokens")),
-        "doc_id", "tokens", seq_len=64, n_groups=4, pad_value=0,
-    )
-    want = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in want_df.collect()
-    )
-    got = sorted(
-        (r["grp"], r["chunk_id"], tuple(r["tokens"]), r["n_real"])
-        for r in packed.collect()
-    )
-    assert got == want
-
-    # sentinel accounting: negatives are exactly {-1,-2,-3}, and the real
-    # token total is the corpus total + 3 per transformed doc
-    n_fim = fim.filter("is_fim = 1").count()
-    assert n_fim > 0
-    neg = (
-        packed.select(F.explode("tokens").alias("t")).filter("t < 0")
-        .groupBy("t").count().collect()
-    )
-    assert {r["t"] for r in neg} == {-1, -2, -3}
-    assert all(r["count"] == n_fim for r in neg)
-    n_tok = final.select(F.sum(F.size(words(F.col("text"))))).collect()[0][0]
-    assert (
-        packed.select(F.sum("n_real")).collect()[0][0] == n_tok + 3 * n_fim
-    )
-
-    # rate change invalidates the export stages but not the corpus stages
-    st = RD.run_dedup_pipeline(
-        spark, docs, out, ck, fim_rate_ppm=250_000, **kw
-    )
-    sigs, clusters, output, voc, pck = st
-    assert all(r.skipped for r in sigs)
-    assert all(not r.skipped for r in pck)
-
-
-def test_fim_without_pack_raises(spark, tmp_path):
-    import jobs.run_dedup as RD
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id BIGINT, text STRING")
-    with pytest.raises(ValueError, match="fim_rate_ppm requires pack_len"):
-        RD.run_dedup_pipeline(
-            spark, docs, str(tmp_path / "o"), str(tmp_path / "c"),
-            buckets=2, fim_rate_ppm=100_000,
         )
 
 

@@ -126,24 +126,30 @@ def test_backfill_is_previous_kept_stay(parity):
     assert np.array_equal(a, b, equal_nan=True)
 
 
-def test_event_time_past_int32_positions(spark):
+def test_event_time_past_int32_positions(spark, tmp_path):
     """Event time is computed in long: at position 7,458,061 the int32
     product ``1_700_000_000 + pos * 60`` overflows. One doc of 7,458,062
-    zeros then [1, 2] has two kept stays, the second after the long run."""
+    zeros then [1, 2] has two kept stays, the second after the long run.
+    The doc is written to Parquet with pyarrow and read back, as the job
+    reads its input: built in Spark, it would fold into a literal that the
+    plan inlines and ships with every task."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     n = 7_458_062
-    tokens = F.concat(F.array_repeat(F.lit(0), n), F.array(F.lit(1), F.lit(2)))
-    seq = spark.range(1).select(
-        F.lit("hot").alias("doc_id"),
-        tokens.alias("tokens"),
-        F.lit(n + 2).alias("n_tok"),
-        F.lit("web").alias("source"),
+    tokens = np.zeros(n + 2, np.int32)
+    tokens[n:] = [1, 2]
+    table = pa.table(
+        {
+            "doc_id": ["hot"],
+            "tokens": pa.ListArray.from_arrays(pa.array([0, n + 2], pa.int32()), pa.array(tokens)),
+            "n_tok": pa.array([n + 2], pa.int32()),
+            "source": ["web"],
+        }
     )
-    try:
-        rows = build_features(seq).orderBy("stime").collect()
-    finally:
-        # the doc's one window partition grows the JVM heap by ~3 GB; a full
-        # GC hands it back, so the rest of the session keeps its footprint
-        spark._jvm.System.gc()
+    path = str(tmp_path / "hot.parquet")
+    pq.write_table(table, path)
+    rows = build_features(spark.read.parquet(path)).orderBy("stime").collect()
     assert [r["n_rows"] for r in rows] == [n, 1]
     assert rows[0]["prev_run_len"] is None
     assert rows[1]["prev_run_len"] == n

@@ -73,8 +73,26 @@ def test_contract_fits_driver_window():
     assert len(E.queries()) <= 50
     # every contract and extra query has a DuckDB oracle registered
     oracles = E.oracle_sql()
-    missing = [n for n in all_queries() if n not in oracles]
+    registered = all_queries()
+    missing = [n for n in registered if n not in oracles]
     assert not missing, f"queries without oracle: {missing}"
+    # and the reverse: every name the registry's side tables hold is a
+    # registered query, so retiring a query cannot leave a dead oracle,
+    # rotation hint or bench headline behind
+    import bench
+
+    hints = E.rotation_hints()
+    named = {
+        "oracle_sql": list(oracles),
+        "carriers": list(hints["carriers"]),
+        "foldable": list(hints["foldable"]),
+        "bench.HEADLINE": list(bench.HEADLINE),
+    }
+    dead = {
+        where: [n for n in names if n not in registered]
+        for where, names in named.items()
+    }
+    assert not any(dead.values()), f"names of no registered query: {dead}"
 
 
 def test_asof_union_is_single_shuffle_no_join(spark):

@@ -171,39 +171,6 @@ def test_edit_join_matches_python_model(spark, strs, d):
     assert got == want
 
 
-# --------------------------------------------------------- fim_transform
-@settings(**SETTINGS)
-@given(
-    docs=st.lists(
-        st.lists(st.integers(min_value=0, max_value=99), max_size=12),
-        min_size=1, max_size=20,
-    ),
-    rate=st.integers(min_value=0, max_value=1_000_000),
-)
-def test_fim_matches_python_model(spark, docs, rate):
-    """tokens_fim == the documented pure function of (id, salt, tokens):
-    md5 draw, md5 cut points, PSM permutation; untouched otherwise."""
-    from geofeaturegeneration_spark.operators import fim_transform
-
-    rows = [(i, t) for i, t in enumerate(docs)]
-    df = spark.createDataFrame(rows, "doc_id LONG, tokens ARRAY<INT>")
-    got = {
-        r["doc_id"]: (r["is_fim"], r["fim_lo"], r["fim_hi"], r["tokens_fim"])
-        for r in fim_transform(
-            df, "tokens", rate_ppm=rate, prefix_tok=-1, suffix_tok=-2,
-            middle_tok=-3,
-        ).collect()
-    }
-    for i, t in rows:
-        n = len(t)
-        sel = _md5_60(f"{i}#fim") % 1_000_000 < rate
-        a = _md5_60(f"{i}#fim-a") % (n + 1)
-        b = _md5_60(f"{i}#fim-b") % (n + 1)
-        lo, hi = min(a, b), max(a, b)
-        fim = [-1] + t[:lo] + [-2] + t[hi:] + [-3] + t[lo:hi] if sel else t
-        assert got[i] == (int(sel), lo, hi, fim)
-
-
 # -------------------------------------------------------------- pagerank
 @settings(**SETTINGS)
 @given(

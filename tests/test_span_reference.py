@@ -1,7 +1,6 @@
 """Independent-reference parity for span_dedup.
 
-Same approach as test_bpe.py's Sennrich-style reference implementation:
-a ~35-line pure-Python model of the declared winner rule (every k-token
+A ~35-line pure-Python model of the declared winner rule (every k-token
 window hashed; the single occurrence at the smallest (doc, position)
 wins; every other occurrence marks its k tokens; marked windows closer
 than a full kept gap merge into maximal spans; spans are cut and the doc

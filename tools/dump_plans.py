@@ -32,7 +32,6 @@ SHOW = [
     ("pii_scrub", "PII redaction: chained regexp exprs, zero shuffle, one codegen span"),
     ("clean_lines", "C4 line cleaning: per-line rules in one array filter lambda, kept array staged as a column alias feeding three outputs (SPARK-36718 keeps CollapseProject from re-inlining it) — two narrow projections, ZERO shuffle"),
     ("span_dedup", "exact substring dedup: staged-split window hashes, partial-agg min-(doc,pos) winner (map-side combine on hot spans), doc-keyed islands windows only — no window over the hash stream; AQE prints initial+final plans, so subtree counts appear doubled"),
-    ("pack_sequences", "cross-doc packing: offset window over DOC rows (never exploded tokens), ONE linear posexplode below it, two uniform hash shuffles"),
     ("traj_graph", "trajectory transition graph: ONE lag window on the entity-key exchange the stay table already has + ONE (src,dst) hash aggregate with map-side combine — no join, no explode"),
     ("chunk_sequences", "padded chunk export: the pad is staged as one column, the chunks leave through posexplode_outer and an index null filter — no filter holds the chunk lambda, so each doc is chunked once"),
     ("semantic_dedup", "SemDeDup: GEMM quantizer assignment in mapInPandas (no shuffle/window), within-cluster screen as cogrouped GEMM tiles emitting flagged ids only (never pairs), one distinct + one left join for verdicts"),
@@ -40,14 +39,12 @@ SHOW = [
     ("shuffle_shards", "global shuffle->shards: ONE range exchange + per-partition offset mapInPandas (distributed zipWithIndex) — no single-partition global window. The plan shows only the assignment pass because the pinned range partitioning is a lazy localCheckpoint (the lineage-cut guard); the upstream is exactly one repartitionByRange + sortWithinPartitions"),
     ("pagerank", "integer-exact PageRank: per round ONE left equi-join (sparse rank state) + ONE partial-agg sum; lazy localCheckpoint cuts round lineage; constants re-enter once via anti-join"),
     ("edit_join", "edit-distance join: symmetric-delete neighborhoods staged once per join side (the minhash-pairs trade: regenerating the narrow variant stream is cheaper than materializing it), variant-hash equi-join (broadcast at test scale, shuffle+AQE at corpus scale), distinct candidates, JVM levenshtein verify — no cartesian product"),
-    ("fim_transform", "fill-in-middle export: md5 draw + cut points + PSM slice/concat all inside one codegen span over the token table — ZERO shuffle beyond the input's own aggregation"),
     ("lm_logprob", "CCNet perplexity: the <=2*buckets-row bigram LM is BROADCAST onto the corpus bigram stream (the corpus never shuffles on the bucket key), per-doc scores are exact int64 partial-agg sums, one left join keeps <2-word docs"),
     ("heavy_hitters", "exact heavy hitters via lossless count-min screen: the checkpointed sketch (ONE corpus scan, shown as ExistingRDD slices) feeds depth chained BROADCAST lookups on the single rescan — the pre-screen stream never shuffles; the only value-keyed aggregate runs over surviving candidates, map-side combined"),
     ("bloom_screen", "Bloom ingest screen: k chained BROADCAST joins against the checkpointed m_bits-bounded position table (ExistingRDD, corpus scanned once at build) — the batch side has zero exchanges"),
     ("normalize_text", "unicode/whitespace canonicalization: two narrow JVM regex projections around ONE zero-shuffle mapInArrow stage (ASCII short-circuit + UAX #15 for the minority) — fixes byte forms at scan speed before anything hashes"),
     ("hll_count", "HLL distinct count: narrow md5/bit projection (NO explode — one register per row) + ONE bounded groupBy per shard, register-wise max merge, single-row estimate — the corpus never shuffles on the value"),
     ("hist_quantiles", "HDR quantiles: bounded groupBy(b) per shard, cell-sum merge; JOIN-FREE selection — the cumulative window and each per-q filtered aggregate read the lineage-cut bucket table (ExistingRDD, <= ~63*2^sub_bits rows); with group_cols the window is keyed and millions of groups scale as one hash shuffle"),
-    ("bpe_roundtrip", "BPE encode+decode: ZERO key shuffles — scan -> round-robin parallelism floor -> mapInArrow encode (bounded artifact in the closure, per-task word cache, flat int32 token buffers: no per-token Python object on the output path) -> Arrow decode; tokenization is a per-document pure function and the plan says so (10-25x faster than the join twin bpe_roundtrip_join at every parallelism level, scaling efficiency 0.98 at 262M tokens)"),
 ]
 
 

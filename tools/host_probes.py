@@ -7,7 +7,6 @@ JVM, no Arrow) at 2 and 8 processes:
 
     python tools/host_probes.py gemm        # semantic_dedup's tile GEMM shape
     python tools/host_probes.py gemm_strip  # the shipped strip-wise variant
-    python tools/host_probes.py bpe         # bpe_encode's per-word merge loop
     python tools/host_probes.py normalize   # normalize_text's regex+NFC scan
 
 Interpretation (both measured on this sandbox host, 2026-08-19):
@@ -17,12 +16,6 @@ Interpretation (both measured on this sandbox host, 2026-08-19):
   across sessions** — two processes already saturate the shared DRAM
   channels. semantic_dedup measuring 0.72 whole-job therefore EXCEEDS
   its kernel's host ceiling; nothing engine-side serializes.
-* ``bpe`` — dict-cached per-word BPE encode over a synthetic word
-  stream: scales **0.80-0.97 efficiency** (0.86 in the variant that
-  replays the real 250 MB scaling corpus) — the host is fine for this
-  working set, which is how the original mapInPandas encode's 0.56 was
-  indicted as an ENGINE problem (the pandas token-object conversion)
-  and fixed with flat Arrow buffers (0.98 after).
 * ``normalize`` — normalize_text's regex+NFC pipeline as pure per-doc
   Python (re.sub string reallocs): caps at **0.63 efficiency**
   (0.631-0.643 across 3 runs, 2026-08-19) — string-substitution realloc
@@ -81,29 +74,6 @@ def _gemm_strip_work(seed: int) -> float:
     return float(tot)
 
 
-def _bpe_work(seed: int) -> int:
-    # same cache-then-memcpy loop shape as operators/bpe.py enc_batches,
-    # over a synthetic zipf-ish word stream (no repo imports: the probe
-    # must measure the HOST, not the library)
-    from array import array
-
-    words = [f"w{i % 997}x{i % 31}" for i in range(200_000)]
-    cache: dict[str, array] = {}
-    out = array("i")
-    n = 0
-    for _ in range(10):
-        for w in words:
-            r = cache.get(w)
-            if r is None:
-                r = array("i", [ord(c) % 256 for c in w])
-                cache[w] = r
-            out.extend(r)
-            if len(out) > 1 << 20:
-                n += len(out)
-                del out[:]
-    return n + len(out)
-
-
 def _normalize_work(seed: int) -> int:
     # normalize_text's per-byte shape with no engine: regex scans over
     # ~10 MB of ASCII-heavy text (10% of docs spiked non-ASCII, like the
@@ -145,7 +115,7 @@ def _run(fn, procs: int, chunks: int = 8, reps: int = 3) -> float:
 def main() -> None:
     which = sys.argv[1] if len(sys.argv) > 1 else "gemm"
     fn = {"gemm": _gemm_work, "gemm_strip": _gemm_strip_work,
-          "bpe": _bpe_work, "normalize": _normalize_work}[which]
+          "normalize": _normalize_work}[which]
     w2 = _run(fn, 2)
     w8 = _run(fn, 8)
     print(

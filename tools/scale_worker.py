@@ -3,14 +3,8 @@ at a fixed local[] parallelism and print one JSON line.
 
     python tools/scale_worker.py <cpus> <seq_path> [n_runs] [job]
 
-job = "pipeline" (default: the token feature pipeline), "bpe"
-(bpe_encode over the dedup-scaling text corpus with a 200-merge artifact
-trained once outside the timed region: the zero-shuffle mapInArrow
-encode — per-task word cache, flat int32 token buffers), "pack"
-(corpus-level training-sequence packing over the same table: offset
-window over doc rows + linear explode; n_groups is FIXED at 64 across
-parallelism levels so the output is provably identical while the work
-redistributes), "semdedup" (semantic_dedup over a synthetic embedding
+job = "pipeline" (default: the token feature pipeline), "semdedup"
+(semantic_dedup over a synthetic embedding
 corpus; quantizer trained once outside the timed region), or "dsir"
 (importance_weights over the dedup-scaling text corpus: hashed 1..2-gram
 counting + broadcast ratio join — the gram-counting stage is the
@@ -58,25 +52,7 @@ def main() -> None:
                 f"-XX:ParallelGCThreads={gc_threads} -XX:ConcGCThreads={max(1, gc_threads // 4)}"
         },
     )
-    if job == "pack":
-        import time
-
-        from pyspark.sql import functions as F
-
-        from geofeaturegeneration_spark.datagen import read_sequences
-        from geofeaturegeneration_spark.operators import pack_sequences
-
-        def run_job(spark, seq_path):
-            seq = read_sequences(spark, seq_path)
-            n_tok = seq.agg(F.sum("n_tok")).collect()[0][0]
-            t0 = time.perf_counter()
-            packed = pack_sequences(
-                seq.select("doc_id", "tokens"), "doc_id", "tokens",
-                seq_len=512, n_groups=64,
-            )
-            packed.write.format("noop").mode("overwrite").save()
-            return n_tok, time.perf_counter() - t0
-    elif job == "semdedup":
+    if job == "semdedup":
         import time
 
         from geofeaturegeneration_spark.operators import (
@@ -146,42 +122,6 @@ def main() -> None:
             )
             w.write.format("noop").mode("overwrite").save()
             return n_grams, time.perf_counter() - t0
-    elif job == "bpe":
-        import time
-
-        from geofeaturegeneration_spark.operators import bpe_encode, train_bpe
-
-        # size scan splits to the DATA, not the default 128 MB: encode is
-        # CPU-heavy per byte, and the ~250 MB bench corpus would otherwise
-        # scan as 2-8 splits — a narrow first stage that Amdahl-caps the
-        # high-parallelism level (at 100 TB the same rule says 8-64 MB
-        # text splits; split count tracks bytes, so the setting is
-        # scale-invariant). With wide splits the operator's parallelism
-        # floor no-ops and the plan is scan -> Arrow encode, no exchange.
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(8 << 20))
-        _bpe_cache: dict = {}
-
-        def run_job(spark, path):
-            docs = spark.read.parquet(path).select("doc_id", "text")
-            # train once, encode many — the production shape: the merge
-            # loop runs over the corpus-size-independent word-count table
-            # and its artifact is a fixed cost shared by every level, so
-            # training stays outside the timed region (like the semdedup
-            # quantizer). Work metric = subword tokens emitted: a property
-            # of (corpus, artifact), identical at every level — computed
-            # by one untimed encode pass. Both are cached across the
-            # n_runs repeats of THIS process (same corpus, same artifact);
-            # only the timed encode below repeats.
-            if path not in _bpe_cache:
-                art = train_bpe(docs, "text", n_merges=200)
-                enc = bpe_encode(docs, "doc_id", "text", art)
-                _bpe_cache[path] = (art, enc.agg({"n_tok": "sum"}).collect()[0][0])
-            art, n_sub = _bpe_cache[path]
-            t0 = time.perf_counter()
-            bpe_encode(docs, "doc_id", "text", art).write.format(
-                "noop"
-            ).mode("overwrite").save()
-            return n_sub, time.perf_counter() - t0
     elif job == "normalize":
         import time
 
@@ -189,8 +129,9 @@ def main() -> None:
 
         from geofeaturegeneration_spark.operators import normalize_text
 
-        # CPU-heavy per byte like bpe: size scan splits to the data so the
-        # first stage is wide at both levels (scale-invariant rule). 4 MB
+        # CPU-heavy per byte: size scan splits to the DATA, not the default
+        # 128 MB, so the first stage is wide at both levels (split count
+        # tracks bytes, so the setting is scale-invariant). 4 MB
         # splits, not 8: the first cut at 8 MB gave ~12 tasks for a 90 MB
         # corpus — 1.5 waves at 8 slots, and the wave-quantization tail
         # alone caps efficiency at ~0.67 regardless of the kernel
@@ -229,7 +170,7 @@ def main() -> None:
             span_dup_intervals,
         )
 
-        # same split sizing as normalize/bpe: the first stage (split +
+        # same split sizing as normalize: the first stage (split +
         # window-hash explode) is CPU-heavy per byte, so splits must track
         # the data for the stage to be wide at both levels
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(4 << 20))

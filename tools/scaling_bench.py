@@ -100,20 +100,16 @@ def main() -> None:
                         "threads — so 8->32 measures the host, not the engine)")
     p.add_argument("--md-out", default=None, help="append a results section to this md file")
     p.add_argument("--job", default="pipeline",
-                   choices=["pipeline", "pack", "semdedup", "dsir",
-                            "sketch", "bpe", "normalize", "span",
+                   choices=["pipeline", "semdedup", "dsir",
+                            "sketch", "normalize", "span",
                             "span_intervals", "hll", "hist", "lloyd",
                             "edit", "pr"],
-                   help="pipeline = token feature pipeline; pack = "
-                        "pack_sequences over the same table; semdedup = "
+                   help="pipeline = token feature pipeline; semdedup = "
                         "semantic_dedup over a synthetic embedding corpus "
                         "(--n-vecs); dsir = importance_weights over the "
                         "dedup-scaling text corpus (--n-copies/"
                         "--text-repeat); sketch = count-min heavy_hitters "
-                        "over the same corpus's 3-word shingles; bpe = "
-                        "bpe_encode over the same corpus (artifact "
-                        "trained once, untimed; sized by --n-copies/"
-                        "--text-repeat)")
+                        "over the same corpus's 3-word shingles")
     p.add_argument("--n-vecs", type=int, default=400000,
                    help="corpus size for --job semdedup")
     p.add_argument("--n-copies", type=int, default=20,
@@ -124,7 +120,7 @@ def main() -> None:
 
     if args.job in ("semdedup", "lloyd"):
         seq_path = ensure_emb_input(args.n_vecs)
-    elif args.job in ("dsir", "sketch", "bpe", "normalize", "span",
+    elif args.job in ("dsir", "sketch", "normalize", "span",
                       "span_intervals", "hll", "hist", "edit", "pr"):
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from dedup_scaling import ensure_corpus
@@ -148,11 +144,9 @@ def main() -> None:
 
     job_title = {
         "pipeline": "token feature pipeline",
-        "pack": "pack_sequences (seq_len=512, n_groups=64)",
         "semdedup": "semantic_dedup (16 trained clusters, threshold 0.95)",
         "dsir": "DSIR importance_weights (hashed 1..2-grams, 8192 buckets)",
         "sketch": "count-min heavy_hitters (3-word shingles, depth 4, width 8192, min_count 20)",
-        "bpe": "bpe_encode (200-merge artifact trained once, untimed)",
         "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
         "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
         "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
@@ -163,7 +157,7 @@ def main() -> None:
         "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
     }[args.job]
     unit = {"semdedup": "vectors", "dsir": "grams", "sketch": "shingles",
-            "bpe": "subword tokens", "normalize": "chars",
+            "normalize": "chars",
             "hll": "words", "hist": "words",
             "lloyd": "vector-iterations"}.get(args.job, "tokens")
     if args.md_out:
