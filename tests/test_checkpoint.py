@@ -1310,17 +1310,59 @@ def test_dedup_pipeline_stats_stage(spark, tmp_path):
     assert all(r.skipped for stage in st2 for r in stage)
 
 
-def test_dedup_pipeline_epoch_upsampling_export(spark, tmp_path):
-    """--shard-size exports the surviving docs in shuffle_shards order:
-    every shard except the last is exactly shard_size rows, the rows equal
-    shuffle_shards over the deduped output, and a re-run with the same
-    flags skips. --epochs materializes per-source repetition into that
-    export only: 2.0 epochs everywhere exactly doubles the shard rows, the
-    corpus tables stay one-copy-per-doc, resume skips everything, and
-    changing the rates re-runs ONLY the shards stage (stage-local
-    lineage)."""
+def test_dedup_pipeline_pack_and_shard_export(spark, tmp_path):
+    """--shard-size exports the surviving docs in shuffle_shards order
+    inside the same resumable artifact: the rows equal shuffle_shards over
+    the deduped output, every shard except the last is exactly shard_size
+    rows, and the export stage resumes (skips) with the same flags."""
     import jobs.run_dedup as RD
     from geofeaturegeneration_spark.operators import shuffle_shards
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).select("doc_id", "text", "source")
+    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
+              shard_size=16)
+
+    out, ck = str(tmp_path / "out_px"), str(tmp_path / "ck_px")
+    stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
+    assert len(stages) == 4  # signatures, clusters, output, shards
+    assert all(not r.skipped for st in stages for r in st)
+
+    # shards: the surviving docs in shuffle_shards order, fixed-size
+    # shards with only the last one short
+    final = spark.read.parquet(f"{out}/deduped").drop("part_key")
+    shards = spark.read.parquet(f"{out}/shards").drop("part_key")
+    cols = [*final.columns, "pos", "shard", "shard_pos"]
+    want = sorted(
+        tuple(r) for r in shuffle_shards(final, "doc_id", 16)
+        .select(cols).collect()
+    )
+    got = sorted(tuple(r) for r in shards.select(cols).collect())
+    assert got == want
+    assert len(got) == final.count() > 0
+    sizes = {
+        r["shard"]: r["n"]
+        for r in shards.groupBy("shard").agg(F.count("*").alias("n"))
+        .collect()
+    }
+    last = max(sizes)
+    assert all(sizes[s] == 16 for s in sizes if s != last)
+    assert 0 < sizes[last] <= 16
+    assert shards.select(F.max("shard_pos")).collect()[0][0] <= 15
+
+    # same flags resume: everything skips
+    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
+    assert all(r.skipped for st in st2 for r in st)
+
+
+def test_dedup_pipeline_epoch_upsampling_export(spark, tmp_path):
+    """--epochs materializes per-source repetition into the shard export
+    only: 2.0 epochs everywhere exactly doubles the shard rows vs the
+    epoch-free run, the corpus tables stay one-copy-per-doc, resume skips
+    everything, and changing the rates re-runs ONLY the shards stage
+    (stage-local lineage)."""
+    import jobs.run_dedup as RD
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -1329,36 +1371,10 @@ def test_dedup_pipeline_epoch_upsampling_export(spark, tmp_path):
                 shard_size=16)
 
     out0, ck0 = str(tmp_path / "out_e0"), str(tmp_path / "ck_e0")
-    stages0 = RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
-    assert len(stages0) == 4  # signatures, clusters, output, shards
-    assert all(not r.skipped for st in stages0 for r in st)
-
-    # shards: the surviving docs in shuffle_shards order, fixed-size
-    # shards with only the last one short
+    RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
     final = spark.read.parquet(f"{out0}/deduped").drop("part_key")
-    shards0 = spark.read.parquet(f"{out0}/shards").drop("part_key")
-    cols = [*final.columns, "pos", "shard", "shard_pos"]
-    want = sorted(
-        tuple(r) for r in shuffle_shards(final, "doc_id", 16)
-        .select(cols).collect()
-    )
-    got = sorted(tuple(r) for r in shards0.select(cols).collect())
-    assert got == want
-    n_shard_rows0 = len(got)
+    n_shard_rows0 = spark.read.parquet(f"{out0}/shards").count()
     assert n_shard_rows0 == final.count() > 0
-    sizes = {
-        r["shard"]: r["n"]
-        for r in shards0.groupBy("shard").agg(F.count("*").alias("n"))
-        .collect()
-    }
-    last = max(sizes)
-    assert all(sizes[s] == 16 for s in sizes if s != last)
-    assert 0 < sizes[last] <= 16
-    assert shards0.select(F.max("shard_pos")).collect()[0][0] <= 15
-
-    # same flags resume: everything skips
-    st2 = RD.run_dedup_pipeline(spark, docs, out0, ck0, **base)
-    assert all(r.skipped for st in st2 for r in st)
 
     kw = dict(base, epoch_rates_ppm={"src0": 2_000_000},
               epoch_default_ppm=2_000_000)

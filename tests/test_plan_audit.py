@@ -274,7 +274,13 @@ def test_pipeline_plan_builds_in_few_py4j_commands(spark, monkeypatch):
     driver sends 34 py4j commands, where the window composition it
     replaced sent 704 for this input, and ``Column`` lambdas send one or
     more per expression node. Deterministic: counts commands, not
-    seconds."""
+    seconds. py4j's finalizer thread sends a delete command for each
+    Python-side Java reference that is garbage-collected, through the same
+    connection class and at times set by the collector, so only commands
+    this thread sends, other than those deletes, are counted."""
+    import threading
+
+    from py4j import protocol
     from py4j.clientserver import ClientServerConnection
 
     from geofeaturegeneration_spark.datagen import generate_sequences
@@ -283,9 +289,13 @@ def test_pipeline_plan_builds_in_few_py4j_commands(spark, monkeypatch):
     seq = generate_sequences(spark, n_docs=5, seed=1)
     sent = []
     send = ClientServerConnection.send_command
+    caller = threading.get_ident()
 
     def counting(self, command, *args, **kwargs):
-        sent.append(command)
+        if threading.get_ident() == caller and not command.startswith(
+            protocol.MEMORY_COMMAND_NAME
+        ):
+            sent.append(command)
         return send(self, command, *args, **kwargs)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counting)
