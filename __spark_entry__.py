@@ -1098,12 +1098,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # operator) — slot freed by folding `time_features` (pure calendar
         # column expressions, driver-green r01-r03) into extra_queries()
         "shuffle_shards": q_shuffle_shards,
-        # round 4: HLL cardinality sketch (new operator — completes the
-        # mergeable-sketch triad: CMS = frequency, Bloom = membership,
-        # HLL = cardinality) — slot freed by folding `orders_enrich` (the
-        # remaining TPC-H demo aggregation, driver-green r01-r03, not a
-        # SURVEY §2 operator; the §2.3 broadcast-enrich row is carried by
-        # the in-window stay_enrich) into extra_queries()
+        # round 4: HLL cardinality sketch (new operator — the cardinality
+        # member of the sketch family) — slot freed by folding
+        # `orders_enrich` (the remaining TPC-H demo aggregation,
+        # driver-green r01-r03, not a SURVEY §2 operator; the §2.3
+        # broadcast-enrich row is carried by the in-window stay_enrich)
+        # into extra_queries()
         "hll_count": q_hll_count,
         # round 4 (this session): edit-distance fuzzy join (new operator —
         # the character-level member of the dedup family) — slot freed by
@@ -1147,12 +1147,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # slot freed by folding the multimodal payload embedding (since
         # retired with its module) into extra_queries()
         "lm_logprob": q_lm_logprob,
-        # round 4: mergeable-sketch family (new operators). Slots freed by
-        # folding the multimodal frame sampler (since retired) and
-        # `sliding_subseq` (driver-green r01-r03; the windows family keeps
-        # lag_lead + rolling in-window) into extra_queries().
-        "heavy_hitters": q_heavy_hitters,
-        "bloom_screen": q_bloom_screen,
         # corpus drift monitor (KL/JS over the shared hashed-gram space):
         # promoted round 4 for its first driver row — unlike the other
         # extras it has no in-window query composing it; slot freed by
@@ -1252,50 +1246,6 @@ def q_rare_tokens(spark, sf_dir):
     return rare_token_stats(docs, "doc_id", "text", rare_below=2)
 
 
-def q_heavy_hitters(spark, sf_dir):
-    """EXACT frequent 3-word shingles via the lossless count-min screen
-    (operators/sketch.py:heavy_hitters). At sf0.01 the shingle key has
-    ~16k distinct values against a width-8192 sketch, so the screen runs
-    with REAL cell collisions and must still return the byte-exact
-    ``GROUP BY HAVING`` answer — which is the oracle. The full-cardinality
-    value shuffle never happens: the only wide shuffle is the
-    (depth x width)-bounded sketch build; the second pass filters map-side
-    through chained broadcast lookups before the (heavy-only) groupBy."""
-    from geofeaturegeneration_spark.operators import heavy_hitters
-    from geofeaturegeneration_spark.operators.dedup import _shingles_expr
-
-    docs = _docs_wide(spark, sf_dir)
-    stream = (
-        docs.select(F.split(F.col("text"), " ").alias("_gfs_w"))
-        .select(F.explode_outer(_shingles_expr("_gfs_w", 3)).alias("shingle"))
-        .filter(F.col("shingle").isNotNull())
-    )
-    return heavy_hitters(stream, "shingle", min_count=5, depth=4, width=8192)
-
-
-def q_bloom_screen(spark, sf_dir):
-    """Incremental cross-batch dedup screen (operators/sketch.py): build
-    the Bloom position table over the even-doc_id half of the corpus (the
-    'already ingested' side, touched exactly once), then flag a batch of
-    the odd half PLUS every 10th even doc — true re-ingested duplicates,
-    so the no-false-negative side of the screen is exercised non-vacuously
-    (every doc_id%10==0 row must flag true). The oracle replays the
-    identical salted-md5 bit positions, so the ~(1-e^(-kn/m))^k spurious
-    flags match bit-for-bit too. Screen side is k chained broadcast joins,
-    zero batch-side shuffle."""
-    from geofeaturegeneration_spark.operators import bloom_build, bloom_screen
-
-    docs = _docs_wide(spark, sf_dir)
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = docs.filter(
-        (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
-    ).select("doc_id", "text")
-    bloom = bloom_build(corpus, "text", m_bits=1 << 14, k=4)
-    return bloom_screen(batch, "text", bloom, m_bits=1 << 14, k=4).select(
-        "doc_id", "might_contain"
-    )
-
-
 def q_corpus_divergence(spark, sf_dir):
     """Distribution drift between the even- and odd-doc_id halves of the
     corpus over hashed 1..2-gram buckets (operators/importance.py:
@@ -1312,54 +1262,6 @@ def q_corpus_divergence(spark, sf_dir):
         docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
         n=2, buckets=1024, scale=10_000_000,
     )
-
-
-def q_cms_merge(spark, sf_dir):
-    """Shard mergeability of the count-min sketch: build one sketch per
-    corpus half (even/odd doc_id word streams) and cms_merge them — the
-    result must equal the one-pass sketch of the whole stream, which is
-    what the oracle computes (one GROUP BY over the union). Pins the
-    cell-wise-sum semantics cross-engine."""
-    from geofeaturegeneration_spark.operators import cms_build, cms_merge
-
-    docs = _docs_wide(spark, sf_dir)
-    tok = lambda pred: docs.filter(pred).select(  # noqa: E731
-        F.explode(F.split(F.col("text"), " ")).alias("w")
-    )
-    a = cms_build(tok(F.col("doc_id") % 2 == 0), "w", depth=3, width=64)
-    b = cms_build(tok(F.col("doc_id") % 2 == 1), "w", depth=3, width=64)
-    return cms_merge(a, b)
-
-
-def q_bloom_novel(spark, sf_dir):
-    """bloom_novel over the same corpus/batch split as the in-window
-    bloom_screen contract query: the guaranteed-novel keeper ids (the
-    screen's flags inverted into a keep set, spurious drops included)."""
-    from geofeaturegeneration_spark.operators import bloom_novel
-
-    docs = _docs_wide(spark, sf_dir)
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    batch = docs.filter(
-        (F.col("doc_id") % 2 == 1) | (F.col("doc_id") % 10 == 0)
-    ).select("doc_id", "text")
-    return bloom_novel(
-        batch, "text", corpus, m_bits=1 << 14, k=4
-    ).select("doc_id")
-
-
-def q_cms_query(spark, sf_dir):
-    """Count-min point estimates for every distinct word, sketched at a
-    deliberately COLLIDING geometry (depth 3, width 64 for a ~31-word
-    vocabulary over ~27k occurrences) so the oracle replays real cell
-    aliasing, not just exact counts — pins the Kirsch-Mitzenmacher
-    (h1 + d*h2) % width cell math and the min-over-rows lookup
-    bit-for-bit cross-engine."""
-    from geofeaturegeneration_spark.operators import cms_build, cms_query
-
-    docs = _docs_wide(spark, sf_dir)
-    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-    sketch = cms_build(tok, "w", depth=3, width=64)
-    return cms_query(sketch, tok.distinct(), "w", depth=3, width=64)
 
 
 def q_hll_count(spark, sf_dir):
@@ -1796,8 +1698,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the per_doc=True scope of the in-window line_dedup (within-doc
         # repeated-line trim, no cross-doc state)
         "line_dedup_doc": q_line_dedup_doc,
-        # round 4: folded to free a heavy_hitters / bloom_screen sketch
-        # slot — sliding_subseq keeps its windows siblings (lag_lead,
+        # round 4: folded to free a slot for one since-retired sketch
+        # query — sliding_subseq keeps its windows siblings (lag_lead,
         # rolling) in-window; driver-green r01-r03 and value-exact under
         # compare_oracle.
         "sliding_subseq": q_sliding,
@@ -1884,19 +1786,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # table — location importance; exact int64 recurrence, unrolled
         # CTE oracle like the in-window pagerank
         "traj_pagerank": q_traj_pagerank,
-        # the sketch ESTIMATES themselves, oracle-pinned cross-engine (the
-        # in-window heavy_hitters oracle checks only the exact final
-        # answer, which the lossless screen guarantees regardless of the
-        # sketch values; this extra replays the Kirsch-Mitzenmacher cell
-        # math bit-for-bit)
-        "cms_query": q_cms_query,
-        # sketch-shard mergeability, oracle-pinned: cms_merge over the two
-        # corpus halves' sketches must equal the one-pass build (the SQL
-        # groups the union directly)
-        "cms_merge": q_cms_merge,
-        # the novel-keeper form of the in-window bloom_screen (same split,
-        # same bit math — the screen's flags inverted to a keep set)
-        "bloom_novel": q_bloom_novel,
         # the exact-integer register table the in-window hll_count
         # estimate is computed from, oracle-replayed row-for-row
         "hll_registers": q_hll_registers,
@@ -2503,9 +2392,6 @@ def rotation_hints() -> dict[str, dict]:
         "line_dedup_doc": "line_dedup",
         "hist_quantiles_by": "hist_quantiles",
         "hll_count_by": "hll_count",
-        "cms_query": "heavy_hitters",
-        "cms_merge": "heavy_hitters",
-        "bloom_novel": "bloom_screen",
         "temperature_mix": "source_sample",
         "temperature_tokens": "source_sample",
         "traj_pagerank": "pagerank",
@@ -3416,41 +3302,6 @@ SELECT d.doc_id,
 FROM (SELECT doc_id FROM documents WHERE doc_id % 11 <> 0) d
 LEFT JOIN sc USING (doc_id)
 """,
-        # mirrors operators/curation.rare_token_stats (rare_below=2);
-        # rare_frac is one IEEE division of two exact bigints — identical
-        # in any engine
-        # heavy_hitters: the CMS screen is LOSSLESS (estimates never
-        # undercount), so the Spark result is byte-identical to the naive
-        # exact query — which is therefore the oracle. Same 3-word-shingle
-        # construction as _SHINGLE_CTE (without DISTINCT/hashing: the
-        # sketch counts multiplicity of the raw shingle strings).
-        "heavy_hitters": """
-WITH w AS (SELECT string_split(text,' ') ws FROM documents),
-g AS (SELECT unnest(list_transform(generate_series(1, len(ws)-2),
-                                   i -> array_to_string(ws[i:i+2],' '))) AS shingle
-      FROM w WHERE len(ws) >= 3)
-SELECT shingle, count(*) AS cnt
-FROM g GROUP BY shingle HAVING count(*) >= 5
-""",
-        # bloom_screen: replay the Kirsch-Mitzenmacher bit positions
-        # (h1 + i*h2) % 2^14 from the two salted base md5s; might_contain
-        # = all 4 positions of the batch value present in the corpus's
-        # DISTINCT position set (matches Spark's chained broadcast left
-        # joins bit-for-bit, spurious flags included).
-        "bloom_screen": f"""
-WITH d2 AS (SELECT doc_id,
-                   ({_MD5L.format(x="text || '#bloom#a'")}) AS h1,
-                   ({_MD5L.format(x="text || '#bloom#b'")}) AS h2
-            FROM documents),
-pos AS (SELECT DISTINCT (h1 + i*h2) % 16384 AS pos
-        FROM d2, range(4) t(i) WHERE doc_id % 2 = 0),
-batch AS (SELECT doc_id, h1, h2 FROM d2
-          WHERE doc_id % 2 = 1 OR doc_id % 10 = 0),
-bp AS (SELECT doc_id, (h1 + i*h2) % 16384 AS pos
-       FROM batch, range(4) t(i))
-SELECT bp.doc_id, (count(p.pos) = 4) AS might_contain
-FROM bp LEFT JOIN pos p USING (pos) GROUP BY bp.doc_id
-""",
         # corpus_divergence: same gram/bucket construction as the DSIR
         # CTEs over the two corpus halves; per-bucket terms rounded to
         # scaled int64 in the IDENTICAL expression order (p = (c+1)/d with
@@ -3492,49 +3343,6 @@ SELECT sum(ab)::DOUBLE / 10000000.0 AS kl_ab,
        sum(ba)::DOUBLE / 10000000.0 AS kl_ba,
        sum(js2)::DOUBLE / (2.0 * 10000000.0) AS js
 FROM (SELECT * FROM terms UNION ALL SELECT * FROM ghost)
-""",
-        # cms_merge: merged shard sketches == one GROUP BY over the union
-        # of the two halves' (d, cell) streams, same KM cell math
-        "cms_merge": f"""
-WITH t AS (SELECT unnest(string_split(text,' ')) AS wd FROM documents),
-hh AS (SELECT ({_MD5L.format(x="wd || '#cms#a'")}) AS h1,
-              ({_MD5L.format(x="wd || '#cms#b'")}) AS h2 FROM t)
-SELECT d::INT AS d, ((h1 + d*h2) % 64)::INT AS w, count(*) AS cnt
-FROM hh, range(3) t2(d) GROUP BY 1, 2
-""",
-        # bloom_novel: the bloom_screen oracle's flags inverted into the
-        # keeper id set (docs missing at least one of the 4 bit positions)
-        "bloom_novel": f"""
-WITH d2 AS (SELECT doc_id,
-                   ({_MD5L.format(x="text || '#bloom#a'")}) AS h1,
-                   ({_MD5L.format(x="text || '#bloom#b'")}) AS h2
-            FROM documents),
-pos AS (SELECT DISTINCT (h1 + i*h2) % 16384 AS pos
-        FROM d2, range(4) t(i) WHERE doc_id % 2 = 0),
-batch AS (SELECT doc_id, h1, h2 FROM d2
-          WHERE doc_id % 2 = 1 OR doc_id % 10 = 0),
-bp AS (SELECT doc_id, (h1 + i*h2) % 16384 AS pos
-       FROM batch, range(4) t(i))
-SELECT bp.doc_id
-FROM bp LEFT JOIN pos p USING (pos) GROUP BY bp.doc_id
-HAVING count(p.pos) < 4
-""",
-        # cms_query: replay the KM cell math — cells (h1 + d*h2) % 64 from
-        # the two salted base md5s, sketch = per-cell counts, estimate =
-        # min over the 3 rows (0 when a cell is empty). Collisions at
-        # width 64 are real and must match bit-for-bit.
-        "cms_query": f"""
-WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
-hh AS (SELECT w, ({_MD5L.format(x="w || '#cms#a'")}) AS h1,
-              ({_MD5L.format(x="w || '#cms#b'")}) AS h2 FROM t),
-sk AS (SELECT d, (h1 + d*h2) % 64 AS wc, count(*) AS cnt
-       FROM hh, range(3) t2(d) GROUP BY d, wc),
-items AS (SELECT DISTINCT w, h1, h2 FROM hh),
-lu AS (SELECT i.w, coalesce(sk.cnt, 0) AS c
-       FROM (SELECT w, d, (h1 + d*h2) % 64 AS wc
-             FROM items, range(3) t3(d)) i
-       LEFT JOIN sk ON sk.d = i.d AND sk.wc = i.wc)
-SELECT w, min(c) AS est FROM lu GROUP BY w
 """,
         # hll_count: replay the full HLL pipeline in ONE pass (the Spark
         # side shards by doc_id parity and merges — register max is
@@ -3653,6 +3461,9 @@ WITH v AS (SELECT n_chars::BIGINT AS v FROM documents
 SELECT ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
 FROM v GROUP BY 1
 """,
+        # mirrors operators/curation.rare_token_stats (rare_below=2);
+        # rare_frac is one IEEE division of two exact bigints — identical
+        # in any engine
         "rare_tokens": """
 WITH t AS (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents),
 c AS (SELECT w, count(*) AS cnt FROM t GROUP BY w),

@@ -5,7 +5,8 @@
 
 Env:
     SPARK_GRAFT_SF_DIR   parquet dir (default /root/testdata/sf0.1)
-    SPARK_GRAFT_CPUS     local[] parallelism (default 32)
+    SPARK_GRAFT_CPUS     local[] parallelism (default: the CPUs this process
+                         may run on)
     BENCH_QUERIES        comma-separated subset override
     BENCH_REPEATS        runs per query, best-of is reported (default 3;
                          the host is multi-tenant — measured load avg ~3
@@ -92,12 +93,9 @@ HEADLINE = [
     "temperature_mix",
     "shuffle_shards",
     "lm_logprob",
-    "heavy_hitters",
-    "cms_query",
     "hll_count",
     "hist_quantiles",
     "corpus_divergence",
-    "bloom_screen",
     "ivf_lloyd",
     "epoch_upsample",
     # round 5: the remaining two queries promoted into the driver window

@@ -8,8 +8,7 @@ analog exists.
 
 from __future__ import annotations
 
-import json
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -61,13 +60,3 @@ class EngineConfig:
     # salts per hot entity in the salted as-of
     n_salts: int = 16
     grid: GridConfig = field(default_factory=GridConfig)
-
-    def to_json(self) -> str:
-        return json.dumps(asdict(self), default=list, sort_keys=True)
-
-    @staticmethod
-    def from_json(path: str) -> "EngineConfig":
-        with open(path) as f:
-            raw = json.load(f)
-        grid = GridConfig(**raw.pop("grid")) if "grid" in raw else GridConfig()
-        return EngineConfig(grid=grid, **raw)

@@ -888,7 +888,7 @@ def edit_variant_table(
     row per symmetric-delete variant of each key. Build it ONCE over the
     accumulated corpus, store it (parquet), and screen every future ingest
     batch against the stored table — the same build-once-screen-forever
-    contract as ``bloom_build`` / the persisted minhash band table."""
+    contract as the persisted minhash band table."""
     keyed = df.select(
         F.col(id_col).alias("_eid"), F.col(key_col).alias("_ekey")
     ).filter(F.length("_ekey") >= int(min_len))

@@ -1,364 +1,45 @@
 """Mergeable probabilistic sketches for corpus statistics at 100-TB scale:
-count-min frequency sketching (+ an EXACT heavy-hitters screen built on it)
-and a Bloom-filter membership screen for incremental cross-batch dedup.
+a HyperLogLog cardinality sketch and a base-2 HDR histogram with
+quantiles.
 
-No analog exists in the reference (its frequency statistics are pandas
-``value_counts`` over one in-memory frame); these are the tools a
-pretraining pipeline needs when the DISTINCT cardinality of a key (tokens,
-URLs, fingerprints) is too large to shuffle or to hold per-executor:
+No analog exists in the reference (its statistics are pandas calls over
+one in-memory frame); these are the tools
+a pretraining pipeline needs when the DISTINCT cardinality of a key
+(tokens, URLs, fingerprints) or the value range of a length column is too
+large to shuffle or to sort globally:
 
-* ``cms_build`` / ``cms_merge`` / ``cms_query`` — Cormode & Muthukrishnan's
-  count-min sketch as a (depth x width)-row DataFrame. The sketch size is
-  a CONSTANT (depth*width rows) regardless of corpus size, sketches of
-  shards merge by cell-wise addition (one union + groupBy), and estimates
-  never underestimate — the properties that make it the canonical
-  distributed-counting tool. ``rare_token_stats`` (curation.py) is the
-  exact-count sibling that assumes the vocabulary fits in executor memory;
-  this family is what replaces it when it does not.
-* ``heavy_hitters`` — EXACT frequent-items extraction with a sketch-based
-  screen: because a CMS estimate is always >= the true count, filtering
-  the stream to rows whose estimate reaches the threshold drops no true
-  heavy hitter, and the exact groupBy afterwards sees only candidate-heavy
-  keys. The full-cardinality value shuffle never happens; the only wide
-  shuffle is the width-bounded sketch build. The screen is LOSSLESS, so
-  the result is byte-identical to the naive ``GROUP BY ... HAVING`` — the
-  DuckDB oracle is exactly that query.
-* ``bloom_build`` / ``bloom_screen`` / ``bloom_novel`` — membership screen
-  for incremental ingestion: build a Bloom filter over the existing
-  corpus's keys ONCE (size bounded by ``m_bits`` regardless of corpus
-  size), broadcast it, and screen every new batch map-side — no join
-  against the corpus, no corpus re-scan per batch. One-sided error:
-  a key present in the corpus is ALWAYS flagged (no false negatives —
-  no duplicate sneaks through); a novel key is flagged spuriously with
-  probability ~(1 - e^(-k*n/m))^k, so ``bloom_novel`` under-keeps, never
-  under-drops. The filter is represented as a DISTINCT bit-position table
-  (<= m_bits rows, int64), which merges across shards by union-distinct
-  and round-trips through parquet — the packed-bitset form is a pure
-  physical optimization this representation never blocks.
+* ``hll_build`` / ``hll_merge`` / ``hll_estimate`` / ``hll_count`` —
+  Flajolet et al.'s HyperLogLog as a register table of at most ``2^p``
+  rows regardless of corpus size. Shard tables merge by register-wise
+  max (one union + groupBy), so a merged sketch is EXACTLY the sketch of
+  the union; estimation error enters only in the final floats.
+* ``hist_build`` / ``hist_merge`` / ``hist_quantiles`` /
+  ``hist_quantile_values`` — the HDR-histogram bucket layout as a table
+  of at most ``~63 * 2^sub_bits`` rows; shard histograms merge by
+  cell-wise sum, and quantiles come from a window over the bounded
+  bucket table, never a global sort of the values.
 
 Determinism contract: the only hash primitive is the repo-wide md5-60bit
-(functions.text.md5_long); each family computes TWO salted base hashes
-per value and derives its depth resp. k hash functions as
-``h1 + i*h2 mod width`` (Kirsch & Mitzenmacher 2006 — the standard trick
-that preserves the CMS/Bloom error analysis while making md5 volume
-independent of depth/k). Every screen decision is a pure integer function
-of the input values, so results are identical across engines,
-partitionings, and retries (verified by the DuckDB oracles and the
-repartition-invariance tests).
+(functions.text.md5_long), and every register / bucket id is exact
+integer arithmetic written so Spark and the DuckDB oracles evaluate the
+same expression. Sketch tables are therefore pure functions of the input
+values, identical across engines, partitionings, and retries (verified by
+the DuckDB oracles and the repartition-invariance tests).
 
-Annotating operators (``cms_query`` / ``bloom_screen``) stage their join
-helpers under the repo-reserved ``_gfs_`` column prefix and drop them by
-exact name, so user columns — underscore-prefixed or not — pass through
-untouched (pinned in test_sketch.py).
-
-Scale shapes: ``cms_build`` is one depth-way array explode + one groupBy
-on a uniform (d, w) key whose output is depth*width rows. ``cms_query`` /
-``heavy_hitters`` / ``bloom_screen`` do per-row lookups as CHAINED
-BROADCAST equi-joins (depth resp. k of them, all map-side, zero shuffle
-on the big side) — never a groupBy on the looked-up key. ``bloom_build``
-is one k-way explode + distinct on a uniform key bounded by m_bits.
+Scale shapes: each build is one narrow projection + one partial-aggregated
+groupBy on a uniform, bounded key (no explode, no join); merges are
+union + groupBy on the same bounded key; ``hist_quantiles`` lineage-cuts
+its small bucket table once and filters it once per requested quantile.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.functions.text import md5_long
-
-
-def _base_hashes(value: Column, salt: str) -> tuple[Column, Column]:
-    """The TWO md5-60bit base hashes every derived hash function is built
-    from (Kirsch & Mitzenmacher 2006: ``g_i(x) = h1(x) + i*h2(x)`` retains
-    the count-min / Bloom error analysis while computing two real hashes
-    per value instead of depth resp. k) — the md5 volume is the dominant
-    CPU cost of both families, so this halves-to-quarters the hot stage.
-    The salt keeps sketch families from aliasing each other (the same
-    convention as every other operator's salted md5)."""
-    s = value.cast("string")
-    return (
-        md5_long(F.concat(s, F.lit(f"#{salt}#a"))),
-        md5_long(F.concat(s, F.lit(f"#{salt}#b"))),
-    )
-
-
-def _derived_bucket(h1: Column, h2: Column, i: int, mod: int) -> Column:
-    """``(h1 + i*h2) % mod`` as int64 arithmetic. h1, h2 < 2^60 and i is a
-    small constant, so ``h1 + i*h2 < 2^63`` for i <= 7 — no ANSI overflow;
-    larger depths/k wrap h2's contribution through an extra mod first."""
-    if i == 0:
-        return h1 % F.lit(mod)
-    contrib = (h2 % F.lit(mod)) * F.lit(i) if i > 7 else h2 * F.lit(i)
-    return (h1 + contrib) % F.lit(mod)
-
-
-def cms_build(
-    df: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 8192,
-    salt: str = "cms",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Count-min sketch of one column: (d, w, cnt) with exactly one row
-    per NON-EMPTY cell (absent cells are zero; ``cms_query`` restores
-    them). ``weight_col`` counts each row with an integer weight instead
-    of 1 (e.g. pre-aggregated (token, count) shards).
-
-    Plan: the depth hashes of a row are built as one array literal-loop
-    (depth is a small constant), exploded once, and aggregated on the
-    uniform (d, w) key — one explode + one groupBy, output depth*width
-    rows regardless of input size. Null values are skipped (they carry no
-    frequency information and would otherwise all alias md5('null'))."""
-    if depth < 1 or width < 1:
-        raise ValueError("depth and width must be >= 1")
-    v = F.col(value_col)
-    wt = (
-        F.col(weight_col).cast("long") if weight_col is not None else F.lit(1).cast("long")
-    )
-    h1, h2 = _base_hashes(v, salt)
-    # the two md5s are STAGED as real columns so the depth derived buckets
-    # are integer arithmetic over two attribute reads, never depth
-    # re-evaluations of the hash (the HOF-capture / CSE discipline)
-    staged = df.filter(v.isNotNull()).select(
-        wt.alias("_wt"), h1.alias("_h1"), h2.alias("_h2")
-    )
-    cells = F.array(
-        *[
-            F.struct(
-                F.lit(d).cast("int").alias("d"),
-                _derived_bucket(F.col("_h1"), F.col("_h2"), d, width)
-                .cast("int")
-                .alias("w"),
-            )
-            for d in range(depth)
-        ]
-    )
-    return (
-        staged.select(F.explode(cells).alias("_c"), F.col("_wt"))
-        .groupBy(F.col("_c.d").alias("d"), F.col("_c.w").alias("w"))
-        .agg(F.sum("_wt").alias("cnt"))
-    )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Cell-wise sum of same-shape sketches (same depth/width/salt — the
-    caller's contract, as with any CMS). union + groupBy on the
-    (depth*width)-bounded key: sketch shards of a 100-TB corpus merge for
-    the cost of shuffling a few thousand rows."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    return (
-        reduce(DataFrame.unionByName, sketches)
-        .groupBy("d", "w")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def _chained_lookup(
-    df: DataFrame,
-    value: Column,
-    sketch: DataFrame,
-    depth: int,
-    width: int,
-    salt: str,
-) -> tuple[DataFrame, Column]:
-    """Annotate ``df`` with the CMS estimate of ``value`` as CHAINED
-    BROADCAST left joins — one per hash row, each against the
-    width-bounded slice of the sketch. All map-side: the big side never
-    shuffles, never groups. Returns (annotated df, estimate column).
-
-    The sketch's lineage is CUT first (lazy localCheckpoint — the tiny-
-    table convention of bucket_log_ratios/vocab): without it, Catalyst
-    pushes each slice's ``d == i`` filter through the aggregate and
-    SPECIALIZES the subtree per slice (per-slice grouping expressions),
-    so exchange reuse never fires and the corpus feeding ``cms_build``
-    would be re-scanned and re-exploded once per hash row — a depth×
-    full-corpus cost hiding behind a depth×width-row table. With the cut,
-    the sketch computes once and the slices read the cached rows."""
-    sketch = sketch.localCheckpoint(eager=False)
-    h1, h2 = _base_hashes(value, salt)
-    df = df.withColumn("_gfs_h1", h1).withColumn("_gfs_h2", h2)
-    est = None
-    for d in range(depth):
-        slice_d = sketch.filter(F.col("d") == d).select(
-            F.col("w").alias(f"_gfs_cmsw{d}"), F.col("cnt").alias(f"_gfs_cmsc{d}")
-        )
-        df = df.withColumn(
-            f"_gfs_cmsw{d}",
-            _derived_bucket(
-                F.col("_gfs_h1"), F.col("_gfs_h2"), d, width
-            ).cast("int"),
-        ).join(F.broadcast(slice_d), f"_gfs_cmsw{d}", "left")
-        c = F.coalesce(F.col(f"_gfs_cmsc{d}"), F.lit(0).cast("long"))
-        est = c if est is None else F.least(est, c)
-    return df.drop("_gfs_h1", "_gfs_h2"), est
-
-
-def cms_query(
-    sketch: DataFrame,
-    items: DataFrame,
-    value_col: str,
-    depth: int = 4,
-    width: int = 8192,
-    salt: str = "cms",
-) -> DataFrame:
-    """Point-query the sketch for every row of ``items``: adds an ``est``
-    column (min over the depth hash rows; >= the true count, with
-    overestimation bounded by the usual e/width tail). depth/width/salt
-    must match ``cms_build``. Lookup is map-side (chained broadcast
-    joins) — ``items`` never shuffles."""
-    out, est = _chained_lookup(
-        items, F.col(value_col), sketch, depth, width, salt
-    )
-    helper = [f"_gfs_cmsw{d}" for d in range(depth)] + [
-        f"_gfs_cmsc{d}" for d in range(depth)
-    ]
-    return out.withColumn("est", est).drop(*helper)
-
-
-def heavy_hitters(
-    df: DataFrame,
-    value_col: str,
-    min_count: int,
-    depth: int = 4,
-    width: int = 8192,
-    salt: str = "cms",
-    weight_col: str | None = None,
-) -> DataFrame:
-    """EXACT frequent values: (value_col, cnt) for every value occurring
-    at least ``min_count`` times — byte-identical to
-    ``GROUP BY value HAVING count(*) >= min_count`` (the oracle), but the
-    full-cardinality shuffle never happens. Two passes:
-
-    1. ``cms_build`` — the only wide shuffle, on the uniform (d, w) key,
-       output depth*width rows.
-    2. Re-scan: per-row estimate via chained broadcast lookups (map-side),
-       filter ``est >= min_count`` — LOSSLESS, because a CMS estimate
-       never undercounts — then exact groupBy over the surviving rows.
-       On a zipf-shaped corpus the survivors are the heavy keys plus a
-       small collision tail (tunable via ``width``), so the value-keyed
-       shuffle is tiny even when the vocabulary is billions.
-
-    The screened groupBy's key skew is exactly the heavy hitters
-    themselves — map-side partial aggregation (automatic for count)
-    collapses each to one row per map task, so no salting is needed.
-
-    ``weight_col`` switches the mass from occurrences to an integer
-    per-row weight (e.g. token counts: "which domains own >= min_count
-    tokens") — the sketch counts weighted mass, the screen stays
-    lossless (weights must be NONNEGATIVE, or estimates can undercount
-    and the screen loses its guarantee), and ``cnt`` is the exact int64
-    weighted sum."""
-    if min_count < 1:
-        raise ValueError("min_count must be >= 1")
-    sketch = cms_build(df, value_col, depth, width, salt, weight_col)
-    v = F.col(value_col)
-    cols = [v] if weight_col is None else [v, F.col(weight_col)]
-    stream, est = _chained_lookup(
-        df.filter(v.isNotNull()).select(*cols), v, sketch, depth, width, salt
-    )
-    mass = (
-        F.count(F.lit(1)).alias("cnt")
-        if weight_col is None
-        else F.sum(F.col(weight_col).cast("long")).alias("cnt")
-    )
-    return (
-        stream.filter(est >= F.lit(min_count))
-        .groupBy(value_col)
-        .agg(mass)
-        .filter(F.col("cnt") >= F.lit(min_count))
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-filter membership screen (incremental cross-batch dedup)
-# ---------------------------------------------------------------------------
-
-
-def _bloom_pos(h1: Column, h2: Column, i: int, m_bits: int) -> Column:
-    """Bit position ``i`` of a value from its two staged base hashes:
-    ``(h1 + i*h2) % m_bits`` (the same Kirsch-Mitzenmacher derivation as
-    the CMS rows — 2 md5 per value total instead of k)."""
-    return _derived_bucket(h1, h2, i, m_bits).cast("long")
-
-
-def bloom_build(
-    df: DataFrame,
-    value_col: str,
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    salt: str = "bloom",
-) -> DataFrame:
-    """Bloom filter over a corpus key as the DISTINCT set of set bit
-    positions: (pos) with pos in [0, m_bits). At most m_bits rows — the
-    filter size is bounded by the parameter, NOT the corpus (pick
-    ``m_bits ~ 10 * n_distinct`` for ~1% false positives at k=4; at the
-    default 2^20 the table broadcasts in ~8 MB worst-case). Filters of
-    corpus shards merge by union-distinct; the table round-trips through
-    parquet, so "build once, screen every future batch" is one persisted
-    artifact. One k-way explode + distinct on the uniform position key."""
-    if k < 1 or m_bits < 1:
-        raise ValueError("k and m_bits must be >= 1")
-    v = F.col(value_col)
-    h1, h2 = _base_hashes(v, salt)
-    staged = df.filter(v.isNotNull()).select(h1.alias("_h1"), h2.alias("_h2"))
-    positions = F.array(
-        *[
-            _bloom_pos(F.col("_h1"), F.col("_h2"), i, m_bits)
-            for i in range(k)
-        ]
-    )
-    return staged.select(F.explode(positions).alias("pos")).distinct()
-
-
-def bloom_screen(
-    batch: DataFrame,
-    value_col: str,
-    bloom: DataFrame,
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    salt: str = "bloom",
-) -> DataFrame:
-    """Annotate every batch row with ``might_contain``: true iff ALL k bit
-    positions of its value are set in ``bloom``. m_bits/k/salt must match
-    ``bloom_build``. One-sided: a value that was in the filter's corpus is
-    ALWAYS true (no false negatives); a novel value is true only on a
-    k-way hash collision. Null values screen as might_contain=false
-    (``bloom_build`` never inserts them).
-
-    Plan: k chained broadcast left semi-style joins against the bounded
-    position table — all map-side, the batch never shuffles. The position
-    table's lineage is CUT first (lazy localCheckpoint, same reason as
-    ``_chained_lookup``): otherwise each of the k join sides re-derives
-    the table from its source — k re-scans of the corpus when ``bloom``
-    comes straight from ``bloom_build`` — instead of reading the computed
-    <= m_bits rows k times."""
-    bloom = bloom.localCheckpoint(eager=False)
-    v = F.col(value_col)
-    h1, h2 = _base_hashes(v, salt)
-    out = batch.withColumn("_gfs_h1", h1).withColumn("_gfs_h2", h2)
-    hit_all: Column | None = None
-    for i in range(k):
-        pos_i = bloom.select(F.col("pos").alias(f"_gfs_bp{i}")).withColumn(
-            f"_gfs_bh{i}", F.lit(True)
-        )
-        out = out.withColumn(
-            f"_gfs_bp{i}", _bloom_pos(F.col("_gfs_h1"), F.col("_gfs_h2"), i, m_bits)
-        ).join(F.broadcast(pos_i), f"_gfs_bp{i}", "left")
-        h = F.coalesce(F.col(f"_gfs_bh{i}"), F.lit(False))
-        hit_all = h if hit_all is None else (hit_all & h)
-    helper = (
-        [f"_gfs_bp{i}" for i in range(k)]
-        + [f"_gfs_bh{i}" for i in range(k)]
-        + ["_gfs_h1", "_gfs_h2"]
-    )
-    return (
-        out.withColumn("might_contain", v.isNotNull() & hit_all)
-        .drop(*helper)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -388,11 +69,10 @@ def hll_build(
 ) -> DataFrame:
     """HyperLogLog register table of one column: (r, rank) with exactly one
     row per NON-EMPTY register — at most ``2^p`` rows regardless of input
-    size, the cardinality sibling of ``cms_build`` (frequency) and
-    ``bloom_build`` (membership). Flajolet, Fusy, Gandouet & Meunier 2007:
-    register index ``r`` = the low ``p`` bits of the 60-bit md5, rank = the
-    leading-zero count of the remaining ``60-p`` bits plus one, maxed per
-    register.
+    size, the cardinality sibling of ``hist_build`` (distribution).
+    Flajolet, Fusy, Gandouet & Meunier 2007: register index ``r`` = the
+    low ``p`` bits of the 60-bit md5, rank = the leading-zero count of
+    the remaining ``60-p`` bits plus one, maxed per register.
 
     Everything is EXACT integer arithmetic — the register table is a pure
     function of the value set, identical across engines / partitionings /
@@ -402,7 +82,7 @@ def hll_build(
     ``1.04/sqrt(2^p)`` relative std. Null values are skipped (they carry no
     cardinality information and would otherwise all alias md5('null')).
 
-    Plan: NO explode (unlike CMS/Bloom, each row feeds one register) — one
+    Plan: NO explode (each row feeds exactly one register) — one
     narrow projection + one partial-aggregated groupBy on the uniform
     bounded ``r`` key. Register tables of corpus shards merge via
     ``hll_merge`` (union + max — associative, so sharded build == global
@@ -436,7 +116,7 @@ def hll_merge(
     *sketches: DataFrame, group_cols: list[str] | None = None
 ) -> DataFrame:
     """Register-wise max of same-shape register tables (same p/salt/
-    group_cols — the caller's contract, as with ``cms_merge``). Because
+    group_cols — the caller's contract, as with ``hist_merge``). Because
     max is associative and commutative, merging shard sketches is EXACTLY
     the sketch of the union — no merge error, the property that makes HLL
     the canonical distributed distinct counter. union + groupBy on the
@@ -554,10 +234,9 @@ def hist_build(
     """Mergeable distribution sketch of an integer column: (b, cnt) with
     one row per non-empty bucket — at most ``~63 * 2^sub_bits`` rows
     (~2k at the default) regardless of input size. The distribution
-    sibling of ``cms_*`` (frequency) / ``bloom_*`` (membership) /
-    ``hll_*`` (cardinality): doc lengths, token counts, byte sizes, score
-    scaled-ints — "where should the p99 length cut sit across 100 TB"
-    without a global sort.
+    sibling of ``hll_*`` (cardinality): doc lengths, token counts, byte
+    sizes, score scaled-ints — "where should the p99 length cut sit
+    across 100 TB" without a global sort.
 
     Buckets are the HDR-histogram layout: exact singletons below
     ``2^sub_bits``, then power-of-2 ranges split into ``2^sub_bits``
@@ -743,29 +422,3 @@ def hist_quantile_values(
         sub_bits,
         group_cols,
     )
-
-
-def bloom_novel(
-    batch: DataFrame,
-    value_col: str,
-    corpus: DataFrame,
-    corpus_value_col: str | None = None,
-    m_bits: int = 1 << 20,
-    k: int = 4,
-    salt: str = "bloom",
-) -> DataFrame:
-    """Incremental-ingest screen: the batch rows whose key is GUARANTEED
-    absent from the corpus (``might_contain`` false). Every true duplicate
-    is dropped (no false negatives); a ~(1-e^(-k*n/m))^k fraction of novel
-    rows is spuriously dropped with them — the standard Bloom trade
-    (under-keep, never under-drop), sized by ``m_bits``. For exact
-    semantics on the survivors' side, follow with ``dedup.dedup_exact``
-    against the (much smaller) flagged set; for the screen itself the
-    corpus is touched ONCE (``bloom_build``) no matter how many batches
-    follow — build the filter, persist the position table, screen forever.
-    """
-    bloom = bloom_build(
-        corpus, corpus_value_col or value_col, m_bits, k, salt
-    )
-    screened = bloom_screen(batch, value_col, bloom, m_bits, k, salt)
-    return screened.filter(~F.col("might_contain")).drop("might_contain")

@@ -1,8 +1,9 @@
 """SparkSession factory.
 
-Local-mode defaults size themselves from the host: the master takes
-``$SPARK_GRAFT_CPUS`` threads and the driver heap half the host's memory
-limit (``default_driver_memory``); on a real cluster the same config keys
+Local-mode defaults size themselves from the host: the master takes one
+thread per CPU this process may run on (``default_cpus``, overridden by
+``$SPARK_GRAFT_CPUS``) and the driver heap half the host's memory limit
+(``default_driver_memory``); on a real cluster the same config keys
 apply, only the master and memory sizing change. AQE is always on: it
 gives runtime shuffle-partition coalescing and skew-join splitting for
 free, which matters at 100 TB.
@@ -54,6 +55,15 @@ def default_driver_memory(cgroup_limits=_CGROUP_LIMITS) -> str:
     return f"{min(limit // 2 // 2**20, _DRIVER_MEMORY_CAP_MB)}m"
 
 
+def default_cpus() -> int:
+    """Local-mode parallelism: ``$SPARK_GRAFT_CPUS`` when set, else the
+    number of CPUs this process may run on (its affinity mask, which a
+    container's cpuset narrows; ``os.cpu_count`` would report the whole
+    machine)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(env) if env else len(os.sched_getaffinity(0))
+
+
 def get_spark(
     app_name: str = "geofeaturegeneration_spark",
     master: str | None = None,
@@ -62,12 +72,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    master defaults to ``local[default_cpus()]``.
     shuffle_partitions defaults to the local parallelism — at cluster scale
     you would size this to ~2-3x total cores instead, or simply rely on AQE
     coalescing from a higher initial value.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = default_cpus()
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

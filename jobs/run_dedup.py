@@ -8,18 +8,15 @@
 The flagship 100 TB story — (optional) text canonicalization (the only
 text-REWRITING pre-filter: unicode/whitespace normalization, then C4
 per-line rules + page verdict, so every later
-stage hashes the CANONICAL bytes) -> (optional) prior-corpus Bloom ingest
-screen (re-ingested duplicates dropped map-side before anything else; the
-prior corpus is touched once to build its m_bits-bounded position table)
--> (optional) quality filter -> (optional)
-perplexity filter (hashed-bigram LM trained once on a clean corpus) ->
-MinHash LSH pairs -> connected components -> (optional) test-set
+stage hashes the CANONICAL bytes) -> (optional) quality filter ->
+(optional) perplexity filter (hashed-bigram LM trained once on a clean
+corpus) -> MinHash LSH pairs -> connected components -> (optional) test-set
 decontamination -> (optional) semantic embedding-space dedup -> keeper
 filter (+ optional mixing recipe + PII scrub riding the output pass) —
 (+ optional exact-substring span dedup over the surviving corpus) —
 composed as ONE resumable pipeline behind the checkpoint store (reference
 analog: the stage-separated pipeline of AttachFeature.py:1046-1112), not
-just unit operators. Three to sixteen stages, each recorded per partition in
+just unit operators. Three to fourteen stages, each recorded per partition in
 the CheckpointStore so a crash resumes without recomputing finished work:
 
 -0.3. ``clean`` (optional, per doc-id hash bucket): text canonicalization
@@ -118,8 +115,6 @@ from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
 from geofeaturegeneration_spark.operators import (
-    bloom_build,
-    bloom_screen,
     decontaminate,
     dedup_clusters,
     hist_build,
@@ -171,10 +166,6 @@ def run_dedup_pipeline(
     normalize: str | None = None,
     quality: bool = False,
     quality_kwargs: dict | None = None,
-    prior=None,
-    prior_fingerprint: str | None = None,
-    prior_m_bits: int = 1 << 20,
-    prior_k: int = 4,
     ppl_target=None,
     ppl_fingerprint: str | None = None,
     ppl_min_avg_logprob: float = -7.0,
@@ -210,9 +201,9 @@ def run_dedup_pipeline(
     corpus bucket, before everything else — the C4 order: line rules run
     before anything hashes text): ``curation.clean_lines`` rewrites each
     doc's text with the rule-failing lines cut, DROPS page-verdict
-    failures, and persists the cleaned table; every later stage — the
-    prior screen, quality, perplexity, shingling, and the output — reads
-    the CLEANED bytes instead of the raw corpus. The only stage that
+    failures, and persists the cleaned table; every later stage —
+    quality, perplexity, shingling, and the output — reads the CLEANED
+    bytes instead of the raw corpus. The only stage that
     rewrites text besides the output pass, which is why it must come
     first: a signature computed over raw bytes would not match the text
     the job ships. ``clean_kwargs`` override the C4 rule thresholds.
@@ -230,17 +221,6 @@ def run_dedup_pipeline(
     docs — rejected docs never reach the shingling pass, so at 100 TB the
     filter pays for itself in stage-1 compute. ``quality_kwargs`` override
     the filter's thresholds.
-
-    ``prior`` (optional, (doc_id, text)) prepends the INCREMENTAL-INGEST
-    screen: one global stage persists the prior corpus's Bloom position
-    table (``sketch.bloom_build``, <= ``prior_m_bits`` rows no matter how
-    large the prior corpus), one per-bucket stage lands the guaranteed-
-    novel doc ids (``sketch.bloom_screen`` — map-side, no join against the
-    prior corpus), and every later stage sees only novel docs. A doc whose
-    text is in the prior corpus NEVER survives; a novel doc is spuriously
-    dropped at ~(1-e^(-k*n/m))^k (size ``prior_m_bits`` ~ 10x the prior's
-    distinct docs for ~1%). Filter geometry and the prior's identity are
-    in the lineage key.
 
     ``ppl_target`` (optional, (doc_id, text)) adds the PERPLEXITY filter:
     a global stage persists ``lm_bucket_logprobs(ppl_target)`` (train the
@@ -293,7 +273,7 @@ def run_dedup_pipeline(
     decontaminate -> semantic -> mix -> scrub -> span-dedup — is
     therefore ONE resumable artifact; per-stage wall-clock is recorded in
     the CheckpointStore (``latest()``). Returns the per-stage
-    PartitionResult lists (3 to 16 of them, in pipeline order)."""
+    PartitionResult lists (3 to 14 of them, in pipeline order)."""
     if mix_alpha is not None and mix_rates_ppm is not None:
         raise ValueError(
             "mix_alpha (computed temperature recipe) and mix_rates_ppm "
@@ -341,12 +321,6 @@ def run_dedup_pipeline(
         lineage += f";norm={normalize}"
     if quality:
         lineage += f";quality={sorted((quality_kwargs or {}).items())}"
-    if prior is not None:
-        # the Bloom position table's bytes depend on the filter geometry
-        # and the prior corpus's identity; the novel verdicts inherit both
-        lineage += (
-            f";prior={prior_m_bits}:{prior_k}:{prior_fingerprint or 'anon'}"
-        )
     if ppl_target is not None:
         # the LM model's bytes depend on the target corpus identity and the
         # bucket count; the keep verdicts also on the threshold
@@ -383,9 +357,9 @@ def run_dedup_pipeline(
     # stage -0.3 (optional): text canonicalization — unicode/whitespace
     # normalization (--normalize) and/or C4 intra-document line cleaning
     # (--clean), ONE stage because both REWRITE text and must run FIRST:
-    # every later stage (prior screen, quality, perplexity, shingles,
-    # output) must hash/ship the canonical bytes, so `docs` is rebound to
-    # the persisted rewritten table once the stage lands. Normalization
+    # every later stage (quality, perplexity, shingles, output) must
+    # hash/ship the canonical bytes, so `docs` is rebound to the persisted
+    # rewritten table once the stage lands. Normalization
     # runs before the line rules (CCNet/C4 order: fix the byte form, then
     # judge lines — an NFD accent or a CRLF must not defeat a line-level
     # rule or a shingle hash). Per-bucket and embarrassingly parallel
@@ -463,79 +437,13 @@ def run_dedup_pipeline(
         def docs_bucket(key: str):
             return docs.filter(bucket_of == key)
 
-    # stage -0.1/-0.05 (optional): incremental-ingest screen against a
-    # PREVIOUSLY INGESTED corpus. The prior corpus is touched exactly once
-    # (one global unit builds its <= prior_m_bits-row Bloom position table,
-    # sketch.bloom_build); each corpus bucket is then screened map-side
-    # (sketch.bloom_screen — k chained broadcast joins, no join against the
-    # prior corpus itself) and lands its GUARANTEED-NOVEL doc ids. Every
-    # later stage sees only novel docs, so re-ingested duplicates never
-    # reach quality scoring or the shingle pass. One-sided error: a doc
-    # whose text is in the prior corpus is ALWAYS dropped; a novel doc is
-    # spuriously dropped at ~(1-e^(-kn/m))^k, sized by prior_m_bits.
-    blm_path = os.path.join(out_root, "prior_bloom")
-    nvl_path = os.path.join(out_root, "novel")
-    blm_schema = T.StructType(
-        [
-            T.StructField("pos", T.LongType()),
-            T.StructField("part_key", T.StringType()),
-        ]
-    )
-    r_blm = r_nvl = None
-    if prior is not None:
-        def blm_one(_key: str):
-            return bloom_build(
-                prior, "text", m_bits=prior_m_bits, k=prior_k
-            )
-
-        r_blm = run_partitioned(
-            spark, store, f"{job_id}/prior_bloom", ["all"], blm_one,
-            blm_path, "part_key", lineage, force=force,
-        )
-
-        def nvl_one(key: str):
-            part = docs_bucket(key)
-            bloom = spark.read.schema(blm_schema).parquet(blm_path).drop(
-                "part_key"
-            )
-            screened = bloom_screen(
-                part, "text", bloom, m_bits=prior_m_bits, k=prior_k
-            )
-            return screened.filter(~F.col("might_contain")).select("doc_id")
-
-        r_nvl = run_partitioned(
-            spark, store, f"{job_id}/novel", bucket_keys, nvl_one,
-            nvl_path, "part_key", lineage, force=force,
-        )
-
-    # explicit read schemas for the id-only stage tables: buckets that kept
-    # or flagged nothing write no parquet files, and schema inference over
-    # a file-less directory throws — the schemas are known statically
-    _nvl_id_field = docs.schema["doc_id"]
-    nvl_schema = T.StructType(
-        [_nvl_id_field, T.StructField("part_key", T.StringType())]
-    )
-
-    def _novel_only(part, key: str):
-        """Restrict a bucket's docs to the prior-screen novel set (no-op
-        when no prior corpus was given)."""
-        if prior is None:
-            return part
-        kept = (
-            spark.read.schema(nvl_schema).parquet(nvl_path)
-            .filter(F.col("part_key").cast("string") == key)
-            .select("doc_id")
-        )
-        return part.join(kept, "doc_id", "left_semi")
-
     # stage 0 (optional): quality keep-verdicts per corpus bucket — every
     # later stage semi-joins this id table, so rejected docs never reach
-    # the shingle pass (and, with --prior, never get quality-scored if they
-    # are re-ingested duplicates)
+    # the shingle pass
     r_qua = None
     if quality:
         def qua_one(key: str):
-            part = _novel_only(docs_bucket(key), key)
+            part = docs_bucket(key)
             rep = quality_filter(part, "doc_id", "text", **(quality_kwargs or {}))
             return rep.filter(F.col("keep")).select("doc_id")
 
@@ -544,6 +452,9 @@ def run_dedup_pipeline(
             qua_path, "part_key", lineage, force=force,
         )
 
+    # explicit read schemas for the id-only stage tables: buckets that kept
+    # or flagged nothing write no parquet files, and schema inference over
+    # a file-less directory throws — the schemas are known statically
     _id_field = docs.schema["doc_id"]
     qua_schema = T.StructType(
         [_id_field, T.StructField("part_key", T.StringType())]
@@ -557,14 +468,10 @@ def run_dedup_pipeline(
     )
 
     def _qua_only(part, key: str):
-        """Restrict a bucket's docs to the prior-screen novel set and the
-        quality keepers (each a no-op when its stage is off). When quality
-        is ON its keep table was computed over the novel-restricted docs
-        (qua_one), so quality-keeps ⊆ novel already and the separate novel
-        semi-join would be pure redundant I/O — it is applied only when
-        quality is off."""
+        """Restrict a bucket's docs to the quality keepers (a no-op when
+        the quality stage is off)."""
         if not quality:
-            return _novel_only(part, key)
+            return part
         kept = (
             spark.read.schema(qua_schema).parquet(qua_path)
             .filter(F.col("part_key").cast("string") == key)
@@ -633,17 +540,9 @@ def run_dedup_pipeline(
         return part
 
     def restrict_global(df):
-        """Semi-join a global id-carrying table down to the prior-novel +
-        quality + ppl keepers across all of this run's buckets (each a
-        no-op when its stage is off; the novel join is skipped when
-        quality is on — quality-keeps ⊆ novel by construction)."""
-        if prior is not None and not quality:
-            kept = (
-                spark.read.schema(nvl_schema).parquet(nvl_path)
-                .filter(F.col("part_key").cast("string").isin(bucket_keys))
-                .select("doc_id")
-            )
-            df = df.join(kept, "doc_id", "left_semi")
+        """Semi-join a global id-carrying table down to the quality + ppl
+        keepers across all of this run's buckets (each a no-op when its
+        stage is off)."""
         if quality:
             kept = (
                 spark.read.schema(qua_schema).parquet(qua_path)
@@ -750,7 +649,7 @@ def run_dedup_pipeline(
             # the page verdict already removed could elect themselves
             # min-id exemplars and drop SURVIVING near-dups of content
             # that no longer exists in the output), then through the
-            # novel/quality/ppl keeper joins like every global stage
+            # quality/ppl keeper joins like every global stage
             emb = restrict_global(
                 embeddings.join(docs.select("doc_id"), "doc_id", "left_semi")
             )
@@ -1080,8 +979,6 @@ def run_dedup_pipeline(
     stages = []
     if r_cln is not None:
         stages.append(r_cln)
-    if r_blm is not None:
-        stages.extend([r_blm, r_nvl])
     if r_qua is not None:
         stages.append(r_qua)
     if r_lmm is not None:
@@ -1148,16 +1045,6 @@ def main(argv=None) -> int:
                         "'{\"max_dup_word_fraction\": 0.9}' — thresholds "
                         "are corpus-dependent (part of the stage lineage, "
                         "so changing them re-runs the affected stages)")
-    p.add_argument("--prior", default=None,
-                   help="optional previously-ingested corpus parquet "
-                        "(doc_id, text): builds its Bloom position table "
-                        "once (global stage) and drops re-ingested "
-                        "duplicates map-side before any other stage — the "
-                        "incremental-ingest screen (sketch.bloom_*)")
-    p.add_argument("--prior-m-bits", type=int, default=1 << 20,
-                   help="Bloom filter size in bits (~10x the prior "
-                        "corpus's distinct docs for ~1%% spurious drops)")
-    p.add_argument("--prior-k", type=int, default=4)
     p.add_argument("--ppl-target", default=None,
                    help="optional clean-corpus parquet (doc_id, text): "
                         "trains the hashed-bigram LM once (global stage) "
@@ -1219,7 +1106,6 @@ def main(argv=None) -> int:
 
     spark = get_spark("run_dedup")
     docs = spark.read.parquet(args.input)
-    prior = spark.read.parquet(args.prior) if args.prior else None
     bench = spark.read.parquet(args.bench) if args.bench else None
     ppl_target = (
         spark.read.parquet(args.ppl_target) if args.ppl_target else None
@@ -1244,8 +1130,6 @@ def main(argv=None) -> int:
         quality_kwargs=(
             json.loads(args.quality_args) if args.quality_args else None
         ),
-        prior=prior, prior_fingerprint=args.prior,
-        prior_m_bits=args.prior_m_bits, prior_k=args.prior_k,
         ppl_target=ppl_target, ppl_fingerprint=args.ppl_target,
         ppl_min_avg_logprob=args.ppl_min_avg_logprob,
         ppl_buckets=args.ppl_buckets,
@@ -1265,8 +1149,6 @@ def main(argv=None) -> int:
     names = []
     if args.clean or args.normalize:
         names.append("clean")
-    if args.prior:
-        names.extend(["prior_bloom", "novel"])
     if args.quality:
         names.append("quality")
     if args.ppl_target:

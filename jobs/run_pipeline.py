@@ -139,6 +139,9 @@ def main(argv=None) -> int:
     p.add_argument("--force", action="store_true", help="ignore checkpoints")
     p.add_argument("--job-id", default="token_features")
     args = p.parse_args(argv)
+    if args.buckets < 1:
+        # an empty key set would prune every existing output partition
+        p.error("--buckets must be >= 1")
 
     spark = get_spark("run_pipeline")
     seq = read_sequences(spark, args.input)

@@ -288,6 +288,36 @@ def test_pipeline_unchanged_rerun_skips_every_unit(
     assert again["rows"] == 0  # skipped units report no rows
 
 
+def test_pipeline_rejects_nonpositive_buckets_keeping_output(
+    spark, seq_dirs, tmp_path, monkeypatch, capsys
+):
+    """``--buckets 0`` (or below) would give an empty key set, which prunes
+    every existing partition. It is an argument error raised before any
+    Spark call, and the earlier run's output stays whole."""
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    run = ["--input", seq_dirs["a"], "--output", out, "--checkpoint", ck]
+    first = _main(spark, monkeypatch, capsys, *run, "--buckets", "2")
+    before = {
+        r["part_key"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("part_key").count().collect()
+    }
+    assert len(before) == first["partitions"] == 6
+    assert sum(before.values()) == first["rows"]
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark session requested")
+
+    monkeypatch.setattr(RP, "get_spark", no_spark)
+    for bad in ("0", "-1"):
+        with pytest.raises(SystemExit):
+            RP.main([*run, "--buckets", bad])
+    after = {
+        r["part_key"]: r["count"]
+        for r in spark.read.parquet(out).groupBy("part_key").count().collect()
+    }
+    assert after == before
+
+
 def test_crash_between_pruned_mark_and_delete_keeps_data(spark, seq, tmp_path):
     """A stale key's directory is deleted only after its ``pruned`` mark is
     written. A crash at that mark leaves the directory and its ``done`` mark
@@ -1091,66 +1121,6 @@ def test_dedup_pipeline_semantic_stage(spark, tmp_path):
     )
     # at 0.99 nothing in this corpus is a semantic dup: pure minhash keepers
     assert got3 == sorted(r["doc_id"] for r in keepers.collect())
-
-
-def test_dedup_pipeline_prior_bloom_stage(spark, tmp_path):
-    """--prior prepends the incremental-ingest Bloom screen: the final
-    output NEVER contains a doc whose text is in the prior corpus (the
-    one-sided guarantee), equals the pipeline run by hand on the
-    bloom_novel pre-screened corpus, resumes with every stage skipped, and
-    a filter-geometry change invalidates the checkpoints."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.operators import bloom_novel
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    # the prior corpus re-ships every 3rd doc's text (same bytes, its own
-    # ids) — exactly the re-ingestion scenario the screen exists for
-    prior = docs.filter(F.col("doc_id") % 3 == 0).select(
-        (F.col("doc_id") + 100000).alias("doc_id"), "text"
-    )
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              prior_m_bits=1 << 14, prior_k=4)
-
-    out, ck = str(tmp_path / "out_pr"), str(tmp_path / "ck_pr")
-    stages = RD.run_dedup_pipeline(
-        spark, docs, out, ck, prior=prior, prior_fingerprint="p1", **kw
-    )
-    assert len(stages) == 5  # prior_bloom, novel, signatures, clusters, output
-    got = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    )
-    # one-sided guarantee: no surviving text appears in the prior corpus
-    prior_texts = {r["text"] for r in prior.collect()}
-    surviving = {
-        r["text"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    }
-    assert not (surviving & prior_texts)
-    # equals the plain pipeline run on the hand-pre-screened corpus
-    novel = bloom_novel(docs, "text", prior, m_bits=1 << 14, k=4)
-    out2, ck2 = str(tmp_path / "out_pr2"), str(tmp_path / "ck_pr2")
-    RD.run_dedup_pipeline(
-        spark, novel, out2, ck2,
-        **{k_: v for k_, v in kw.items() if not k_.startswith("prior")},
-    )
-    want = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{out2}/deduped").collect()
-    )
-    assert got == want
-    assert len(got) < docs.count()  # the screen actually dropped docs
-
-    # resume skips everything; changing m_bits invalidates (stages re-run)
-    r2 = RD.run_dedup_pipeline(
-        spark, docs, out, ck, prior=prior, prior_fingerprint="p1", **kw
-    )
-    assert all(r.skipped for stage in r2 for r in stage)
-    kw2 = dict(kw, prior_m_bits=1 << 13)
-    r3 = RD.run_dedup_pipeline(
-        spark, docs, out, ck, prior=prior, prior_fingerprint="p1", **kw2
-    )
-    assert all(not r.skipped for stage in r3 for r in stage)
 
 
 def test_dedup_pipeline_normalize_stage(spark, tmp_path):

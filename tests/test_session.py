@@ -1,9 +1,9 @@
-"""Session defaults: the driver heap sized from the host, and no console
-progress bar."""
+"""Session defaults: the local parallelism and the driver heap sized from
+the host, and no console progress bar."""
 
 import os
 
-from geofeaturegeneration_spark.session import default_driver_memory
+from geofeaturegeneration_spark.session import default_cpus, default_driver_memory
 
 GIB = 2**30
 
@@ -32,6 +32,17 @@ def test_default_driver_memory_is_half_the_limit(tmp_path, monkeypatch):
     # a host larger than 96 GiB keeps the old 48g ceiling
     phys["SC_PHYS_PAGES"] = 256 * GIB // page
     assert default_driver_memory((v2_max,)) == f"{48 * 1024}m"
+
+
+def test_default_cpus_follows_affinity_unless_overridden(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the local master gets one thread per CPU
+    in this process's affinity mask; the variable overrides it. Pure
+    Python: no JVM starts."""
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert default_cpus() == 7
 
 
 def test_console_progress_bar_off(spark):

@@ -1,27 +1,22 @@
-"""Count-min sketch / heavy hitters / Bloom screen (operators/sketch.py).
+"""HyperLogLog cardinality sketch / HDR histogram quantiles
+(operators/sketch.py).
 
 Properties pinned here:
 
-* CMS never underestimates, and is exact when width collisions are absent.
-* cms_merge over shard sketches == cms_build over the union.
-* heavy_hitters is EXACT (== groupBy HAVING) even under heavy forced
-  collisions (tiny width), because the screen is lossless.
-* Bloom has no false negatives (every corpus member flags), bloom_novel
-  output is a subset of the true-novel set, and both are invariant under
-  repartitioning.
+* The HLL register table and the HDR bucket table are exact Python
+  replays of the integer rules, so both are pure functions of the values.
+* hll_merge / hist_merge over shard sketches == one build over the union,
+  exactly, with and without group_cols.
+* HLL estimates land within 5 % on both estimator branches; duplicates,
+  nulls and repartitioning do not move them.
+* hist_quantiles honours its rank guarantee within the bucket's relative
+  width, for row counts and for weighted mass, over negative values too.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.operators.sketch import (
-    bloom_build,
-    bloom_novel,
-    bloom_screen,
-    cms_build,
-    cms_merge,
-    cms_query,
-    heavy_hitters,
     hist_build,
     hist_merge,
     hist_quantile_values,
@@ -31,176 +26,6 @@ from geofeaturegeneration_spark.operators.sketch import (
     hll_estimate,
     hll_merge,
 )
-
-
-def _freq_df(spark, pairs):
-    """[(value, count)] -> one row per occurrence."""
-    rows = [(v,) for v, n in pairs for _ in range(n)]
-    return spark.createDataFrame(rows, "v string")
-
-
-ZIPF = [("the", 40), ("of", 25), ("and", 17), ("to", 9), ("rare1", 2),
-        ("rare2", 1), ("rare3", 1), ("rare4", 1)]
-
-
-def test_cms_estimate_upper_bounds_truth_and_exact_when_wide(spark):
-    df = _freq_df(spark, ZIPF)
-    sketch = cms_build(df, "v", depth=4, width=4096)
-    items = spark.createDataFrame([(v,) for v, _ in ZIPF], "v string")
-    got = {
-        r["v"]: r["est"]
-        for r in cms_query(sketch, items, "v", depth=4, width=4096).collect()
-    }
-    truth = dict(ZIPF)
-    for v, t in truth.items():
-        assert got[v] >= t  # CMS never undercounts
-    # 8 distinct values in 4096 buckets x 4 rows: collisions are absent
-    assert got == truth
-
-
-def test_cms_query_unseen_value_small_and_nonnegative(spark):
-    df = _freq_df(spark, ZIPF)
-    sketch = cms_build(df, "v", depth=4, width=4096)
-    items = spark.createDataFrame([("never-seen",)], "v string")
-    [row] = cms_query(sketch, items, "v", depth=4, width=4096).collect()
-    assert row["est"] == 0  # no collision at this width
-
-
-def test_cms_merge_equals_build_on_union(spark):
-    a = _freq_df(spark, ZIPF[:4])
-    b = _freq_df(spark, ZIPF[4:])
-    merged = cms_merge(
-        cms_build(a, "v", depth=3, width=64), cms_build(b, "v", depth=3, width=64)
-    )
-    whole = cms_build(a.unionByName(b), "v", depth=3, width=64)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
-def test_cms_weighted_build_equals_exploded(spark):
-    pre = spark.createDataFrame(ZIPF, "v string, n int")
-    weighted = cms_build(pre, "v", depth=3, width=64, weight_col="n")
-    exploded = cms_build(_freq_df(spark, ZIPF), "v", depth=3, width=64)
-    assert sorted(map(tuple, weighted.collect())) == sorted(
-        map(tuple, exploded.collect())
-    )
-
-
-def test_heavy_hitters_exact_even_with_forced_collisions(spark):
-    df = _freq_df(spark, ZIPF).repartition(7)
-    # width=2: every value collides with others -> estimates are wildly
-    # inflated, but the screen is lossless and the second pass is exact.
-    got = sorted(
-        map(tuple, heavy_hitters(df, "v", min_count=9, depth=2, width=2).collect())
-    )
-    assert got == [("and", 17), ("of", 25), ("the", 40), ("to", 9)]
-
-
-def test_heavy_hitters_threshold_one_is_distinct_counts(spark):
-    df = _freq_df(spark, ZIPF)
-    got = dict(heavy_hitters(df, "v", min_count=1).collect())
-    assert got == dict(ZIPF)
-
-
-def test_heavy_hitters_skips_nulls(spark):
-    df = spark.createDataFrame([("a",), (None,), ("a",), (None,), (None,)], "v string")
-    got = heavy_hitters(df, "v", min_count=2).collect()
-    assert [(r["v"], r["cnt"]) for r in got] == [("a", 2)]
-
-
-def test_bloom_no_false_negatives_and_novel_subset(spark):
-    corpus = spark.createDataFrame(
-        [(f"doc-{i}",) for i in range(200)], "key string"
-    )
-    batch = spark.createDataFrame(
-        [(f"doc-{i}",) for i in range(150, 250)]  # 50 dups + 50 novel
-        + [(None,)],
-        "key string",
-    )
-    bloom = bloom_build(corpus, "key", m_bits=1 << 14, k=4)
-    flagged = bloom_screen(batch, "key", bloom, m_bits=1 << 14, k=4)
-    by_key = {r["key"]: r["might_contain"] for r in flagged.collect()}
-    for i in range(150, 200):  # true members ALWAYS flag
-        assert by_key[f"doc-{i}"] is True
-    assert by_key[None] is False
-    novel = {
-        r["key"]
-        for r in bloom_novel(batch, "key", corpus, m_bits=1 << 14, k=4)
-        .filter(F.col("key").isNotNull())
-        .collect()
-    }
-    true_novel = {f"doc-{i}" for i in range(200, 250)}
-    assert novel <= true_novel  # never keeps a duplicate
-    # at m=16384, n=200, k=4 the false-positive rate is ~5e-6: all kept
-    assert novel == true_novel
-
-
-def test_bloom_screen_partitioning_invariant(spark):
-    corpus = spark.createDataFrame([(f"k{i}",) for i in range(64)], "key string")
-    batch = spark.createDataFrame([(f"k{i}",) for i in range(40, 104)], "key string")
-    bloom = bloom_build(corpus.repartition(13), "key", m_bits=4096, k=3)
-    a = sorted(
-        map(tuple, bloom_screen(batch, "key", bloom, m_bits=4096, k=3).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            bloom_screen(
-                batch.repartition(9), "key", bloom, m_bits=4096, k=3
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
-def test_bloom_empty_corpus_keeps_everything(spark):
-    corpus = spark.createDataFrame([], "key string")
-    batch = spark.createDataFrame([("a",), ("b",)], "key string")
-    kept = sorted(r["key"] for r in bloom_novel(batch, "key", corpus).collect())
-    assert kept == ["a", "b"]
-
-
-def test_param_validation(spark):
-    df = spark.createDataFrame([("a",)], "v string")
-    with pytest.raises(ValueError):
-        cms_build(df, "v", depth=0)
-    with pytest.raises(ValueError):
-        heavy_hitters(df, "v", min_count=0)
-    with pytest.raises(ValueError):
-        bloom_build(df, "v", k=0)
-    with pytest.raises(ValueError):
-        cms_merge()
-
-
-def test_heavy_hitters_weighted_equals_exact_weighted(spark):
-    # (domain, token_count) rows: mass threshold, not occurrence threshold
-    rows = [("a.com", 50), ("a.com", 60), ("b.com", 5), ("b.com", 4),
-            ("c.com", 100), ("d.com", 9)]
-    df = spark.createDataFrame(rows, "dom string, n_tok int").repartition(5)
-    got = sorted(
-        map(
-            tuple,
-            heavy_hitters(
-                df, "dom", min_count=10, depth=2, width=2, weight_col="n_tok"
-            ).collect(),
-        )
-    )
-    assert got == [("a.com", 110), ("c.com", 100)]
-
-
-def test_helper_column_cleanup_preserves_underscore_user_columns(spark):
-    # cleanup drops exact helper names, not prefixes: user columns that
-    # happen to start with _w/_cnt/_p/_hit must survive
-    items = spark.createDataFrame(
-        [("the", 1.5, "x")], "v string, _weight double, _part string"
-    )
-    sketch = cms_build(_freq_df(spark, ZIPF), "v", depth=3, width=64)
-    out = cms_query(sketch, items, "v", depth=3, width=64)
-    assert set(out.columns) == {"v", "_weight", "_part", "est"}
-    bloom = bloom_build(_freq_df(spark, ZIPF), "v", m_bits=4096, k=3)
-    out2 = bloom_screen(items, "v", bloom, m_bits=4096, k=3)
-    assert set(out2.columns) == {"v", "_weight", "_part", "might_contain"}
 
 
 # ---------------------------------------------------------------------------

@@ -40,8 +40,6 @@ SHOW = [
     ("pagerank", "integer-exact PageRank: per round ONE left equi-join (sparse rank state) + ONE partial-agg sum; lazy localCheckpoint cuts round lineage; constants re-enter once via anti-join"),
     ("edit_join", "edit-distance join: symmetric-delete neighborhoods staged once per join side (the minhash-pairs trade: regenerating the narrow variant stream is cheaper than materializing it), variant-hash equi-join (broadcast at test scale, shuffle+AQE at corpus scale), distinct candidates, JVM levenshtein verify — no cartesian product"),
     ("lm_logprob", "CCNet perplexity: the <=2*buckets-row bigram LM is BROADCAST onto the corpus bigram stream (the corpus never shuffles on the bucket key), per-doc scores are exact int64 partial-agg sums, one left join keeps <2-word docs"),
-    ("heavy_hitters", "exact heavy hitters via lossless count-min screen: the checkpointed sketch (ONE corpus scan, shown as ExistingRDD slices) feeds depth chained BROADCAST lookups on the single rescan — the pre-screen stream never shuffles; the only value-keyed aggregate runs over surviving candidates, map-side combined"),
-    ("bloom_screen", "Bloom ingest screen: k chained BROADCAST joins against the checkpointed m_bits-bounded position table (ExistingRDD, corpus scanned once at build) — the batch side has zero exchanges"),
     ("normalize_text", "unicode/whitespace canonicalization: two narrow JVM regex projections around ONE zero-shuffle mapInArrow stage (ASCII short-circuit + UAX #15 for the minority) — fixes byte forms at scan speed before anything hashes"),
     ("hll_count", "HLL distinct count: narrow md5/bit projection (NO explode — one register per row) + ONE bounded groupBy per shard, register-wise max merge, single-row estimate — the corpus never shuffles on the value"),
     ("hist_quantiles", "HDR quantiles: bounded groupBy(b) per shard, cell-sum merge; JOIN-FREE selection — the cumulative window and each per-q filtered aggregate read the lineage-cut bucket table (ExistingRDD, <= ~63*2^sub_bits rows); with group_cols the window is keyed and millions of groups scale as one hash shuffle"),

@@ -279,33 +279,6 @@ def main() -> None:
                 "overwrite"
             ).save()
             return n_real * pr_iters, time.perf_counter() - t0
-    elif job == "sketch":
-        import time
-
-        from pyspark.sql import functions as F
-
-        from geofeaturegeneration_spark.operators import heavy_hitters
-        from geofeaturegeneration_spark.operators.dedup import _shingles_expr
-
-        def run_job(spark, path):
-            docs = spark.read.parquet(path)
-            # work metric = 3-word shingle occurrences (each is hashed
-            # depth+? times across the two passes); a cheap expression agg,
-            # identical at every level, NOT timed
-            n_shingles = docs.agg(
-                F.sum(F.greatest(F.size(F.split("text", " ")) - 2, F.lit(0)))
-            ).collect()[0][0]
-            t0 = time.perf_counter()
-            stream = (
-                docs.select(F.split(F.col("text"), " ").alias("_gfs_w"))
-                .select(
-                    F.explode_outer(_shingles_expr("_gfs_w", 3)).alias("shingle")
-                )
-                .filter(F.col("shingle").isNotNull())
-            )
-            hh = heavy_hitters(stream, "shingle", min_count=20)
-            hh.write.format("noop").mode("overwrite").save()
-            return n_shingles, time.perf_counter() - t0
     elif job == "hll":
         import time
 

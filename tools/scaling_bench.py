@@ -101,15 +101,14 @@ def main() -> None:
     p.add_argument("--md-out", default=None, help="append a results section to this md file")
     p.add_argument("--job", default="pipeline",
                    choices=["pipeline", "semdedup", "dsir",
-                            "sketch", "normalize", "span",
+                            "normalize", "span",
                             "span_intervals", "hll", "hist", "lloyd",
                             "edit", "pr"],
                    help="pipeline = token feature pipeline; semdedup = "
                         "semantic_dedup over a synthetic embedding corpus "
                         "(--n-vecs); dsir = importance_weights over the "
                         "dedup-scaling text corpus (--n-copies/"
-                        "--text-repeat); sketch = count-min heavy_hitters "
-                        "over the same corpus's 3-word shingles")
+                        "--text-repeat)")
     p.add_argument("--n-vecs", type=int, default=400000,
                    help="corpus size for --job semdedup")
     p.add_argument("--n-copies", type=int, default=20,
@@ -120,7 +119,7 @@ def main() -> None:
 
     if args.job in ("semdedup", "lloyd"):
         seq_path = ensure_emb_input(args.n_vecs)
-    elif args.job in ("dsir", "sketch", "normalize", "span",
+    elif args.job in ("dsir", "normalize", "span",
                       "span_intervals", "hll", "hist", "edit", "pr"):
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from dedup_scaling import ensure_corpus
@@ -146,7 +145,6 @@ def main() -> None:
         "pipeline": "token feature pipeline",
         "semdedup": "semantic_dedup (16 trained clusters, threshold 0.95)",
         "dsir": "DSIR importance_weights (hashed 1..2-grams, 8192 buckets)",
-        "sketch": "count-min heavy_hitters (3-word shingles, depth 4, width 8192, min_count 20)",
         "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
         "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
         "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
@@ -156,7 +154,7 @@ def main() -> None:
         "edit": "edit_join (24-char ascii keys, max_dist=1, symmetric-delete blocking)",
         "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
     }[args.job]
-    unit = {"semdedup": "vectors", "dsir": "grams", "sketch": "shingles",
+    unit = {"semdedup": "vectors", "dsir": "grams",
             "normalize": "chars",
             "hll": "words", "hist": "words",
             "lloyd": "vector-iterations"}.get(args.job, "tokens")
