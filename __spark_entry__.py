@@ -1098,13 +1098,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # operator) — slot freed by folding `time_features` (pure calendar
         # column expressions, driver-green r01-r03) into extra_queries()
         "shuffle_shards": q_shuffle_shards,
-        # round 4: HLL cardinality sketch (new operator — the cardinality
-        # member of the sketch family) — slot freed by folding
-        # `orders_enrich` (the remaining TPC-H demo aggregation,
-        # driver-green r01-r03, not a SURVEY §2 operator; the §2.3
-        # broadcast-enrich row is carried by the in-window stay_enrich)
-        # into extra_queries()
-        "hll_count": q_hll_count,
         # round 4 (this session): edit-distance fuzzy join (new operator —
         # the character-level member of the dedup family) — slot freed by
         # folding `ngram_jaccard` (driver-green r01-r03; the shingle-based
@@ -1136,13 +1129,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_trained": q_ann_ivf_trained,
         "embedding_neardup_multi": q_embedding_neardup_multi,
         "text_stats": q_text_stats,
-        # round 4: HDR-histogram quantile sketch (new operator — the
-        # distribution member of the sketch family) — slot freed by
-        # folding `lang_id` (driver-green r01-r03; a pure column-expression
-        # classifier with no join/shuffle, and the text-function family
-        # keeps text_stats + repetition + quality_filter + clean_lines +
-        # normalize_text in-window) into extra_queries()
-        "hist_quantiles": q_hist_quantiles,
         # round 4: CCNet-style hashed-bigram LM scoring (new operator) —
         # slot freed by folding the multimodal payload embedding (since
         # retired with its module) into extra_queries()
@@ -1262,125 +1248,6 @@ def q_corpus_divergence(spark, sf_dir):
         docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
         n=2, buckets=1024, scale=10_000_000,
     )
-
-
-def q_hll_count(spark, sf_dir):
-    """HLL distinct-word count (operators/sketch.py:hll_count) exercised
-    through the SHARDED path: one register table per doc_id-parity half,
-    hll_merge, then the estimate — pinning both the mergeability claim
-    (merge == one-pass build, exactly) and the estimate expression
-    (exact int64 register/Z math; the float tail rounded to 1e6-scaled
-    int64, since the linear-counting branch's ln() is engine-specific at
-    1 ulp) against an oracle that builds the registers in one pass. The word
-    vocabulary at sf0.01 lands in the linear-counting branch; the raw
-    branch is pinned at 100k distinct in tests/test_sketch.py."""
-    from geofeaturegeneration_spark.operators import (
-        hll_build,
-        hll_estimate,
-        hll_merge,
-    )
-
-    docs = _docs_wide(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
-    )
-    a = hll_build(tok.filter(F.col("doc_id") % 2 == 0), "w", p=12)
-    b = hll_build(tok.filter(F.col("doc_id") % 2 == 1), "w", p=12)
-    # the estimate crosses engines as round(1e6 * est): the linear-
-    # counting branch goes through ln(), which is 1-ulp engine-specific
-    # (JVM StrictMath vs DuckDB libm) — the repo-wide scaled-int rule
-    # absorbs it (same as corpus_divergence / lm_logprob)
-    return hll_estimate(hll_merge(a, b), p=12).select(
-        "filled",
-        "z_scaled",
-        F.round(F.lit(1_000_000.0) * F.col("est")).cast("long").alias(
-            "est_ppm"
-        ),
-    )
-
-
-def q_hll_registers(spark, sf_dir):
-    """The HLL register table itself (r, max rank) at p=8 over the word
-    stream — the exact-integer artifact the in-window hll_count estimate
-    is computed from, oracle-replayed row-for-row (bin()-based bit
-    lengths agree across engines)."""
-    from geofeaturegeneration_spark.operators import hll_build
-
-    docs = _docs_wide(spark, sf_dir)
-    tok = docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
-    return hll_build(tok, "w", p=8)
-
-
-def q_hist_quantiles(spark, sf_dir):
-    """Doc-length distribution cuts (operators/sketch.py:hist_build/
-    hist_quantiles) through the SHARDED path: one base-2 HDR bucket table
-    per doc_id-parity half, hist_merge (integer sums — merge == one-pass
-    build exactly), then p25/p50/p90/p99 of n_chars. Bucket ids, lower
-    edges, cumulative ranks and ceil-rank targets are ALL exact integer
-    arithmetic in the shared Spark/DuckDB dialect, so the oracle replays
-    the full pipeline bit-for-bit from a single-pass build."""
-    from geofeaturegeneration_spark.operators import (
-        hist_build,
-        hist_merge,
-        hist_quantiles,
-    )
-
-    docs = _docs_wide(spark, sf_dir).select(
-        "doc_id", F.col("n_chars").cast("long").alias("n_chars")
-    )
-    a = hist_build(docs.filter(F.col("doc_id") % 2 == 0), "n_chars", sub_bits=5)
-    b = hist_build(docs.filter(F.col("doc_id") % 2 == 1), "n_chars", sub_bits=5)
-    return hist_quantiles(
-        hist_merge(a, b), [250_000, 500_000, 900_000, 990_000], sub_bits=5
-    )
-
-
-def q_hll_count_by(spark, sf_dir):
-    """Per-SOURCE distinct-word counts (group_cols form of hll_count):
-    one register table per source, bounded at sources x 2^p rows, one
-    hash shuffle — the grouped sibling of the in-window hll_count."""
-    from geofeaturegeneration_spark.operators import hll_count
-
-    docs = _docs_wide(spark, sf_dir)
-    tok = docs.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("w")
-    )
-    return hll_count(tok, "w", p=10, group_cols=["source"]).select(
-        "source",
-        "filled",
-        "z_scaled",
-        F.round(F.lit(1_000_000.0) * F.col("est")).cast("long").alias(
-            "est_ppm"
-        ),
-    )
-
-
-def q_hist_quantiles_by(spark, sf_dir):
-    """Per-SOURCE doc-length cuts (group_cols form of hist_quantiles):
-    one bounded histogram per source, p50/p99 each — the keyed-window
-    path that scales to millions of groups (each per-q pass is a filtered
-    aggregate over the bounded bucket table, never a probe join)."""
-    from geofeaturegeneration_spark.operators import hist_quantile_values
-
-    docs = _docs_wide(spark, sf_dir).select(
-        "source", F.col("n_chars").cast("long").alias("n_chars")
-    )
-    return hist_quantile_values(
-        docs, "n_chars", [500_000, 990_000], sub_bits=5,
-        group_cols=["source"],
-    )
-
-
-def q_hist_buckets(spark, sf_dir):
-    """The HDR bucket table itself (b, cnt) over n_chars — the exact-
-    integer artifact the in-window hist_quantiles reads, oracle-replayed
-    row-for-row."""
-    from geofeaturegeneration_spark.operators import hist_build
-
-    docs = _docs_wide(spark, sf_dir).select(
-        F.col("n_chars").cast("long").alias("n_chars")
-    )
-    return hist_build(docs, "n_chars", sub_bits=5)
 
 
 def q_pii_scrub(spark, sf_dir):
@@ -1786,25 +1653,14 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # table — location importance; exact int64 recurrence, unrolled
         # CTE oracle like the in-window pagerank
         "traj_pagerank": q_traj_pagerank,
-        # the exact-integer register table the in-window hll_count
-        # estimate is computed from, oracle-replayed row-for-row
-        "hll_registers": q_hll_registers,
-        # the exact-integer HDR bucket table the in-window hist_quantiles
-        # reads, oracle-replayed row-for-row
-        "hist_buckets": q_hist_buckets,
-        # the group_cols form of the in-window hist_quantiles (per-source
-        # cuts; keyed windows, same bucket/rank math)
-        "hist_quantiles_by": q_hist_quantiles_by,
-        # the group_cols form of the in-window hll_count (per-source
-        # distinct words; same register/estimate math per group)
-        "hll_count_by": q_hll_count_by,
-        # folded round 4 to free hist_quantiles' driver slot: pure
-        # column-expression language classifier, driver-green r01-r03;
-        # the text family keeps five in-window rows
+        # folded round 4 to free a slot for one since-retired sketch
+        # query: pure column-expression language classifier, driver-green
+        # r01-r03; the text family keeps five in-window rows
         "lang_id": q_lang_id,
-        # folded round 4 to free hll_count's driver slot: a TPC-H demo
-        # aggregation (green rows r01-r03), not a SURVEY §2 operator — the
-        # §2.3 broadcast-enrich row is carried by in-window stay_enrich
+        # folded round 4 to free a slot for one since-retired sketch
+        # query: a TPC-H demo aggregation (green rows r01-r03), not a
+        # SURVEY §2 operator — the §2.3 broadcast-enrich row is carried by
+        # in-window stay_enrich
         "orders_enrich": q_orders_enrich,
         # folded round 4 to free corpus_divergence's driver slot: green
         # rows r01-r03, pure column exprs, canonical vectors pinned in
@@ -1826,17 +1682,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 _MD5L = "('0x'||substr(md5({x}),1,15))::BIGINT"
 
-# hll_count's estimate constant — computed by the SAME Python expression the
-# operator uses (operators/sketch.py:_hll_alpha), so the double literal the
-# oracle parses is bit-identical to the one Spark's plan carries
-from geofeaturegeneration_spark.operators.sketch import _hll_alpha as _HLL_A
-from geofeaturegeneration_spark.operators.sketch import (
-    _hist_id_expr as _HIST_ID,
-    _hist_lo_expr as _HIST_LO,
-)
-
-_HLL_C12 = _HLL_A(4096) * 4096 * 4096 * (1 << 49)
-_HLL_C10 = _HLL_A(1024) * 1024 * 1024 * (1 << 51)
 _SEC = "epoch_us({x})//1000000"
 _NORM_TEXT = "regexp_replace(trim(lower(text)),'\\s+',' ','g')"
 _STOP = "('the','a','of','and','to','in','is','it')"
@@ -2374,8 +2219,6 @@ def rotation_hints() -> dict[str, dict]:
         "simhash": "simhash_pairs",
         "importance_weights": "importance_resample",
         "graph_nodes": "traj_graph",
-        "hll_registers": "hll_count",
-        "hist_buckets": "hist_quantiles",
         # physical twins — identical output, different plan
         "sessionize_gap": "sessionize_state",
         "asof_union": "asof_salted",
@@ -2390,8 +2233,6 @@ def rotation_hints() -> dict[str, dict]:
         "edit_clusters": "edit_join",
         # same kernel / same deterministic draw, different scope knob
         "line_dedup_doc": "line_dedup",
-        "hist_quantiles_by": "hist_quantiles",
-        "hll_count_by": "hll_count",
         "temperature_mix": "source_sample",
         "temperature_tokens": "source_sample",
         "traj_pagerank": "pagerank",
@@ -3343,123 +3184,6 @@ SELECT sum(ab)::DOUBLE / 10000000.0 AS kl_ab,
        sum(ba)::DOUBLE / 10000000.0 AS kl_ba,
        sum(js2)::DOUBLE / (2.0 * 10000000.0) AS js
 FROM (SELECT * FROM terms UNION ALL SELECT * FROM ghost)
-""",
-        # hll_count: replay the full HLL pipeline in ONE pass (the Spark
-        # side shards by doc_id parity and merges — register max is
-        # associative, so the tables are identical by construction, which
-        # is exactly the mergeability claim this row pins). Register index
-        # = low 12 bits of the 60-bit md5, rank = 49 - bitlen(upper bits)
-        # (bin() is minimal in both engines), Z carried as an exact
-        # 2^49-scaled int64; the only floats are the final fixed-order
-        # expression with the SAME alpha*m^2*2^49 literal (computed by the
-        # operator's own _hll_alpha above) and the linear-counting branch.
-        "hll_count": f"""
-WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
-h AS (SELECT ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
-reg AS (SELECT h % 4096 AS r,
-               CASE WHEN h // 4096 = 0 THEN 0
-                    ELSE length(bin(h // 4096)) END AS bl
-        FROM h),
-rg AS (SELECT r, max(49 - bl) AS rank FROM reg GROUP BY r),
-ag AS (SELECT count(*) AS filled,
-              coalesce(sum(1::BIGINT << (49 - rank)), 0)::BIGINT AS z1
-       FROM rg),
-zz AS (SELECT filled,
-              (z1 + (4096 - filled) * {1 << 49})::BIGINT AS z_scaled
-       FROM ag)
-SELECT filled, z_scaled,
-       round(1000000.0 * (
-         CASE WHEN ({_HLL_C12!r} / z_scaled::DOUBLE) <= 10240.0
-                   AND (4096 - filled) > 0
-              THEN 4096.0 * ln(4096.0 / (4096 - filled)::DOUBLE)
-              ELSE {_HLL_C12!r} / z_scaled::DOUBLE END))::BIGINT AS est_ppm
-FROM zz
-""",
-        # hll_count_by: the group_cols form at p=10 — the identical
-        # register/Z/estimate math replayed PER SOURCE (constant computed
-        # by the operator's own _hll_alpha, as above)
-        "hll_count_by": f"""
-WITH t AS (SELECT source, unnest(string_split(text,' ')) AS w
-           FROM documents),
-h AS (SELECT source, ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
-reg AS (SELECT source, h % 1024 AS r,
-               CASE WHEN h // 1024 = 0 THEN 0
-                    ELSE length(bin(h // 1024)) END AS bl
-        FROM h),
-rg AS (SELECT source, r, max(51 - bl) AS rank FROM reg GROUP BY 1, 2),
-ag AS (SELECT source, count(*) AS filled,
-              coalesce(sum(1::BIGINT << (51 - rank)), 0)::BIGINT AS z1
-       FROM rg GROUP BY source),
-zz AS (SELECT source, filled,
-              (z1 + (1024 - filled) * {1 << 51})::BIGINT AS z_scaled
-       FROM ag)
-SELECT source, filled, z_scaled,
-       round(1000000.0 * (
-         CASE WHEN ({_HLL_C10!r} / z_scaled::DOUBLE) <= 2560.0
-                   AND (1024 - filled) > 0
-              THEN 1024.0 * ln(1024.0 / (1024 - filled)::DOUBLE)
-              ELSE {_HLL_C10!r} / z_scaled::DOUBLE END))::BIGINT AS est_ppm
-FROM zz
-""",
-        # hll_registers: the exact-integer register table at p=8 —
-        # row-for-row the artifact hll_count estimates from
-        "hll_registers": f"""
-WITH t AS (SELECT unnest(string_split(text,' ')) AS w FROM documents),
-h AS (SELECT ({_MD5L.format(x="w || '#hll'")}) AS h FROM t),
-reg AS (SELECT h % 256 AS r,
-               CASE WHEN h // 256 = 0 THEN 0
-                    ELSE length(bin(h // 256)) END AS bl
-        FROM h)
-SELECT r::INT AS r, max(53 - bl)::INT AS rank FROM reg GROUP BY r
-""",
-        # hist_quantiles: replay the HDR histogram pipeline in ONE pass
-        # (the Spark side shards by doc_id parity and merges — integer
-        # sums are associative, so the bucket tables are identical; that
-        # IS the mergeability claim). Bucket ids / lower edges come from
-        # the operator's OWN shared-dialect expression strings (_HIST_ID /
-        # _HIST_LO above — bin(), >>, CASE: parsed identically by both
-        # engines); ranks and ceil targets are exact integers.
-        "hist_quantiles": f"""
-WITH v AS (SELECT n_chars::BIGINT AS v FROM documents
-           WHERE n_chars IS NOT NULL),
-bk AS (SELECT ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
-       FROM v GROUP BY 1),
-c AS (SELECT b, ({_HIST_LO("b", 5)}) AS lo,
-             sum(cnt) OVER (ORDER BY b) AS cum,
-             sum(cnt) OVER () AS total
-      FROM bk),
-q AS (SELECT unnest([250000, 500000, 900000, 990000]::BIGINT[]) AS q_ppm)
-SELECT q.q_ppm,
-       arg_min(c.lo, c.b)::BIGINT AS value,
-       min((q.q_ppm * c.total + 999999) // 1000000)::BIGINT AS rank
-FROM q JOIN c ON c.cum >= (q.q_ppm * c.total + 999999) // 1000000
-GROUP BY q.q_ppm
-""",
-        # hist_quantiles_by: the per-source (group_cols) form — same
-        # bucket/rank math partitioned by source; the oracle may use the
-        # probe-join formulation freely (values, not plans, are compared)
-        "hist_quantiles_by": f"""
-WITH v AS (SELECT source, n_chars::BIGINT AS v FROM documents
-           WHERE n_chars IS NOT NULL),
-bk AS (SELECT source, ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
-       FROM v GROUP BY 1, 2),
-c AS (SELECT source, b, ({_HIST_LO("b", 5)}) AS lo,
-             sum(cnt) OVER (PARTITION BY source ORDER BY b) AS cum,
-             sum(cnt) OVER (PARTITION BY source) AS total
-      FROM bk),
-q AS (SELECT unnest([500000, 990000]::BIGINT[]) AS q_ppm)
-SELECT c.source, q.q_ppm,
-       arg_min(c.lo, c.b)::BIGINT AS value,
-       min((q.q_ppm * c.total + 999999) // 1000000)::BIGINT AS rank
-FROM q JOIN c ON c.cum >= (q.q_ppm * c.total + 999999) // 1000000
-GROUP BY c.source, q.q_ppm
-""",
-        # hist_buckets: the exact-integer HDR bucket table itself
-        "hist_buckets": f"""
-WITH v AS (SELECT n_chars::BIGINT AS v FROM documents
-           WHERE n_chars IS NOT NULL)
-SELECT ({_HIST_ID("v", 5)}) AS b, count(*) AS cnt
-FROM v GROUP BY 1
 """,
         # mirrors operators/curation.rare_token_stats (rare_below=2);
         # rare_frac is one IEEE division of two exact bigints — identical

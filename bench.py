@@ -93,8 +93,6 @@ HEADLINE = [
     "temperature_mix",
     "shuffle_shards",
     "lm_logprob",
-    "hll_count",
-    "hist_quantiles",
     "corpus_divergence",
     "ivf_lloyd",
     "epoch_upsample",

@@ -45,10 +45,3 @@ def event_time_from_position(
 ) -> Column:
     """Timestamp for sequence position ``pos`` (0-based)."""
     return F.timestamp_seconds(F.lit(base_epoch) + pos.cast("long") * step_s)
-
-
-def epoch_seconds(ts: Column) -> Column:
-    """Reference computes ``stime.astype('int64') // 1e9`` — float division,
-    so the output dtype is float (AttachFeature.py:658). We keep double for
-    golden parity."""
-    return ts.cast("long").cast("double")

@@ -15,15 +15,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Iceberg runtime jar is not available offline in this sandbox; when it is
-# present on the classpath these configs activate a local hadoop catalog so
-# the storage layer (storage.py) can use real Iceberg tables.  Correctness
-# never depends on the jar: storage.py falls back to plain Parquet.
-_ICEBERG_CONFIGS = {
-    "spark.sql.catalog.local": "org.apache.iceberg.spark.SparkCatalog",
-    "spark.sql.catalog.local.type": "hadoop",
-}
-
 # cgroup v2 and v1 memory limits; "max" (v2) or a page-rounded 2^63 (v1)
 # means no limit, which the min() with physical memory absorbs
 _CGROUP_LIMITS = (
@@ -125,11 +116,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    """Stop the active session if any (used by the scaling bench to restart
-    with a different parallelism level)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

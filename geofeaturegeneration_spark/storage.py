@@ -3,9 +3,10 @@ partitioned Parquet otherwise — one interface, identical layout semantics.
 
 The north-rule deployment target is an Iceberg table of pre-tokenized
 sequences (snapshot isolation, hidden partitioning, MERGE/dynamic overwrite
-for idempotent partition rewrites). The Iceberg runtime jar is not available
-offline in this sandbox (session.py), so correctness never depends on it:
-`TableStore` probes the catalog once and falls back to a plain partitioned
+for idempotent partition rewrites). The Iceberg runtime jar and a
+`spark.sql.catalog.<name>` config may both be absent, so correctness never
+depends on them: `TableStore` probes the catalog once
+(`iceberg_available`) and falls back to a plain partitioned
 Parquet directory with the SAME partition columns and the same
 overwrite-by-partition write discipline (`partitionOverwriteMode=dynamic`),
 which is exactly what Iceberg's `overwritePartitions()` provides

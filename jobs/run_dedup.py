@@ -16,7 +16,7 @@ filter (+ optional mixing recipe + PII scrub riding the output pass) —
 (+ optional exact-substring span dedup over the surviving corpus) —
 composed as ONE resumable pipeline behind the checkpoint store (reference
 analog: the stage-separated pipeline of AttachFeature.py:1046-1112), not
-just unit operators. Three to fourteen stages, each recorded per partition in
+just unit operators. Three to thirteen stages, each recorded per partition in
 the CheckpointStore so a crash resumes without recomputing finished work:
 
 -0.3. ``clean`` (optional, per doc-id hash bucket): text canonicalization
@@ -83,17 +83,6 @@ the CheckpointStore so a crash resumes without recomputing finished work:
    corpus tables stay one-copy-per-doc, and the rate tag rides a
    STAGE-LOCAL lineage key (shards only), so tuning epochs re-runs nothing
    upstream.
-7. ``stats`` (optional, global): corpus report card over the FINAL
-   corpus — HLL word registers (p=14), HDR doc-length buckets
-   (sub_bits=5), exact doc/token totals, the distinct-word estimate and
-   the p50/p99 length cuts — persisted as ONE long-form (metric, k, v)
-   table whose register/bucket rows hll_merge/hist_merge with future
-   runs' stats tables (cross-run distinct counts and length
-   distributions without rescanning this corpus). Three narrow scan+agg
-   passes over the final corpus (words for HLL, lengths for the
-   histogram, totals) — no rewrite, no unbounded shuffle; deliberately
-   OUTSIDE the global lineage key — stats change no bytes any other
-   stage reads, so toggling them never invalidates the pipeline.
 
 Determinism: signatures, pairs, components, and keeper choice are all pure
 functions of the corpus (md5 hashing, min-label components, min-id
@@ -117,10 +106,6 @@ from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partition
 from geofeaturegeneration_spark.operators import (
     decontaminate,
     dedup_clusters,
-    hist_build,
-    hist_quantiles,
-    hll_build,
-    hll_estimate,
     lm_bucket_logprobs,
     lm_score,
     lsh_pairs_from_band_sigs,
@@ -131,7 +116,7 @@ from geofeaturegeneration_spark.operators import (
     span_reassemble,
     train_ivf_centroids,
 )
-from geofeaturegeneration_spark.functions.text import n_words, words
+from geofeaturegeneration_spark.functions.text import n_words
 from geofeaturegeneration_spark.operators.curation import (
     clean_lines,
     epoch_upsample,
@@ -180,7 +165,6 @@ def run_dedup_pipeline(
     epoch_default_ppm: int = 1_000_000,
     span_k: int | None = None,
     shard_size: int | None = None,
-    stats: bool = False,
     embeddings=None,
     emb_fingerprint: str | None = None,
     semantic_threshold: float = 0.95,
@@ -273,7 +257,10 @@ def run_dedup_pipeline(
     decontaminate -> semantic -> mix -> scrub -> span-dedup — is
     therefore ONE resumable artifact; per-stage wall-clock is recorded in
     the CheckpointStore (``latest()``). Returns the per-stage
-    PartitionResult lists (3 to 14 of them, in pipeline order)."""
+    PartitionResult lists (3 to 13 of them, in pipeline order)."""
+    if buckets < 1:
+        # an empty key set would prune every existing per-bucket partition
+        raise ValueError(f"buckets must be >= 1, got {buckets}")
     if mix_alpha is not None and mix_rates_ppm is not None:
         raise ValueError(
             "mix_alpha (computed temperature recipe) and mix_rates_ppm "
@@ -840,7 +827,7 @@ def run_dedup_pipeline(
     # permutation plus fixed-size shard ids — webdataset-style export, no
     # global single-partition sort (distributed zipWithIndex).
     r_shd = None
-    if shard_size is not None or stats:
+    if shard_size is not None:
         if span_k is not None:
             exp_path = fin_path
             exp_schema = T.StructType(
@@ -869,8 +856,8 @@ def run_dedup_pipeline(
                 .drop("part_key")
             )
 
-    shd_path = os.path.join(out_root, "shards")
-    if shard_size is not None:
+        shd_path = os.path.join(out_root, "shards")
+
         # --epochs: multi-epoch repetition (curation.epoch_upsample)
         # materialized into the TRAINING export only — the corpus tables
         # (deduped / span_deduped) stay one-copy-per-doc; copies get a
@@ -908,74 +895,6 @@ def run_dedup_pipeline(
             shd_path, "part_key", lineage + ep_tag, force=force,
         )
 
-    # optional CORPUS REPORT CARD (--stats, one global unit): the sketch
-    # family run over the FINAL corpus (span-cleaned when those stages
-    # ran, else the deduped output) and persisted as one long-form table
-    # (metric, k, v):
-    #   hll_word_register  — HLL register table (p=14) over the word
-    #                        stream; hll_merge-able with future shards'
-    #                        stats tables, so cross-run distinct counting
-    #                        never rescans this corpus
-    #   len_hist_bucket    — base-2 HDR bucket table (sub_bits=5) over doc
-    #                        char lengths; hist_merge-able the same way
-    #   summary:*          — exact n_docs / n_tokens, the HLL distinct-word
-    #                        estimate (rounded), and the p50/p99 doc-length
-    #                        cuts derived from the bucket table
-    # Costs one text-bytes pass. Deliberately NOT part of the global
-    # lineage: stats change no bytes any other stage reads, so toggling
-    # them must not invalidate the pipeline — the stage gets its own
-    # lineage suffix instead.
-    sts_path = os.path.join(out_root, "stats")
-    r_sts = None
-    if stats:
-
-        def sts_one(_key: str):
-            corpus = read_export()
-            wstream = corpus.select(F.explode(words(F.col("text"))).alias("w"))
-            regs = hll_build(wstream, "w", p=14).localCheckpoint(eager=False)
-            reg_rows = regs.select(
-                F.lit("hll_word_register").alias("metric"),
-                F.col("r").cast("long").alias("k"),
-                F.col("rank").cast("long").alias("v"),
-            )
-            lens = corpus.select(F.length("text").cast("long").alias("v"))
-            hb = hist_build(lens, "v", sub_bits=5).localCheckpoint(eager=False)
-            hist_rows = hb.select(
-                F.lit("len_hist_bucket").alias("metric"),
-                F.col("b").alias("k"),
-                F.col("cnt").alias("v"),
-            )
-            q_rows = hist_quantiles(hb, [500_000, 990_000], sub_bits=5).select(
-                F.concat(F.lit("summary:doc_len_q"), F.col("q_ppm")).alias(
-                    "metric"
-                ),
-                F.col("rank").alias("k"),
-                F.col("value").alias("v"),
-            )
-            est_rows = hll_estimate(regs, p=14).select(
-                F.lit("summary:distinct_words_est").alias("metric"),
-                F.col("filled").alias("k"),
-                F.round(F.col("est")).cast("long").alias("v"),
-            )
-            tot_rows = corpus.agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.coalesce(
-                    F.sum(n_words(F.col("text"))), F.lit(0).cast("long")
-                ).alias("n_tokens"),
-            ).selectExpr(
-                "stack(2, 'summary:n_docs', 0L, n_docs, "
-                "'summary:n_tokens', 0L, n_tokens) AS (metric, k, v)"
-            )
-            out = reg_rows
-            for part in (hist_rows, q_rows, est_rows, tot_rows):
-                out = out.unionByName(part)
-            return out
-
-        r_sts = run_partitioned(
-            spark, store, f"{job_id}/stats", ["all"], sts_one,
-            sts_path, "part_key", lineage + ";stats=p14,s5", force=force,
-        )
-
     stages = []
     if r_cln is not None:
         stages.append(r_cln)
@@ -995,8 +914,6 @@ def run_dedup_pipeline(
         stages.extend([r_spn, r_fin])
     if r_shd is not None:
         stages.append(r_shd)
-    if r_sts is not None:
-        stages.append(r_sts)
     return tuple(stages)
 
 
@@ -1064,12 +981,6 @@ def main(argv=None) -> int:
                    help="append the shuffle_shards export stage: "
                         "deterministic global permutation + fixed-size "
                         "shard ids over the surviving docs")
-    p.add_argument("--stats", action="store_true",
-                   help="append the corpus report-card stage: HLL word "
-                        "registers + HDR length-histogram buckets + exact "
-                        "doc/token totals over the final corpus, persisted "
-                        "as one mergeable long-form table (does not "
-                        "invalidate other stages when toggled)")
     p.add_argument("--mix", default=None,
                    help="JSON object of per-source keep rates in ppm, e.g. "
                         "'{\"web\": 800000, \"books\": 1000000}' — applied "
@@ -1103,6 +1014,9 @@ def main(argv=None) -> int:
     p.add_argument("--semantic-max-cluster", type=int, default=None,
                    help="exempt clusters larger than this from the screen")
     args = p.parse_args(argv)
+    if args.buckets < 1:
+        # an empty key set would prune every existing per-bucket partition
+        p.error("--buckets must be >= 1")
 
     spark = get_spark("run_dedup")
     docs = spark.read.parquet(args.input)
@@ -1140,7 +1054,6 @@ def main(argv=None) -> int:
         epoch_default_ppm=args.epochs_default,
         span_k=args.span_dedup,
         shard_size=args.shard_size,
-        stats=args.stats,
         embeddings=embeddings, emb_fingerprint=args.embeddings,
         semantic_threshold=args.semantic_threshold,
         semantic_clusters=args.semantic_clusters,
@@ -1165,8 +1078,6 @@ def main(argv=None) -> int:
         names.extend(["span_intervals", "span_clean"])
     if args.shard_size is not None:
         names.append("shards")
-    if args.stats:
-        names.append("stats")
     summary = {
         "job_id": args.job_id,
         "stages": {

@@ -926,14 +926,15 @@ def test_expanding_key_set_reruns_pruned_partitions(spark, seq, tmp_path):
 
 
 def test_dedup_pipeline_shrinking_buckets_prunes_stale_partitions(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Re-running into the same --output with fewer --buckets would leave
     the old run's higher-numbered part_key directories on disk (dynamic
     partition overwrite only replaces re-run keys) and serve their stale
     signatures/rows to every reader; run_partitioned now prunes
     out-of-range partition dirs up front. Regression for the round-4
-    advisor finding."""
+    advisor finding. Shrinking to no bucket at all (buckets < 1) would
+    prune every partition, so it is rejected before any stage runs."""
     import jobs.run_dedup as RD
 
     docs = spark.read.parquet(
@@ -954,9 +955,22 @@ def test_dedup_pipeline_shrinking_buckets_prunes_stale_partitions(
     # and the final output equals a clean buckets=2 run
     out2, ck2 = str(tmp_path / "out_shrink2"), str(tmp_path / "ck_shrink2")
     RD.run_dedup_pipeline(spark, docs, out2, ck2, buckets=2, **kw)
-    assert _read_sorted_rows(spark, f"{out}/deduped") == _read_sorted_rows(
-        spark, f"{out2}/deduped"
-    )
+    clean = _read_sorted_rows(spark, f"{out2}/deduped")
+    assert _read_sorted_rows(spark, f"{out}/deduped") == clean
+    # an empty key set is an error, and the finished output stays whole
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match="buckets"):
+            RD.run_dedup_pipeline(spark, docs, out, ck, buckets=bad, **kw)
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark session requested")
+
+    monkeypatch.setattr(RD, "get_spark", no_spark)
+    for bad in ("0", "-1"):
+        with pytest.raises(SystemExit):
+            RD.main(["--input", out, "--output", out, "--checkpoint", ck,
+                     "--buckets", bad])
+    assert _read_sorted_rows(spark, f"{out}/deduped") == clean
 
 
 def test_dedup_pipeline_ppl_stage(spark, tmp_path):
@@ -1208,75 +1222,6 @@ def test_dedup_pipeline_normalize_then_clean(spark, tmp_path):
     assert final[2] == unicodedata.normalize("NFC", other.replace("green", "gre\u0301en"))
     # same flags resume: everything skips
     st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert all(r.skipped for stage in st2 for r in stage)
-
-
-def test_dedup_pipeline_stats_stage(spark, tmp_path):
-    """--stats appends the corpus report card: the persisted long-form
-    table must equal the sketch operators run by hand over the final
-    deduped corpus (HLL registers register-exact, HDR buckets bucket-exact,
-    totals exact, quantile rows from the same bucket table), it must NOT
-    invalidate any other stage when toggled on (stats change no bytes any
-    stage reads), and an identical re-run skips it."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.operators import (
-        hist_build,
-        hist_quantiles,
-        hll_build,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    kw = dict(buckets=2, k=3, n_hashes=8, bands=4, max_bucket_size=100)
-    out, ck = str(tmp_path / "out_st"), str(tmp_path / "ck_st")
-
-    # run 1 WITHOUT stats, run 2 WITH: the three base stages must all skip
-    # (toggling stats does not touch their lineage), only stats runs
-    RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    stages = RD.run_dedup_pipeline(spark, docs, out, ck, stats=True, **kw)
-    assert len(stages) == 4  # sig, clusters, output, stats
-    r_sig, r_clu, r_out, r_sts = stages
-    assert all(r.skipped for st in (r_sig, r_clu, r_out) for r in st)
-    assert all(not r.skipped for r in r_sts)
-
-    st = spark.read.parquet(f"{out}/stats").drop("part_key")
-    by_metric = {}
-    for r in st.collect():
-        by_metric.setdefault(r["metric"], set()).add((r["k"], r["v"]))
-
-    final = spark.read.parquet(f"{out}/deduped").drop("part_key").select(
-        "doc_id", "text"
-    )
-    # register-exact vs a direct build over the final corpus
-    words = final.select(F.explode(F.split("text", " ")).alias("w"))
-    want_regs = {
-        (r["r"], r["rank"]) for r in hll_build(words, "w", p=14).collect()
-    }
-    assert by_metric["hll_word_register"] == want_regs
-    # bucket-exact
-    lens = final.select(F.length("text").cast("long").alias("v"))
-    hb = hist_build(lens, "v", sub_bits=5)
-    want_hist = {(r["b"], r["cnt"]) for r in hb.collect()}
-    assert by_metric["len_hist_bucket"] == want_hist
-    # quantile rows replay from the same bucket table
-    for r in hist_quantiles(hb, [500_000, 990_000], sub_bits=5).collect():
-        key = f"summary:doc_len_q{r['q_ppm']}"
-        assert by_metric[key] == {(r["rank"], r["value"])}
-    # exact totals
-    n_docs = final.count()
-    n_tokens = final.agg(
-        F.sum(F.size(F.split("text", " ")))
-    ).collect()[0][0]
-    assert by_metric["summary:n_docs"] == {(0, n_docs)}
-    assert by_metric["summary:n_tokens"] == {(0, n_tokens)}
-    # the distinct-word estimate is within HLL tolerance of the truth
-    [(_, est)] = by_metric["summary:distinct_words_est"]
-    true_distinct = words.distinct().count()
-    assert abs(est - true_distinct) / true_distinct < 0.05
-
-    # identical re-run: everything skips, stats included
-    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, stats=True, **kw)
     assert all(r.skipped for stage in st2 for r in stage)
 
 

@@ -13,6 +13,8 @@ collapses at 1000 executors — these tests pin the plan shape:
 * no executed filter of the chunk export re-evaluates its chunk lambda.
 * the pipeline's per-doc transform runs without an exchange or a window,
   and its plan builds in a bounded number of py4j commands.
+* build_vocab's id pass reads its checkpointed range partitions, never a
+  recomputed shuffle.
 """
 
 import os
@@ -21,7 +23,8 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as E
 
@@ -47,8 +50,9 @@ def test_filter_and_column_pushdown(spark):
 
 
 def test_dim_joins_broadcast(spark):
-    # orders_enrich folded to extras round 4 (hll_count took its slot);
-    # the broadcast-dim-join promise it pins is unchanged
+    # orders_enrich folded to extras round 4 (its slot went to one
+    # since-retired sketch query); the broadcast-dim-join promise it pins
+    # is unchanged
     plan = plan_str(
         {**E.queries(), **E.extra_queries()}["orders_enrich"](spark, SF_DIR),
         "simple",
@@ -78,21 +82,31 @@ def test_contract_fits_driver_window():
     assert not missing, f"queries without oracle: {missing}"
     # and the reverse: every name the registry's side tables hold is a
     # registered query, so retiring a query cannot leave a dead oracle,
-    # rotation hint or bench headline behind
+    # rotation hint, bench headline or plan dump behind
     import bench
 
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    import dump_plans
+
+    shown = [name for name, _ in dump_plans.SHOW]
     hints = E.rotation_hints()
     named = {
         "oracle_sql": list(oracles),
         "carriers": list(hints["carriers"]),
         "foldable": list(hints["foldable"]),
         "bench.HEADLINE": list(bench.HEADLINE),
+        "dump_plans.SHOW": shown,
     }
     dead = {
         where: [n for n in names if n not in registered]
         for where, names in named.items()
     }
     assert not any(dead.values()), f"names of no registered query: {dead}"
+    # PLANS.md holds exactly SHOW's sections, in order, so a section cut by
+    # hand cannot outlive its query (UTF-8: one plan holds a NUL literal)
+    with open(os.path.join(REPO, "PLANS.md"), encoding="utf-8") as f:
+        heads = [ln[3:].strip() for ln in f if ln.startswith("## ")]
+    assert heads == shown
 
 
 def test_asof_union_is_single_shuffle_no_join(spark):
@@ -143,43 +157,26 @@ def test_ann_ivf_blocked_has_no_join(spark):
         assert "CartesianProduct" not in plan, (name, plan)
 
 
-def test_hll_no_explode_no_join_bounded_shuffles(spark):
-    """Round-4: the HLL sketch feeds ONE register per input row — there
-    is no per-row explode, so the operator's own plan must
-    carry no Generate, no join, and exactly the two bounded aggregations
-    (groupBy r capped at 2^p rows, then the single-row estimate)."""
-    from geofeaturegeneration_spark.operators import hll_build, hll_count
+def test_vocab_id_pass_reads_checkpointed_ranges(spark, tmp_path):
+    """build_vocab's count pass and id pass must read ONE range-partitioned
+    table: the ids are per-partition offsets from the collected counts, so
+    an id pass that recomputed the range shuffle (boundaries sampled from a
+    nondeterministically ordered distinct) could number rows the counts
+    never saw. The id pass is the mapInPandas directly over the lazy
+    localCheckpoint (Scan ExistingRDD) — no file scan, no exchange below."""
+    from geofeaturegeneration_spark.operators import build_vocab
 
-    df = spark.range(1000).select(F.col("id").cast("string").alias("v"))
-    plan = plan_str(hll_build(df, "v", p=10), "simple")
-    assert "Generate" not in plan, plan
-    assert "Join" not in plan, plan
-    assert plan.count("Exchange") == 1, plan  # the bounded groupBy(r) only
-    plan2 = plan_str(hll_count(df, "v", p=10), "simple")
-    assert "Generate" not in plan2 and "Join" not in plan2, plan2
-    assert plan2.count("Exchange") == 2, plan2  # + the single-row final agg
-
-
-def test_hist_quantiles_windows_and_join_are_over_bounded_buckets(spark):
-    """Round-4: hist_quantiles is JOIN-FREE — each requested quantile is a
-    filtered aggregate over the lineage-cut bucket table, and the
-    cumulative window runs over that same bounded table (<= ~63*2^sub_bits
-    rows by construction), never over raw values: the corpus-sized stream
-    is reduced by the bounded groupBy(b) BEFORE any window node."""
-    df = E.queries()["hist_quantiles"](spark, SF_DIR)
-    phys = df._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in phys, phys
-    win_at = phys.find("Window")
-    assert win_at != -1, phys
-    below = phys[win_at:]
-    # the windows read the LINEAGE-CUT bucket table (Scan ExistingRDD over
-    # (b, cnt) — the lazy localCheckpoint), never a corpus file scan: the
-    # corpus reduction happened in the checkpoint producer, outside this
-    # plan, so everything below the window is bucket-bounded
-    assert "Scan ExistingRDD[b" in below, phys
-    assert "FileScan" not in below, phys
-    # and the raw value column never reaches this plan at all
-    assert "n_chars" not in phys, phys
+    path = str(tmp_path / "keys")
+    spark.range(1000).select(
+        (F.col("id") % 300).cast("string").alias("k")
+    ).write.parquet(path)
+    vocab = build_vocab(spark.read.parquet(path), "k")
+    phys = vocab._jdf.queryExecution().executedPlan().toString()
+    at = phys.find("MapInPandas")
+    assert at != -1, phys
+    below = phys[at:].split("\n")[1:]
+    assert below and "Scan ExistingRDD[k" in below[0], phys
+    assert not any("FileScan" in ln or "Exchange" in ln for ln in below), phys
 
 
 def test_no_unconditioned_join_in_any_contract_query(spark):

@@ -10,7 +10,6 @@ property failure). Failures shrink to minimal counterexamples as usual.
 """
 
 import hashlib
-import math
 import os
 import sys
 
@@ -66,34 +65,6 @@ def test_epoch_upsample_matches_python_model(spark, ids, rates, default_ppm):
         )
         want.extend((i, e) for e in range(1, n + 1))
     assert got == sorted(want)
-
-
-# ------------------------------------------------------------- histogram
-@settings(**SETTINGS)
-@given(
-    vals=st.lists(
-        st.integers(min_value=0, max_value=10**12),
-        min_size=1, max_size=60,
-    ),
-    q_ppm=st.integers(min_value=1, max_value=1_000_000),
-    sub_bits=st.integers(min_value=0, max_value=6),
-)
-def test_hist_quantile_error_bound(spark, vals, q_ppm, sub_bits):
-    """The quantile estimate never over-reports and under-reports by at
-    most one HDR bucket width (relative 2^-sub_bits)."""
-    from geofeaturegeneration_spark.operators import hist_quantile_values
-
-    df = spark.createDataFrame([(v,) for v in vals], "v LONG")
-    out = hist_quantile_values(df, "v", [q_ppm], sub_bits=sub_bits).collect()
-    assert len(out) == 1
-    est = out[0]["value"]
-    k = math.ceil(q_ppm * len(vals) / 1_000_000)
-    exact = sorted(vals)[k - 1]
-    width = max(1, est >> sub_bits) if sub_bits else max(1, est)
-    assert est <= exact, (est, exact)
-    assert exact - est < (1 if est < (1 << sub_bits) else width) + 1, (
-        est, exact, sub_bits,
-    )
 
 
 # ------------------------------------------------------ chunk round-trip

@@ -279,47 +279,6 @@ def main() -> None:
                 "overwrite"
             ).save()
             return n_real * pr_iters, time.perf_counter() - t0
-    elif job == "hll":
-        import time
-
-        from pyspark.sql import functions as F
-
-        from geofeaturegeneration_spark.operators import hll_count
-
-        def run_job(spark, path):
-            docs = spark.read.parquet(path)
-            # work metric = word occurrences (each is md5-hashed once)
-            n_words = docs.agg(
-                F.sum(F.size(F.split("text", " ")))
-            ).collect()[0][0]
-            t0 = time.perf_counter()
-            words = docs.select(
-                F.explode(F.split(F.col("text"), " ")).alias("w")
-            )
-            hll_count(words, "w", p=14).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return n_words, time.perf_counter() - t0
-    elif job == "hist":
-        import time
-
-        from pyspark.sql import functions as F
-
-        from geofeaturegeneration_spark.operators import hist_quantile_values
-
-        def run_job(spark, path):
-            docs = spark.read.parquet(path)
-            n_words = docs.agg(
-                F.sum(F.size(F.split("text", " ")))
-            ).collect()[0][0]
-            t0 = time.perf_counter()
-            lens = docs.select(
-                F.explode(F.split(F.col("text"), " ")).alias("w")
-            ).select(F.length("w").cast("long").alias("v"))
-            hist_quantile_values(
-                lens, "v", [500_000, 990_000], sub_bits=5
-            ).write.format("noop").mode("overwrite").save()
-            return n_words, time.perf_counter() - t0
     else:
         run_job = token_pipeline
 

@@ -102,8 +102,7 @@ def main() -> None:
     p.add_argument("--job", default="pipeline",
                    choices=["pipeline", "semdedup", "dsir",
                             "normalize", "span",
-                            "span_intervals", "hll", "hist", "lloyd",
-                            "edit", "pr"],
+                            "span_intervals", "lloyd", "edit", "pr"],
                    help="pipeline = token feature pipeline; semdedup = "
                         "semantic_dedup over a synthetic embedding corpus "
                         "(--n-vecs); dsir = importance_weights over the "
@@ -120,7 +119,7 @@ def main() -> None:
     if args.job in ("semdedup", "lloyd"):
         seq_path = ensure_emb_input(args.n_vecs)
     elif args.job in ("dsir", "normalize", "span",
-                      "span_intervals", "hll", "hist", "edit", "pr"):
+                      "span_intervals", "edit", "pr"):
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from dedup_scaling import ensure_corpus
 
@@ -148,15 +147,12 @@ def main() -> None:
         "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
         "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
         "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
-        "hll": "hll_count (distinct words, p=14)",
-        "hist": "hist_quantile_values (word-length p50/p99, sub_bits=5)",
         "lloyd": "lloyd_refine (16 centroids, 2 full-corpus iterations)",
         "edit": "edit_join (24-char ascii keys, max_dist=1, symmetric-delete blocking)",
         "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
     }[args.job]
     unit = {"semdedup": "vectors", "dsir": "grams",
             "normalize": "chars",
-            "hll": "words", "hist": "words",
             "lloyd": "vector-iterations"}.get(args.job, "tokens")
     if args.md_out:
         with open(args.md_out, "a") as f:
