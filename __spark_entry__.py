@@ -1087,13 +1087,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # freed by folding `minmax_norm` (a two-expression window op,
         # driver-green r01-r03) into extra_queries()
         "semantic_dedup": q_semantic_dedup,
-        # round 4: DSIR importance resampling (new operator; its
-        # importance_weights stage is verified transitively — resample IS
-        # weights + TakeOrdered — and value-exact in extras) — slot freed
-        # by folding `tokens_ordered` (the literal input stage of the
-        # in-window chunk_sequences, same _doc_tokens output) into
-        # extra_queries()
-        "importance_resample": q_importance_resample,
         # round 4: deterministic global shuffle->shard export (new
         # operator) — slot freed by folding `time_features` (pure calendar
         # column expressions, driver-green r01-r03) into extra_queries()
@@ -1129,16 +1122,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_ivf_trained": q_ann_ivf_trained,
         "embedding_neardup_multi": q_embedding_neardup_multi,
         "text_stats": q_text_stats,
-        # round 4: CCNet-style hashed-bigram LM scoring (new operator) —
-        # slot freed by folding the multimodal payload embedding (since
-        # retired with its module) into extra_queries()
-        "lm_logprob": q_lm_logprob,
-        # corpus drift monitor (KL/JS over the shared hashed-gram space):
-        # promoted round 4 for its first driver row — unlike the other
-        # extras it has no in-window query composing it; slot freed by
-        # folding geohash (green rows r01-r03, pure-expression encode
-        # whose geo sibling grid_cantor carried the family through r04)
-        "corpus_divergence": q_corpus_divergence,
     }
 
 
@@ -1230,24 +1213,6 @@ def q_rare_tokens(spark, sf_dir):
 
     docs = _docs_wide(spark, sf_dir)
     return rare_token_stats(docs, "doc_id", "text", rare_below=2)
-
-
-def q_corpus_divergence(spark, sf_dir):
-    """Distribution drift between the even- and odd-doc_id halves of the
-    corpus over hashed 1..2-gram buckets (operators/importance.py:
-    corpus_divergence): one row (kl_ab, kl_ba, js) in nats. Each bucket's
-    contribution is one fixed float expression rounded to scaled int64,
-    so the sums are exact and the oracle replays them bit-for-bit
-    (including the shared ghost term for buckets observed in neither
-    half)."""
-    from geofeaturegeneration_spark.operators import corpus_divergence
-
-    docs = _docs_wide(spark, sf_dir)
-    return corpus_divergence(
-        docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text",
-        docs.filter(F.col("doc_id") % 2 == 1), "doc_id", "text",
-        n=2, buckets=1024, scale=10_000_000,
-    )
 
 
 def q_pii_scrub(spark, sf_dir):
@@ -1428,48 +1393,6 @@ def q_quality_filter(spark, sf_dir):
     )
 
 
-DSIR_BUCKETS = 1024
-DSIR_SCALE = 10_000
-DSIR_K = 200
-
-
-def _dsir_corpora(spark, sf_dir):
-    """Deterministic target/raw split of the documents table for the DSIR
-    queries: every 11th doc plays the high-quality target corpus, the rest
-    are the raw pool (the same %-derivation pattern as decontaminate)."""
-    docs = _docs_wide(spark, sf_dir)
-    raw = docs.filter(F.col("doc_id") % 11 != 0).select("doc_id", "text")
-    target = docs.filter(F.col("doc_id") % 11 == 0).select(
-        F.col("doc_id").alias("tid"), F.col("text").alias("ttext")
-    )
-    return raw, target
-
-
-def q_importance_resample(spark, sf_dir):
-    """DSIR importance resampling: greedy top-k raw docs by hashed-bigram
-    log importance ratio against the target corpus. Integer llr sums keep
-    the ranking shuffle-order-proof; selection is TakeOrdered."""
-    from geofeaturegeneration_spark.operators import importance_resample
-
-    raw, target = _dsir_corpora(spark, sf_dir)
-    return importance_resample(
-        raw, "doc_id", "text", target, "tid", "ttext",
-        k=DSIR_K, buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
-    )
-
-
-def q_importance_weights(spark, sf_dir):
-    """The weights stage of importance_resample: per-doc integer llr sums
-    + the derived double weight over the full raw pool."""
-    from geofeaturegeneration_spark.operators import importance_weights
-
-    raw, target = _dsir_corpora(spark, sf_dir)
-    return importance_weights(
-        raw, "doc_id", "text", target, "tid", "ttext",
-        buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
-    )
-
-
 def q_shuffle_shards(spark, sf_dir):
     """Deterministic global corpus shuffle + fixed-size shard export:
     pos = global rank by (md5(id#shuffle), id) via distributed
@@ -1480,20 +1403,6 @@ def q_shuffle_shards(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
     return shuffle_shards(docs, "doc_id", shard_size=256)
-
-
-def q_lm_logprob(spark, sf_dir):
-    """CCNet-style hashed-bigram LM scoring: train on the %11 target
-    corpus, score the raw pool. Integer lp sums keep the score
-    shuffle-order-proof; avg_logprob is one IEEE division (higher = more
-    target-like; perplexity = exp(-avg) is monotone in it)."""
-    from geofeaturegeneration_spark.operators import lm_logprob
-
-    raw, target = _dsir_corpora(spark, sf_dir)
-    return lm_logprob(
-        raw, "doc_id", "text", target, "tid", "ttext",
-        buckets=DSIR_BUCKETS, scale=DSIR_SCALE,
-    )
 
 
 def q_temperature_mix(spark, sf_dir):
@@ -1627,16 +1536,12 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decimate": q_decimate,
         "minmax_norm": q_minmax,
         # round 4: folded out of the driver window (driver-green r01-r03)
-        # to give importance_resample and shuffle_shards contract rows —
+        # to give a since-retired query and shuffle_shards contract rows —
         # tokens_ordered is the literal input stage of the in-window
         # chunk_sequences (same _doc_tokens output, chunking added);
         # time_features is pure calendar expressions
         "tokens_ordered": q_tokens_ordered,
         "time_features": q_time_features,
-        # the weights stage of the in-window importance_resample (resample
-        # IS this table + TakeOrdered) — verified transitively, value-exact
-        # here
-        "importance_weights": q_importance_weights,
         # temperature-scaled mixing: a driver-side rate computation whose
         # corpus-side filter IS the in-window source_sample draw — verified
         # transitively through source_sample's contract row
@@ -1662,7 +1567,7 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SURVEY §2 operator — the §2.3 broadcast-enrich row is carried by
         # in-window stay_enrich
         "orders_enrich": q_orders_enrich,
-        # folded round 4 to free corpus_divergence's driver slot: green
+        # folded round 4 to free a since-retired query's driver slot: green
         # rows r01-r03, pure column exprs, canonical vectors pinned in
         # test_grid.py; grid_cantor keeps the geo-function family in-window
         "geohash": q_geohash,
@@ -1778,81 +1683,6 @@ cc AS (SELECT a AS id, min(b) AS component FROM reach GROUP BY a),
 asg AS (SELECT d.doc_id, coalesce(cc.component, d.doc_id) AS comp
         FROM documents d LEFT JOIN cc ON d.doc_id = cc.id),
 reps AS (SELECT comp, min(doc_id) AS cluster_id FROM asg GROUP BY 1)"""
-
-# DSIR shared CTEs (importance_weights / importance_resample): hashed
-# 1..2-gram bucket streams over the %11 target/raw split, bucket counts,
-# scaled-int log ratios (ln-term order fixed to match bucket_log_ratios),
-# per-doc int64 sums. generate_series(1,0) is EMPTY in DuckDB, so one-word
-# docs contribute their unigram only — same as Spark's guarded shingles.
-_DSIR_GRAM = """
-SELECT doc_id, g FROM (
-  SELECT doc_id, unnest(ws) AS g FROM {src}
-  UNION ALL
-  SELECT doc_id, unnest(list_transform(generate_series(1, len(ws)-1),
-                        i -> array_to_string(ws[i:i+1],' '))) AS g FROM {src})
-"""
-_DSIR_CTES = f"""
-WITH
-rawd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-         WHERE doc_id % 11 <> 0),
-tgtd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-         WHERE doc_id % 11 = 0),
-rg AS (SELECT doc_id, ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
-       FROM ({_DSIR_GRAM.format(src='rawd')})),
-tg AS (SELECT doc_id, ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
-       FROM ({_DSIR_GRAM.format(src='tgtd')})),
-rc AS (SELECT b, count(*) AS c FROM rg GROUP BY b),
-tc AS (SELECT b, count(*) AS c FROM tg GROUP BY b),
-tot AS (SELECT (SELECT sum(c) FROM tc) AS tt, (SELECT sum(c) FROM rc) AS tr),
-llr AS (SELECT b,
-               round(10000.0 * (ln(coalesce(tc.c, 0)::DOUBLE + 1.0)
-                     - ln(coalesce(rc.c, 0)::DOUBLE + 1.0)
-                     + ln(tr::DOUBLE + 1024.0)
-                     - ln(tt::DOUBLE + 1024.0)))::BIGINT AS llr
-        FROM tc FULL OUTER JOIN rc USING (b), tot),
-w AS (SELECT rg.doc_id, count(*)::INT AS n_grams,
-             sum(coalesce(llr.llr, 0))::BIGINT AS llr_sum
-      FROM rg LEFT JOIN llr USING (b) GROUP BY rg.doc_id)
-"""
-
-# Hashed-bigram LM CTEs (lm_logprob): (space, g) streams — space 0 =
-# contexts (all words but the doc's last; ws[1:0] is EMPTY for one-word
-# docs), space 1 = bigrams (generate_series(1,0) is EMPTY) — hashed per
-# space, model trained on the %11 target corpus. Smoothing floors are
-# PYTHON literals shared with the operator (alpha=1 -> bigram floor
-# round(scale*ln(1)) = 0; context floor round(scale*ln(alpha*buckets))).
-_LM_D_CTX = 69315  # round(10000 * ln(1.0 * 1024))
-_LM_STREAM = """
-SELECT doc_id, 0 AS space, unnest(ws[1:len(ws)-1]) AS g FROM {src}
-UNION ALL
-SELECT doc_id, 1 AS space, unnest(list_transform(generate_series(1, len(ws)-1),
-                      i -> array_to_string(ws[i:i+1],' '))) AS g FROM {src}
-"""
-_LM_CTES = f"""
-WITH
-rawd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-         WHERE doc_id % 11 <> 0),
-tgtd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-         WHERE doc_id % 11 = 0),
-tb AS (SELECT space, ({_MD5L.format(x="g || '#lm' || space::VARCHAR")}) % 1024 AS b
-       FROM ({_LM_STREAM.format(src='tgtd')})),
-rb AS (SELECT doc_id, space,
-              ({_MD5L.format(x="g || '#lm' || space::VARCHAR")}) % 1024 AS b
-       FROM ({_LM_STREAM.format(src='rawd')})),
-model AS (SELECT space, b,
-                 round(10000.0 * CASE WHEN space = 1
-                       THEN ln(count(*)::DOUBLE + 1.0)
-                       ELSE ln(count(*)::DOUBLE + 1024.0) END)::BIGINT AS llp
-          FROM tb GROUP BY space, b),
-sc AS (SELECT rb.doc_id,
-              sum(rb.space)::INT AS n_bigrams,
-              sum((CASE WHEN rb.space = 1 THEN 1 ELSE -1 END)
-                  * coalesce(model.llp,
-                             CASE WHEN rb.space = 1 THEN 0
-                                  ELSE {_LM_D_CTX} END))::BIGINT AS lp_sum
-       FROM rb LEFT JOIN model USING (space, b) GROUP BY rb.doc_id)
-"""
-
 
 # Hash-sampled negative-candidate CTEs (expects an ``inter`` CTE with
 # DISTINCT (user_id, grid) in scope). Mirrors the sampled path of
@@ -2217,7 +2047,6 @@ def rotation_hints() -> dict[str, dict]:
         "fingerprint": "dedup_exact",
         "minhash_sigs": "minhash_pairs",
         "simhash": "simhash_pairs",
-        "importance_weights": "importance_resample",
         "graph_nodes": "traj_graph",
         # physical twins — identical output, different plan
         "sessionize_gap": "sessionize_state",
@@ -3111,79 +2940,6 @@ WITH p AS (
   FROM documents)
 SELECT doc_id, source, pos, pos // 256 AS shard, pos % 256 AS shard_pos
 FROM p
-""",
-        # mirror operators/importance (n=2, buckets=1024, alpha=1.0,
-        # scale=10000; target = every 11th doc): hashed 1..2-gram buckets,
-        # per-bucket scaled-int log ratio with the SAME ln-term order as
-        # bucket_log_ratios, integer per-doc sums. sum(BIGINT) is HUGEINT
-        # in DuckDB -> cast back to BIGINT to match Spark's long.
-        "importance_weights": _DSIR_CTES + """
-SELECT doc_id, n_grams, llr_sum, llr_sum::DOUBLE / 10000.0 AS weight
-FROM w
-""",
-        "importance_resample": _DSIR_CTES + f"""
-SELECT doc_id, n_grams, llr_sum, llr_sum::DOUBLE / 10000.0 AS weight,
-       llr_sum AS score
-FROM (SELECT *, row_number() OVER (ORDER BY llr_sum DESC, doc_id ASC) AS rn
-      FROM w)
-WHERE rn <= {DSIR_K}
-""",
-        # mirrors operators/importance.lm_logprob (buckets=1024, alpha=1.0,
-        # scale=10000; target = every 11th doc): hashed-bigram LM trained
-        # on the target, scaled-int per-bucket log-probs, exact int64
-        # per-doc sums; avg_logprob is one IEEE division. Docs with < 2
-        # words keep a (0, 0, NULL) row.
-        "lm_logprob": _LM_CTES + """
-SELECT d.doc_id,
-       coalesce(sc.n_bigrams, 0) AS n_bigrams,
-       coalesce(sc.lp_sum, 0)::BIGINT AS lp_sum,
-       CASE WHEN sc.n_bigrams > 0
-            THEN sc.lp_sum::DOUBLE / (10000.0 * sc.n_bigrams)
-       END AS avg_logprob
-FROM (SELECT doc_id FROM documents WHERE doc_id % 11 <> 0) d
-LEFT JOIN sc USING (doc_id)
-""",
-        # corpus_divergence: same gram/bucket construction as the DSIR
-        # CTEs over the two corpus halves; per-bucket terms rounded to
-        # scaled int64 in the IDENTICAL expression order (p = (c+1)/d with
-        # d = total + alpha*buckets as a plain double; term =
-        # p*(ln p - ln q)); ghost row = the shared absent-bucket term
-        # times (buckets - observed), exact integer multiply.
-        "corpus_divergence": f"""
-WITH ad AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-            WHERE doc_id % 2 = 0),
-bd AS (SELECT doc_id, string_split(text,' ') ws FROM documents
-       WHERE doc_id % 2 = 1),
-ag AS (SELECT ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
-       FROM ({_DSIR_GRAM.format(src='ad')})),
-bg AS (SELECT ({_MD5L.format(x="g || '#dsir'")}) % 1024 AS b
-       FROM ({_DSIR_GRAM.format(src='bd')})),
-ac AS (SELECT b, count(*) AS c FROM ag GROUP BY b),
-bc AS (SELECT b, count(*) AS c FROM bg GROUP BY b),
-tot AS (SELECT (SELECT sum(c) FROM ac)::DOUBLE + 1024.0 AS da,
-               (SELECT sum(c) FROM bc)::DOUBLE + 1024.0 AS db),
-j AS (SELECT coalesce(ac.c,0)::DOUBLE + 1.0 AS na,
-             coalesce(bc.c,0)::DOUBLE + 1.0 AS nb
-      FROM ac FULL OUTER JOIN bc USING (b)),
-terms AS (SELECT
-    round(10000000.0 * ((na/da) * (ln(na/da) - ln(nb/db))))::BIGINT AS ab,
-    round(10000000.0 * ((nb/db) * (ln(nb/db) - ln(na/da))))::BIGINT AS ba,
-    (round(10000000.0 * ((na/da) * (ln(na/da) - ln((na/da + nb/db)/2.0))))::BIGINT
-     + round(10000000.0 * ((nb/db) * (ln(nb/db) - ln((na/da + nb/db)/2.0))))::BIGINT) AS js2
-  FROM j, tot),
-ghost AS (SELECT
-    round(10000000.0 * ((1.0/da) * (ln(1.0/da) - ln(1.0/db))))::BIGINT
-      * (1024 - (SELECT count(*) FROM j)) AS ab,
-    round(10000000.0 * ((1.0/db) * (ln(1.0/db) - ln(1.0/da))))::BIGINT
-      * (1024 - (SELECT count(*) FROM j)) AS ba,
-    (round(10000000.0 * ((1.0/da) * (ln(1.0/da) - ln((1.0/da + 1.0/db)/2.0))))::BIGINT
-     + round(10000000.0 * ((1.0/db) * (ln(1.0/db) - ln((1.0/da + 1.0/db)/2.0))))::BIGINT)
-      * (1024 - (SELECT count(*) FROM j)) AS js2
-  FROM tot)
-SELECT sum(ab)::DOUBLE / 10000000.0 AS kl_ab,
-       sum(ba)::DOUBLE / 10000000.0 AS kl_ba,
-       sum(js2)::DOUBLE / (2.0 * 10000000.0) AS js
-FROM (SELECT * FROM terms UNION ALL SELECT * FROM ghost)
 """,
         # mirrors operators/curation.rare_token_stats (rare_below=2);
         # rare_frac is one IEEE division of two exact bigints — identical

@@ -89,11 +89,8 @@ HEADLINE = [
     "traj_graph",
     "pagerank",
     "semantic_dedup",
-    "importance_resample",
     "temperature_mix",
     "shuffle_shards",
-    "lm_logprob",
-    "corpus_divergence",
     "ivf_lloyd",
     "epoch_upsample",
     # round 5: the remaining two queries promoted into the driver window

@@ -1347,7 +1347,9 @@ def lloyd_refine(
     ``avg()`` k-means is not): the spherical mean ``Σ x_i/|x_i|`` is a
     cross-row FLOAT sum, which Spark aggregates in shuffle order — so
     each unit coordinate is quantized to ``round(scale * x/|x|)`` and
-    summed as EXACT int64 (the importance.py scaled-int rule).
+    summed as EXACT int64 (the scaled-int rule, shared with a
+    since-retired query: quantize each float before any cross-row sum,
+    so the sum is exact and independent of shuffle order).
     The only floats are per-centroid finishers over the k×dim exact sums
     (left-associated sum of squares → sqrt → one division per
     coordinate), each a fixed-order expression both engines replay

@@ -9,14 +9,13 @@ The flagship 100 TB story — (optional) text canonicalization (the only
 text-REWRITING pre-filter: unicode/whitespace normalization, then C4
 per-line rules + page verdict, so every later
 stage hashes the CANONICAL bytes) -> (optional) quality filter ->
-(optional) perplexity filter (hashed-bigram LM trained once on a clean
-corpus) -> MinHash LSH pairs -> connected components -> (optional) test-set
+MinHash LSH pairs -> connected components -> (optional) test-set
 decontamination -> (optional) semantic embedding-space dedup -> keeper
 filter (+ optional mixing recipe + PII scrub riding the output pass) —
 (+ optional exact-substring span dedup over the surviving corpus) —
 composed as ONE resumable pipeline behind the checkpoint store (reference
 analog: the stage-separated pipeline of AttachFeature.py:1046-1112), not
-just unit operators. Three to thirteen stages, each recorded per partition in
+just unit operators. Three to eleven stages, each recorded per partition in
 the CheckpointStore so a crash resumes without recomputing finished work:
 
 -0.3. ``clean`` (optional, per doc-id hash bucket): text canonicalization
@@ -31,12 +30,6 @@ the CheckpointStore so a crash resumes without recomputing finished work:
    verdicts (curation.quality_filter) land as an ids-only table; every
    later stage semi-joins it, so rejected docs never reach the shingle
    pass — at 100 TB the filter pays for itself in stage-1 compute.
-0.4/0.5. ``lm_model`` / ``ppl`` (optional): train the hashed-bigram LM on
-   the clean target corpus ONCE (a <= 2*buckets-row table, one global
-   unit), then score each corpus bucket against the persisted model
-   (broadcast join, embarrassingly parallel) and keep docs at or above
-   ``ppl_min_avg_logprob`` — the CCNet perplexity filter as two resumable
-   stages. Later stages semi-join the keep table like quality's.
 1. ``signatures`` (per doc-id hash bucket, embarrassingly parallel): band
    signatures via ``minhash_band_signatures`` written partitioned by
    bucket. At 10^12 docs this is the stage that dominates compute (shingle
@@ -106,8 +99,6 @@ from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partition
 from geofeaturegeneration_spark.operators import (
     decontaminate,
     dedup_clusters,
-    lm_bucket_logprobs,
-    lm_score,
     lsh_pairs_from_band_sigs,
     minhash_band_signatures,
     semantic_dedup,
@@ -151,10 +142,6 @@ def run_dedup_pipeline(
     normalize: str | None = None,
     quality: bool = False,
     quality_kwargs: dict | None = None,
-    ppl_target=None,
-    ppl_fingerprint: str | None = None,
-    ppl_min_avg_logprob: float = -7.0,
-    ppl_buckets: int = 8192,
     mix_rates_ppm: dict[str, int] | None = None,
     mix_by: str = "source",
     mix_default_ppm: int = 0,
@@ -186,7 +173,7 @@ def run_dedup_pipeline(
     before anything hashes text): ``curation.clean_lines`` rewrites each
     doc's text with the rule-failing lines cut, DROPS page-verdict
     failures, and persists the cleaned table; every later stage —
-    quality, perplexity, shingling, and the output — reads the CLEANED
+    quality, shingling, and the output — reads the CLEANED
     bytes instead of the raw corpus. The only stage that
     rewrites text besides the output pass, which is why it must come
     first: a signature computed over raw bytes would not match the text
@@ -205,14 +192,6 @@ def run_dedup_pipeline(
     docs — rejected docs never reach the shingling pass, so at 100 TB the
     filter pays for itself in stage-1 compute. ``quality_kwargs`` override
     the filter's thresholds.
-
-    ``ppl_target`` (optional, (doc_id, text)) adds the PERPLEXITY filter:
-    a global stage persists ``lm_bucket_logprobs(ppl_target)`` (train the
-    LM once), a per-bucket stage scores the quality keepers against the
-    broadcast model and keeps docs with ``avg_logprob >=
-    ppl_min_avg_logprob`` (docs with < 2 words are unscoreable and KEPT —
-    the other filters judge them). Threshold, bucket count, and the
-    target corpus identity are all in the lineage key.
 
     ``mix_rates_ppm`` applies the ``curation.source_sample`` mixing recipe
     inside the output stage (docs must carry ``mix_by``): the draw is a
@@ -253,11 +232,11 @@ def run_dedup_pipeline(
     them exactly like contamination. Quality-rejected docs never enter the
     screen; knobs + the embedding table's identity are in the lineage key.
 
-    The full curation story — filter -> perplexity -> dedup ->
+    The full curation story — filter -> dedup ->
     decontaminate -> semantic -> mix -> scrub -> span-dedup — is
     therefore ONE resumable artifact; per-stage wall-clock is recorded in
     the CheckpointStore (``latest()``). Returns the per-stage
-    PartitionResult lists (3 to 13 of them, in pipeline order)."""
+    PartitionResult lists (3 to 11 of them, in pipeline order)."""
     if buckets < 1:
         # an empty key set would prune every existing per-bucket partition
         raise ValueError(f"buckets must be >= 1, got {buckets}")
@@ -308,13 +287,6 @@ def run_dedup_pipeline(
         lineage += f";norm={normalize}"
     if quality:
         lineage += f";quality={sorted((quality_kwargs or {}).items())}"
-    if ppl_target is not None:
-        # the LM model's bytes depend on the target corpus identity and the
-        # bucket count; the keep verdicts also on the threshold
-        lineage += (
-            f";ppl={ppl_min_avg_logprob}:{ppl_buckets}"
-            f":{ppl_fingerprint or 'anon'}"
-        )
     if mix_rates_ppm is not None:
         lineage += (
             f";mix={mix_by}:{sorted(mix_rates_ppm.items())}:{mix_default_ppm}"
@@ -344,7 +316,7 @@ def run_dedup_pipeline(
     # stage -0.3 (optional): text canonicalization — unicode/whitespace
     # normalization (--normalize) and/or C4 intra-document line cleaning
     # (--clean), ONE stage because both REWRITE text and must run FIRST:
-    # every later stage (quality, perplexity, shingles, output) must
+    # every later stage (quality, shingles, output) must
     # hash/ship the canonical bytes, so `docs` is rebound to the persisted
     # rewritten table once the stage lands. Normalization
     # runs before the line rules (CCNet/C4 order: fix the byte form, then
@@ -454,7 +426,7 @@ def run_dedup_pipeline(
         ]
     )
 
-    def _qua_only(part, key: str):
+    def kept_only(part, key: str):
         """Restrict a bucket's docs to the quality keepers (a no-op when
         the quality stage is off)."""
         if not quality:
@@ -466,85 +438,18 @@ def run_dedup_pipeline(
         )
         return part.join(kept, "doc_id", "left_semi")
 
-    # stage 0.4/0.5 (optional): perplexity filter — train the hashed-bigram
-    # LM on the clean target corpus ONCE (a <= 2*ppl_buckets-row table, one
-    # global checkpoint unit), then score each corpus bucket against the
-    # persisted model (embarrassingly parallel, broadcast model join) and
-    # land keep verdicts as an ids-only table. Docs the model cannot score
-    # (< 2 words) are KEPT — they are judged by the other filters. Scoring
-    # runs on the quality keepers only, so rejected docs are never scored.
-    lmm_path = os.path.join(out_root, "lm_model")
-    ppl_path = os.path.join(out_root, "ppl")
-    lmm_schema = T.StructType(
-        [
-            T.StructField("space", T.IntegerType()),
-            T.StructField("b", T.LongType()),
-            T.StructField("llp", T.LongType()),
-            T.StructField("part_key", T.StringType()),
-        ]
-    )
-    r_lmm = r_ppl = None
-    if ppl_target is not None:
-        def lmm_one(_key: str):
-            return lm_bucket_logprobs(
-                ppl_target, "doc_id", "text", buckets=ppl_buckets
-            )
-
-        r_lmm = run_partitioned(
-            spark, store, f"{job_id}/lm_model", ["all"], lmm_one,
-            lmm_path, "part_key", lineage, force=force,
-        )
-
-        def ppl_one(key: str):
-            part = _qua_only(docs_bucket(key), key)
-            model = spark.read.schema(lmm_schema).parquet(lmm_path).drop(
-                "part_key"
-            )
-            scored = lm_score(
-                part, "doc_id", "text", model, buckets=ppl_buckets
-            )
-            return scored.filter(
-                (F.col("n_bigrams") == 0)
-                | (F.col("avg_logprob") >= F.lit(float(ppl_min_avg_logprob)))
-            ).select("doc_id")
-
-        r_ppl = run_partitioned(
-            spark, store, f"{job_id}/ppl", bucket_keys, ppl_one,
-            ppl_path, "part_key", lineage, force=force,
-        )
-
-    def kept_only(part, key: str):
-        """Quality + perplexity keepers of one bucket (each a no-op when
-        its stage is off)."""
-        part = _qua_only(part, key)
-        if ppl_target is not None:
-            kept = (
-                spark.read.schema(qua_schema).parquet(ppl_path)
-                .filter(F.col("part_key").cast("string") == key)
-                .select("doc_id")
-            )
-            part = part.join(kept, "doc_id", "left_semi")
-        return part
-
     def restrict_global(df):
-        """Semi-join a global id-carrying table down to the quality + ppl
-        keepers across all of this run's buckets (each a no-op when its
+        """Semi-join a global id-carrying table down to the quality
+        keepers across all of this run's buckets (a no-op when the quality
         stage is off)."""
-        if quality:
-            kept = (
-                spark.read.schema(qua_schema).parquet(qua_path)
-                .filter(F.col("part_key").cast("string").isin(bucket_keys))
-                .select("doc_id")
-            )
-            df = df.join(kept, "doc_id", "left_semi")
-        if ppl_target is not None:
-            kept = (
-                spark.read.schema(qua_schema).parquet(ppl_path)
-                .filter(F.col("part_key").cast("string").isin(bucket_keys))
-                .select("doc_id")
-            )
-            df = df.join(kept, "doc_id", "left_semi")
-        return df
+        if not quality:
+            return df
+        kept = (
+            spark.read.schema(qua_schema).parquet(qua_path)
+            .filter(F.col("part_key").cast("string").isin(bucket_keys))
+            .select("doc_id")
+        )
+        return df.join(kept, "doc_id", "left_semi")
 
     # explicit read schemas for the signature/cluster tables too: a corpus
     # fully rejected by the pre-filters (legitimate under strict rules)
@@ -636,7 +541,7 @@ def run_dedup_pipeline(
             # the page verdict already removed could elect themselves
             # min-id exemplars and drop SURVIVING near-dups of content
             # that no longer exists in the output), then through the
-            # quality/ppl keeper joins like every global stage
+            # quality keeper join like every global stage
             emb = restrict_global(
                 embeddings.join(docs.select("doc_id"), "doc_id", "left_semi")
             )
@@ -900,8 +805,6 @@ def run_dedup_pipeline(
         stages.append(r_cln)
     if r_qua is not None:
         stages.append(r_qua)
-    if r_lmm is not None:
-        stages.extend([r_lmm, r_ppl])
     stages.extend([r_sig, r_clu])
     if r_con is not None:
         stages.append(r_con)
@@ -962,16 +865,6 @@ def main(argv=None) -> int:
                         "'{\"max_dup_word_fraction\": 0.9}' — thresholds "
                         "are corpus-dependent (part of the stage lineage, "
                         "so changing them re-runs the affected stages)")
-    p.add_argument("--ppl-target", default=None,
-                   help="optional clean-corpus parquet (doc_id, text): "
-                        "trains the hashed-bigram LM once (global stage) "
-                        "and drops docs below --ppl-min-avg-logprob "
-                        "(CCNet-style perplexity filter) before shingling")
-    p.add_argument("--ppl-min-avg-logprob", type=float, default=-7.0,
-                   help="keep docs with avg_logprob >= this (perplexity "
-                        "<= exp(7) ~ 1100 by default); unscoreable "
-                        "(<2-word) docs are kept")
-    p.add_argument("--ppl-buckets", type=int, default=8192)
     p.add_argument("--span-dedup", type=int, default=None, metavar="K",
                    help="append exact-substring dedup at K-token window "
                         "granularity over the surviving corpus (global "
@@ -1021,9 +914,6 @@ def main(argv=None) -> int:
     spark = get_spark("run_dedup")
     docs = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.bench) if args.bench else None
-    ppl_target = (
-        spark.read.parquet(args.ppl_target) if args.ppl_target else None
-    )
     embeddings = (
         spark.read.parquet(args.embeddings) if args.embeddings else None
     )
@@ -1044,9 +934,6 @@ def main(argv=None) -> int:
         quality_kwargs=(
             json.loads(args.quality_args) if args.quality_args else None
         ),
-        ppl_target=ppl_target, ppl_fingerprint=args.ppl_target,
-        ppl_min_avg_logprob=args.ppl_min_avg_logprob,
-        ppl_buckets=args.ppl_buckets,
         mix_rates_ppm=json.loads(args.mix) if args.mix else None,
         mix_alpha=args.mix_alpha, mix_target_frac=args.mix_target,
         mix_by_tokens=args.mix_tokens,
@@ -1064,8 +951,6 @@ def main(argv=None) -> int:
         names.append("clean")
     if args.quality:
         names.append("quality")
-    if args.ppl_target:
-        names.extend(["lm_model", "ppl"])
     names.extend(["signatures", "clusters"])
     if bench is not None:
         names.append("contamination")

@@ -112,20 +112,35 @@ def build_features(seq_df, min_duration_s: float = 60.0):
     )
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file index drops a file or directory of this name
+    (``HadoopFSUtils.shouldFilterOutPathName``): markers, checksums,
+    ``_temporary/`` and ``.staging/`` trees, half-copied files. A ``_``
+    name holding ``=`` is a partition directory and is read."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
 def input_fingerprint(spark, path: str) -> str:
     """Digest of the sorted (path, length, modification time) of the data
     files under ``path``, listed by the driver through the Hadoop
-    FileSystem (no Spark job). Names starting with ``_`` or ``.`` (markers,
-    checksums) are not data, as for Spark's own reader. Rewriting the input
-    in place changes the digest even when the path stays the same."""
+    FileSystem (no Spark job). A file counts only when no name on its path
+    below ``path`` is one Spark's reader skips (``_hidden``), so a crashed
+    writer's leftovers, or their cleanup, leave the digest as it was.
+    Rewriting the input in place changes the digest even when the path
+    stays the same."""
     fs, root = _fs_path(spark, path)
+    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
     files = []
     it = fs.listFiles(root, True)
     while it.hasNext():
         st = it.next()
-        p = st.getPath()
-        if not p.getName().startswith(("_", ".")):
-            files.append(f"{p.toString()}\t{st.getLen()}\t{st.getModificationTime()}")
+        p = st.getPath().toString()
+        if not any(map(_hidden, p.removeprefix(prefix).split("/"))):
+            files.append(f"{p}\t{st.getLen()}\t{st.getModificationTime()}")
     digest = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
     return f"{len(files)}:{digest[:16]}"
 
@@ -146,6 +161,10 @@ def main(argv=None) -> int:
     spark = get_spark("run_pipeline")
     seq = read_sequences(spark, args.input)
     sources = [r["source"] for r in seq.select("source").distinct().collect()]
+    if None in sources:
+        # the schema declares source non-null, but a Parquet read does not
+        # check it; a null source matches no unit's filter
+        raise ValueError(f"{args.input}: column 'source' holds nulls")
     keys = [f"{s}-{b}" for s in sorted(sources) for b in range(args.buckets)]
 
     # lineage = input identity (its path and its files' content stamps) +

@@ -318,6 +318,65 @@ def test_pipeline_rejects_nonpositive_buckets_keeping_output(
     assert after == before
 
 
+def test_pipeline_rejects_null_source(spark, tmp_path, monkeypatch):
+    """A null ``source`` matches no unit's filter, and sorting it with a
+    string fails after Spark starts. ``main`` names the column in a
+    ``ValueError`` before any mark or output is written, whether every
+    source is null or only some."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setattr(RP, "get_spark", lambda *a, **k: spark)
+    for name, sources in (("all_null", [None, None]), ("mixed", [None, "web"])):
+        inp = tmp_path / name / "seq"
+        inp.mkdir(parents=True)
+        table = pa.table(
+            {
+                "doc_id": pa.array(["d0", "d1"], pa.string()),
+                "tokens": pa.array([[1, 1, 2, 2], [3, 3, 4]], pa.list_(pa.int32())),
+                "n_tok": pa.array([4, 3], pa.int32()),
+                # typed: an all-null column would otherwise land as INT32
+                "source": pa.array(sources, pa.string()),
+            }
+        )
+        pq.write_table(table, str(inp / "part-0.parquet"))
+        out, ck = tmp_path / name / "out", tmp_path / name / "ck"
+        with pytest.raises(ValueError, match="source"):
+            RP.main(["--input", str(inp), "--output", str(out),
+                     "--checkpoint", str(ck), "--buckets", "1"])
+        for d in (out, ck):
+            assert not [f for _, _, fs in os.walk(d) for f in fs]
+
+
+def test_pipeline_hidden_input_files_keep_lineage(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """Files under names Spark's reader skips (``_temporary/``,
+    ``.staging/``) are not in the input's digest: adding them leaves every
+    unit skipped. The same file copied into its ``source=<s>/`` directory
+    is read, and every unit re-runs."""
+    import shutil
+
+    inp = tmp_path / "seq"
+    args = ["--input", str(inp), "--buckets", "2", "--output",
+            str(tmp_path / "out"), "--checkpoint", str(tmp_path / "ck")]
+    write_sequences(generate_sequences(spark, n_docs=20, seed=3), str(inp))
+    first = _main(spark, monkeypatch, capsys, *args)
+    assert first["skipped"] == 0 and first["rows"] > 0
+
+    data = sorted(inp.glob("source=*/part-*.parquet"))[0]
+    for sub in ("_temporary/0", ".staging"):
+        (inp / sub).mkdir(parents=True)
+        shutil.copy(data, inp / sub / "part-99999.parquet")
+    hidden = _main(spark, monkeypatch, capsys, *args)
+    assert hidden["skipped"] == hidden["partitions"] == first["partitions"]
+
+    shutil.copy(data, data.parent / "part-99999.parquet")
+    read = _main(spark, monkeypatch, capsys, *args)
+    assert read["partitions"] == first["partitions"]
+    assert read["skipped"] == 0
+
+
 def test_crash_between_pruned_mark_and_delete_keeps_data(spark, seq, tmp_path):
     """A stale key's directory is deleted only after its ``pruned`` mark is
     written. A crash at that mark leaves the directory and its ``done`` mark
@@ -971,98 +1030,6 @@ def test_dedup_pipeline_shrinking_buckets_prunes_stale_partitions(
             RD.main(["--input", out, "--output", out, "--checkpoint", ck,
                      "--buckets", bad])
     assert _read_sorted_rows(spark, f"{out}/deduped") == clean
-
-
-def test_dedup_pipeline_ppl_stage(spark, tmp_path):
-    """--ppl-target adds the two perplexity stages (train LM once, score
-    per bucket): junk docs score below the threshold and never reach the
-    output; the result equals the hand-composed lm_logprob + minhash
-    keepers; a re-run skips every stage; loosening the threshold
-    invalidates (knob in the lineage key) and the junk docs come back."""
-    import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.operators import (
-        dedup_clusters,
-        lm_logprob,
-        minhash_lsh_pairs,
-    )
-
-    base = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text", "source")
-    # every 5th doc becomes out-of-vocabulary junk (distinct per doc so the
-    # junk docs are NOT minhash duplicates of each other — the ppl stage,
-    # not dedup, must be what removes them)
-    junk = F.concat_ws(
-        " ",
-        F.transform(
-            F.sequence(F.lit(1), F.lit(15)),
-            lambda i: F.concat(
-                F.lit("zq"),
-                ((F.col("doc_id") * 31 + i) % 9973).cast("string"),
-            ),
-        ),
-    )
-    docs = base.withColumn(
-        "text", F.when(F.col("doc_id") % 5 == 0, junk).otherwise(F.col("text"))
-    )
-    target = base.filter(
-        (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 5 != 0)
-    ).select("doc_id", "text")
-
-    scored = {
-        r["doc_id"]: r["avg_logprob"]
-        for r in lm_logprob(
-            docs, "doc_id", "text", target, "doc_id", "text"
-        ).collect()
-    }
-    junk_ids = {i for i in scored if i % 5 == 0}
-    hi_junk = max(scored[i] for i in junk_ids)
-    lo_clean = min(scored[i] for i in scored if i not in junk_ids)
-    assert hi_junk < lo_clean, "junk must be separable by avg_logprob"
-    thr = (hi_junk + lo_clean) / 2
-
-    out, ck = str(tmp_path / "out_ppl"), str(tmp_path / "ck_ppl")
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              ppl_target=target, ppl_fingerprint="t1",
-              ppl_min_avg_logprob=thr)
-    stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert len(stages) == 5  # lm_model, ppl, signatures, clusters, output
-    assert all(not r.skipped for st in stages for r in st)
-
-    got = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    )
-    assert junk_ids and not (set(got) & junk_ids)
-
-    # hand-composed: ppl keepers -> minhash keepers
-    kept = docs.filter(
-        ~F.col("doc_id").isin([int(i) for i in junk_ids])
-    )
-    pairs = minhash_lsh_pairs(
-        kept, "doc_id", "text", k=3, n_hashes=16, bands=4,
-        max_bucket_size=100,
-    )
-    want = sorted(
-        r["doc_id"]
-        for r in dedup_clusters(kept.select("doc_id"), "doc_id", pairs)
-        .filter("is_keeper")
-        .collect()
-    )
-    assert got == want
-
-    # immediate re-run: everything skipped
-    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert all(r.skipped for st in st2 for r in st)
-
-    # loosening the threshold re-runs (lineage) and the junk docs return
-    st3 = RD.run_dedup_pipeline(
-        spark, docs, out, ck, **dict(kw, ppl_min_avg_logprob=-1e9)
-    )
-    assert all(not r.skipped for st in st3 for r in st)
-    got3 = set(
-        r["doc_id"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    )
-    assert junk_ids <= got3
 
 
 def test_dedup_pipeline_semantic_stage(spark, tmp_path):

@@ -1,10 +1,9 @@
-"""Unit tests for DSIR importance resampling (operators/importance.py) and
-the deterministic global shuffle->shard exporter (split.shuffle_shards).
-Hand-built corpora replayed by exact Python oracles (same md5 primitive);
-the DuckDB value-exact check runs separately via tools/compare_oracle.py."""
+"""Unit tests for the deterministic global shuffle->shard exporter
+(split.shuffle_shards), replayed by an exact Python oracle over the same
+md5 primitive; the DuckDB value-exact check runs separately via
+tools/compare_oracle.py."""
 
 import hashlib
-import math
 import os
 import sys
 
@@ -13,312 +12,11 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from geofeaturegeneration_spark.operators import (
-    hashed_ngram_counts,
-    importance_resample,
-    importance_weights,
-    shuffle_shards,
-)
-
-BUCKETS = 64
-SCALE = 10_000
+from geofeaturegeneration_spark.operators import shuffle_shards
 
 
 def _md5_long(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _grams(text: str, n: int = 2) -> list[str]:
-    ws = text.split(" ")
-    out = list(ws)
-    for k in range(2, n + 1):
-        out += [" ".join(ws[i : i + k]) for i in range(len(ws) - k + 1)]
-    return out
-
-
-def _bucket(gram: str, salt: str = "dsir") -> int:
-    return _md5_long(gram + f"#{salt}") % BUCKETS
-
-
-def _py_weights(raw_rows, target_rows, alpha=1.0):
-    """Exact replay of importance_weights: int64 llr table + per-doc sums."""
-    tc: dict[int, int] = {}
-    for _i, text in target_rows:
-        for g in _grams(text):
-            b = _bucket(g)
-            tc[b] = tc.get(b, 0) + 1
-    rc: dict[int, int] = {}
-    for _i, text in raw_rows:
-        for g in _grams(text):
-            b = _bucket(g)
-            rc[b] = rc.get(b, 0) + 1
-    tt, tr = sum(tc.values()), sum(rc.values())
-    llr = {}
-    for b in set(tc) | set(rc):
-        v = (
-            math.log(tc.get(b, 0) + alpha)
-            - math.log(rc.get(b, 0) + alpha)
-            + math.log(float(tr) + alpha * BUCKETS)
-            - math.log(float(tt) + alpha * BUCKETS)
-        )
-        llr[b] = int(round(SCALE * v))
-    out = {}
-    for i, text in raw_rows:
-        gs = _grams(text)
-        out[i] = (len(gs), sum(llr.get(_bucket(g), 0) for g in gs))
-    return out
-
-
-@pytest.fixture(scope="module")
-def corpora(spark):
-    # target: clean prose-ish docs; raw pool: 3 lookalikes + 3 junk docs
-    target_rows = [
-        (100, "the cat sat on the mat"),
-        (101, "the dog sat on the rug"),
-        (102, "a cat and a dog sat down"),
-    ]
-    raw_rows = [
-        (1, "the cat sat on the rug"),       # looks like target
-        (2, "a dog sat on the mat"),         # looks like target
-        (3, "the cat and the dog sat"),      # looks like target
-        (4, "zzz qqq xxx vvv kkk jjj"),      # junk
-        (5, "buy now click here free win"),  # junk
-        (6, "lorem ipsum dolor sit amet"),   # junk
-    ]
-    raw = spark.createDataFrame(raw_rows, "doc_id INT, text STRING")
-    target = spark.createDataFrame(target_rows, "tid INT, ttext STRING")
-    return raw, target, raw_rows, target_rows
-
-
-def test_hashed_ngram_counts_match_python(spark, corpora):
-    raw, _t, raw_rows, _tr = corpora
-    got = {
-        r["b"]: r["cnt"]
-        for r in hashed_ngram_counts(
-            raw, "doc_id", "text", n=2, buckets=BUCKETS
-        ).collect()
-    }
-    exp: dict[int, int] = {}
-    for _i, text in raw_rows:
-        for g in _grams(text):
-            b = _bucket(g)
-            exp[b] = exp.get(b, 0) + 1
-    assert got == exp
-
-
-def test_importance_weights_exact_vs_python(spark, corpora):
-    raw, target, raw_rows, target_rows = corpora
-    got = {
-        r["doc_id"]: (r["n_grams"], r["llr_sum"], r["weight"])
-        for r in importance_weights(
-            raw, "doc_id", "text", target, "tid", "ttext",
-            buckets=BUCKETS, scale=SCALE,
-        ).collect()
-    }
-    exp = _py_weights(raw_rows, target_rows)
-    assert set(got) == set(exp)
-    for i, (ng, llr) in exp.items():
-        assert got[i][0] == ng
-        assert got[i][1] == llr
-        assert got[i][2] == llr / SCALE
-
-
-def test_importance_weights_rank_target_lookalikes_first(spark, corpora):
-    raw, target, _r, _t = corpora
-    w = {
-        r["doc_id"]: r["llr_sum"]
-        for r in importance_weights(
-            raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-        ).collect()
-    }
-    # every lookalike outscores every junk doc
-    assert min(w[1], w[2], w[3]) > max(w[4], w[5], w[6])
-
-
-def test_importance_resample_greedy_topk(spark, corpora):
-    raw, target, _r, _t = corpora
-    got = importance_resample(
-        raw, "doc_id", "text", target, "tid", "ttext", k=3, buckets=BUCKETS
-    ).collect()
-    assert sorted(r["doc_id"] for r in got) == [1, 2, 3]
-    # ordered by score desc
-    scores = [r["score"] for r in got]
-    assert scores == sorted(scores, reverse=True)
-
-
-def test_importance_weights_partition_invariant(spark, corpora):
-    raw, target, _r, _t = corpora
-    base = importance_weights(
-        raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-    )
-    rep = importance_weights(
-        raw.repartition(7, "text"), "doc_id", "text", target, "tid", "ttext",
-        buckets=BUCKETS,
-    )
-    a = sorted((r["doc_id"], r["llr_sum"]) for r in base.collect())
-    b = sorted((r["doc_id"], r["llr_sum"]) for r in rep.collect())
-    assert a == b
-
-
-def test_importance_resample_gumbel_deterministic(spark, corpora):
-    raw, target, _r, _t = corpora
-    kw = dict(k=4, buckets=BUCKETS, gumbel_beta=2.0)
-    a = importance_resample(
-        raw, "doc_id", "text", target, "tid", "ttext", **kw
-    ).collect()
-    b = importance_resample(
-        raw, "doc_id", "text", target, "tid", "ttext", **kw
-    ).collect()
-    assert [(r["doc_id"], r["score"]) for r in a] == [
-        (r["doc_id"], r["score"]) for r in b
-    ]
-    assert len(a) == 4
-    # the noise really moved scores off the greedy llr_sum values
-    assert any(r["score"] != r["llr_sum"] for r in a)
-    # and replays the Python formula exactly
-    for r in a:
-        h = _md5_long(f"{r['doc_id']}#gumbel")
-        u = (float(h) + 0.5) / float(1 << 60)
-        g = -math.log(-math.log(u))
-        assert r["score"] == r["llr_sum"] + int(round(SCALE * 2.0 * g))
-
-
-def test_empty_text_docs_still_weighted(spark):
-    raw = spark.createDataFrame(
-        [(1, ""), (2, "the cat")], "doc_id INT, text STRING"
-    )
-    target = spark.createDataFrame([(9, "the cat")], "tid INT, ttext STRING")
-    got = {
-        r["doc_id"]: r["n_grams"]
-        for r in importance_weights(
-            raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-        ).collect()
-    }
-    # '' splits to [''] -> one unigram; no doc is dropped
-    assert got == {1: 1, 2: 3}
-
-
-# ------------------------------------------------------------ bigram LM
-
-
-def _lm_bucket(gram: str, space: int, salt: str = "lm") -> int:
-    return _md5_long(f"{gram}#{salt}{space}") % BUCKETS
-
-
-def _py_lm(raw_rows, target_rows, alpha=1.0):
-    """Exact replay of lm_logprob: train the (space, b) -> llp table on
-    target_rows, score raw_rows as int64 sums."""
-    cnt: dict[tuple[int, int], int] = {}
-
-    def stream(text):
-        ws = text.split(" ")
-        for w in ws[:-1]:
-            yield 0, _lm_bucket(w, 0)
-        for i in range(len(ws) - 1):
-            yield 1, _lm_bucket(" ".join(ws[i : i + 2]), 1)
-
-    for _i, text in target_rows:
-        for sp, b in stream(text):
-            cnt[(sp, b)] = cnt.get((sp, b), 0) + 1
-    llp = {
-        (sp, b): int(round(SCALE * math.log(c + (alpha if sp else alpha * BUCKETS))))
-        for (sp, b), c in cnt.items()
-    }
-    d = {1: int(round(SCALE * math.log(alpha))),
-         0: int(round(SCALE * math.log(alpha * BUCKETS)))}
-    out = {}
-    for i, text in raw_rows:
-        s, n = 0, 0
-        for sp, b in stream(text):
-            v = llp.get((sp, b), d[sp])
-            s += v if sp == 1 else -v
-            n += sp
-        out[i] = (n, s, s / (SCALE * n) if n else None)
-    return out
-
-
-def test_lm_logprob_exact_vs_python(spark, corpora):
-    from geofeaturegeneration_spark.operators import lm_logprob
-
-    raw, target, raw_rows, target_rows = corpora
-    got = {
-        r["doc_id"]: (r["n_bigrams"], r["lp_sum"], r["avg_logprob"])
-        for r in lm_logprob(
-            raw, "doc_id", "text", target, "tid", "ttext",
-            buckets=BUCKETS, scale=SCALE,
-        ).collect()
-    }
-    exp = _py_lm(raw_rows, target_rows)
-    assert got == exp
-
-
-def test_lm_score_ranks_target_lookalikes_first(spark, corpora):
-    from geofeaturegeneration_spark.operators import lm_logprob
-
-    raw, target, _r, _t = corpora
-    a = {
-        r["doc_id"]: r["avg_logprob"]
-        for r in lm_logprob(
-            raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-        ).collect()
-    }
-    # every target-lookalike is more probable than every junk doc
-    assert min(a[1], a[2], a[3]) > max(a[4], a[5], a[6])
-
-
-def test_lm_score_short_docs_kept_with_null_avg(spark, corpora):
-    from geofeaturegeneration_spark.operators import lm_logprob
-
-    _raw, target, _r, _t = corpora
-    raw = spark.createDataFrame(
-        [(1, "oneword"), (2, ""), (3, "the cat")], "doc_id INT, text STRING"
-    )
-    rows = {
-        r["doc_id"]: (r["n_bigrams"], r["lp_sum"], r["avg_logprob"])
-        for r in lm_logprob(
-            raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-        ).collect()
-    }
-    assert rows[1] == (0, 0, None)
-    assert rows[2] == (0, 0, None)  # '' splits to [''] -> one word
-    assert rows[3][0] == 1 and rows[3][2] is not None
-
-
-def test_lm_model_reuse_equals_one_call(spark, corpora):
-    from geofeaturegeneration_spark.operators import (
-        lm_bucket_logprobs,
-        lm_logprob,
-        lm_score,
-    )
-
-    raw, target, _r, _t = corpora
-    model = lm_bucket_logprobs(target, "tid", "ttext", buckets=BUCKETS)
-    via_model = lm_score(raw, "doc_id", "text", model, buckets=BUCKETS)
-    one_call = lm_logprob(
-        raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-    )
-    assert sorted(via_model.collect()) == sorted(one_call.collect())
-
-
-def test_lm_score_partition_invariant(spark, corpora):
-    from geofeaturegeneration_spark.operators import lm_logprob
-
-    raw, target, _r, _t = corpora
-    base = sorted(
-        lm_logprob(
-            raw, "doc_id", "text", target, "tid", "ttext", buckets=BUCKETS
-        ).collect()
-    )
-    re = sorted(
-        lm_logprob(
-            raw.repartition(7), "doc_id", "text",
-            target.repartition(5), "tid", "ttext", buckets=BUCKETS,
-        ).collect()
-    )
-    assert base == re
-
-
-# ---------------------------------------------------------------- shuffle
 
 
 @pytest.fixture(scope="module")
@@ -374,62 +72,3 @@ def test_shuffle_shards_guards(spark, shuffle_docs):
         shuffle_shards(
             shuffle_docs.withColumn("pos", F.lit(1)), "doc_id", 10
         )
-
-
-# ---------------------------------------------------------------------------
-# corpus_divergence (KL/JS drift monitor over the shared hashed-gram space)
-# ---------------------------------------------------------------------------
-
-
-def _div(spark, a_rows, b_rows, **kw):
-    from geofeaturegeneration_spark.operators import corpus_divergence
-
-    a = spark.createDataFrame(a_rows, "doc_id INT, text STRING")
-    b = spark.createDataFrame(b_rows, "doc_id INT, text STRING")
-    [row] = corpus_divergence(
-        a, "doc_id", "text", b, "doc_id", "text",
-        buckets=BUCKETS, **kw,
-    ).collect()
-    return row
-
-
-CLEAN = [(i, "the quick brown fox jumps over the lazy dog") for i in range(8)]
-JUNK = [(i, "zzz qqq xxx kkk vvv www yyy jjj ppp") for i in range(8)]
-
-
-def test_divergence_identical_corpora_is_exactly_zero(spark):
-    row = _div(spark, CLEAN, [(i + 100, t) for i, t in CLEAN])
-    # same counts and totals -> pa == pb per bucket -> every scaled-int
-    # term is round(x*0) == 0 exactly, ghost included
-    assert (row["kl_ab"], row["kl_ba"], row["js"]) == (0.0, 0.0, 0.0)
-
-
-def test_divergence_symmetry_and_bounds(spark):
-    r_ab = _div(spark, CLEAN, JUNK)
-    r_ba = _div(spark, JUNK, CLEAN)
-    assert r_ab["kl_ab"] == r_ba["kl_ba"]
-    assert r_ab["kl_ba"] == r_ba["kl_ab"]
-    assert r_ab["js"] == r_ba["js"]
-    assert 0.0 < r_ab["js"] <= math.log(2.0) + 1e-9
-    assert r_ab["kl_ab"] > 0.0 and r_ab["kl_ba"] > 0.0
-
-
-def test_divergence_orders_drift(spark):
-    near = _div(spark, CLEAN, CLEAN[:4] + [(9, "the quick brown fox naps")])
-    far = _div(spark, CLEAN, JUNK)
-    assert far["js"] > near["js"] > 0.0
-
-
-def test_divergence_partitioning_invariant(spark):
-    from geofeaturegeneration_spark.operators import corpus_divergence
-
-    a = spark.createDataFrame(CLEAN, "doc_id INT, text STRING")
-    b = spark.createDataFrame(JUNK, "doc_id INT, text STRING")
-    r1 = corpus_divergence(
-        a, "doc_id", "text", b, "doc_id", "text", buckets=BUCKETS
-    ).collect()
-    r2 = corpus_divergence(
-        a.repartition(7), "doc_id", "text",
-        b.repartition(3), "doc_id", "text", buckets=BUCKETS,
-    ).collect()
-    assert list(map(tuple, r1)) == list(map(tuple, r2))

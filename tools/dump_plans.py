@@ -35,11 +35,9 @@ SHOW = [
     ("traj_graph", "trajectory transition graph: ONE lag window on the entity-key exchange the stay table already has + ONE (src,dst) hash aggregate with map-side combine — no join, no explode"),
     ("chunk_sequences", "padded chunk export: the pad is staged as one column, the chunks leave through posexplode_outer and an index null filter — no filter holds the chunk lambda, so each doc is chunked once"),
     ("semantic_dedup", "SemDeDup: GEMM quantizer assignment in mapInPandas (no shuffle/window), within-cluster screen as cogrouped GEMM tiles emitting flagged ids only (never pairs), one distinct + one left join for verdicts"),
-    ("importance_resample", "DSIR: buckets-sized ratio table BROADCAST onto the raw gram stream (corpus never shuffles on the bucket key), int64 partial-agg weight sums, TakeOrderedAndProject top-k — no global sort"),
     ("shuffle_shards", "global shuffle->shards: ONE range exchange + per-partition offset mapInPandas (distributed zipWithIndex) — no single-partition global window. The plan shows only the assignment pass because the pinned range partitioning is a lazy localCheckpoint (the lineage-cut guard); the upstream is exactly one repartitionByRange + sortWithinPartitions"),
     ("pagerank", "integer-exact PageRank: per round ONE left equi-join (sparse rank state) + ONE partial-agg sum; lazy localCheckpoint cuts round lineage; constants re-enter once via anti-join"),
     ("edit_join", "edit-distance join: symmetric-delete neighborhoods staged once per join side (the minhash-pairs trade: regenerating the narrow variant stream is cheaper than materializing it), variant-hash equi-join (broadcast at test scale, shuffle+AQE at corpus scale), distinct candidates, JVM levenshtein verify — no cartesian product"),
-    ("lm_logprob", "CCNet perplexity: the <=2*buckets-row bigram LM is BROADCAST onto the corpus bigram stream (the corpus never shuffles on the bucket key), per-doc scores are exact int64 partial-agg sums, one left join keeps <2-word docs"),
     ("normalize_text", "unicode/whitespace canonicalization: two narrow JVM regex projections around ONE zero-shuffle mapInArrow stage (ASCII short-circuit + UAX #15 for the minority) — fixes byte forms at scan speed before anything hashes"),
 ]
 

@@ -5,12 +5,9 @@ at a fixed local[] parallelism and print one JSON line.
 
 job = "pipeline" (default: the token feature pipeline), "semdedup"
 (semantic_dedup over a synthetic embedding
-corpus; quantizer trained once outside the timed region), or "dsir"
-(importance_weights over the dedup-scaling text corpus: hashed 1..2-gram
-counting + broadcast ratio join — the gram-counting stage is the
-embarrassingly-parallel CPU bulk, the same shape that dominates at
-corpus scale), or "normalize" (normalize_text over the same corpus with
-10% of docs spiked non-ASCII — the realistic mixed-byte-form shape), or
+corpus; quantizer trained once outside the timed region), or "normalize"
+(normalize_text over the dedup-scaling text corpus with 10% of docs
+spiked non-ASCII — the realistic mixed-byte-form shape), or
 "span" (span_dedup over the same corpus — window hashes, map-side
 min-struct winner, loser join, gaps-and-islands merge, reassembly: the
 only shuffle-bearing text job in the set).
@@ -95,33 +92,6 @@ def main() -> None:
             out.write.format("noop").mode("overwrite").save()
             # work metric = vector-iterations (each assigns + contributes)
             return n_vecs * 2, time.perf_counter() - t0
-    elif job == "dsir":
-        import time
-
-        from pyspark.sql import functions as F
-
-        from geofeaturegeneration_spark.operators import importance_weights
-
-        def run_job(spark, path):
-            docs = spark.read.parquet(path)
-            raw = docs.filter(F.col("doc_id") % 11 != 0).select(
-                "doc_id", "text"
-            )
-            target = docs.filter(F.col("doc_id") % 11 == 0).select(
-                F.col("doc_id").alias("tid"), F.col("text").alias("ttext")
-            )
-            # grams scored = raw-side 1..2-gram occurrences: a pure
-            # expression agg over the raw docs (one cheap pass, NOT timed —
-            # it is a property of the corpus, identical at every level)
-            n_grams = raw.agg(
-                F.sum(2 * F.size(F.split("text", " ")) - 1)
-            ).collect()[0][0]
-            t0 = time.perf_counter()
-            w = importance_weights(
-                raw, "doc_id", "text", target, "tid", "ttext"
-            )
-            w.write.format("noop").mode("overwrite").save()
-            return n_grams, time.perf_counter() - t0
     elif job == "normalize":
         import time
 

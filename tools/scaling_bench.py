@@ -100,25 +100,27 @@ def main() -> None:
                         "threads — so 8->32 measures the host, not the engine)")
     p.add_argument("--md-out", default=None, help="append a results section to this md file")
     p.add_argument("--job", default="pipeline",
-                   choices=["pipeline", "semdedup", "dsir",
+                   choices=["pipeline", "semdedup",
                             "normalize", "span",
                             "span_intervals", "lloyd", "edit", "pr"],
                    help="pipeline = token feature pipeline; semdedup = "
                         "semantic_dedup over a synthetic embedding corpus "
-                        "(--n-vecs); dsir = importance_weights over the "
-                        "dedup-scaling text corpus (--n-copies/"
-                        "--text-repeat)")
+                        "(--n-vecs); normalize/span/span_intervals/edit/"
+                        "pr run over the dedup-scaling text corpus "
+                        "(--n-copies/--text-repeat)")
     p.add_argument("--n-vecs", type=int, default=400000,
                    help="corpus size for --job semdedup")
     p.add_argument("--n-copies", type=int, default=20,
-                   help="corpus replication for --job dsir (20 -> 100k docs)")
+                   help="text-corpus replication for the normalize/span/"
+                        "span_intervals/edit/pr jobs (20 -> 100k docs)")
     p.add_argument("--text-repeat", type=int, default=3,
-                   help="doc-length multiplier for --job dsir")
+                   help="text-corpus doc-length multiplier for the same "
+                        "jobs")
     args = p.parse_args()
 
     if args.job in ("semdedup", "lloyd"):
         seq_path = ensure_emb_input(args.n_vecs)
-    elif args.job in ("dsir", "normalize", "span",
+    elif args.job in ("normalize", "span",
                       "span_intervals", "edit", "pr"):
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from dedup_scaling import ensure_corpus
@@ -143,7 +145,6 @@ def main() -> None:
     job_title = {
         "pipeline": "token feature pipeline",
         "semdedup": "semantic_dedup (16 trained clusters, threshold 0.95)",
-        "dsir": "DSIR importance_weights (hashed 1..2-grams, 8192 buckets)",
         "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
         "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
         "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
@@ -151,8 +152,7 @@ def main() -> None:
         "edit": "edit_join (24-char ascii keys, max_dist=1, symmetric-delete blocking)",
         "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
     }[args.job]
-    unit = {"semdedup": "vectors", "dsir": "grams",
-            "normalize": "chars",
+    unit = {"semdedup": "vectors", "normalize": "chars",
             "lloyd": "vector-iterations"}.get(args.job, "tokens")
     if args.md_out:
         with open(args.md_out, "a") as f:
