@@ -1,9 +1,9 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``queries()`` exposes every implemented operator from SURVEY.md §2 (plus the
-training-data-pipeline additions: dedup, similarity search, text
-analysis) as (spark, sf_dir) -> DataFrame callables;
-``oracle_sql()`` gives the DuckDB-equivalent ANSI SQL for each.
+training-data-pipeline additions: dedup, text analysis) as
+(spark, sf_dir) -> DataFrame callables; ``oracle_sql()`` gives the
+DuckDB-equivalent ANSI SQL for each.
 
 Cross-engine determinism rules used throughout (validated empirically):
 * the only hash primitive is md5 -> first 15 hex chars as int64
@@ -11,9 +11,7 @@ Cross-engine determinism rules used throughout (validated empirically):
   ``('0x'||substr(md5(x),1,15))::BIGINT``);
 * epoch seconds = Spark ``unix_timestamp`` (floor) == DuckDB
   ``epoch_us(ts)//1000000`` (NOT ``epoch(ts)::BIGINT``, which rounds);
-* dot products / norms are left-associated explicit sums in both engines,
-  giving bit-identical doubles; float aggregates are still rounded before
-  output as a belt-and-braces measure;
+* float aggregates are rounded before output;
 * count/row_number/sum-of-int results are cast so both engines emit the
   same integer width (DuckDB sum(int)->HUGEINT, row_number->BIGINT would
   otherwise mismatch Spark's long/int).
@@ -39,14 +37,9 @@ from geofeaturegeneration_spark.functions.grid import (
     with_geohash,
 )
 from geofeaturegeneration_spark.operators import (
-    ann_ivf_topk,
-    ann_ivf_topk_blocked,
-    ann_lsh_topk,
-    embedding_neardup_pairs,
     asof_join,
     build_vocab,
     chunk_sequences,
-    cosine_topk,
     encode_with_vocab,
     edit_join,
     edit_join_cross,
@@ -75,7 +68,6 @@ from geofeaturegeneration_spark.operators.util import ensure_min_partitions
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 GRID_PARAMS = {"slon": 116.0, "slat": 39.5, "deltalon": 0.01, "deltalat": 0.008}
-EMB_DIM = 64
 SEQ_LEN = 32
 TOKEN_MOD = 30000
 
@@ -650,197 +642,6 @@ def q_interaction_wide(spark, sf_dir):
     return interaction_matrix_wide(ev, "user_id", "event_type", items=EVENT_TYPES)
 
 
-def q_cosine_topk(spark, sf_dir):
-    """Exact top-k, blocked-GEMM plan: tiles meet in a cogrouped Arrow
-    batch and score via one numpy matmul — no join node, the scale form of
-    exact brute force (round 3; the BroadcastNestedLoopJoin form this
-    replaced survives as extra query cosine_topk_join, same oracle)."""
-    from geofeaturegeneration_spark.operators import cosine_topk_blocked
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk_blocked(emb, "vec_id", "embedding", k=5)
-
-
-def q_cosine_topk_join(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return cosine_topk(emb, "vec_id", "embedding", k=5)
-
-
-def q_ann_lsh(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann_lsh_topk(emb, "vec_id", "embedding", k=3, n_bits=8)
-
-
-def q_ann_lsh_multi(spark, sf_dir):
-    from geofeaturegeneration_spark.operators import ann_lsh_multi_topk
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return ann_lsh_multi_topk(
-        emb, "vec_id", "embedding", dim=EMB_DIM, k=3, n_tables=3, n_bits=8
-    )
-
-
-_IVF_CENTROIDS: dict = {}
-
-
-def _ivf_seed_rows(spark, sf_dir):
-    # the quantizer is trained once per table and reused across calls —
-    # production IVF ships pre-trained centroids; repeated searches should
-    # not re-pay the training scan. The cache holds PLAIN PYTHON rows, not a
-    # DataFrame: a cached DataFrame is bound to its SparkSession and breaks
-    # when bench/tests stop and recreate sessions in one process.
-    from geofeaturegeneration_spark.operators.similarity import _norm, _to_double
-
-    if sf_dir not in _IVF_CENTROIDS:
-        emb = _t(spark, sf_dir, "embeddings")
-        v = _to_double(F.col("embedding"))
-        rows = (
-            emb.select(F.col("vec_id"), v.alias("_v"), _norm(v).alias("_n"))
-            # zero-norm exclusion (similarity-family rule): a zero vector
-            # must never seed a centroid — its cosine is undefined
-            .filter(F.col("_n") > 0)
-            .orderBy("vec_id").limit(8).select("_v", "_n").collect()
-        )
-        _IVF_CENTROIDS[sf_dir] = [
-            (i + 1, list(r["_v"]), float(r["_n"])) for i, r in enumerate(rows)
-        ]
-    return _IVF_CENTROIDS[sf_dir]
-
-
-def q_ann_ivf(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    cent = spark.createDataFrame(
-        _ivf_seed_rows(spark, sf_dir), "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
-    )
-    return ann_ivf_topk_blocked(
-        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1,
-        centroids=cent,
-    )
-
-
-def q_ann_ivf_join(spark, sf_dir):
-    """Exactness twin: the join-form IVF plan (broadcast-quantizer
-    assignment + fold-dot list equi-join) that the contract's blocked-GEMM
-    plan replaced — same oracle, kept value-exact as the cross-check."""
-    emb = _t(spark, sf_dir, "embeddings")
-    cent = spark.createDataFrame(
-        _ivf_seed_rows(spark, sf_dir), "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
-    )
-    return ann_ivf_topk(
-        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1,
-        centroids=cent,
-    )
-
-
-_IVF_FPS: dict = {}
-
-
-def q_ann_ivf_trained(spark, sf_dir):
-    """IVF search with a TRAINED quantizer: deterministic farthest-point
-    (k-center) seeding under cosine distance — engine-reproducible, so the
-    DuckDB oracle replays the exact seed selection in chained CTEs. Same
-    search plan as ann_ivf; only the centroid table differs (and the
-    inverted lists it induces are far better balanced than first-N)."""
-    from geofeaturegeneration_spark.operators import farthest_point_centroids
-
-    emb = _t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_FPS:
-        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
-        _IVF_FPS[sf_dir] = [
-            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
-        ]
-    cent = spark.createDataFrame(
-        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
-    )
-    return ann_ivf_topk_blocked(
-        emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1, centroids=cent
-    )
-
-
-def q_ivf_lloyd(spark, sf_dir):
-    """Distributed spherical-k-means refinement
-    (operators/similarity.py:lloyd_refine): the farthest-point seeds
-    (same cached table as ann_ivf_trained) refined by TWO full-corpus
-    Lloyd iterations inside Spark — assignment is greatest-struct argmax
-    over literal centroids (pure map-side), the spherical mean is an
-    exact int64 sum of round(1e9 * x/|x|) per coordinate (shuffle-order-
-    proof), and the per-centroid finisher (left-associated sum of
-    squares -> sqrt -> divide) replays bit-for-bit in the oracle's
-    chained CTEs. Output is the long-form refined quantizer: one row per
-    (centroid, dimension) with the coordinate as round(1e9 * c) and the
-    kept/refined norm as round(1e6 * cn)."""
-    from geofeaturegeneration_spark.operators import (
-        farthest_point_centroids,
-        lloyd_refine,
-    )
-
-    emb = _t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_FPS:
-        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
-        _IVF_FPS[sf_dir] = [
-            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
-        ]
-    cent = spark.createDataFrame(
-        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
-    )
-    refined = lloyd_refine(emb, "vec_id", "embedding", cent, iters=2)
-    return refined.select(
-        F.col("_cid").alias("cid"),
-        F.round(F.lit(1_000_000.0) * F.col("_cn")).cast("long").alias(
-            "cn_ppm"
-        ),
-        F.posexplode("_cv").alias("d0", "c"),
-    ).select(
-        "cid",
-        (F.col("d0") + 1).cast("int").alias("d"),
-        F.round(F.lit(1_000_000_000.0) * F.col("c")).cast("long").alias(
-            "c_ppb"
-        ),
-        "cn_ppm",
-    )
-
-
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (Abbas et al. 2023): cluster embeddings with the
-    deterministic farthest-point quantizer (same trained table as
-    ann_ivf_trained — cached), then within each cluster drop every row
-    that has a lower-id neighbor at cosine >= 0.3, keeping the smallest-id
-    exemplar per duplicate neighborhood. Assignment + screening both run
-    as blocked GEMM; the oracle replays the fold-dot rule exactly."""
-    from geofeaturegeneration_spark.operators import semantic_dedup
-
-    emb = _t(spark, sf_dir, "embeddings")
-    if sf_dir not in _IVF_FPS:
-        from geofeaturegeneration_spark.operators import farthest_point_centroids
-
-        cents = farthest_point_centroids(emb, "vec_id", "embedding", k=8)
-        _IVF_FPS[sf_dir] = [
-            (r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in cents.collect()
-        ]
-    cent = spark.createDataFrame(
-        _IVF_FPS[sf_dir], "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"
-    )
-    return semantic_dedup(
-        emb, "vec_id", "embedding", threshold=0.3, n_clusters=8,
-        centroids=cent,
-    )
-
-
-def q_embedding_neardup(spark, sf_dir):
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_neardup_pairs(emb, "vec_id", "embedding", threshold=0.35, n_bits=8)
-
-
-def q_embedding_neardup_multi(spark, sf_dir):
-    from geofeaturegeneration_spark.operators import embedding_neardup_multi_pairs
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return embedding_neardup_multi_pairs(
-        emb, "vec_id", "embedding", dim=EMB_DIM, threshold=0.35,
-        n_tables=3, n_bits=8,
-    )
-
-
 def q_text_stats(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     t = F.col("text")
@@ -1032,8 +833,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     discipline, checked by tools/compare_oracle.py and pytest, just
     outside the driver window."""
     return {
-        # --- round 5: the six operators whose distinctive machinery never
-        # had a driver CORRECTNESS row, promoted by the rotation POLICY
+        # --- round 5: the six operators (two since retired) whose
+        # distinctive machinery never had a driver CORRECTNESS row,
+        # promoted by the rotation POLICY
         # (tools/rotation.py: CORRECTNESS_r01-r04 history joined against
         # rotation_hints(); this window is the tool's verbatim proposal).
         # Slots freed by folding series_matrix, contrastive, hash_split,
@@ -1044,7 +846,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "chunk_strided": q_chunk_strided,
         "edit_join_cross": q_edit_join_cross,
         "epoch_upsample": q_epoch_upsample,
-        "ivf_lloyd": q_ivf_lloyd,
         "leakage_split": q_leakage_split,
         # --- driver-green in earlier rounds ---
         "stay_enrich": q_stay_enrich,
@@ -1057,9 +858,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # round-4 text-rewrite operators, promoted for first driver rows:
         # slots freed by folding minhash_cross (the cross-corpus form of
         # the in-window minhash_pairs — same signature+banding machinery,
-        # green rows r01-r03) and ann_ivf (the fixed-quantizer sibling of
-        # the in-window ann_ivf_trained, which runs the same blocked-GEMM
-        # search path — green rows r01-r03) into extra_queries()
+        # green rows r01-r03) and a since-retired query into
+        # extra_queries()
         "clean_lines": q_clean_lines,
         "normalize_text": q_normalize_text,
         # round-3 late addition: a driver slot freed by folding the
@@ -1083,10 +883,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # folding `decimate` (a two-expression row filter, driver-green
         # r01-r03) into extra_queries()
         "traj_graph": q_traj_graph,
-        # round 4: SemDeDup embedding-space dedup (new operator) — slot
-        # freed by folding `minmax_norm` (a two-expression window op,
-        # driver-green r01-r03) into extra_queries()
-        "semantic_dedup": q_semantic_dedup,
         # round 4: deterministic global shuffle->shard export (new
         # operator) — slot freed by folding `time_features` (pure calendar
         # column expressions, driver-green r01-r03) into extra_queries()
@@ -1117,10 +913,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_pairs": q_minhash_pairs,
         "dedup_clusters": q_dedup_clusters,
         "simhash_pairs": q_simhash_pairs,
-        "cosine_topk": q_cosine_topk,
-        "ann_lsh_multi": q_ann_lsh_multi,
-        "ann_ivf_trained": q_ann_ivf_trained,
-        "embedding_neardup_multi": q_embedding_neardup_multi,
         "text_stats": q_text_stats,
     }
 
@@ -1443,8 +1235,8 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # round 5: folded out of the driver window by the rotation policy
         # (tools/rotation.py) to give chunk_strided / edit_join_cross /
-        # epoch_upsample / ivf_lloyd / leakage_split (and one since-retired
-        # query) their first CORRECTNESS rows. Each is long driver-green
+        # epoch_upsample / leakage_split (and two since-retired queries)
+        # their first CORRECTNESS rows. Each is long driver-green
         # (series_matrix + contrastive r03-r04; hash_split r01+r03-r04;
         # repetition r02-r04; grid_cantor r01-r04) and keeps coverage:
         # repetition's pure expressions sit beside the in-window
@@ -1509,12 +1301,6 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "interaction_wide": q_interaction_wide,
         # TakeOrdered top-k + broadcast enrich (same family as orders_enrich)
         "top_customers": q_top_customers,
-        # contract 'cosine_topk' now runs the blocked-GEMM plan; the
-        # original expression-fold self-join stays here as its exactness twin
-        "cosine_topk_join": q_cosine_topk_join,
-        # contract 'ann_ivf'/'ann_ivf_trained' now run the blocked-GEMM
-        # plan (round 4); the join-form IVF stays here as its exactness twin
-        "ann_ivf_join": q_ann_ivf_join,
         # signature STAGE queries folded out of the driver window (late
         # round 3) to give quality_filter (and one since-retired query)
         # contract slots; both stages stay driver-verified transitively — the
@@ -1523,15 +1309,9 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # value-exact here under compare_oracle
         "simhash": q_simhash,
         "minhash_sigs": q_minhash_sigs,
-        # single-table variants of the multi-table ANN contract entries —
-        # folded here (round 3) to free driver slots for pii_scrub and
-        # line_dedup, mirroring the round-2 strategy-twin folds; both were
-        # driver-green in r02 and stay under the local oracle gate
-        "ann_lsh": q_ann_lsh,
-        "embedding_neardup": q_embedding_neardup,
         # round 4: folded out of the driver window (driver-green r01-r03;
-        # two-expression operators) to give the new traj_graph and
-        # semantic_dedup operators their first CORRECTNESS rows; both stay
+        # two-expression operators) to give the new traj_graph operator
+        # and a since-retired query their first CORRECTNESS rows; both stay
         # value-exact under compare_oracle
         "decimate": q_decimate,
         "minmax_norm": q_minmax,
@@ -1571,13 +1351,11 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # rows r01-r03, pure column exprs, canonical vectors pinned in
         # test_grid.py; grid_cantor keeps the geo-function family in-window
         "geohash": q_geohash,
-        # folded round 4 to free driver slots for clean_lines and
-        # normalize_text (first-ever rows): both had green rows r01-r03
-        # and stay transitively driver-verified — minhash_cross through
-        # minhash_pairs (same signature+banding machinery), ann_ivf
-        # through ann_ivf_trained (same blocked-GEMM search path)
+        # folded round 4 (with a since-retired query) to free driver
+        # slots for clean_lines and normalize_text (first-ever rows):
+        # green rows r01-r03, and it stays transitively driver-verified
+        # through minhash_pairs (same signature+banding machinery)
         "minhash_cross": q_minhash_cross,
-        "ann_ivf": q_ann_ivf,
     }
 
 
@@ -1710,235 +1488,6 @@ rk AS (SELECT user_id, grid,
        FROM unv)"""
 
 
-def _dot_sql(a: str, b: str, acol: str = "embedding", bcol: str = "embedding") -> str:
-    return " + ".join(
-        f"({a}.{acol}[{i}]::DOUBLE * {b}.{bcol}[{i}]::DOUBLE)"
-        for i in range(1, EMB_DIM + 1)
-    )
-
-
-def _sqnorm_sql() -> str:
-    return " + ".join(
-        f"(embedding[{i}]::DOUBLE * embedding[{i}]::DOUBLE)"
-        for i in range(1, EMB_DIM + 1)
-    )
-
-
-def _ivf_search_sql(cent_ctes: str, k: int = 3, nprobe: int = 1) -> str:
-    """Shared IVF assignment+search SQL; ``cent_ctes`` must define a CTE
-    ``cent(cid, cv, cn)`` (may reference ``n``). Mirrors ann_ivf_topk.
-
-    Every CTE is MATERIALIZED: DuckDB inlines CTEs referenced more than
-    once, and the farthest-point chain references each d_j twice (by
-    s_{j+1} AND d_{j+1}), exploding to 2^k re-evaluations of the 64-term
-    dot chains — measured 99.3 s plain vs 0.94 s materialized at sf0.01,
-    byte-identical results."""
-    sql = f"""
-WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-{cent_ctes},
-asg AS (SELECT n.vec_id, n.embedding, n.nn, cent.cid,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY ({_dot_sql('n', 'cent', bcol='cv')}) / (n.nn * cent.cn) DESC,
-                          cent.cid ASC) AS crank
-        FROM n CROSS JOIN cent),
-home AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank = 1),
-probe AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank <= {nprobe}),
-p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id, b.cid AS list_id,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM probe a JOIN home b ON a.cid = b.cid AND a.vec_id != b.vec_id),
-r AS (SELECT vec_id, nn_id, list_id, cos,
-             (row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
-      FROM p)
-SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", list_id::BIGINT AS list_id
-FROM r WHERE rnk <= {k}
-"""
-    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
-
-
-def _semantic_dedup_sql(threshold: float, cent_ctes: str) -> str:
-    """SemDeDup keep verdicts; ``cent_ctes`` must define ``cent(cid,cv,cn)``
-    (the trained farthest-point quantizer). Mirrors operators/similarity
-    .semantic_dedup: home-cluster assignment by (cos desc, cid asc), then
-    drop iff a lower-id same-cluster row has cosine >= threshold. Same
-    MATERIALIZED discipline as _ivf_search_sql (the fps chain re-references
-    its CTEs)."""
-    sql = f"""
-WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-{cent_ctes},
-asg AS (SELECT n.vec_id, n.embedding, n.nn, cent.cid,
-               row_number() OVER (
-                 PARTITION BY n.vec_id
-                 ORDER BY ({_dot_sql('n', 'cent', bcol='cv')}) / (n.nn * cent.cn) DESC,
-                          cent.cid ASC) AS crank
-        FROM n CROSS JOIN cent),
-home AS (SELECT vec_id, embedding, nn, cid FROM asg WHERE crank = 1),
-drops AS (SELECT DISTINCT a.vec_id
-          FROM home a JOIN home b
-            ON a.cid = b.cid AND b.vec_id < a.vec_id
-          WHERE ({_dot_sql('a', 'b')}) / (a.nn * b.nn) >= {threshold})
-SELECT h.vec_id, h.cid::INT AS cluster_id, (d.vec_id IS NULL) AS keep
-FROM home h LEFT JOIN drops d ON h.vec_id = d.vec_id
-UNION ALL
-SELECT vec_id, NULL::INT AS cluster_id, true AS keep
-FROM embeddings WHERE (({_sqnorm_sql()}) > 0) IS NOT TRUE
-"""
-    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
-
-
-def _fps_cent_ctes(k: int = 8, salt: str = "ivfseed") -> str:
-    """Farthest-point (k-center) seed selection as chained CTEs — replays
-    operators/similarity.farthest_point_centroids exactly: seed 1 = min
-    md5(id#salt); seed j = argmin over vectors of max cosine to the seeds
-    so far (running ``greatest`` — max is exact, so the fold order doesn't
-    matter), ties by vec_id. No cross-row float aggregation anywhere, so
-    both engines agree bit-for-bit."""
-    h_expr = _MD5L.format(x=f"vec_id::VARCHAR || '#{salt}'")
-    parts = [
-        f"""s1 AS (SELECT vec_id, embedding, nn
-      FROM (SELECT *, {h_expr} AS hh FROM n)
-      ORDER BY hh, vec_id LIMIT 1)""",
-        f"""d1 AS (SELECT n.vec_id, n.embedding, n.nn,
-             ({_dot_sql('n', 's1')}) / (n.nn * s1.nn) AS mc
-      FROM n CROSS JOIN s1)""",
-        "s2 AS (SELECT vec_id, embedding, nn FROM d1 ORDER BY mc ASC, vec_id ASC LIMIT 1)",
-    ]
-    for j in range(3, k + 1):
-        parts.append(
-            f"""d{j - 1} AS (SELECT d.vec_id, d.embedding, d.nn,
-             greatest(d.mc, ({_dot_sql('d', f's{j - 1}')}) / (d.nn * s{j - 1}.nn)) AS mc
-      FROM d{j - 2} d CROSS JOIN s{j - 1})"""
-        )
-        parts.append(
-            f"s{j} AS (SELECT vec_id, embedding, nn FROM d{j - 1} ORDER BY mc ASC, vec_id ASC LIMIT 1)"
-        )
-    cent = "cent AS (" + "\n  UNION ALL ".join(
-        f"SELECT {i} AS cid, embedding AS cv, nn AS cn FROM s{i}"
-        for i in range(1, k + 1)
-    ) + ")"
-    parts.append(cent)
-    return ",\n".join(parts)
-
-
-def _lloyd_sql(k: int = 8, iters: int = 2, scale: int = 10**9) -> str:
-    """operators/similarity.lloyd_refine replayed as chained CTEs: cent0 =
-    the farthest-point seeds (same chain as ann_ivf_trained), then per
-    iteration assignment (row_number over cos DESC, cid — identical to the
-    Spark greatest-struct argmax), exact int64 coordinate sums of
-    round(scale * x/|x|), and the fixed-order finisher (left-assoc sum of
-    squares -> sqrt -> divide; empty clusters / zero sums keep the previous
-    centroid). Same MATERIALIZED discipline as _ivf_search_sql."""
-    parts = [_fps_cent_ctes(k), "cent0 AS (SELECT cid, cv::DOUBLE[] AS cv, cn FROM cent)"]
-    for i in range(1, iters + 1):
-        p = f"cent{i - 1}"
-        parts.append(
-            f"""a{i} AS (SELECT n.vec_id, n.embedding, n.nn, c.cid,
-             ({_dot_sql('n', 'c', bcol='cv')}) / (n.nn * c.cn) AS cos
-      FROM n CROSS JOIN {p} c)"""
-        )
-        parts.append(
-            f"""asg{i} AS (SELECT vec_id, embedding, nn, cid FROM (
-      SELECT *, row_number() OVER (PARTITION BY vec_id
-                                   ORDER BY cos DESC, cid) AS rn FROM a{i})
-      WHERE rn = 1)"""
-        )
-        parts.append(
-            f"""sm{i} AS (SELECT cid, d,
-             sum(round({float(scale)!r} * embedding[d]::DOUBLE / nn)::BIGINT) AS s
-      FROM asg{i} CROSS JOIN range(1, {EMB_DIM + 1}) t(d) GROUP BY cid, d)"""
-        )
-        parts.append(
-            f"sv{i} AS (SELECT cid, list(s::DOUBLE ORDER BY d) AS sv"
-            f" FROM sm{i} GROUP BY cid)"
-        )
-        sumsq = " + ".join(
-            f"(sv[{j}] * sv[{j}])" for j in range(1, EMB_DIM + 1)
-        )
-        parts.append(f"nm{i} AS (SELECT cid, sv, sqrt({sumsq}) AS nrm FROM sv{i})")
-        arr = ", ".join(f"m.sv[{j}] / m.nrm" for j in range(1, EMB_DIM + 1))
-        parts.append(
-            f"""cent{i} AS (SELECT p.cid,
-      CASE WHEN m.cid IS NULL OR m.nrm = 0.0 THEN p.cv ELSE [{arr}] END AS cv,
-      CASE WHEN m.cid IS NULL OR m.nrm = 0.0 THEN p.cn ELSE 1.0 END AS cn
-      FROM {p} p LEFT JOIN nm{i} m ON p.cid = m.cid)"""
-        )
-    ctes = ",\n".join(parts)
-    sql = f"""
-WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-{ctes}
-SELECT c.cid, t.d::INT AS d,
-       round(1000000000.0 * c.cv[t.d])::BIGINT AS c_ppb,
-       round(1000000.0 * c.cn)::BIGINT AS cn_ppm
-FROM cent{iters} c CROSS JOIN range(1, {EMB_DIM + 1}) t(d)
-"""
-    return sql.replace(" AS (SELECT", " AS MATERIALIZED (SELECT")
-
-
-def _hp_bucket_sql(planes: list[list[float]]) -> str:
-    """One hash table's bucket id as DuckDB SQL — each bit's hyperplane dot
-    is the SAME left-associated fold (0.0 + t1 + t2 + ...) as the Spark
-    per-plane aggregate in operators/similarity._hp_exploded, so signs
-    match bitwise."""
-    bits = []
-    for bit, coefs in enumerate(planes):
-        dot = "0.0 + " + " + ".join(
-            f"(embedding[{i + 1}]::DOUBLE * {c})" for i, c in enumerate(coefs)
-        )
-        bits.append(f"(CASE WHEN ({dot}) > 0 THEN {1 << bit} ELSE 0 END)")
-    return " + ".join(bits)
-
-
-def _hp_bk_ctes(n_tables: int, n_bits: int) -> str:
-    from geofeaturegeneration_spark.operators.similarity import hyperplane_tables
-
-    hp = hyperplane_tables(EMB_DIM, n_tables, n_bits, "hp")
-    return "\nUNION ALL\n".join(
-        f"SELECT vec_id, embedding, nn, {t} AS t,"
-        f" ({_hp_bucket_sql(hp[t])})::BIGINT AS bucket FROM nrm"
-        for t in range(n_tables)
-    )
-
-
-def _neardup_multi_sql(
-    threshold: float = 0.35, n_tables: int = 3, n_bits: int = 8
-) -> str:
-    return f"""
-WITH nrm AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-bk AS ({_hp_bk_ctes(n_tables, n_bits)}),
-p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
-                          AND a.vec_id < b.vec_id)
-SELECT id_a, id_b, round(max(cos),6) AS cos_sim
-FROM p WHERE cos >= {threshold} GROUP BY 1, 2
-"""
-
-
-def _ann_lsh_multi_sql(n_tables: int = 3, n_bits: int = 8, k: int = 3) -> str:
-    return f"""
-WITH nrm AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-bk AS ({_hp_bk_ctes(n_tables, n_bits)}),
-p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket
-                          AND a.vec_id != b.vec_id),
-d AS (SELECT vec_id, nn_id, max(cos) AS cos, count(*)::INT AS n_hit
-      FROM p GROUP BY 1,2),
-r AS (SELECT vec_id, nn_id, cos, n_hit,
-             (row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
-      FROM d)
-SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", n_hit
-FROM r WHERE rnk <= {k}
-"""
-
-
 # DuckDB mirror of functions/grid.geohash_encode — same quantization
 # association ((v-lo)/span*2^b), same clamp, same bit interleave.
 
@@ -2009,17 +1558,6 @@ SELECT doc_id, lang, {case} AS pred_lang FROM s
 """
 
 
-def oracle_sql() -> dict[str, str]:
-    d = _oracle_sql()
-    # blocked-GEMM and fold-join cosine top-k share one oracle: identical
-    # output by construction (rank flips would need two distinct candidate
-    # cosines within ~1e-13 — verified exact at sf0.01 and sf0.1)
-    d["cosine_topk_join"] = d["cosine_topk"]
-    d["ann_ivf_join"] = d["ann_ivf"]
-    d["ivf_lloyd"] = _lloyd_sql(k=8, iters=2)
-    return d
-
-
 def rotation_hints() -> dict[str, dict]:
     """Rotation metadata consumed by ``tools/rotation.py`` (the round-4
     verdict's "rotation as policy" ask). Two keys:
@@ -2053,12 +1591,7 @@ def rotation_hints() -> dict[str, dict]:
         "asof_union": "asof_salted",
         "stay_move": "stay_move_spliced",
         "rolling_range": "rolling",
-        "cosine_topk_join": "cosine_topk",
-        "ann_ivf_join": "ann_ivf_trained",
-        "ann_ivf": "ann_ivf_trained",
-        "ann_lsh": "ann_lsh_multi",
         "minhash_cross": "minhash_pairs",
-        "embedding_neardup": "embedding_neardup_multi",
         "edit_clusters": "edit_join",
         # same kernel / same deterministic draw, different scope knob
         "line_dedup_doc": "line_dedup",
@@ -2085,7 +1618,7 @@ def rotation_hints() -> dict[str, dict]:
     return {"carriers": carriers, "foldable": foldable}
 
 
-def _oracle_sql() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
     sec_ts = _SEC.format(x="ts")
     # PII oracle pieces are GENERATED from the operator's own pattern table
     # so the two sides cannot drift; every pattern is RE2-and-Java identical
@@ -2098,10 +1631,6 @@ def _oracle_sql() -> dict[str, str]:
     pii_counts = ",\n       ".join(
         f"len(regexp_extract_all(text, '{_p}'))::INT AS n_{_n}"
         for _n, _p, _t in PII_PATTERNS
-    )
-    lsh_bucket_sql = " + ".join(
-        f"(CASE WHEN embedding[{k + 1}] > 0 THEN {1 << k} ELSE 0 END)"
-        for k in range(8)
     )
     return {
         "tpch_pricing": """
@@ -2543,53 +2072,6 @@ SELECT doc_id,
        SUM(CASE WHEN s > 0 THEN pow2 ELSE 0 END)::BIGINT AS simhash
 FROM contrib GROUP BY 1
 """,
-        "cosine_topk": f"""
-WITH n AS (SELECT vec_id, embedding, sqrt({_sqnorm_sql()}) AS nn FROM embeddings
-           WHERE ({_sqnorm_sql()}) > 0),
-p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM n a JOIN n b ON a.vec_id != b.vec_id),
-r AS (SELECT vec_id, nn_id, cos,
-             (row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
-      FROM p)
-SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank"
-FROM r WHERE rnk <= 5
-""",
-        "ann_ivf": _ivf_search_sql(
-            """cent AS (SELECT (row_number() OVER (ORDER BY vec_id))::INT AS cid,
-                embedding AS cv, nn AS cn
-         FROM (SELECT * FROM n ORDER BY vec_id LIMIT 8))"""
-        ),
-        "ann_ivf_trained": _ivf_search_sql(_fps_cent_ctes(8)),
-        "semantic_dedup": _semantic_dedup_sql(0.3, _fps_cent_ctes(8)),
-        "embedding_neardup": f"""
-WITH base AS (SELECT vec_id, embedding,
-                     ({lsh_bucket_sql})::BIGINT AS bucket FROM embeddings),
-n AS (SELECT vec_id, embedding, bucket, sqrt({_sqnorm_sql()}) AS nn FROM base
-           WHERE ({_sqnorm_sql()}) > 0),
-p AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
-SELECT id_a, id_b, round(cos,6) AS cos_sim FROM p WHERE cos >= 0.35
-""",
-        "ann_lsh": f"""
-WITH base AS (SELECT vec_id, embedding,
-                     ({lsh_bucket_sql})::BIGINT AS bucket FROM embeddings),
-n AS (SELECT vec_id, embedding, bucket, sqrt({_sqnorm_sql()}) AS nn FROM base
-           WHERE ({_sqnorm_sql()}) > 0),
-p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nn_id, a.bucket AS bucket,
-             ({_dot_sql('a', 'b')}) / (a.nn * b.nn) AS cos
-      FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id != b.vec_id),
-r AS (SELECT vec_id, nn_id, bucket, cos,
-             (row_number() OVER (PARTITION BY vec_id
-                                 ORDER BY round(cos,6) DESC, nn_id))::INT AS rnk
-      FROM p)
-SELECT vec_id, nn_id, round(cos,6) AS cos_sim, rnk AS "rank", bucket
-FROM r WHERE rnk <= 3
-""",
-        "ann_lsh_multi": _ann_lsh_multi_sql(),
-        "embedding_neardup_multi": _neardup_multi_sql(),
         "simhash_pairs": f"""
 WITH wd AS (SELECT doc_id, {_MD5L.format(x='w')} AS h
             FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)),

@@ -63,12 +63,6 @@ HEADLINE = [
     "ngram_jaccard",
     "simhash",
     "simhash_pairs",
-    "ann_lsh",
-    "ann_lsh_multi",
-    "ann_ivf",
-    "ann_ivf_trained",
-    "embedding_neardup",
-    "cosine_topk",
     "text_stats",
     "lang_id",
     "fingerprint",
@@ -88,19 +82,17 @@ HEADLINE = [
     "leakage_split",
     "traj_graph",
     "pagerank",
-    "semantic_dedup",
     "temperature_mix",
     "shuffle_shards",
-    "ivf_lloyd",
     "epoch_upsample",
     # round 5: the remaining two queries promoted into the driver window
     # by the rotation policy (the other four were already headline rows)
     "edit_join_cross",
     "chunk_strided",
-    # round 5: the five contract-window queries that had never been
-    # headline rows — with these the bench covers the ENTIRE driver window
+    # round 5: the five contract-window queries (one since retired) that
+    # had never been headline rows — with these the bench covers the
+    # ENTIRE driver window
     "dedup_clusters",
-    "embedding_neardup_multi",
     "negative_samples",
     "quality_filter",
     "stay_move_spliced",

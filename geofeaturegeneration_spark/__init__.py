@@ -13,7 +13,7 @@ batch pipeline over CSV stage files) as an idiomatic Spark DataFrame engine:
 * **padded sequence export** (``DP_GenerateTrajectory.py:33-93``),
 * per-partition **checkpoint / lineage / resume** (``DP_GenerateTrajectory.py:50-52``),
 
-plus large-scale training-data ops (dedup, similarity search, text analysis)
+plus large-scale training-data ops (dedup, text analysis)
 that the 100 TB use-case needs.
 
 Everything here derives from public knowledge only: the Apache Spark / PySpark

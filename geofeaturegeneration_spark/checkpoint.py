@@ -23,6 +23,7 @@ attempts, not only with partitions.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import time
 import uuid
@@ -55,6 +56,39 @@ def _fs_path(spark: SparkSession, path: str):
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file index drops a file or directory of this name
+    (``HadoopFSUtils.shouldFilterOutPathName``): markers, checksums,
+    ``_temporary/`` and ``.staging/`` trees, half-copied files. A ``_``
+    name holding ``=`` is a partition directory and is read."""
+    return (
+        name.startswith(".")
+        or (name.startswith("_") and "=" not in name)
+        or name.endswith("._COPYING_")
+    )
+
+
+def input_fingerprint(spark: SparkSession, path: str) -> str:
+    """Digest of the sorted (path, length, modification time) of the data
+    files under ``path``, listed by the driver through the Hadoop
+    FileSystem (no Spark job). A file counts only when no name on its path
+    below ``path`` is one Spark's reader skips (``_hidden``), so a crashed
+    writer's leftovers, or their cleanup, leave the digest as it was.
+    Rewriting the input in place changes the digest even when the path
+    stays the same."""
+    fs, root = _fs_path(spark, path)
+    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
+    files = []
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        p = st.getPath().toString()
+        if not any(map(_hidden, p.removeprefix(prefix).split("/"))):
+            files.append(f"{p}\t{st.getLen()}\t{st.getModificationTime()}")
+    digest = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
+    return f"{len(files)}:{digest[:16]}"
+
+
 def _partition_dir(spark: SparkSession, partition_col: str, key: str) -> str:
     """The directory name Spark's partitioned writer gives ``key``: it
     %-escapes characters such as ``#``, ``/`` and ``=``, so key
@@ -75,10 +109,12 @@ class CheckpointStore:
         fs, root = _fs_path(self.spark, self.path)
         if not fs.exists(root):
             return None
-        glob = self.spark._jvm.org.apache.hadoop.fs.Path(f"{self.path}/*.json")
+        # listed, not globbed: a glob would read the store's own path as a
+        # pattern, and a path holding `{` or `[` would match no mark
         records: list[dict] = []
-        for st in fs.globStatus(glob) or []:
-            records += _parse_marks(self.spark, fs, st.getPath())
+        for st in fs.listStatus(root):
+            if st.isFile() and st.getPath().getName().endswith(".json"):
+                records += _parse_marks(self.spark, fs, st.getPath())
         latest: dict[str, dict] = {}
         for rec in sorted(records, key=lambda r: (r["updated_at"], r["attempt_id"])):
             if rec["job_id"] == job_id:

@@ -10,12 +10,12 @@ text-REWRITING pre-filter: unicode/whitespace normalization, then C4
 per-line rules + page verdict, so every later
 stage hashes the CANONICAL bytes) -> (optional) quality filter ->
 MinHash LSH pairs -> connected components -> (optional) test-set
-decontamination -> (optional) semantic embedding-space dedup -> keeper
-filter (+ optional mixing recipe + PII scrub riding the output pass) —
+decontamination -> keeper filter (+ optional mixing recipe + PII scrub
+riding the output pass) —
 (+ optional exact-substring span dedup over the surviving corpus) —
 composed as ONE resumable pipeline behind the checkpoint store (reference
 analog: the stage-separated pipeline of AttachFeature.py:1046-1112), not
-just unit operators. Three to eleven stages, each recorded per partition in
+just unit operators. Three to ten stages, each recorded per partition in
 the CheckpointStore so a crash resumes without recomputing finished work:
 
 -0.3. ``clean`` (optional, per doc-id hash bucket): text canonicalization
@@ -41,16 +41,11 @@ the CheckpointStore so a crash resumes without recomputing finished work:
    O(diameter) rounds) -> (doc_id, cluster_id, is_keeper). Global because
    near-dup pairs cross doc buckets by construction; the inputs are the
    tiny signature rows, never the corpus text.
-2.7 ``semantic`` (optional, global): SemDeDup drops over an embeddings
-   table ``(doc_id, embedding)`` — sampled-kmeans quantizer (deterministic)
-   + clustered GEMM screen (similarity.semantic_dedup); lands as an
-   ids-only drop table the output stage anti-joins. The corpus text never
-   moves through this stage.
 2.8 ``mix_rates`` (optional, global): ``--mix-alpha`` computes the
    temperature-scaled mixing recipe (curation.temperature_rates) over the
-   SURVIVING corpus — keepers minus contamination minus semantic drops —
-   instead of taking explicit ``--mix`` rates; ``--mix-tokens`` weighs it
-   by exact int64 token counts (the token-budget form). The persisted
+   SURVIVING corpus — keepers minus contamination — instead of taking
+   explicit ``--mix`` rates; ``--mix-tokens`` weighs it by exact int64
+   token counts (the token-budget form). The persisted
    table is |sources|-sized; the output stage applies it as the same
    source_sample draw.
 3. ``output`` (per doc-id hash bucket): keeper filter — each bucket of the
@@ -95,17 +90,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-from geofeaturegeneration_spark.checkpoint import CheckpointStore, run_partitioned
+from geofeaturegeneration_spark.checkpoint import (
+    CheckpointStore,
+    input_fingerprint,
+    run_partitioned,
+)
 from geofeaturegeneration_spark.operators import (
     decontaminate,
     dedup_clusters,
     lsh_pairs_from_band_sigs,
     minhash_band_signatures,
-    semantic_dedup,
     shuffle_shards,
     span_dup_intervals,
     span_reassemble,
-    train_ivf_centroids,
 )
 from geofeaturegeneration_spark.functions.text import n_words
 from geofeaturegeneration_spark.operators.curation import (
@@ -152,11 +149,6 @@ def run_dedup_pipeline(
     epoch_default_ppm: int = 1_000_000,
     span_k: int | None = None,
     shard_size: int | None = None,
-    embeddings=None,
-    emb_fingerprint: str | None = None,
-    semantic_threshold: float = 0.95,
-    semantic_clusters: int = 8,
-    semantic_max_cluster: int | None = None,
 ):
     """Run the dedup stages with per-stage checkpointed resume.
 
@@ -202,9 +194,9 @@ def run_dedup_pipeline(
     ``mix_alpha`` computes the recipe INSIDE the job instead (mutually
     exclusive with ``mix_rates_ppm``): a checkpointed MIX_RATES stage runs
     ``curation.temperature_rates`` over the surviving corpus (keepers
-    minus contamination minus semantic drops — the same population the
-    output stage emits), so the temperature recipe reflects what dedup
-    actually kept, not the raw input. ``mix_by_tokens=True`` weighs the
+    minus contamination — the same population the output stage emits),
+    so the temperature recipe reflects what dedup actually kept, not the
+    raw input. ``mix_by_tokens=True`` weighs the
     recipe by exact int64 word-count sums (the token-budget form mixes are
     actually specified in; one extra text-bytes pass, which is why the
     stage is checkpointed). The rate table is |sources|-sized; the output
@@ -225,18 +217,11 @@ def run_dedup_pipeline(
     global permutation plus a fixed-size shard id. The shard size is in
     the lineage key.
 
-    ``embeddings`` (optional, (doc_id, embedding)) adds the SEMANTIC dedup
-    modality (similarity.semantic_dedup — SemDeDup): a global checkpointed
-    stage trains the sampled-kmeans quantizer, screens each cluster with
-    GEMM tiles, and lands the dropped doc ids; the output stage anti-joins
-    them exactly like contamination. Quality-rejected docs never enter the
-    screen; knobs + the embedding table's identity are in the lineage key.
-
     The full curation story — filter -> dedup ->
-    decontaminate -> semantic -> mix -> scrub -> span-dedup — is
+    decontaminate -> mix -> scrub -> span-dedup — is
     therefore ONE resumable artifact; per-stage wall-clock is recorded in
     the CheckpointStore (``latest()``). Returns the per-stage
-    PartitionResult lists (3 to 11 of them, in pipeline order)."""
+    PartitionResult lists (3 to 10 of them, in pipeline order)."""
     if buckets < 1:
         # an empty key set would prune every existing per-bucket partition
         raise ValueError(f"buckets must be >= 1, got {buckets}")
@@ -303,13 +288,6 @@ def run_dedup_pipeline(
         lineage += f";span={span_k}"
     if shard_size is not None:
         lineage += f";shards={shard_size}"
-    if embeddings is not None:
-        # the semantic stage's bytes depend on the threshold/cluster knobs
-        # AND the embedding table's identity — all in the lineage key
-        lineage += (
-            f";sem={semantic_threshold}:{semantic_clusters}"
-            f":{semantic_max_cluster}:{emb_fingerprint or 'anon'}"
-        )
 
     from pyspark.sql import types as T
 
@@ -523,55 +501,11 @@ def run_dedup_pipeline(
             con_path, "part_key", lineage, force=force,
         )
 
-    # stage 2.7 (optional): semantic (embedding-space) drops — one global
-    # checkpoint unit like clusters. The quantizer is trained with the
-    # sampled-kmeans production trainer (deterministic: hash-deterministic
-    # sample + seeded kmeans++/Lloyd), so kill/resume stays byte-identical;
-    # the corpus text is never touched — only the embedding table moves.
-    sem_path = os.path.join(out_root, "semantic")
-    sem_schema = T.StructType(
-        [_id_field, T.StructField("part_key", T.StringType())]
-    )
-    r_sem = None
-    if embeddings is not None:
-        def sem_one(_key: str):
-            # embeddings are an EXTERNAL id-carrying table: align them
-            # with the current doc universe first (docs is the cleaned
-            # corpus when --clean is on — without this, vectors of docs
-            # the page verdict already removed could elect themselves
-            # min-id exemplars and drop SURVIVING near-dups of content
-            # that no longer exists in the output), then through the
-            # quality keeper join like every global stage
-            emb = restrict_global(
-                embeddings.join(docs.select("doc_id"), "doc_id", "left_semi")
-            )
-            if emb.limit(1).count() == 0:
-                # nothing survived to here (or no embeddings align with
-                # the survivors): emit an empty drop table rather than
-                # asking the trainer to fit a quantizer on nothing
-                return spark.createDataFrame([], T.StructType([_id_field]))
-            cents = train_ivf_centroids(
-                emb, "doc_id", "embedding", k=semantic_clusters
-            )
-            verdicts = semantic_dedup(
-                emb, "doc_id", "embedding",
-                threshold=semantic_threshold,
-                n_clusters=semantic_clusters,
-                centroids=cents,
-                max_cluster_size=semantic_max_cluster,
-            )
-            return verdicts.filter(~F.col("keep")).select("doc_id")
-
-        r_sem = run_partitioned(
-            spark, store, f"{job_id}/semantic", ["all"], sem_one,
-            sem_path, "part_key", lineage, force=force,
-        )
-
     # stage 2.8 (optional): computed temperature-mix recipe — ONE global
     # checkpoint unit producing the |sources|-sized rate table from the
-    # SURVIVING corpus (keepers minus contamination minus semantic drops,
-    # the exact population the output stage emits). Token weighting costs
-    # one text-bytes pass, which is why the result is checkpointed.
+    # SURVIVING corpus (keepers minus contamination, the exact population
+    # the output stage emits). Token weighting costs one text-bytes pass,
+    # which is why the result is checkpointed.
     mixr_path = os.path.join(out_root, "mix_rates")
     if mix_alpha is not None:
         mixr_schema = T.StructType(
@@ -596,11 +530,6 @@ def run_dedup_pipeline(
                     .select("doc_id")
                 )
                 kept = kept.join(bad, "doc_id", "left_anti")
-            if embeddings is not None:
-                sem_bad = spark.read.schema(sem_schema).parquet(
-                    sem_path
-                ).select("doc_id")
-                kept = kept.join(sem_bad, "doc_id", "left_anti")
             if mix_by_tokens:
                 kept = kept.withColumn("_w", n_words(F.col("text")))
             rates = temperature_rates(
@@ -624,9 +553,8 @@ def run_dedup_pipeline(
     else:
         r_mixr = None
 
-    # final stage: keeper filter (minus contaminated docs and semantic
-    # drops) per corpus bucket (only stage touching text bytes besides 1
-    # and 2.5)
+    # final stage: keeper filter (minus contaminated docs) per corpus
+    # bucket (only stage touching text bytes besides 1 and 2.5)
     def out_one(key: str):
         clusters = spark.read.schema(clu_schema).parquet(clu_path).drop(
             "part_key"
@@ -644,11 +572,6 @@ def run_dedup_pipeline(
                 .select("doc_id")
             )
             out = out.join(bad, "doc_id", "left_anti")
-        if embeddings is not None:
-            sem_bad = spark.read.schema(sem_schema).parquet(sem_path).select(
-                "doc_id"
-            )
-            out = out.join(sem_bad, "doc_id", "left_anti")
         if mix_rates_ppm is not None:
             # mixing recipe rides the output pass: the draw is a pure
             # function of doc_id (engine/cluster-size reproducible), so no
@@ -808,8 +731,6 @@ def run_dedup_pipeline(
     stages.extend([r_sig, r_clu])
     if r_con is not None:
         stages.append(r_con)
-    if r_sem is not None:
-        stages.append(r_sem)
     if r_mixr is not None:
         stages.append(r_mixr)
     stages.append(r_out)
@@ -896,16 +817,6 @@ def main(argv=None) -> int:
     p.add_argument("--epochs-default", type=int, default=1_000_000,
                    help="repetition ppm for sources absent from --epochs "
                         "(default 1000000 = exactly one copy)")
-    p.add_argument("--embeddings", default=None,
-                   help="optional embeddings parquet (doc_id, embedding); "
-                        "adds the SEMANTIC dedup stage (SemDeDup): docs "
-                        "whose embedding has a lower-id same-cluster "
-                        "neighbor above --semantic-threshold are dropped "
-                        "in the output stage")
-    p.add_argument("--semantic-threshold", type=float, default=0.95)
-    p.add_argument("--semantic-clusters", type=int, default=8)
-    p.add_argument("--semantic-max-cluster", type=int, default=None,
-                   help="exempt clusters larger than this from the screen")
     args = p.parse_args(argv)
     if args.buckets < 1:
         # an empty key set would prune every existing per-bucket partition
@@ -914,16 +825,23 @@ def main(argv=None) -> int:
     spark = get_spark("run_dedup")
     docs = spark.read.parquet(args.input)
     bench = spark.read.parquet(args.bench) if args.bench else None
-    embeddings = (
-        spark.read.parquet(args.embeddings) if args.embeddings else None
+    # the input's (and bench's) path and a digest of its data files: a run
+    # over other data into the same checkpoint re-runs every stage
+    lineage = (
+        f"xform=v1;input={args.input}"
+        f";files={input_fingerprint(spark, args.input)}"
+    )
+    bench_fingerprint = (
+        f"{args.bench}:{input_fingerprint(spark, args.bench)}"
+        if args.bench else None
     )
     t0 = time.perf_counter()
     results = run_dedup_pipeline(
         spark, docs, args.output, args.checkpoint,
         buckets=args.buckets, k=args.shingle_k, n_hashes=args.n_hashes,
         bands=args.bands, max_bucket_size=args.max_bucket_size,
-        job_id=args.job_id, force=args.force,
-        bench=bench, bench_fingerprint=args.bench,
+        job_id=args.job_id, lineage=lineage, force=args.force,
+        bench=bench, bench_fingerprint=bench_fingerprint,
         decon_min_hits=args.decon_min_hits, scrub=args.scrub,
         clean=args.clean,
         clean_kwargs=(
@@ -941,10 +859,6 @@ def main(argv=None) -> int:
         epoch_default_ppm=args.epochs_default,
         span_k=args.span_dedup,
         shard_size=args.shard_size,
-        embeddings=embeddings, emb_fingerprint=args.embeddings,
-        semantic_threshold=args.semantic_threshold,
-        semantic_clusters=args.semantic_clusters,
-        semantic_max_cluster=args.semantic_max_cluster,
     )
     names = []
     if args.clean or args.normalize:
@@ -954,8 +868,6 @@ def main(argv=None) -> int:
     names.extend(["signatures", "clusters"])
     if bench is not None:
         names.append("contamination")
-    if embeddings is not None:
-        names.append("semantic")
     if args.mix_alpha is not None:
         names.append("mix_rates")
     names.append("output")

@@ -29,7 +29,6 @@ sort and no window; the rows come out through ``posexplode_outer``.
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import sys
@@ -41,7 +40,7 @@ from pyspark.sql import functions as F
 
 from geofeaturegeneration_spark.checkpoint import (
     CheckpointStore,
-    _fs_path,
+    input_fingerprint,
     run_partitioned,
 )
 from geofeaturegeneration_spark.config import EngineConfig
@@ -110,39 +109,6 @@ def build_features(seq_df, min_duration_s: float = 60.0):
         .where("_j IS NOT NULL")
         .selectExpr(*ENTITY, "_f.*")
     )
-
-
-def _hidden(name: str) -> bool:
-    """Whether Spark's file index drops a file or directory of this name
-    (``HadoopFSUtils.shouldFilterOutPathName``): markers, checksums,
-    ``_temporary/`` and ``.staging/`` trees, half-copied files. A ``_``
-    name holding ``=`` is a partition directory and is read."""
-    return (
-        name.startswith(".")
-        or (name.startswith("_") and "=" not in name)
-        or name.endswith("._COPYING_")
-    )
-
-
-def input_fingerprint(spark, path: str) -> str:
-    """Digest of the sorted (path, length, modification time) of the data
-    files under ``path``, listed by the driver through the Hadoop
-    FileSystem (no Spark job). A file counts only when no name on its path
-    below ``path`` is one Spark's reader skips (``_hidden``), so a crashed
-    writer's leftovers, or their cleanup, leave the digest as it was.
-    Rewriting the input in place changes the digest even when the path
-    stays the same."""
-    fs, root = _fs_path(spark, path)
-    prefix = fs.makeQualified(root).toString().rstrip("/") + "/"
-    files = []
-    it = fs.listFiles(root, True)
-    while it.hasNext():
-        st = it.next()
-        p = st.getPath().toString()
-        if not any(map(_hidden, p.removeprefix(prefix).split("/"))):
-            files.append(f"{p}\t{st.getLen()}\t{st.getModificationTime()}")
-    digest = hashlib.sha256("\n".join(sorted(files)).encode()).hexdigest()
-    return f"{len(files)}:{digest[:16]}"
 
 
 def main(argv=None) -> int:

@@ -81,6 +81,11 @@ def test_mark_and_completed(spark, tmp_path):
     spark.createDataFrame(rec, CHECKPOINT_SCHEMA).write.parquet(old)
     assert CheckpointStore(spark, old).completed("job", "v1") == set()
 
+    # the store's path is listed, not globbed: `{` and `[` in it are literal
+    braces = CheckpointStore(spark, str(tmp_path / "ck{1}[a]"))
+    braces.mark("job", "k0", "done", rows=1, lineage="v1")
+    assert braces.completed("job", "v1") == {"k0"}
+
 
 def test_resume_skips_done_and_output_identical(spark, seq, tmp_path):
     out1 = str(tmp_path / "out1")
@@ -1032,76 +1037,37 @@ def test_dedup_pipeline_shrinking_buckets_prunes_stale_partitions(
     assert _read_sorted_rows(spark, f"{out}/deduped") == clean
 
 
-def test_dedup_pipeline_semantic_stage(spark, tmp_path):
-    """--embeddings adds the SemDeDup stage: final output equals the
-    hand-composed minhash-keepers minus semantic drops; an immediate
-    re-run skips every stage; changing --semantic-threshold invalidates
-    (the knob is in the lineage key) and re-runs."""
+def test_dedup_main_rewritten_input_reruns_every_stage(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """``jobs/run_dedup.py``'s lineage holds the input's files, not only
+    its path: rewriting ``--input`` in place with other docs re-runs every
+    stage, and ``deduped/`` then equals a clean run over the new docs."""
     import jobs.run_dedup as RD
-    from geofeaturegeneration_spark.operators import (
-        dedup_clusters,
-        minhash_lsh_pairs,
-        semantic_dedup,
-        train_ivf_centroids,
-    )
 
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text", "source")
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select(F.col("vec_id").alias("doc_id"), "embedding")
+    monkeypatch.setattr(RD, "get_spark", lambda *a, **k: spark)
+    src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    inp = str(tmp_path / "docs")
 
-    out, ck = str(tmp_path / "out_sem"), str(tmp_path / "ck_sem")
-    kw = dict(buckets=3, k=3, n_hashes=16, bands=4, max_bucket_size=100,
-              embeddings=emb, emb_fingerprint="sf0.001",
-              semantic_threshold=0.3, semantic_clusters=8)
-    stages = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert len(stages) == 4  # signatures, clusters, semantic, output
-    assert all(not r.skipped for st in stages for r in st)
+    def run(out, ck):
+        capsys.readouterr()
+        assert RD.main(["--input", inp, "--output", out, "--checkpoint", ck,
+                        "--buckets", "2"]) == 0
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
-    # hand-composed: minhash keepers minus semantic drops
-    pairs = minhash_lsh_pairs(
-        docs, "doc_id", "text", k=3, n_hashes=16, bands=4,
-        max_bucket_size=100,
-    )
-    keepers = docs.join(
-        dedup_clusters(docs.select("doc_id"), "doc_id", pairs)
-        .filter("is_keeper").select("doc_id"),
-        "doc_id", "left_semi",
-    )
-    cents = train_ivf_centroids(emb, "doc_id", "embedding", k=8)
-    drops = semantic_dedup(
-        emb, "doc_id", "embedding", threshold=0.3, n_clusters=8,
-        centroids=cents,
-    ).filter(~F.col("keep")).select("doc_id")
-    want = sorted(
-        r["doc_id"]
-        for r in keepers.join(drops, "doc_id", "left_anti").collect()
-    )
-    got = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    )
-    assert got == want
-    # the semantic stage actually removed surviving docs (non-vacuous)
-    assert len(got) < keepers.count()
-    n_drops = spark.read.parquet(f"{out}/semantic").count()
-    assert n_drops > 0
+    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
+    src.filter(F.col("doc_id") % 2 == 0).write.parquet(inp)
+    first = run(out, ck)
+    assert all(st["skipped"] == 0 for st in first["stages"].values())
+    src.filter(F.col("doc_id") % 2 == 1).write.mode("overwrite").parquet(inp)
+    second = run(out, ck)
+    assert list(second["stages"]) == ["signatures", "clusters", "output"]
+    assert all(st["skipped"] == 0 for st in second["stages"].values())
 
-    # immediate re-run: everything skipped, output unchanged
-    st2 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw)
-    assert all(r.skipped for st in st2 for r in st)
-
-    # threshold change invalidates the semantic + downstream output stages
-    kw2 = dict(kw, semantic_threshold=0.99)
-    st3 = RD.run_dedup_pipeline(spark, docs, out, ck, **kw2)
-    assert all(not r.skipped for r in st3[2]), "semantic must re-run"
-    assert all(not r.skipped for r in st3[3]), "output must re-run"
-    got3 = sorted(
-        r["doc_id"] for r in spark.read.parquet(f"{out}/deduped").collect()
-    )
-    # at 0.99 nothing in this corpus is a semantic dup: pure minhash keepers
-    assert got3 == sorted(r["doc_id"] for r in keepers.collect())
+    clean = str(tmp_path / "clean")
+    run(clean, str(tmp_path / "ck_clean"))
+    got = _read_sorted_rows(spark, f"{out}/deduped")
+    assert got and got == _read_sorted_rows(spark, f"{clean}/deduped")
 
 
 def test_dedup_pipeline_normalize_stage(spark, tmp_path):
@@ -1293,56 +1259,3 @@ def test_dedup_pipeline_epoch_upsampling_export(spark, tmp_path):
             spark, docs, str(tmp_path / "x"), str(tmp_path / "y"),
             buckets=3, epoch_rates_ppm={"src0": 2_000_000},
         )
-
-
-def test_semantic_stage_empty_corpus_graceful(spark, tmp_path):
-    """A corpus that dies entirely upstream (here: every doc fails the C4
-    page verdict) must flow 0 rows through the remaining stages instead of
-    crashing the semantic quantizer trainer on an empty sample."""
-    import jobs.run_dedup as RD
-
-    docs = spark.createDataFrame(
-        [(i, "short line\nno punct") for i in range(8)],
-        "doc_id BIGINT, text STRING",
-    )
-    emb = spark.createDataFrame(
-        [(i, [float(i)] * 4) for i in range(8)],
-        "doc_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    stages = RD.run_dedup_pipeline(
-        spark, docs, str(tmp_path / "o"), str(tmp_path / "c"),
-        buckets=2, clean=True, embeddings=emb,
-    )
-    # every stage completed with zero rows (an all-empty partitioned
-    # write leaves no parquet footers, so assert on the recorded stage
-    # metrics rather than re-reading schema-less empty dirs)
-    assert all(r.rows == 0 for st in stages for r in st if r.rows is not None)
-
-
-def test_semantic_exemplar_must_survive_clean(spark, tmp_path):
-    """Regression: a doc removed by the C4 page verdict must not elect
-    itself the min-id semantic exemplar and drop a SURVIVING near-dup —
-    the survivor's content would vanish from the output entirely."""
-    import jobs.run_dedup as RD
-
-    good = "alpha beta gamma delta epsilon zeta.\n" * 4
-    rows = [
-        (1, "too short"),          # fails the page verdict
-        (2, good),                 # survives
-        (3, "also very short"),    # fails
-    ]
-    docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    # doc 2's vector is a near-dup of dropped doc 1's
-    emb = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0]),
-         (2, [0.999, 0.001, 0.0, 0.0]),
-         (3, [0.0, 1.0, 0.0, 0.0])],
-        "doc_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    RD.run_dedup_pipeline(
-        spark, docs, str(tmp_path / "o"), str(tmp_path / "c"),
-        buckets=2, clean=True, embeddings=emb,
-        semantic_clusters=2, semantic_threshold=0.95,
-    )
-    deduped = spark.read.parquet(str(tmp_path / "o" / "deduped"))
-    assert [r["doc_id"] for r in deduped.collect()] == [2]

@@ -1,9 +1,8 @@
-"""Unit tests for the training-data pipeline operators: dedup, similarity,
-text analysis. Property-style checks against small hand-built corpora
+"""Unit tests for the training-data pipeline operators: dedup and text
+analysis. Property-style checks against small hand-built corpora
 (the DuckDB value-exact check runs separately via
 tools/compare_oracle.py / the external driver)."""
 
-import math
 import os
 import sys
 
@@ -21,12 +20,9 @@ from geofeaturegeneration_spark.functions.text import (
     token_count,
 )
 from geofeaturegeneration_spark.operators import (
-    ann_lsh_topk,
-    cosine_topk,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    semantic_dedup,
     simhash,
     simhash_pairs,
 )
@@ -84,55 +80,6 @@ def test_simhash_identical_and_pairs(spark, corpus):
     assert pairs[(1, 2)] == 0
 
 
-@pytest.fixture(scope="module")
-def vectors(spark):
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),   # closest to 0
-        (2, [0.0, 1.0, 0.0, 0.0]),
-        (3, [-1.0, 0.0, 0.0, 0.0]),  # opposite of 0
-    ]
-    return spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-
-
-def test_cosine_topk_ordering(spark, vectors):
-    out = cosine_topk(vectors, "vec_id", "embedding", k=3)
-    for_zero = sorted(
-        ((r["rank"], r["nn_id"], r["cos_sim"]) for r in out.collect() if r["vec_id"] == 0)
-    )
-    assert [x[1] for x in for_zero] == [1, 2, 3]   # by decreasing cosine
-    assert for_zero[0][2] == pytest.approx(0.9 / math.sqrt(0.82), abs=1e-6)
-    assert for_zero[2][2] == -1.0
-
-
-def test_cosine_topk_blocked_matches_join(spark, vectors):
-    """The blocked-GEMM plan is an exactness twin of the fold-join plan:
-    identical rows on the canonical 4-vector fixture AND on the sf0.001
-    embeddings table (500 dense random vectors, every block pair hit,
-    including blocks with k-boundary candidates in multiple tiles)."""
-    from geofeaturegeneration_spark.operators import cosine_topk_blocked
-
-    a = sorted(map(tuple, cosine_topk(vectors, "vec_id", "embedding", k=3).collect()))
-    b = sorted(map(tuple, cosine_topk_blocked(
-        vectors, "vec_id", "embedding", k=3, n_blocks=3).collect()))
-    assert a == b
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    ra = sorted(map(tuple, cosine_topk(emb, "vec_id", "embedding", k=5).collect()))
-    rb = sorted(map(tuple, cosine_topk_blocked(
-        emb, "vec_id", "embedding", k=5, n_blocks=8).collect()))
-    assert ra == rb
-
-
-def test_ann_lsh_restricts_to_bucket(spark, vectors):
-    out = ann_lsh_topk(vectors, "vec_id", "embedding", k=3, n_bits=4)
-    rows = out.collect()
-    # 0 and 1 share sign pattern (+,0/.. bucket bit0 only); 3 is alone
-    buckets = {r["vec_id"]: r["bucket"] for r in rows}
-    for r in rows:
-        assert buckets[r["nn_id"]] == r["bucket"]
-    assert not any(r["vec_id"] == 3 for r in rows)  # lone bucket -> no rows
-
-
 def test_lang_id_and_quality(spark):
     rows = [
         (1, "the cat and the dog of the house"),
@@ -164,208 +111,6 @@ def test_lang_stopword_lists_disjoint_enough(spark):
     assert not (en & fr) and not (en & de) and not (fr & de)
 
 
-def test_ann_ivf_topk(spark, vectors):
-    from geofeaturegeneration_spark.operators import ann_ivf_topk
-
-    # centroids = first 2 vectors (ids 0, 1); every vector lands in list 1
-    # or 2 by cosine to those seeds
-    out = ann_ivf_topk(vectors, "vec_id", "embedding", k=3, n_centroids=2)
-    rows = out.collect()
-    assert all(r["list_id"] in (1, 2) for r in rows)
-    # assignment by cosine to seed centroids (c1 = vec0, c2 = vec1):
-    # vec0 -> list 1; vec1, vec2, vec3 -> list 2. vec 3's in-list
-    # neighbors are therefore {1, 2}, ranked 2 first (cos 0 > cos -0.994)
-    mine = [r for r in rows if r["vec_id"] == 3]
-    assert [r["nn_id"] for r in mine] == [2, 1]
-    # nprobe=2 searches both lists -> vec 3 now also sees 0 and 1
-    out2 = ann_ivf_topk(vectors, "vec_id", "embedding", k=3, n_centroids=2, nprobe=2)
-    mine2 = {r["nn_id"] for r in out2.collect() if r["vec_id"] == 3}
-    assert mine2 == {0, 1, 2}
-
-
-def test_ann_lsh_multi_gemm_matches_fold_hasher(spark):
-    """The GEMM hashing stage must reproduce the expression-fold hasher's
-    buckets (hence candidates, hence output) exactly — a sign flip would
-    need a hyperplane dot within ~1e-13 of zero."""
-    from geofeaturegeneration_spark.operators import (
-        ann_lsh_multi_topk,
-        embedding_neardup_multi_pairs,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    for use_gemm in (False, True):
-        out = sorted(
-            map(
-                tuple,
-                ann_lsh_multi_topk(
-                    emb, "vec_id", "embedding", dim=64, k=3, n_tables=3,
-                    n_bits=8, use_gemm_hasher=use_gemm,
-                ).collect(),
-            )
-        )
-        if not use_gemm:
-            want = out
-        else:
-            assert out == want
-    for use_gemm in (False, True):
-        pairs = sorted(
-            map(
-                tuple,
-                embedding_neardup_multi_pairs(
-                    emb, "vec_id", "embedding", dim=64, threshold=0.3,
-                    n_tables=3, n_bits=8, use_gemm_hasher=use_gemm,
-                ).collect(),
-            )
-        )
-        if not use_gemm:
-            want_p = pairs
-        else:
-            assert pairs == want_p
-
-
-def test_ann_ivf_blocked_matches_join_form(spark):
-    """The blocked-GEMM IVF plan must reproduce the join form exactly —
-    same assignment (ties to smaller _cid), same candidates, same ranks —
-    at nprobe 1 and 2, including when sub-blocks are finer than lists, and
-    including degenerate inputs (a NULL and a zero-norm vector, which both
-    forms must exclude rather than crash on / NaN-rank differently)."""
-    from geofeaturegeneration_spark.operators import (
-        ann_ivf_topk,
-        ann_ivf_topk_blocked,
-    )
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    degenerate = spark.createDataFrame(
-        [(100001, None), (100002, [0.0] * 64)],
-        "vec_id BIGINT, embedding ARRAY<FLOAT>",
-    )
-    emb = emb.select("vec_id", "embedding").unionByName(degenerate)
-    for nprobe in (1, 2):
-        want = sorted(
-            map(
-                tuple,
-                ann_ivf_topk(
-                    emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=nprobe
-                ).collect(),
-            )
-        )
-        for n_blocks in (1, 4):
-            got = sorted(
-                map(
-                    tuple,
-                    ann_ivf_topk_blocked(
-                        emb, "vec_id", "embedding", k=3, n_centroids=8,
-                        nprobe=nprobe, n_blocks=n_blocks,
-                    ).collect(),
-                )
-            )
-            assert got == want, (nprobe, n_blocks)
-
-
-def test_embedding_neardup_pairs(spark):
-    from geofeaturegeneration_spark.operators import embedding_neardup_pairs
-
-    rows = [
-        (0, [1.0, 0.02, 0.0, 0.0]),   # sign pattern (+,+,0,0) = bucket 3
-        (1, [0.99, 0.01, 0.0, 0.0]),  # near-dup of 0, same sign bucket
-        (2, [0.0, 1.0, 0.0, 0.0]),    # different bucket
-        (3, [1.0, 0.01, 0.0, 0.0]),   # near-dup of 0 and 1
-    ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-    out = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in
-           embedding_neardup_pairs(df, "vec_id", "embedding", threshold=0.99, n_bits=4).collect()}
-    assert set(out) == {(0, 1), (0, 3), (1, 3)}
-    assert all(v >= 0.99 for v in out.values())
-
-
-def test_multi_table_lsh_amplifies_recall(spark):
-    """OR-ing T independent random-hyperplane tables must beat one table
-    (candidates of T tables are a superset of table 0's, so recall is
-    monotone in T by construction) and the legacy raw-leading-dims bucket.
-    Measured on the deterministic sf0.001 embeddings (500 x 64): raw-dims
-    0.146, 1 table 0.135, 3 tables 0.372, 6 tables 0.578 (recall@3 vs the
-    exact cosine_topk ground truth)."""
-    from geofeaturegeneration_spark.operators import ann_lsh_multi_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    gt = {
-        (r["vec_id"], r["nn_id"])
-        for r in cosine_topk(emb, "vec_id", "embedding", k=3).collect()
-    }
-
-    def recall(df):
-        got = {(r["vec_id"], r["nn_id"]) for r in df.collect()}
-        return len(got & gt) / len(gt)
-
-    r_raw = recall(ann_lsh_topk(emb, "vec_id", "embedding", k=3, n_bits=4))
-    r_t1 = recall(
-        ann_lsh_multi_topk(emb, "vec_id", "embedding", dim=64, k=3, n_tables=1, n_bits=4)
-    )
-    r_t3 = recall(
-        ann_lsh_multi_topk(emb, "vec_id", "embedding", dim=64, k=3, n_tables=3, n_bits=4)
-    )
-    assert r_t3 >= 2 * r_t1, (r_t1, r_t3)
-    assert r_t3 > r_raw, (r_raw, r_t3)
-    assert r_t3 >= 0.3, r_t3
-
-
-def test_embedding_neardup_multi_pairs(spark, vectors):
-    """Near-identical vectors co-bucket in every hyperplane table (their
-    sign patterns agree); opposite vectors are excluded by the exact-cosine
-    verify even when hashed together."""
-    from geofeaturegeneration_spark.operators import embedding_neardup_multi_pairs
-
-    out = embedding_neardup_multi_pairs(
-        vectors, "vec_id", "embedding", dim=4, threshold=0.9, n_tables=3, n_bits=4
-    ).collect()
-    pairs = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in out}
-    assert set(pairs) == {(0, 1)}
-    assert pairs[(0, 1)] == pytest.approx(0.9 / math.sqrt(0.82), abs=1e-6)
-
-
-def test_lsh_bucket_cap_drops_degenerate_buckets(spark):
-    """Adversarial constant vectors co-bucket in EVERY hyperplane table
-    (identical sign patterns), so without a cap the per-bucket self-join is
-    quadratic in the cluster size across all T tables at once.
-    max_bucket_size drops those cells while genuinely small buckets (the
-    real near-dup pair) survive, and the plan stays equi-join only."""
-    from geofeaturegeneration_spark.operators import (
-        ann_lsh_multi_topk,
-        embedding_neardup_multi_pairs,
-    )
-
-    const = [(i, [1.0, 1.0, 1.0, 1.0]) for i in range(30)]
-    neardup = [(100, [1.0, -1.0, 0.5, -0.5]), (101, [1.0, -1.0, 0.5, -0.4])]
-    df = spark.createDataFrame(
-        const + neardup, "vec_id INT, embedding ARRAY<FLOAT>"
-    )
-
-    capped = embedding_neardup_multi_pairs(
-        df, "vec_id", "embedding", dim=4, threshold=0.9,
-        n_tables=3, n_bits=4, max_bucket_size=5,
-    )
-    pairs = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert (100, 101) in pairs              # small bucket survives the cap
-    assert not any(a < 100 for a, _ in pairs)   # constant cluster dropped
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-    # uncapped keeps the quadratic cluster: 30*29/2 constant pairs
-    uncapped = embedding_neardup_multi_pairs(
-        df, "vec_id", "embedding", dim=4, threshold=0.9, n_tables=3, n_bits=4
-    ).count()
-    assert uncapped == 30 * 29 // 2 + 1
-
-    # same guard on the top-k variant
-    topk = ann_lsh_multi_topk(
-        df, "vec_id", "embedding", dim=4, k=3,
-        n_tables=3, n_bits=4, max_bucket_size=5,
-    )
-    got = {(r["vec_id"], r["nn_id"]) for r in topk.collect()}
-    assert got == {(100, 101), (101, 100)}
-
-
 def test_ngram_max_doc_freq_cap(spark):
     """A shingle shared by more than max_doc_freq docs is removed from the
     universe BEFORE sizes: 4 docs tied together only by one stopword-like
@@ -392,111 +137,6 @@ def test_ngram_max_doc_freq_cap(spark):
         df, "doc_id", "text", k=3, threshold=0.1, max_doc_freq=4
     )
     assert {(r["id_a"], r["id_b"]): r["jaccard"] for r in loose.collect()} == vals
-
-
-def test_ivf_trained_quantizers_on_clustered_data(spark):
-    """The first-N-by-id seed quantizer is pathological exactly when id
-    order correlates with the data source (the production norm): if the
-    first N vectors all come from one cluster, other clusters' queries land
-    in home lists full of unrelated vectors. On this 3-cluster fixture the
-    measured numbers are: worst-case cosine to the nearest centroid
-    ("coverage") seed -0.24 vs fps +0.58 / km +0.68, and IVF recall@3 at
-    nprobe=1 seed 0.467 vs fps 0.764 / km 0.723. (Raw list-size imbalance
-    does not discriminate on synthetic mixtures — seed centroids split
-    their own cluster evenly while stranding the rest — so the assertions
-    pin coverage and recall, the metrics that actually degrade.)"""
-    import numpy as np
-
-    from geofeaturegeneration_spark.operators import (
-        ann_ivf_topk,
-        farthest_point_centroids,
-        train_ivf_centroids,
-    )
-
-    rng = np.random.default_rng(11)
-    dim, centers = 16, rng.normal(size=(3, 16))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    # ids 0..199 all draw from cluster 0 (id order ~ source order), then
-    # clusters 1 and 2 — the first-8 seed set is entirely cluster 0
-    for cl, n in [(0, 200), (1, 100), (2, 100)]:
-        for _ in range(n):
-            v = centers[cl] + 0.15 * rng.normal(size=dim)
-            rows.append((len(rows), [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-    X = np.array([r[1] for r in rows], dtype=np.float64)
-    X /= np.linalg.norm(X, axis=1, keepdims=True)
-
-    gt = {
-        (r["vec_id"], r["nn_id"])
-        for r in cosine_topk(df, "vec_id", "embedding", k=3).collect()
-    }
-
-    def recall(cents):
-        got = ann_ivf_topk(
-            df, "vec_id", "embedding", k=3, n_centroids=8, nprobe=1, centroids=cents
-        ).collect()
-        return len({(r["vec_id"], r["nn_id"]) for r in got} & gt) / len(gt)
-
-    def coverage(cent_rows):
-        C = np.array([c[1] for c in cent_rows], dtype=np.float64)
-        Cn = np.array([c[2] for c in cent_rows], dtype=np.float64)
-        return (X @ (C / np.maximum(Cn, 1e-300)[:, None]).T).max(axis=1).min()
-
-    fps_df = farthest_point_centroids(df, "vec_id", "embedding", 8)
-    km_df = train_ivf_centroids(df, "vec_id", "embedding", 8, sample_n=400)
-    fps = [(r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in fps_df.collect()]
-    km = [(r["_cid"], list(r["_cv"]), float(r["_cn"])) for r in km_df.collect()]
-    from geofeaturegeneration_spark.operators.similarity import with_norm
-
-    seed_rows = with_norm(df, "vec_id", "embedding").orderBy("vec_id").limit(8).collect()
-    seed = [(i + 1, list(r["_v"]), float(r["_n"])) for i, r in enumerate(seed_rows)]
-
-    r_seed = recall(None)
-    r_fps = recall(spark.createDataFrame(fps, "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"))
-    r_km = recall(spark.createDataFrame(km, "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE"))
-    assert r_fps > r_seed + 0.2, (r_seed, r_fps)
-    assert r_km > r_seed + 0.2, (r_seed, r_km)
-    assert coverage(fps) > coverage(seed) + 0.5
-    assert coverage(km) > coverage(seed) + 0.5
-    # trained quantizers cover every true cluster (cos >= 0.8 to each centre)
-    for cents in (fps, km):
-        C = np.array([c[1] for c in cents], dtype=np.float64)
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-        assert (centers @ C.T).max(axis=1).min() >= 0.8
-
-
-def test_hp_dim_mismatch_fails_fast(spark, vectors):
-    """zip_with would silently null-pad a wrong-dim vector; the guard must
-    throw instead."""
-    from geofeaturegeneration_spark.operators import ann_lsh_multi_topk
-
-    with pytest.raises(Exception, match="hyperplane dim"):
-        ann_lsh_multi_topk(
-            vectors, "vec_id", "embedding", dim=8, k=3, n_tables=1, n_bits=2
-        ).collect()
-
-
-def test_ann_ivf_nprobe_monotone_recall(spark):
-    """Probing more inverted lists can only widen each query's candidate
-    set, so recall vs the exact ground truth must be monotone in nprobe."""
-    from geofeaturegeneration_spark.operators import ann_ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    gt = {
-        (r["vec_id"], r["nn_id"])
-        for r in cosine_topk(emb, "vec_id", "embedding", k=3).collect()
-    }
-
-    def recall(nprobe):
-        got = ann_ivf_topk(
-            emb, "vec_id", "embedding", k=3, n_centroids=8, nprobe=nprobe
-        ).collect()
-        return len({(r["vec_id"], r["nn_id"]) for r in got} & gt) / len(gt)
-
-    r1, r2, r4 = recall(1), recall(2), recall(4)
-    assert r1 <= r2 <= r4, (r1, r2, r4)
-    assert r4 > r1, (r1, r4)  # wider probes must actually help on this data
 
 
 def test_connected_components_and_dedup_clusters(spark):
@@ -561,20 +201,6 @@ def test_repetition_signals_hand_computed(spark):
     assert got[2]["dwf"] == 0.0 and got[2]["tws"] == 0.5 and got[2]["tbs"] == 1.0
     assert got[3]["tbs"] == 0.0 and got[3]["tws"] == 1.0
     assert got[4]["dlf"] == pytest.approx(1 / 3, abs=1e-6)
-
-
-def test_hp_null_embedding_skipped(spark):
-    from geofeaturegeneration_spark.operators import ann_lsh_multi_topk
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.9, 0.1, 0.0, 0.0]), (2, None)],
-        "vec_id INT, embedding ARRAY<FLOAT>",
-    )
-    out = ann_lsh_multi_topk(
-        df, "vec_id", "embedding", dim=4, k=3, n_tables=2, n_bits=2
-    ).collect()
-    ids = {r["vec_id"] for r in out} | {r["nn_id"] for r in out}
-    assert 2 not in ids  # null vector neither queries nor matches
 
 
 def test_dedup_clusters_keeper_exists_when_pairs_exceed_docs(spark):
@@ -747,311 +373,6 @@ def test_span_dedup_python_oracle_parity(spark):
     assert got == want
     # the random corpus genuinely exercised the operator
     assert sum(d for _, _, d in want.values()) > 50
-
-
-# ---------------------------------------------------------------------------
-# semantic_dedup (SemDeDup, Abbas et al. 2023)
-# ---------------------------------------------------------------------------
-
-
-def _sem_corpus(spark):
-    """Two well-separated directions (x-ish and y-ish); ids ordered so the
-    min-id exemplar rule is observable. 10,11,12 are x-cluster near-dups of
-    each other; 20,21 are y-cluster near-dups; 30 is x-cluster but far from
-    everything (kept)."""
-    rows = [
-        (10, [1.0, 0.02, 0.0, 0.0]),
-        (11, [1.0, 0.01, 0.0, 0.0]),   # near-dup of 10 -> dropped
-        (12, [0.99, 0.03, 0.0, 0.0]),  # near-dup of 10 -> dropped
-        (30, [0.72, 0.69, 0.0, 0.0]),  # x-side but ~45 deg away -> kept
-        (20, [0.0, 1.0, 0.01, 0.0]),
-        (21, [0.0, 1.0, 0.02, 0.0]),   # near-dup of 20 -> dropped
-    ]
-    return spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-
-
-def _sem_centroids(spark):
-    return spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0], 1.0), (2, [0.0, 1.0, 0.0, 0.0], 1.0)],
-        "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE",
-    )
-
-
-def test_semantic_dedup_min_id_exemplar(spark):
-    out = semantic_dedup(
-        _sem_corpus(spark), "vec_id", "embedding",
-        threshold=0.99, centroids=_sem_centroids(spark),
-    )
-    got = {r.vec_id: (r.cluster_id, r.keep) for r in out.collect()}
-    assert got == {
-        10: (1, True),
-        11: (1, False),
-        12: (1, False),
-        30: (1, True),   # same cluster, below threshold to everything
-        20: (2, True),
-        21: (2, False),
-    }
-
-
-def test_semantic_dedup_cross_cluster_blindness(spark):
-    """Near-identical vectors in DIFFERENT clusters are both kept — the
-    documented SemDeDup trade (pairs only meet within a cluster); recall
-    across the boundary is the quantizer's job, not the screen's."""
-    rows = [
-        (1, [1.0, 1.0, 0.0, 0.0]),   # equidistant-ish, lands cluster 1 (tie->cid asc)
-        (2, [1.0, 1.001, 0.0, 0.0]),  # nearly identical but tips to cluster 2
-    ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-    out = semantic_dedup(
-        df, "vec_id", "embedding", threshold=0.9,
-        centroids=_sem_centroids(spark),
-    )
-    got = {r.vec_id: (r.cluster_id, r.keep) for r in out.collect()}
-    assert got == {1: (1, True), 2: (2, True)}
-
-
-def test_semantic_dedup_degenerate_vectors_kept(spark):
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.0, 0.0, 0.0, 0.0]),   # zero norm: no direction
-        (3, None),                   # null vector
-    ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-    out = semantic_dedup(
-        df, "vec_id", "embedding", threshold=0.5,
-        centroids=_sem_centroids(spark),
-    )
-    got = {r.vec_id: (r.cluster_id, r.keep) for r in out.collect()}
-    assert got == {1: (1, True), 2: (None, True), 3: (None, True)}
-
-
-def test_similarity_zero_norm_excluded_and_ties_deterministic(spark):
-    """The two fuzz-found rules (tools/fuzz_oracle.py, round 4), pinned:
-
-    1. zero-norm / null vectors are excluded from every cosine operator on
-       BOTH sides — under ANSI mode the join forms previously threw
-       DIVIDE_BY_ZERO the moment a corpus contained one zero vector;
-    2. top-k rank ties break on the ROUNDED cosine then nn_id: two scaled
-       copies of one direction (cos exactly equal in real arithmetic) must
-       rank by id in every physical form, not by which engine's float
-       association computed the larger 16th decimal."""
-    from geofeaturegeneration_spark.operators import (
-        cosine_topk_blocked,
-        embedding_neardup_pairs,
-        farthest_point_centroids,
-    )
-
-    rows = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.0, 1.0, 0.0, 0.0]),
-        (3, [0.0, 0.0, 0.0, 0.0]),        # zero norm
-        (4, None),                        # null
-        (5, [1e-30, 1e-30, 0.0, 0.0]),    # same direction, tiny scale
-        (6, [1e18, 1e18, 0.0, 0.0]),      # same direction, huge scale
-    ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-
-    for fn in (cosine_topk, lambda d, i, v, k: cosine_topk_blocked(d, i, v, k=k)):
-        out = fn(df, "vec_id", "embedding", 6).collect()
-        ids = {r.vec_id for r in out} | {r.nn_id for r in out}
-        assert 3 not in ids and 4 not in ids, "zero/null vector not excluded"
-        # 5 and 6 are exact ties from vec 1's viewpoint: id order decides
-        nn1 = [r.nn_id for r in sorted(out, key=lambda r: r.rank) if r.vec_id == 1]
-        assert nn1.index(5) < nn1.index(6), f"tie not id-ordered: {nn1}"
-
-    pairs = embedding_neardup_pairs(
-        df, "vec_id", "embedding", threshold=0.9, n_bits=4
-    )
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (5, 6) in got and all(3 not in p and 4 not in p for p in got)
-
-    cents = farthest_point_centroids(df, "vec_id", "embedding", k=3).collect()
-    assert all(c["_cn"] > 0 for c in cents), "zero-norm vector became a seed"
-
-    out = ann_lsh_topk(df, "vec_id", "embedding", k=6, n_bits=4).collect()
-    ids = {r.vec_id for r in out} | {r.nn_id for r in out}
-    assert 3 not in ids and 4 not in ids
-
-
-def test_semantic_dedup_max_cluster_size_exempts(spark):
-    """A cluster above the cap skips the screen entirely (all kept) — the
-    explicit bound against a degenerate quantizer piling the corpus into
-    one list; the other cluster still dedups."""
-    out = semantic_dedup(
-        _sem_corpus(spark), "vec_id", "embedding",
-        threshold=0.99, centroids=_sem_centroids(spark),
-        max_cluster_size=3,
-    )
-    got = {r.vec_id: (r.cluster_id, r.keep) for r in out.collect()}
-    # cluster 1 has 4 members (> 3): exempt; cluster 2 has 2: screened
-    assert got == {
-        10: (1, True), 11: (1, True), 12: (1, True), 30: (1, True),
-        20: (2, True), 21: (2, False),
-    }
-
-
-def test_semantic_dedup_default_quantizer_and_invariance(spark):
-    """Default farthest-point quantizer path; output invariant under input
-    partitioning (the keep rule depends only on ids and cosines)."""
-    df = _sem_corpus(spark)
-    a = semantic_dedup(df, "vec_id", "embedding", threshold=0.99, n_clusters=2)
-    b = semantic_dedup(
-        df.repartition(7), "vec_id", "embedding", threshold=0.99, n_clusters=2
-    )
-    ga = sorted((r.vec_id, r.cluster_id, r.keep) for r in a.collect())
-    gb = sorted((r.vec_id, r.cluster_id, r.keep) for r in b.collect())
-    assert ga == gb
-    assert sum(1 for _, _, k in ga if not k) == 3  # same 3 near-dups drop
-
-
-def _ref_lloyd(rows, cents, iters, scale=10**9):
-    """Independent pure-Python quantized spherical Lloyd — the semantics
-    lloyd_refine promises, written row-at-a-time: argmax cos (ties to the
-    smaller cid), per-coordinate HALF_UP round(scale*x/|x|) int sums,
-    left-associated sum-of-squares finisher. rows = [(id, [float32 vals])]."""
-    import math
-
-    def half_up(v):
-        return math.floor(v + 0.5) if v >= 0 else math.ceil(v - 0.5)
-
-    # float32 storage then double widening, like ARRAY<FLOAT> -> _to_double
-    import numpy as np
-
-    X = [[float(np.float32(x)) for x in vec] for _, vec in rows]
-    norms = []
-    for v in X:
-        acc = 0.0
-        for x in v:
-            acc = acc + x * x
-        norms.append(math.sqrt(acc))
-    cents = [(cid, list(cv), cn) for cid, cv, cn in cents]
-    dim = len(cents[0][1])
-    for _ in range(iters):
-        sums = {}
-        for v, n in zip(X, norms):
-            if n <= 0:
-                continue
-            best = None
-            for cid, cv, cn in cents:
-                acc = 0.0
-                for x, c in zip(v, cv):
-                    acc = acc + x * c
-                key = (acc / (n * cn), -cid)
-                if best is None or key > best[0]:
-                    best = (key, cid)
-            cid = best[1]
-            s = sums.setdefault(cid, [0] * dim)
-            for d, x in enumerate(v):
-                s[d] += half_up(scale * x / n)
-        nxt = []
-        for cid, cv, cn in cents:
-            if cid not in sums:
-                nxt.append((cid, cv, cn))
-                continue
-            sv = [float(s) for s in sums[cid]]
-            acc = 0.0
-            for x in sv:
-                acc = acc + x * x
-            nrm = math.sqrt(acc)
-            if nrm == 0.0:
-                nxt.append((cid, cv, cn))
-                continue
-            nxt.append((cid, [x / nrm for x in sv], 1.0))
-        cents = nxt
-    return cents
-
-
-def test_lloyd_refine_matches_reference_and_improves(spark):
-    """lloyd_refine == the independent reference bit-for-bit after 2
-    full-corpus iterations, and the refined quantizer covers every true
-    cluster direction better than the raw farthest-point seeds."""
-    import numpy as np
-
-    from geofeaturegeneration_spark.operators import (
-        farthest_point_centroids,
-        lloyd_refine,
-    )
-
-    rng = np.random.default_rng(23)
-    dim, centers = 8, rng.normal(size=(3, 8))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    rows = []
-    for cl, n in [(0, 40), (1, 25), (2, 15)]:
-        for _ in range(n):
-            v = centers[cl] + 0.2 * rng.normal(size=dim)
-            rows.append((len(rows), [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-
-    seeds_df = farthest_point_centroids(df, "vec_id", "embedding", k=3)
-    seeds = [
-        (int(r["_cid"]), list(r["_cv"]), float(r["_cn"]))
-        for r in seeds_df.orderBy("_cid").collect()
-    ]
-    got = lloyd_refine(df, "vec_id", "embedding", seeds_df, iters=2)
-    got_rows = [
-        (int(r["_cid"]), list(r["_cv"]), float(r["_cn"]))
-        for r in got.orderBy("_cid").collect()
-    ]
-    exp = _ref_lloyd(rows, seeds, iters=2)
-    assert got_rows == exp  # exact, no tolerance
-
-    def cover(cents):
-        C = np.array([c[1] for c in cents], dtype=np.float64)
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-300)
-        return (centers @ C.T).max(axis=1).min()
-
-    assert cover(got_rows) >= cover(seeds) - 1e-12
-    assert cover(got_rows) >= 0.95  # every true direction is represented
-
-
-def test_lloyd_refine_partitioning_invariant(spark):
-    """The scaled-int sums make the refined centroids EXACTLY equal under
-    any input partitioning — the property a float avg() k-means lacks."""
-    import numpy as np
-
-    from geofeaturegeneration_spark.operators import (
-        farthest_point_centroids,
-        lloyd_refine,
-    )
-
-    rng = np.random.default_rng(7)
-    rows = [
-        (i, [float(x) for x in rng.normal(size=6)]) for i in range(80)
-    ]
-    df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<FLOAT>")
-    cents = farthest_point_centroids(df, "vec_id", "embedding", k=4)
-    a = lloyd_refine(df, "vec_id", "embedding", cents, iters=2).collect()
-    b = lloyd_refine(
-        df.repartition(13), "vec_id", "embedding", cents, iters=2
-    ).collect()
-    ka = sorted((r["_cid"], list(r["_cv"]), r["_cn"]) for r in a)
-    kb = sorted((r["_cid"], list(r["_cv"]), r["_cn"]) for r in b)
-    assert ka == kb
-
-
-def test_lloyd_refine_empty_cluster_keeps_seed(spark):
-    """A centroid that captures no vectors (and iters=0) passes through
-    unchanged — Lloyd never invents or drops a center."""
-    from geofeaturegeneration_spark.operators import lloyd_refine
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.9, 0.1]), (3, [0.0, 0.0])],  # 3: zero-norm
-        "vec_id INT, embedding ARRAY<FLOAT>",
-    )
-    cents = spark.createDataFrame(
-        [(1, [1.0, 0.0], 1.0), (2, [-1.0, 0.0], 1.0)],
-        "_cid INT, _cv ARRAY<DOUBLE>, _cn DOUBLE",
-    )
-    out = {
-        r["_cid"]: (list(r["_cv"]), r["_cn"])
-        for r in lloyd_refine(df, "vec_id", "embedding", cents, iters=1).collect()
-    }
-    assert out[2] == ([-1.0, 0.0], 1.0)  # empty cluster: seed kept verbatim
-    assert out[1][0][0] > 0.99  # the +x cluster mean stays on +x
-    same = lloyd_refine(df, "vec_id", "embedding", cents, iters=0).collect()
-    assert sorted((r["_cid"], list(r["_cv"]), r["_cn"]) for r in same) == [
-        (1, [1.0, 0.0], 1.0), (2, [-1.0, 0.0], 1.0),
-    ]
 
 
 # ---------------------------------------------------------------------------

@@ -119,42 +119,10 @@ def test_asof_union_is_single_shuffle_no_join(spark):
 
 def test_bucketed_candidate_joins_not_cartesian(spark):
     qs = all_queries()
-    for name in ["ann_lsh", "ann_ivf", "minhash_pairs", "ngram_jaccard"]:
+    for name in ["minhash_pairs", "ngram_jaccard"]:
         plan = plan_str(qs[name](spark, SF_DIR), "simple")
         assert "CartesianProduct" not in plan, name
-        # (round 4: ann_ivf is now the blocked-GEMM plan — the centroid
-        # cross join moved to the ann_ivf_join exactness twin)
         assert "BroadcastNestedLoopJoin" not in plan, name
-
-
-# Queries whose plans INTENTIONALLY contain an unconditioned join, each
-# against a bounded-small broadcast side:
-#   cosine_topk_join — the documented O(n^2) exact fold-join baseline,
-#     kept as the exactness twin of the contract's blocked-GEMM plan.
-#   ann_ivf_join — the join-form IVF twin: vectors x k=8 centroids
-#     assignment; the nested-loop build side is the k-row quantizer,
-#     never the corpus.
-_UNCONDITIONED_JOIN_ALLOWLIST = {"cosine_topk_join", "ann_ivf_join"}
-
-
-def test_cosine_topk_blocked_has_no_join(spark):
-    """Round-3: the contract's exact top-k is the blocked-GEMM plan — tiles
-    form by narrow explode + cogroup shuffle, so the plan must carry NO join
-    operator of any kind (the n^2 meeting happens inside Arrow batches)."""
-    plan = plan_str(E.queries()["cosine_topk"](spark, SF_DIR), "simple")
-    assert "Join" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_ann_ivf_blocked_has_no_join(spark):
-    """Round-4: the contract's IVF search is the blocked-GEMM plan —
-    assignment is a mapInPandas GEMM (no broadcast cross join, no
-    assignment window exchange) and inverted lists meet in a cogroup, so
-    the plan must carry NO join operator of any kind."""
-    for name in ("ann_ivf", "ann_ivf_trained"):
-        plan = plan_str(all_queries()[name](spark, SF_DIR), "simple")
-        assert "Join" not in plan, (name, plan)
-        assert "CartesianProduct" not in plan, (name, plan)
 
 
 def test_vocab_id_pass_reads_checkpointed_ranges(spark, tmp_path):
@@ -181,14 +149,11 @@ def test_vocab_id_pass_reads_checkpointed_ranges(spark, tmp_path):
 
 def test_no_unconditioned_join_in_any_contract_query(spark):
     """Round-1 lesson: the audit checked selected plans and missed a
-    cross join in negative_samples. Sweep EVERY contract + extra query: no
-    CartesianProduct, and no BroadcastNestedLoopJoin outside the
-    documented bounded-small allowlist."""
+    cross join in negative_samples. Sweep EVERY contract + extra query,
+    with no exemption: no CartesianProduct and no BroadcastNestedLoopJoin."""
     qs = all_queries()
     bad = {}
     for name, fn in qs.items():
-        if name in _UNCONDITIONED_JOIN_ALLOWLIST:
-            continue
         plan = plan_str(fn(spark, SF_DIR), "simple")
         hits = [
             op
@@ -417,34 +382,6 @@ def test_top_customers_global_window_is_post_limit(spark):
         or [-1]
     )
     assert limit_at != -1, f"no limit below the global window:\n{phys}"
-
-
-def test_tile_cogroups_pinned_against_aqe_coalesce(spark):
-    """GEMM-tile scale guard (round 4): the blocked-GEMM cogroups
-    (cosine_topk, ann_ivf family, semantic_dedup) are Python-CPU-heavy per
-    BYTE, and AQE's size-based coalescing — which cannot see Python cost —
-    folds the cogroup exchange down to a handful of tasks whenever the map
-    side reports few bytes (measured: a 1-partition 100k-vector input
-    collapsed the 64-tile cogroup to ONE task, 481 s instead of ~60 s).
-    Both cogroup sides therefore carry an explicit ``repartition(n, keys)``
-    whose exchange is REPARTITION_BY_NUM — exempt from AQE coalescing and
-    satisfying the cogroup's required hash distribution with no extra
-    exchange. Pinned: every tile plan has exactly 2 REPARTITION_BY_NUM
-    exchanges (one per cogroup side), and no ENSURE_REQUIREMENTS exchange
-    partitions on the tile keys (that shape would mean the pin was lost
-    and the exchange is AQE-coalescible again)."""
-    qs = all_queries()
-    for name in ("cosine_topk", "ann_ivf", "ann_ivf_trained", "semantic_dedup"):
-        df = qs[name](spark, SF_DIR)
-        phys = plan_str(df, "simple")
-        n_pinned = phys.count("REPARTITION_BY_NUM")
-        assert n_pinned == 2, f"{name}: {n_pinned} pinned exchanges (want 2)\n{phys}"
-        for line in phys.splitlines():
-            if "ENSURE_REQUIREMENTS" in line and "hashpartitioning" in line:
-                assert "_qb#" not in line and "_ob#" not in line, (
-                    f"{name}: tile-key exchange fell back to "
-                    f"ENSURE_REQUIREMENTS (AQE-coalescible):\n{line}"
-                )
 
 
 def test_rotation_policy_current():

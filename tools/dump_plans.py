@@ -22,19 +22,14 @@ SHOW = [
     ("orders_enrich", "dimension joins broadcast; fact side never shuffles"),
     ("asof_union", "as-of join = ONE shuffle, zero join nodes (union + running window)"),
     ("sessionize_state", "full sessionization on ONE entity-key exchange (local sorts only)"),
-    ("ann_lsh", "candidate generation via bucket equi-join — no cartesian product"),
-    ("ann_lsh_multi", "multi-table hyperplane LSH: one posexplode pass, (table,bucket) equi-join, pair dedupe"),
     ("vocab_encode", "vocabulary encode = broadcast hash join"),
     ("negative_samples", "hash-sampled candidates: slot explode -> broadcast item-index join -> anti-join (no entities x items grid)"),
-    ("cosine_topk", "exact top-k via blocked GEMM: narrow block explode + cogrouped Arrow tiles — ZERO join nodes"),
-    ("ann_ivf", "IVF search via blocked GEMM: mapInPandas quantizer assignment (no broadcast cross join, no assignment window), inverted lists meet in a cogroup — ZERO join nodes"),
     ("line_dedup", "corpus line dedup: partial-agg min-winner per line hash (map-side combine on hot boilerplate), equi-join back, per-doc reassembly"),
     ("pii_scrub", "PII redaction: chained regexp exprs, zero shuffle, one codegen span"),
     ("clean_lines", "C4 line cleaning: per-line rules in one array filter lambda, kept array staged as a column alias feeding three outputs (SPARK-36718 keeps CollapseProject from re-inlining it) — two narrow projections, ZERO shuffle"),
     ("span_dedup", "exact substring dedup: staged-split window hashes, partial-agg min-(doc,pos) winner (map-side combine on hot spans), doc-keyed islands windows only — no window over the hash stream; AQE prints initial+final plans, so subtree counts appear doubled"),
     ("traj_graph", "trajectory transition graph: ONE lag window on the entity-key exchange the stay table already has + ONE (src,dst) hash aggregate with map-side combine — no join, no explode"),
     ("chunk_sequences", "padded chunk export: the pad is staged as one column, the chunks leave through posexplode_outer and an index null filter — no filter holds the chunk lambda, so each doc is chunked once"),
-    ("semantic_dedup", "SemDeDup: GEMM quantizer assignment in mapInPandas (no shuffle/window), within-cluster screen as cogrouped GEMM tiles emitting flagged ids only (never pairs), one distinct + one left join for verdicts"),
     ("shuffle_shards", "global shuffle->shards: ONE range exchange + per-partition offset mapInPandas (distributed zipWithIndex) — no single-partition global window. The plan shows only the assignment pass because the pinned range partitioning is a lazy localCheckpoint (the lineage-cut guard); the upstream is exactly one repartitionByRange + sortWithinPartitions"),
     ("pagerank", "integer-exact PageRank: per round ONE left equi-join (sparse rank state) + ONE partial-agg sum; lazy localCheckpoint cuts round lineage; constants re-enter once via anti-join"),
     ("edit_join", "edit-distance join: symmetric-delete neighborhoods staged once per join side (the minhash-pairs trade: regenerating the narrow variant stream is cheaper than materializing it), variant-hash equi-join (broadcast at test scale, shuffle+AQE at corpus scale), distinct candidates, JVM levenshtein verify — no cartesian product"),

@@ -1,16 +1,16 @@
 """Adversarial-input oracle gate: run the WHOLE contract (queries() +
 extra_queries() vs their DuckDB oracles, via tools/compare_oracle.py)
-against a hostile randomized documents/embeddings table.
+against hostile randomized documents and events tables.
 
 The driver's correctness gate and the local compare both run on the
 fixed synthetic corpus, whose text is benign; a Spark/DuckDB semantic
 divergence that only shows on nasty content (empty strings, multi-space
 runs, CRLF/controls/NFD/fullwidth byte forms, 500x word repeats,
-whole-doc duplicates, shared spans/lines, PII shapes, zero / duplicate /
-antipodal embeddings, top-k ties) would be invisible there. This tool
-regenerates only the two free-content tables — schema-identical to the
-real ones (documents: doc_id BIGINT, text, lang, source, n_chars;
-embeddings: vec_id BIGINT, embedding FLOAT[64], label INT) — symlinks
+whole-doc duplicates, shared spans/lines, PII shapes, tied and boundary
+timestamps) would be invisible there. This tool regenerates only the
+free-content tables — schema-identical to the real ones (documents:
+doc_id BIGINT, text, lang, source, n_chars; events: event_id BIGINT, ts,
+user_id BIGINT, event_type, value DOUBLE, props) — symlinks
 the TPC-H-ish tables from a base sf dir, and exit-codes like
 compare_oracle (non-zero on any value mismatch).
 
@@ -183,35 +183,6 @@ def build_events(seed: int):
     return rows
 
 
-def build_embeddings(seed: int):
-    rng = random.Random(seed + 1)
-    rows = []
-    vid = 0
-
-    def addv(vec):
-        nonlocal vid
-        rows.append((vid, [float(x) for x in vec], vid % 10))
-        vid += 1
-
-    def rand_vec():
-        return [rng.gauss(0, 1) for _ in range(64)]
-
-    for _ in range(180):
-        addv(rand_vec())
-    addv([0.0] * 64)                      # zero vector (degenerate norm)
-    addv([1e-30] * 64)                    # denormal-ish tiny
-    addv([1e18] * 64)                     # huge but finite in float32
-    base = rand_vec()
-    addv(base)
-    addv(base)                            # exact duplicate -> top-k tie
-    addv([-x for x in base])              # antipodal
-    addv([x * (1 + 1e-7) for x in base])  # near-duplicate
-    one_hot = [0.0] * 64
-    one_hot[7] = 1.0
-    addv(one_hot)
-    return rows
-
-
 def main() -> None:
     seed = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     base_sf = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.001"
@@ -252,20 +223,7 @@ def main() -> None:
         ),
         f"{out_dir}/events.parquet",
     )
-    embs = build_embeddings(seed)
-    pq.write_table(
-        pa.table(
-            {
-                "vec_id": pa.array([r[0] for r in embs], pa.int64()),
-                "embedding": pa.array(
-                    [r[1] for r in embs], pa.list_(pa.float32())
-                ),
-                "label": pa.array([r[2] for r in embs], pa.int32()),
-            }
-        ),
-        f"{out_dir}/embeddings.parquet",
-    )
-    print(f"fuzz corpus (seed {seed}): {len(docs)} docs, {len(embs)} vecs, "
+    print(f"fuzz corpus (seed {seed}): {len(docs)} docs, "
           f"{len(evs)} events -> {out_dir}")
     rc = subprocess.call(
         [sys.executable,

@@ -5,17 +5,10 @@ is whether the host can even deliver 4x at that working set — these
 probes run the job's hot kernel in plain multiprocessing (no Spark, no
 JVM, no Arrow) at 2 and 8 processes:
 
-    python tools/host_probes.py gemm        # semantic_dedup's tile GEMM shape
-    python tools/host_probes.py gemm_strip  # the shipped strip-wise variant
     python tools/host_probes.py normalize   # normalize_text's regex+NFC scan
 
-Interpretation (both measured on this sandbox host, 2026-08-19):
+Interpretation (measured 2026-08-19):
 
-* ``gemm`` — 6250x64 @ 64x6250 float64 tiles (312 MB output each,
-  arithmetic intensity ~8 flop/byte): scales **0.34-0.49 efficiency
-  across sessions** — two processes already saturate the shared DRAM
-  channels. semantic_dedup measuring 0.72 whole-job therefore EXCEEDS
-  its kernel's host ceiling; nothing engine-side serializes.
 * ``normalize`` — normalize_text's regex+NFC pipeline as pure per-doc
   Python (re.sub string reallocs): caps at **0.63 efficiency**
   (0.631-0.643 across 3 runs, 2026-08-19) — string-substitution realloc
@@ -33,45 +26,8 @@ from __future__ import annotations
 
 import json
 import multiprocessing as mp
-import os
 import sys
 import time
-
-# pin EVERY BLAS/threading backend to 1 thread before numpy loads — a
-# multithreaded GEMM at 2 procs would already use all cores and make the
-# 2-vs-8 comparison meaningless on MKL/BLIS/OpenMP-linked builds
-for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS",
-           "BLIS_NUM_THREADS", "NUMEXPR_NUM_THREADS"):
-    os.environ.setdefault(_v, "1")
-
-
-def _gemm_work(seed: int) -> float:
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    a = rng.standard_normal((6250, 64))
-    b = rng.standard_normal((64, 6250))
-    s = 0.0
-    for _ in range(4):
-        s += float((a @ b)[0, 0])
-    return s
-
-
-def _gemm_strip_work(seed: int) -> float:
-    # the shipped semantic_dedup tile shape: 512-row query strips, each
-    # reduced to threshold flags while cache-resident — the full 312 MB
-    # tile never exists (similarity._tile_drop_fn); measured ~1.2x
-    # faster than _gemm_work WITH the compare included, same scaling
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    a = rng.standard_normal((6250, 64))
-    b = rng.standard_normal((64, 6250))
-    tot = 0
-    for _ in range(4):
-        for i in range(0, 6250, 512):
-            tot += int(((a[i : i + 512] @ b) >= 50.0).sum())
-    return float(tot)
 
 
 def _normalize_work(seed: int) -> int:
@@ -113,9 +69,8 @@ def _run(fn, procs: int, chunks: int = 8, reps: int = 3) -> float:
 
 
 def main() -> None:
-    which = sys.argv[1] if len(sys.argv) > 1 else "gemm"
-    fn = {"gemm": _gemm_work, "gemm_strip": _gemm_strip_work,
-          "normalize": _normalize_work}[which]
+    which = sys.argv[1] if len(sys.argv) > 1 else "normalize"
+    fn = {"normalize": _normalize_work}[which]
     w2 = _run(fn, 2)
     w8 = _run(fn, 8)
     print(

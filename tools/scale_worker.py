@@ -3,9 +3,7 @@ at a fixed local[] parallelism and print one JSON line.
 
     python tools/scale_worker.py <cpus> <seq_path> [n_runs] [job]
 
-job = "pipeline" (default: the token feature pipeline), "semdedup"
-(semantic_dedup over a synthetic embedding
-corpus; quantizer trained once outside the timed region), or "normalize"
+job = "pipeline" (default: the token feature pipeline), "normalize"
 (normalize_text over the dedup-scaling text corpus with 10% of docs
 spiked non-ASCII — the realistic mixed-byte-form shape), or
 "span" (span_dedup over the same corpus — window hashes, map-side
@@ -49,50 +47,7 @@ def main() -> None:
                 f"-XX:ParallelGCThreads={gc_threads} -XX:ConcGCThreads={max(1, gc_threads // 4)}"
         },
     )
-    if job == "semdedup":
-        import time
-
-        from geofeaturegeneration_spark.operators import (
-            semantic_dedup,
-            train_ivf_centroids,
-        )
-
-        def run_job(spark, emb_path):
-            emb = spark.read.parquet(emb_path)
-            n_vecs = emb.count()
-            # train once, dedup many — the production shape; the trainer's
-            # 10k-sample collect + driver k-means is a fixed cost shared by
-            # every level, so it stays outside the timed region
-            cents = train_ivf_centroids(emb, "vec_id", "embedding", k=16)
-            t0 = time.perf_counter()
-            out = semantic_dedup(
-                emb, "vec_id", "embedding", threshold=0.95,
-                n_clusters=16, centroids=cents, n_blocks=4,
-            )
-            out.write.format("noop").mode("overwrite").save()
-            return n_vecs, time.perf_counter() - t0
-    elif job == "lloyd":
-        import time
-
-        from geofeaturegeneration_spark.operators import (
-            lloyd_refine,
-            train_ivf_centroids,
-        )
-
-        def run_job(spark, emb_path):
-            emb = spark.read.parquet(emb_path)
-            n_vecs = emb.count()
-            # seeds trained once (fixed cost shared by both levels, same
-            # rule as the semdedup job); the timed region is the TWO
-            # full-corpus Lloyd iterations — each one corpus scan of
-            # literal-centroid assignment + the (cid, dim) int-sum agg
-            cents = train_ivf_centroids(emb, "vec_id", "embedding", k=16)
-            t0 = time.perf_counter()
-            out = lloyd_refine(emb, "vec_id", "embedding", cents, iters=2)
-            out.write.format("noop").mode("overwrite").save()
-            # work metric = vector-iterations (each assigns + contributes)
-            return n_vecs * 2, time.perf_counter() - t0
-    elif job == "normalize":
+    if job == "normalize":
         import time
 
         from pyspark.sql import functions as F

@@ -46,41 +46,6 @@ def ensure_input(n_docs: int) -> str:
     return path
 
 
-def ensure_emb_input(n_vecs: int, dim: int = 64, n_latent: int = 16) -> str:
-    """Scaling input for the semantic-dedup job: ``n_vecs`` embeddings
-    around ``n_latent`` latent directions (unit center + 0.5-sigma noise,
-    same-cluster non-dup cosine ~ 0.8), with every 5th vector a planted
-    near-duplicate of the previous one (cos ~ 0.999) so the screen has
-    real work at threshold 0.95. Deterministic (seeded numpy)."""
-    path = f"/tmp/gfg_scale_emb_{n_vecs}"
-    if os.path.exists(os.path.join(path, "_SUCCESS")):
-        return path
-    import numpy as np
-    import pandas as pd
-
-    from geofeaturegeneration_spark.session import get_spark
-
-    rng = np.random.default_rng(42)
-    centers = rng.standard_normal((n_latent, dim))
-    centers /= np.linalg.norm(centers, axis=1, keepdims=True)
-    cl = rng.integers(0, n_latent, n_vecs)
-    V = centers[cl] + 0.5 * rng.standard_normal((n_vecs, dim)) / np.sqrt(dim)
-    dup = np.arange(n_vecs) % 5 == 4
-    V[dup] = V[np.arange(n_vecs)[dup] - 1] + 0.001 * rng.standard_normal(
-        (int(dup.sum()), dim)
-    )
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(n_vecs, dtype=np.int64),
-         "embedding": list(V.astype(np.float32))}
-    )
-    spark = get_spark("scale_emb_gen")
-    spark.createDataFrame(pdf, "vec_id LONG, embedding ARRAY<FLOAT>").repartition(
-        32
-    ).write.mode("overwrite").parquet(path)
-    spark.stop()
-    return path
-
-
 def run_level(cpus: int, seq_path: str, job: str = "pipeline") -> dict:
     out = subprocess.run(
         [sys.executable, os.path.join(os.path.dirname(__file__), "scale_worker.py"),
@@ -100,16 +65,11 @@ def main() -> None:
                         "threads — so 8->32 measures the host, not the engine)")
     p.add_argument("--md-out", default=None, help="append a results section to this md file")
     p.add_argument("--job", default="pipeline",
-                   choices=["pipeline", "semdedup",
-                            "normalize", "span",
-                            "span_intervals", "lloyd", "edit", "pr"],
-                   help="pipeline = token feature pipeline; semdedup = "
-                        "semantic_dedup over a synthetic embedding corpus "
-                        "(--n-vecs); normalize/span/span_intervals/edit/"
-                        "pr run over the dedup-scaling text corpus "
-                        "(--n-copies/--text-repeat)")
-    p.add_argument("--n-vecs", type=int, default=400000,
-                   help="corpus size for --job semdedup")
+                   choices=["pipeline", "normalize", "span",
+                            "span_intervals", "edit", "pr"],
+                   help="pipeline = token feature pipeline; normalize/span/"
+                        "span_intervals/edit/pr run over the dedup-scaling "
+                        "text corpus (--n-copies/--text-repeat)")
     p.add_argument("--n-copies", type=int, default=20,
                    help="text-corpus replication for the normalize/span/"
                         "span_intervals/edit/pr jobs (20 -> 100k docs)")
@@ -118,10 +78,7 @@ def main() -> None:
                         "jobs")
     args = p.parse_args()
 
-    if args.job in ("semdedup", "lloyd"):
-        seq_path = ensure_emb_input(args.n_vecs)
-    elif args.job in ("normalize", "span",
-                      "span_intervals", "edit", "pr"):
+    if args.job in ("normalize", "span", "span_intervals", "edit", "pr"):
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from dedup_scaling import ensure_corpus
 
@@ -144,16 +101,13 @@ def main() -> None:
 
     job_title = {
         "pipeline": "token feature pipeline",
-        "semdedup": "semantic_dedup (16 trained clusters, threshold 0.95)",
         "normalize": "normalize_text (NFC, 10% of docs carrying non-ASCII byte forms)",
         "span": "span_dedup (k=50 token windows, min-(doc,pos) winner)",
         "span_intervals": "span_dup_intervals (stages 1-2 of span_dedup, no reassembly)",
-        "lloyd": "lloyd_refine (16 centroids, 2 full-corpus iterations)",
         "edit": "edit_join (24-char ascii keys, max_dist=1, symmetric-delete blocking)",
         "pr": "pagerank (distinct bigram graph, 5 iterations, exact int64)",
     }[args.job]
-    unit = {"semdedup": "vectors", "normalize": "chars",
-            "lloyd": "vector-iterations"}.get(args.job, "tokens")
+    unit = {"normalize": "chars"}.get(args.job, "tokens")
     if args.md_out:
         with open(args.md_out, "a") as f:
             f.write(
