@@ -222,6 +222,52 @@ def test_dedup_clusters_keeper_exists_when_pairs_exceed_docs(spark):
     assert set(keepers) == clusters and all(v == 1 for v in keepers.values())
 
 
+def test_similarity_zero_norm_excluded_and_ties_deterministic(spark):
+    """The two fuzz-found similarity rules, as they hold for the
+    shingle-set operators:
+
+    1. a doc with an EMPTY shingle set (null text, empty text, fewer than
+       k words) — the set analogue of a zero-norm vector — takes part in
+       no pair on either side, so no Jaccard is ever 0/0 and empty docs
+       never bucket together as "duplicates" of each other;
+    2. ties are deterministic: exact copies all score jaccard 1.0, and the
+       cluster keeper is the min id under every input partitioning."""
+    from geofeaturegeneration_spark.operators import dedup_clusters
+
+    fox = "the quick brown fox jumps over the lazy dog"
+    rows = [
+        (1, fox),
+        (2, None),          # null text
+        (3, "too short"),   # < k words
+        (4, ""),            # empty text
+        (5, fox),
+        (6, fox),
+        (7, "too short"),   # identical to 3, still no shingles
+    ]
+    df = spark.createDataFrame(rows, "doc_id INT, text STRING")
+    copies = {(1, 5), (1, 6), (5, 6)}
+
+    jac = ngram_jaccard_pairs(df, "doc_id", "text", k=3, threshold=0.0)
+    assert {(r.id_a, r.id_b): r.jaccard for r in jac.collect()} == {
+        p: 1.0 for p in copies
+    }
+    for d in (
+        df,
+        df.repartition(5, "doc_id"),
+        df.orderBy(F.desc("doc_id")).repartition(3),
+    ):
+        pairs = minhash_lsh_pairs(d, "doc_id", "text", k=3)
+        assert {(r.id_a, r.id_b) for r in pairs.collect()} == copies
+        got = {
+            r.doc_id: (r.cluster_id, r.is_keeper)
+            for r in dedup_clusters(d.select("doc_id"), "doc_id", pairs).collect()
+        }
+        assert got == {
+            1: (1, True), 5: (1, False), 6: (1, False),
+            2: (2, True), 3: (3, True), 4: (4, True), 7: (7, True),
+        }
+
+
 def test_minhash_cross_consistent_with_self_join(spark, corpus):
     """Cross-corpus pairs over a (left, right) split must equal the
     self-join pairs restricted to one-side-each — signatures are
